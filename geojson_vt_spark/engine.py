@@ -46,9 +46,10 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .kernel.index import to_id
-from .model import FEATURE_COLUMNS, TILED_COLUMNS
+from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS
 from .options import TileOptions
-from .pipeline import (_subtree_out_pdf, _write_subtree_part,
+from .pipeline import (_NV_SQL, _dbl, _subtree_out_pdf, _window_preds,
+                       _write_subtree_part,
                        render_files_direct, split_files_direct,
                        batch_split_subtree, deep_wave_route_df,
                        features_from_json_df, forest_gate_df,
@@ -189,9 +190,15 @@ class SparkTileEngine:
         spark = session or self.spark
         path = self._p("frontier", f"z={z}")
         if z == 0 and not os.path.isdir(path):
-            return self._frontier0_view(
-                spark.read.parquet(self._p("features")))
+            return self._frontier0_view(self._read_features(spark))
         return spark.read.parquet(path)
+
+    def _read_features(self, session: SparkSession | None = None
+                       ) -> DataFrame:
+        """The converted-features checkpoint, read with its known schema
+        (no schema-inference job)."""
+        return ((session or self.spark).read.schema(FEATURE_SCHEMA)
+                .parquet(self._p("features")))
 
     def _set_pool(self, name: str) -> None:
         """Assign the CURRENT THREAD's jobs to a FAIR scheduler pool.
@@ -548,38 +555,29 @@ class SparkTileEngine:
     # same corpus once the hottest task was already under 0.5 s).
     _DEEP_WAVE_PTS = 300_000
 
-    def _deep_plan_aggs(self, nv) -> list:
+    def _deep_plan_aggs(self, nv: str) -> list:
         """Agg expressions for the deep-wave plan: candidate vertex
         mass (bbox not trivially rejected) and guaranteed-inside
         vertex mass for the 4 z1 cells and 16 z2 cells, window floats
         identical to wave_stage_df's (parent + const) / z2l clips.
-        ``nv`` is the per-feature vertex-count Column.  These ride an
-        existing stats job (cache-first path) or a one-off gate agg
-        (resume path) — see _deep_plan_decide."""
-        opts = self.options
-        k1c = 0.5 * opts.buffer / opts.extent
-        k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
+        ``nv`` is the SQL text of the per-feature vertex count.  A
+        zero-width bbox ON a window's upper edge is trivially rejected
+        by the clip (clip.js:18-19) although it is "inside", so the
+        inside mass counts only non-rejected rows, as the forest gate
+        does.  These ride the ingest job (cache-first path) or a
+        one-off gate agg (resume path) — see _deep_plan_decide."""
         aggs = []
-        z = F.lit(0).cast("long")
-        for tag, z2l, n in (("a", 1, 2), ("b", 2, 4)):
-            for cy in range(n):
-                for cx in range(n):
-                    xlo = ((cx >> 1) + (k2c if cx & 1 else -k1c)) / z2l
-                    xhi = ((cx >> 1) + (k4c if cx & 1 else k3c)) / z2l
-                    ylo = ((cy >> 1) + (k2c if cy & 1 else -k1c)) / z2l
-                    yhi = ((cy >> 1) + (k4c if cy & 1 else k3c)) / z2l
-                    rej = ((F.col("maxx") < xlo) |
-                           (F.col("minx") >= xhi) |
-                           (F.col("maxy") < ylo) |
-                           (F.col("miny") >= yhi))
-                    inside = ((F.col("minx") >= xlo) &
-                              (F.col("maxx") <= xhi) &
-                              (F.col("miny") >= ylo) &
-                              (F.col("maxy") <= yhi))
-                    aggs.append(F.sum(F.when(~rej, nv).otherwise(z))
-                                .alias(f"m{tag}{cx}_{cy}"))
-                    aggs.append(F.sum(F.when(inside, nv).otherwise(z))
-                                .alias(f"i{tag}{cx}_{cy}"))
+        for tag, lvl in (("a", 1), ("b", 2)):
+            for cy in range(1 << lvl):
+                for cx in range(1 << lvl):
+                    rej, inside = _window_preds(self.options, str(cx),
+                                                str(cy), str(lvl))
+                    for name, cond in (
+                            (f"m{tag}{cx}_{cy}", f"NOT {rej}"),
+                            (f"i{tag}{cx}_{cy}", f"NOT {rej} AND {inside}")):
+                        aggs.append(F.expr(
+                            f"sum(CASE WHEN {cond} THEN {nv} "
+                            f"ELSE CAST(0 AS BIGINT) END) AS {name}"))
         return aggs
 
     def _deep_plan_decide(self, row) -> tuple[list[tuple[int, int]],
@@ -619,7 +617,7 @@ class SparkTileEngine:
         hands the decided plan down as _deep_plan_hint)."""
         if self.options.index_max_zoom < 2:
             return [], []
-        row = fr0.agg(*self._deep_plan_aggs(F.col("n_verts"))).first()
+        row = fr0.agg(*self._deep_plan_aggs("n_verts")).first()
         return self._deep_plan_decide(row)
 
     def _one_wave_subtree_job(
@@ -727,14 +725,12 @@ class SparkTileEngine:
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
         """z0 frontier view over an already-converted features frame
         (same shape _read_frontier(0) serves from the checkpoint)."""
-        from .pipeline import _ord_extend
-        n_verts = (F.size("coords") / 3).cast("long").alias("n_verts")
-        return (src
-                .withColumn("ord_path", _ord_extend(1, F.lit(0)))
-                .withColumn("z", F.lit(0))
-                .withColumn("x", F.lit(0))
-                .withColumn("y", F.lit(0))
-                .select(*TILED_COLUMNS, n_verts))
+        return src.selectExpr(
+            "0 AS z", "0 AS x", "0 AS y",
+            "concat(array(CAST(1 AS BIGINT)), ord_path, "
+            "array(CAST(0 AS BIGINT))) AS ord_path",
+            *[c for c in FEATURE_COLUMNS if c != "ord_path"],
+            f"{_NV_SQL} AS n_verts")
 
     def _write_empty_tiles(self, z: int, coords: list) -> None:
         """Stats-only empty tile rows (a split tile's children all
@@ -786,18 +782,10 @@ class SparkTileEngine:
         opts = self.options
         from pyspark.sql import Observation
         t0 = time.monotonic()
-        fut_ck = None
-        if cached is not None:
-            fr0 = self._frontier0_view(cached)
-            # the durable features checkpoint rides CONCURRENTLY with
-            # the wave (both read the warm cache); it must only be on
-            # disk before the lineage commit below
-            def ck_job():
-                self._set_pool("gvt-sources")
-                cached.write.mode("overwrite").parquet(self._p("features"))
-            fut_ck = pool.submit(ck_job)
-        else:
-            fr0 = self._read_frontier(0)
+        # the durable features checkpoint is already on disk (the
+        # ingest pass wrote it); a warm cache only changes what we scan
+        fr0 = (self._frontier0_view(cached) if cached is not None
+               else self._read_frontier(0))
         obs_r = Observation()
 
         def render_job():
@@ -817,8 +805,6 @@ class SparkTileEngine:
                    if (x, y) not in set(present)]
         _t = time.monotonic()
         fut_render.result()
-        if fut_ck is not None:
-            fut_ck.result()
         render_wait = time.monotonic() - _t
         ns0 = int(obs_r.get["ns"] or 0)
 
@@ -860,15 +846,37 @@ class SparkTileEngine:
             "wall_sec": time.monotonic() - t0,
             "complete": True, "final": True})
 
-    # cache-first gate: below this many (hinted) feature rows, a small
-    # build materializes the converted features into the block-manager
-    # cache instead of a serial parquet checkpoint — the durable
-    # checkpoint is then written CONCURRENTLY with the one-wave handoff
-    # (still before the lineage commit, so the resume contract holds).
-    # Big corpora keep the checkpoint-first contract: caching 100 TB of
-    # converted features is exactly the anti-pattern the per-zoom loop
-    # avoids.
+    # cache-first gate: below this many (hinted) feature rows, the
+    # ingest pass also fills the block-manager cache, so a one-wave
+    # build scans warm memory instead of re-reading the checkpoint.
+    # Big corpora skip the cache: caching 100 TB of converted features
+    # is exactly the anti-pattern the per-zoom loop avoids.
     _CACHE_FIRST_MAX_ROWS = 2_000_000
+
+    def _ingest_aggs(self, deep: bool) -> list:
+        """z0 classification stats (z0 holds exactly one tile, so they
+        are global aggregates) plus the left/right wrap-candidate
+        counts — and, when ``deep``, the deep-wave plan masses — as
+        SQL-text aggregates for one observed pass over the features."""
+        b = self.options.buffer / self.options.extent
+        aggs = [F.expr(e) for e in (
+            f"sum(CAST(minx <= {_dbl(b)} AS BIGINT)) AS l",
+            f"sum(CAST(maxx >= {_dbl(1 - b)} AS BIGINT)) AS r",
+            "count(1) AS num_features",
+            f"sum({_NV_SQL}) AS num_points",
+            "min(minx) AS minx", "min(miny) AS miny",
+            "max(maxx) AS maxx", "max(maxy) AS maxy")]
+        return aggs + (self._deep_plan_aggs(_NV_SQL) if deep else [])
+
+    @staticmethod
+    def _z0_stats(row) -> list[dict] | None:
+        if not row["num_features"]:
+            return None
+        return [{"x": 0, "y": 0,
+                 "num_features": int(row["num_features"]),
+                 "num_points": int(row["num_points"]),
+                 "minx": float(row["minx"]), "miny": float(row["miny"]),
+                 "maxx": float(row["maxx"]), "maxy": float(row["maxy"])}]
 
     def build_from_converted(self, features_df: DataFrame,
                              resume: bool = False,
@@ -876,124 +884,60 @@ class SparkTileEngine:
         """Checkpoint the (expensive) converted-features stage to parquet
         before the wrap decision, so ingest/convert executes exactly once.
 
-        The wrap-candidate counts ride the SAME write job as observed
-        metrics (no separate agg pass), and in the common no-wrap case
-        the z0 frontier is served as a view over this checkpoint
-        (``_read_frontier``) — one materialization of the corpus
-        total, not two.
+        ONE ingest job: the features checkpoint write carries the
+        wrap-candidate counts and z0 stats (and, for small inputs, the
+        deep-wave plan masses) as observed metrics, so the checkpoint
+        is durable and every build-path decision is known before any
+        other job runs.  In the common no-wrap case the z0 frontier is
+        served as a view over this checkpoint (``_read_frontier``) —
+        one materialization of the corpus total, not two.
 
         ``approx_rows``: caller-known rough feature count.  Small
-        hinted inputs take the cache-first route (see
-        ``_CACHE_FIRST_MAX_ROWS``); the hint only picks HOW the stats
-        pass runs — eligibility for the one-wave path itself is decided
-        from the exact observed stats either way."""
+        hinted inputs are also cached by the ingest pass (see
+        ``_CACHE_FIRST_MAX_ROWS``); the hint only picks HOW the build
+        scans the features — eligibility for the one-wave path itself
+        is decided from the exact observed stats either way."""
         from pyspark.sql import Observation
 
         opts = self.options
-        b = opts.buffer / opts.extent
         path = self._p("features")
-        counts = z0_stats = None
-        if (not resume and approx_rows is not None
-                and approx_rows <= self._CACHE_FIRST_MAX_ROWS
-                and self.one_wave and self.subtree_max_points is None
-                and opts.index_max_zoom >= 1):
-            cached = features_df.persist()
-            # the deep-wave plan aggs ride this same stats job (they
-            # would otherwise cost a separate gate-agg job inside the
-            # wave, measured ~1-1.5 s of pure pool-contended latency)
-            deep_aggs = (self._deep_plan_aggs(
-                (F.size("coords") / 3).cast("long"))
-                if opts.index_max_zoom >= 2 else [])
-            row = cached.agg(
-                F.sum((F.col("minx") <= b).cast("long")).alias("l"),
-                F.sum((F.col("maxx") >= 1 - b).cast("long")).alias("r"),
-                F.count(F.lit(1)).alias("num_features"),
-                F.sum((F.size("coords") / 3).cast("long"))
-                .alias("num_points"),
-                F.min("minx").alias("minx"), F.min("miny").alias("miny"),
-                F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy"),
-                *deep_aggs
-            ).first()
+        cache_first = (not resume and approx_rows is not None
+                       and approx_rows <= self._CACHE_FIRST_MAX_ROWS
+                       and self.one_wave and self.subtree_max_points is None
+                       and opts.index_max_zoom >= 1)
+        deep = cache_first and opts.index_max_zoom >= 2
+        src = features_df.persist() if cache_first else features_df
+        try:
+            if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+                # resume path: re-aggregate the z0 stats in the SAME
+                # pass as the wrap counts, so a crash-resume of a
+                # forest-/one-wave-eligible corpus re-enters the same
+                # build path instead of falling back to the loop
+                row = self._read_features().agg(
+                    *self._ingest_aggs(False)).first()
+            else:
+                obs = Observation()
+                (src.observe(obs, *self._ingest_aggs(deep))
+                 .write.mode("overwrite").parquet(path))
+                row = obs.get
             counts = (int(row["l"] or 0), int(row["r"] or 0))
-            if row["num_features"]:
-                z0_stats = [{"x": 0, "y": 0,
-                             "num_features": int(row["num_features"]),
-                             "num_points": int(row["num_points"]),
-                             "minx": float(row["minx"]),
-                             "miny": float(row["miny"]),
-                             "maxx": float(row["maxx"]),
-                             "maxy": float(row["maxy"])}]
-            if (not (counts[0] or counts[1]) and z0_stats
+            z0_stats = self._z0_stats(row)
+            if (cache_first and not (counts[0] or counts[1]) and z0_stats
                     and self._one_wave_eligible(
                         z0_stats[0]["num_points"])):
                 self._deep_plan_hint = (self._deep_plan_decide(row)
-                                        if deep_aggs else ([], []))
+                                        if deep else ([], []))
                 try:
-                    self.build(None, z0_stats=z0_stats,
-                               cached_features=cached)
+                    self.build(None, z0_stats=z0_stats, cached_features=src)
                 finally:
                     self.__dict__.pop("_deep_plan_hint", None)
-                    cached.unpersist()
                 return
-            # mis-hinted (wraps, or too big for one wave): durable
-            # checkpoint from the warm cache, then exactly as today
-            cached.write.mode("overwrite").parquet(path)
-            feats = self.spark.read.parquet(path)
-            cached.unpersist()
-            if counts[0] or counts[1]:
-                self.build(wrap_df(feats, opts, counts=counts))
-            else:
-                self.build(None, z0_stats=z0_stats)
-            return
-        if not (resume and os.path.exists(os.path.join(path, "_SUCCESS"))):
-            obs = Observation()
-            (features_df.observe(
-                obs,
-                F.sum((F.col("minx") <= b).cast("long")).alias("l"),
-                F.sum((F.col("maxx") >= 1 - b).cast("long")).alias("r"),
-                # z0 holds exactly one tile, so its classification stats
-                # are global aggregates — free in this same write job
-                F.count(F.lit(1)).alias("num_features"),
-                F.sum((F.size("coords") / 3).cast("long")).alias("num_points"),
-                F.min("minx").alias("minx"), F.min("miny").alias("miny"),
-                F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy"))
-             .write.mode("overwrite").parquet(path))
-            got = obs.get
-            counts = (int(got["l"] or 0), int(got["r"] or 0))
-            if got["num_features"]:
-                z0_stats = [{"x": 0, "y": 0,
-                             "num_features": int(got["num_features"]),
-                             "num_points": int(got["num_points"]),
-                             "minx": float(got["minx"]),
-                             "miny": float(got["miny"]),
-                             "maxx": float(got["maxx"]),
-                             "maxy": float(got["maxy"])}]
-        feats = self.spark.read.parquet(path)
-        if counts is None:
-            # resume path: re-aggregate the z0 classification stats in
-            # the SAME pass as the wrap counts, so a crash-resume of a
-            # forest-/one-wave-eligible corpus re-enters the same build
-            # path instead of silently falling back to the per-zoom loop
-            row = feats.agg(
-                F.sum((F.col("minx") <= b).cast("long")).alias("l"),
-                F.sum((F.col("maxx") >= 1 - b).cast("long")).alias("r"),
-                F.count(F.lit(1)).alias("num_features"),
-                F.sum((F.size("coords") / 3).cast("long"))
-                .alias("num_points"),
-                F.min("minx").alias("minx"), F.min("miny").alias("miny"),
-                F.max("maxx").alias("maxx"),
-                F.max("maxy").alias("maxy")).first()
-            counts = (row["l"] or 0, row["r"] or 0)
-            if row["num_features"]:
-                z0_stats = [{"x": 0, "y": 0,
-                             "num_features": int(row["num_features"]),
-                             "num_points": int(row["num_points"]),
-                             "minx": float(row["minx"]),
-                             "miny": float(row["miny"]),
-                             "maxx": float(row["maxx"]),
-                             "maxy": float(row["maxy"])}]
+        finally:
+            if cache_first:
+                src.unpersist()
         if counts[0] or counts[1]:
-            self.build(wrap_df(feats, opts, counts=counts), resume=resume)
+            self.build(wrap_df(self._read_features(), opts, counts=counts),
+                       resume=resume)
         else:
             self.build(None, resume=resume, z0_stats=z0_stats)
 
@@ -1022,13 +966,20 @@ class SparkTileEngine:
     # vertex-levels, and the straggler factor past which the cut is
     # declared infeasible and the per-zoom loop keeps the job.
     _FOREST_MAX_LEVEL = 6
-    # leaves above this many task budgets of estimated work are probed
-    # and rendered partition-spread instead of becoming one wave task;
-    # 2x keeps every wave task within ~2x the median budget-sized task
-    # (round-4 residual: 19/119 over-budget leaves, one 13 s straggler).
-    # Env-tunable for same-boot A/B (the sandbox VM drifts 2-3x
-    # boot-to-boot, so cross-boot comparisons of this knob are noise).
-    _FOREST_STRAGGLER = int(os.environ.get("GVT_FOREST_STRAGGLER", "2"))
+
+    @staticmethod
+    def _forest_straggler() -> int:
+        """Leaves above this many task budgets of estimated work are
+        probed and rendered partition-spread instead of becoming one
+        wave task; 2x keeps every wave task within ~2x the median
+        budget-sized task (round-4 residual: 19/119 over-budget
+        leaves, one 13 s straggler).  ``GVT_FOREST_STRAGGLER``
+        overrides it for same-boot A/B; read per cut, so a value set
+        after import applies, and a malformed one falls back to 2."""
+        try:
+            return int(os.environ.get("GVT_FOREST_STRAGGLER", "2"))
+        except ValueError:
+            return 2
 
     def _forest_eligible(self, n_points: int) -> bool:
         """True when the corpus is too big for ONE wave but a bounded
@@ -1042,7 +993,20 @@ class SparkTileEngine:
                 <= (4 ** self._FOREST_MAX_LEVEL)
                 * self._KERNEL_PTS_PER_TASK)
 
-    def _forest_cut(self, gate_rows, fr0=None) -> tuple | None:
+    def _forest_cut_proven(self, n_points: int) -> bool:
+        """True when the z0 stats alone prove the cut is exactly the
+        four z1 cells as leaves, so no gate job is needed: a z1 cell
+        holds at most the whole corpus, so its work m × (imz - 1) is
+        at most ``n_points × max(imz - 1, 1)``, and at or under the
+        task budget (and the straggler bound) the walk of _forest_cut
+        makes every non-empty z1 cell a leaf.  Zero-mass cells get no
+        routed rows and are back-filled from missing acks, exactly as
+        the gate's empties would be."""
+        work = n_points * max(self.options.index_max_zoom - 1, 1)
+        budget = self._KERNEL_PTS_PER_TASK
+        return work <= budget and work <= self._forest_straggler() * budget
+
+    def _forest_cut(self, gate_rows, fr0=None) -> tuple:
         """Quadtree cut from the gate masses: walk from the 4 z1 cells;
         a cell subdivides (INTERNAL — distributed narrow render of its
         own tile) while it is guaranteed-split, still above the leaf
@@ -1069,7 +1033,7 @@ class SparkTileEngine:
           routed by bbox like any leaf, zero-row ones back-filled
           from missing acks).
 
-        A cell over _FOREST_STRAGGLER task budgets that NEITHER
+        A cell over _forest_straggler() task budgets that NEITHER
         prover can split (e.g. a giant ring enclosing the cell with
         every vertex outside) is returned as a STRAGGLER: its exact
         stop boundary is then measured by the full clip-descent probe
@@ -1081,6 +1045,7 @@ class SparkTileEngine:
         imp = opts.index_max_points
         budget = self._KERNEL_PTS_PER_TASK
         max_lvl = self._FOREST_MAX_LEVEL
+        straggler = self._forest_straggler()
         self._forest_vprobe_sec = None
         cells = {(int(r["lvl"]), int(r["x"]), int(r["y"])):
                  (int(r["m"] or 0), int(r["i"] or 0))
@@ -1119,7 +1084,7 @@ class SparkTileEngine:
                                 stack.append(c)
                 elif eligible and vcells is None:
                     opaque.append((l, x, y))
-                elif work > self._FOREST_STRAGGLER * budget:
+                elif work > straggler * budget:
                     stragglers.append((l, x, y))
                 else:
                     leaves.append((l, x, y))
@@ -1177,12 +1142,18 @@ class SparkTileEngine:
                 stops.append((z, x, y))
         return internals, stops, empties
 
+    # g -> slot ints; the hash cannot change within one JVM, so each
+    # bin count costs its tiny Spark job once per process
+    _SLOT_VALUES: dict = {}
+
     def _slot_values(self, g: int) -> list:
         """Ints v_0..v_{g-1} whose Spark murmur3 shuffle bucket
         (pmod(hash(int v), g)) is a bijection onto 0..g-1 — computed BY
         Spark in one tiny job, so the driver's bin assignment and the
         wave's HashPartitioning agree exactly (no reimplemented hash
         to drift)."""
+        if g in self._SLOT_VALUES:
+            return list(self._SLOT_VALUES[g])
         vals: list = [None] * g
         lo, missing = 0, g
         while missing:
@@ -1195,7 +1166,8 @@ class SparkTileEngine:
                     vals[r["b"]] = int(r["v"])
                     missing -= 1
             lo += 32 * g
-        return vals
+        self._SLOT_VALUES[g] = vals
+        return list(vals)
 
     def _forest_leaf_wave(self, leaves, routed: DataFrame | None = None
                           ) -> list:
@@ -1266,15 +1238,12 @@ class SparkTileEngine:
             cand = routed.where(F.col("role") == 0)
             if slotpack:
                 from .pipeline import forest_slot_wave_df
-                key = ((F.col("z").cast("long") * F.lit(1 << 50))
-                       + (F.col("x").cast("long") * F.lit(1 << 25))
-                       + F.col("y").cast("long"))
-                pairs: list = []
-                for (z, x, y), v in slot_map.items():
-                    pairs.append(F.lit((z << 50) | (x << 25) | y))
-                    pairs.append(F.lit(v))
-                cand = cand.withColumn(
-                    "slot", F.create_map(*pairs)[key].cast("int"))
+                pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
+                                  for (z, x, y), v in slot_map.items())
+                cand = cand.withColumn("slot", F.expr(
+                    f"CAST(map({pairs})[CAST(z AS BIGINT) * "
+                    "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
+                    "+ CAST(y AS BIGINT)] AS INT)"))
                 acks = forest_slot_wave_df(cand, opts, out_dir=out,
                                            from_zoom=0).collect()
             else:
@@ -1287,8 +1256,7 @@ class SparkTileEngine:
             for k, v in restore.items():
                 self.spark.conf.set(k, v)
 
-    def _build_forest(self, r0: dict, pool, futures, plan,
-                      render=None) -> None:
+    def _build_forest(self, r0: dict, pool, futures) -> None:
         """Forest wave: the whole pyramid in ONE shuffle + two narrow
         maps, replacing the per-zoom distributed loop for corpora too
         big for the one-wave but coverable by a bounded quadtree cut.
@@ -1304,7 +1272,13 @@ class SparkTileEngine:
           across scan partitions exactly like the z0 render (no
           per-tile funnel), tilefeat parts written task-side, stats
           rows back as slim acks.
-        - z0 renders concurrently as in the one-wave.
+        - z0 renders concurrently as in the one-wave, started before
+          the cut is decided: it depends only on the frontier, so it
+          overlaps the gate and vertex-probe jobs (FAIR pools share the
+          fleet between them).  Its future joins ``futures``, so the
+          caller awaits it even when the cut raises.
+        - No gate job at all when the z0 stats prove the cut is the
+          four z1 leaves (_forest_cut_proven).
 
         The per-zoom spine (split → frontier write → classify → split,
         ~8 s/round of pure cadence measured on the 2M-page grid) is
@@ -1318,35 +1292,40 @@ class SparkTileEngine:
         from pyspark.sql import Observation
         opts = self.options
         t0 = time.monotonic()
-        leaves, internals, empties, stragglers = plan
-        fr0 = self._read_frontier(0)
+        fr0 = self._read_frontier(0)  # planned once per build
+        _steps: dict = {}
+        obs_r = Observation()
+
+        def render_job():
+            self._set_pool("gvt-render")
+            _t = time.monotonic()
+            (rendered_features_df(fr0, opts).drop("z")
+             .observe(obs_r, F.sum("n_simplified").alias("ns"))
+             .write.mode("overwrite")
+             .parquet(self._p("tilefeat", "z=0")))
+            _steps["render0"] = round(time.monotonic() - _t, 2)
+
+        fut_render = pool.submit(render_job)
+        futures.append(fut_render)
+
+        gate_sec = None
+        if self._forest_cut_proven(int(r0["num_points"])):
+            leaves = [(1, x, y) for y in (0, 1) for x in (0, 1)]
+            internals, empties, stragglers = [], [], []
+            self._forest_leaf_work = {}
+            self._forest_vprobe_sec = None
+        else:
+            _tg = time.monotonic()
+            leaves, internals, empties, stragglers = self._forest_cut(
+                forest_gate_df(fr0, opts, self._FOREST_MAX_LEVEL).collect(),
+                fr0=fr0)
+            gate_sec = round(time.monotonic() - _tg, 2)
         # only LEAF cells go through the grouped wave; internal cells
         # are rendered by the level-incremental chain below, straggler
         # cells (over-budget, unprovable split) by the probe + the same
         # partition-spread render
         routed = (forest_route_df(fr0, opts, {c: 0 for c in leaves})
                   if leaves else None)
-
-        _steps: dict = {}
-
-        if render is not None:
-            # caller pre-started the z0 render before the gate/probe
-            # jobs (build() forest branch) — adopt its future
-            fut_render, obs_r, _rsteps = render
-        else:
-            obs_r = Observation()
-            _rsteps = _steps
-
-            def render_job():
-                self._set_pool("gvt-render")
-                _t = time.monotonic()
-                (rendered_features_df(fr0, opts).drop("z")
-                 .observe(obs_r, F.sum("n_simplified").alias("ns"))
-                 .write.mode("overwrite")
-                 .parquet(self._p("tilefeat", "z=0")))
-                _rsteps["render0"] = round(time.monotonic() - _t, 2)
-
-            fut_render = pool.submit(render_job)
 
         int_box: dict = {"acks": [], "stops": [], "extra_empties": [],
                          "internals": list(internals)}
@@ -1408,8 +1387,6 @@ class SparkTileEngine:
         _t2 = time.monotonic()
         fut_render.result()
         render_wait = time.monotonic() - _t2
-        if _rsteps is not _steps:
-            _steps.update(_rsteps)
         ns0 = int(obs_r.get["ns"] or 0)
 
         # driver-side rows: z0, internal-cell stats, empty children
@@ -1525,7 +1502,7 @@ class SparkTileEngine:
                 "n_leaves": len(leaves), "n_internal": len(internals),
                 "n_empty": len(empties),
                 "n_slots": getattr(self, "_forest_slot_bins", None),
-                "gate": getattr(self, "_forest_gate_sec", None),
+                "gate": gate_sec,
                 "vprobe": getattr(self, "_forest_vprobe_sec", None),
                 **_steps,
                 "task_secs_sum": round(sum(
@@ -1636,52 +1613,17 @@ class SparkTileEngine:
         if (start_z == 0 and features_df is None
                 and cached_features is None and z0_stats
                 and self._forest_eligible(z0_stats[0]["num_points"])):
-            # gate job decides for real: bounded-cut or fall through
-            # to the per-zoom loop
-            _tg = time.monotonic()
-            _fr0 = self._read_frontier(0)
-            # the z0 render depends only on the frontier, not the cut:
-            # start it BEFORE the gate + vertex-probe jobs so their
-            # serial prefix (the only driver-side decision point the
-            # forest has) overlaps the heaviest single render — FAIR
-            # pools share the fleet between them
-            from pyspark.sql import Observation
-            _obs_r = Observation()
-            _rsteps: dict = {}
-
-            def _z0_render_job():
-                self._set_pool("gvt-render")
-                _t = time.monotonic()
-                (rendered_features_df(_fr0, opts).drop("z")
-                 .observe(_obs_r, F.sum("n_simplified").alias("ns"))
-                 .write.mode("overwrite")
-                 .parquet(self._p("tilefeat", "z=0")))
-                _rsteps["render0"] = round(time.monotonic() - _t, 2)
-
-            _fut_render = pool.submit(_z0_render_job)
-            plan = self._forest_cut(forest_gate_df(
-                _fr0, opts, self._FOREST_MAX_LEVEL).collect(),
-                fr0=_fr0)
-            self._forest_gate_sec = round(time.monotonic() - _tg, 2)
-            if plan is None:
-                # defensive: the cut always returns a plan today, but a
-                # fall-through to the loop must not race the already-
-                # started z0 render
-                _fut_render.result()
-            if plan is not None:
-                try:
-                    self._build_forest(z0_stats[0], pool, futures,
-                                       plan, render=(_fut_render,
-                                                     _obs_r, _rsteps))
-                finally:
-                    for f in futures:
-                        f.result()
-                    pool.shutdown()
-                    self._stats_cache = None
-                    self._sub_meta_cache.clear()
-                    self._source_rows_cache.clear()
-                    self._df_cache.clear()
-                return
+            try:
+                self._build_forest(z0_stats[0], pool, futures)
+            finally:
+                for f in futures:
+                    f.result()
+                pool.shutdown()
+                self._stats_cache = None
+                self._sub_meta_cache.clear()
+                self._source_rows_cache.clear()
+                self._df_cache.clear()
+            return
 
         n_verts = (F.size("coords") / 3).cast("long").alias("n_verts")
         if start_z == 0:

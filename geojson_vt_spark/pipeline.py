@@ -1993,48 +1993,79 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
 
 # ---------------------------------------------------------------- forest wave
 
-def _cell_window_cols(lvl_col, c_col, k1c: float, k2c: float,
-                      k3c: float, k4c: float):
-    """Exact buffered-window bounds for cell coordinate ``c_col`` at
-    zoom ``lvl_col``, as Columns — the SAME float sequence the kernel
-    clips against: (parent + const) / z2l with z2l = 2^(lvl-1) (an
-    exact power of two, so the division is exact in IEEE double and
-    the add is the only rounding step, identical to the scalar
-    Python/numpy computation)."""
-    z2l = F.pow(F.lit(2.0), (lvl_col - 1).cast("double"))
-    par = F.floor(c_col / 2).cast("double")
-    odd = (c_col % 2) == 1
-    lo = (par + F.when(odd, F.lit(k2c)).otherwise(F.lit(-k1c))) / z2l
-    hi = (par + F.when(odd, F.lit(k4c)).otherwise(F.lit(k3c))) / z2l
+def _dbl(v: float) -> str:
+    """SQL text of a DOUBLE literal.  A bare ``0.5`` parses as DECIMAL;
+    the ``D`` suffix keeps every window bound on the same IEEE double
+    sequence the kernel computes, and ``repr`` round-trips the exact
+    value."""
+    return f"({float(v)!r}D)"
+
+
+def _cell_window_sql(lvl: str, c: str, k1c: float, k2c: float,
+                     k3c: float, k4c: float) -> tuple[str, str]:
+    """Exact buffered-window bounds for cell coordinate ``c`` at zoom
+    ``lvl`` (SQL expressions over those columns) — the SAME float
+    sequence the kernel clips against: (parent + const) / z2l with
+    z2l = 2^(lvl-1) (an exact power of two, so the division is exact in
+    IEEE double and the add is the only rounding step, identical to the
+    scalar Python/numpy computation, _cell_window).  Built as SQL text
+    so a plan costs one parse, not one JVM call per expression node."""
+    z2l = f"POWER(2.0D, CAST({lvl} - 1 AS DOUBLE))"
+    par = f"CAST(FLOOR({c} / 2) AS DOUBLE)"
+    odd = f"{c} % 2 = 1"
+    lo = (f"(({par} + CASE WHEN {odd} THEN {_dbl(k2c)} "
+          f"ELSE {_dbl(-k1c)} END) / {z2l})")
+    hi = (f"(({par} + CASE WHEN {odd} THEN {_dbl(k4c)} "
+          f"ELSE {_dbl(k3c)} END) / {z2l})")
     return lo, hi
 
 
-def _cand_range_cols(lo_col, hi_col, u, cmax, b):
-    """Tight arithmetic candidate-cell range for the buffered windows:
-    cell c's exact window is [(c-b)/2^l, (c+1+b)/2^l] up to the ≤2-ulp
-    rounding of the (parent + const)/z2l float sequence, so the cells
-    a bbox [lo,hi] is not trivially rejected from lie in
-    floor(lo·u - b - eps) .. floor(hi·u + b + eps) — eps absorbs the
-    window rounding (|err| ≤ ulp((c+1+b))·u ≈ 1e-14 for l ≤ 7).  The
-    former whole-cell slack (±(1+b)·cell per side) tripled the explode
-    volume per axis for point-sized inputs; downstream the exact float
-    window filter keeps the emitted row set identical.  Degenerate
-    clamped ranges (multi-world copies far outside [0,1]) collapse to
-    ONE bogus candidate via greatest() — branch-free, and the exact
-    filter drops it — instead of a descending sequence() blow-up."""
+def _cand_range_sql(lo: str, hi: str, lvl: str, b: float) -> str:
+    """Tight arithmetic candidate-cell range for the buffered windows
+    (SQL expression): cell c's exact window is [(c-b)/2^l, (c+1+b)/2^l]
+    up to the ≤2-ulp rounding of the (parent + const)/z2l float
+    sequence, so the cells a bbox [lo,hi] is not trivially rejected
+    from lie in floor(lo·u - b - eps) .. floor(hi·u + b + eps) — eps
+    absorbs the window rounding (|err| ≤ ulp((c+1+b))·u ≈ 1e-14 for
+    l ≤ 7).  The former whole-cell slack (±(1+b)·cell per side)
+    tripled the explode volume per axis for point-sized inputs;
+    downstream the exact float window filter keeps the emitted row set
+    identical.  Degenerate clamped ranges (multi-world copies far
+    outside [0,1]) collapse to ONE bogus candidate via greatest() —
+    branch-free, and the exact filter drops it — instead of a
+    descending sequence() blow-up."""
     eps = 1e-9
-    lo = F.greatest(F.lit(0).cast("long"),
-                    F.floor(lo_col * u - F.lit(b + eps)).cast("long"))
-    hi = F.least(cmax,
-                 F.floor(hi_col * u + F.lit(b + eps)).cast("long"))
-    return F.sequence(lo, F.greatest(lo, hi))
+    u = f"POWER(2.0D, CAST({lvl} AS DOUBLE))"
+    first = (f"GREATEST(CAST(0 AS BIGINT), "
+             f"CAST(FLOOR({lo} * {u} - {_dbl(b + eps)}) AS BIGINT))")
+    last = (f"LEAST(CAST({u} AS BIGINT) - 1, "
+            f"CAST(FLOOR({hi} * {u} + {_dbl(b + eps)}) AS BIGINT))")
+    return f"sequence({first}, GREATEST({first}, {last}))"
+
+
+def _window_preds(options: TileOptions, x: str, y: str, lvl: str):
+    """(reject, inside) SQL predicates of the bbox columns against the
+    buffered window of cell (``x``, ``y``) at zoom ``lvl`` — the
+    trivial-reject test of clip.js:18-19 and its fully-inside twin."""
+    k1c = 0.5 * options.buffer / options.extent
+    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
+    xlo, xhi = _cell_window_sql(lvl, x, *k)
+    ylo, yhi = _cell_window_sql(lvl, y, *k)
+    rej = (f"(maxx < {xlo} OR minx >= {xhi} "
+           f"OR maxy < {ylo} OR miny >= {yhi})")
+    inside = (f"(minx >= {xlo} AND maxx <= {xhi} "
+              f"AND miny >= {ylo} AND maxy <= {yhi})")
+    return rej, inside
+
+
+_NV_SQL = "CAST(size(coords) / 3 AS BIGINT)"
 
 
 def forest_gate_df(frontier0: DataFrame, options: TileOptions,
                    max_level: int) -> DataFrame:
     """Per-cell candidate + guaranteed-inside vertex masses for EVERY
     quadtree cell at zooms 1..max_level, in one slim job: arithmetic
-    candidate rectangles (tight bbox × 2^lvl ranges, _cand_range_cols)
+    candidate rectangles (tight bbox × 2^lvl ranges, _cand_range_sql)
     are explode()d, then filtered with the cell's EXACT window floats,
     and a partial-agg groupBy collapses to ≤4^lvl rows per level before
     the exchange.  Output: (lvl, x, y, m, i) — m is the mass the cell's
@@ -2043,40 +2074,27 @@ def forest_gate_df(frontier0: DataFrame, options: TileOptions,
     FULLY INSIDE the window (an exact lower bound on post-clip
     num_points: such features survive the clip intact, so
     i > index_max_points proves the stop rule splits the cell)."""
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
-    b = 2 * k1c
-    nv = (F.size("coords") / 3).cast("long")
-    lvl = F.col("_lvl")
-    u = F.pow(F.lit(2.0), lvl.cast("double"))
-    cmax = F.pow(F.lit(2.0), lvl.cast("double")).cast("long") - 1
-
-    df = (frontier0
-          .select(F.col("minx"), F.col("miny"), F.col("maxx"),
-                  F.col("maxy"), nv.alias("_nv"))
-          .withColumn("_lvl", F.explode(F.array(
-              *[F.lit(z) for z in range(1, max_level + 1)])))
-          .withColumn("_cx", F.explode(_cand_range_cols(
-              F.col("minx"), F.col("maxx"), u, cmax, b)))
-          .withColumn("_cy", F.explode(_cand_range_cols(
-              F.col("miny"), F.col("maxy"), u, cmax, b))))
-    xlo, xhi = _cell_window_cols(lvl, F.col("_cx"), k1c, k2c, k3c, k4c)
-    ylo, yhi = _cell_window_cols(lvl, F.col("_cy"), k1c, k2c, k3c, k4c)
-    rej = ((F.col("maxx") < xlo) | (F.col("minx") >= xhi) |
-           (F.col("maxy") < ylo) | (F.col("miny") >= yhi))
-    inside = ((F.col("minx") >= xlo) & (F.col("maxx") <= xhi) &
-              (F.col("miny") >= ylo) & (F.col("maxy") <= yhi))
-    return (df.where(~rej)
-            .groupBy(F.col("_lvl").alias("lvl"),
-                     F.col("_cx").alias("x"), F.col("_cy").alias("y"))
-            .agg(F.sum("_nv").alias("m"),
-                 F.sum(F.when(inside, F.col("_nv"))
-                       .otherwise(F.lit(0).cast("long"))).alias("i")))
+    b = options.buffer / options.extent
+    levels = ", ".join(str(z) for z in range(1, max_level + 1))
+    rej, inside = _window_preds(options, "_cx", "_cy", "_lvl")
+    return (frontier0
+            .selectExpr("minx", "miny", "maxx", "maxy", f"{_NV_SQL} AS _nv",
+                        f"explode(array({levels})) AS _lvl")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('minx', 'maxx', '_lvl', b)}) AS _cx")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('miny', 'maxy', '_lvl', b)}) AS _cy")
+            .where(f"NOT {rej}")
+            .selectExpr("_lvl AS lvl", "_cx AS x", "_cy AS y", "_nv",
+                        f"CASE WHEN {inside} THEN _nv "
+                        "ELSE CAST(0 AS BIGINT) END AS _in")
+            .groupBy("lvl", "x", "y")
+            .agg(F.expr("sum(_nv) AS m"), F.expr("sum(_in) AS i")))
 
 
 def _cell_window(lvl: int, c: int, k1c: float, k2c: float,
                  k3c: float, k4c: float) -> tuple[float, float]:
-    """Scalar twin of _cell_window_cols: the exact (parent + const) /
+    """Scalar twin of _cell_window_sql: the exact (parent + const) /
     2^(lvl-1) float pair the kernel clips cell ``c`` at zoom ``lvl``
     against."""
     z2l = float(1 << (lvl - 1))
@@ -2115,49 +2133,41 @@ def forest_vertex_probe_df(frontier0: DataFrame, options: TileOptions,
     routing invariant), so restricting to bbox-overlap of the ROOT
     windows loses no vertex of any descendant cell: the returned
     (lvl, x, y, v) counts are exact for every cell under a root.
+    Rows without a vertex are dropped before the vertex explode: an
+    empty ``coords`` has no vertex to count, and sequence(0, -1) would
+    index it out of bounds (an error under ANSI mode).
 
-    100-TB posture: one narrow job — Column bbox prefilter at the
-    scan, JVM-side vertex explode (no Python), arithmetic candidate
-    cells per vertex, exact strict window filter, partial-agg groupBy
+    100-TB posture: one narrow job — SQL bbox prefilter at the scan,
+    JVM-side vertex explode (no Python), arithmetic candidate cells
+    per vertex, exact strict window filter, partial-agg groupBy
     collapsing to ≤4^lvl rows per level before the only exchange."""
     k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
+    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
     b = 2 * k1c
 
-    overlap = F.lit(False)
-    for (rl, rx, ry) in roots:
-        xlo, xhi = _cell_window(rl, rx, k1c, k2c, k3c, k4c)
-        ylo, yhi = _cell_window(rl, ry, k1c, k2c, k3c, k4c)
-        overlap = overlap | ~((F.col("maxx") < xlo)
-                              | (F.col("minx") >= xhi)
-                              | (F.col("maxy") < ylo)
-                              | (F.col("miny") >= yhi))
-
-    verts = F.expr(
-        "transform(sequence(0, cast(size(coords)/3 as int) - 1), "
-        "k -> struct(coords[3*k] AS vx, coords[3*k+1] AS vy))")
-    lvl = F.col("_lvl")
-    u = F.pow(F.lit(2.0), lvl.cast("double"))
-    cmax = F.pow(F.lit(2.0), lvl.cast("double")).cast("long") - 1
-
-    df = (frontier0
-          .where(overlap)
-          .select(F.explode(verts).alias("_v"))
-          .select(F.col("_v.vx").alias("vx"), F.col("_v.vy").alias("vy"))
-          .withColumn("_lvl", F.explode(F.array(
-              *[F.lit(int(z)) for z in sorted(levels)])))
-          .withColumn("_cx", F.explode(_cand_range_cols(
-              F.col("vx"), F.col("vx"), u, cmax, b)))
-          .withColumn("_cy", F.explode(_cand_range_cols(
-              F.col("vy"), F.col("vy"), u, cmax, b))))
-    xlo, xhi = _cell_window_cols(lvl, F.col("_cx"), k1c, k2c, k3c, k4c)
-    ylo, yhi = _cell_window_cols(lvl, F.col("_cy"), k1c, k2c, k3c, k4c)
-    inside = ((F.col("vx") > xlo) & (F.col("vx") < xhi) &
-              (F.col("vy") > ylo) & (F.col("vy") < yhi))
-    return (df.where(inside)
+    overlap = [f"NOT {_window_preds(options, str(rx), str(ry), str(rl))[0]}"
+               for rl, rx, ry in roots]
+    xlo, xhi = _cell_window_sql("_lvl", "_cx", *k)
+    ylo, yhi = _cell_window_sql("_lvl", "_cy", *k)
+    lvls = ", ".join(str(int(z)) for z in sorted(levels))
+    return (frontier0
+            .where(f"size(coords) >= 3 AND "
+                   f"({' OR '.join(overlap) or 'false'})")
+            .selectExpr(
+                "explode(transform(sequence(0, "
+                "CAST(size(coords) / 3 AS INT) - 1), "
+                "k -> struct(coords[3 * k] AS vx, coords[3 * k + 1] AS vy)"
+                ")) AS _v")
+            .selectExpr("_v.vx AS vx", "_v.vy AS vy",
+                        f"explode(array({lvls})) AS _lvl")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('vx', 'vx', '_lvl', b)}) AS _cx")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('vy', 'vy', '_lvl', b)}) AS _cy")
+            .where(f"vx > {xlo} AND vx < {xhi} AND vy > {ylo} AND vy < {yhi}")
             .groupBy(F.col("_lvl").alias("lvl"),
                      F.col("_cx").alias("x"), F.col("_cy").alias("y"))
-            .agg(F.count(F.lit(1)).alias("v")))
+            .agg(F.expr("count(1) AS v")))
 
 
 def forest_route_df(frontier0: DataFrame, options: TileOptions,
@@ -2172,40 +2182,30 @@ def forest_route_df(frontier0: DataFrame, options: TileOptions,
     subtree).  Feature columns ride unchanged; emitted row sets match
     the level-by-level reroute exactly (child windows are contained in
     their parents')."""
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
-    b = 2 * k1c
-    levels = sorted({z for z, _, _ in cells})
+    b = options.buffer / options.extent
+    levels = ", ".join(str(z) for z in sorted({z for z, _, _ in cells}))
     keys = {(z << 50) | (x << 25) | y: r
             for (z, x, y), r in cells.items()}
-    internal = [k for k, r in keys.items() if r == 1]
-    lvl = F.col("_lvl")
-    u = F.pow(F.lit(2.0), lvl.cast("double"))
-    cmax = F.pow(F.lit(2.0), lvl.cast("double")).cast("long") - 1
+    key = ("(CAST(_lvl AS BIGINT) * 1125899906842624L "
+           "+ _cx * 33554432L + _cy)")
 
-    df = (frontier0
-          .withColumn("_lvl", F.explode(F.array(
-              *[F.lit(z) for z in levels])))
-          .withColumn("_cx", F.explode(_cand_range_cols(
-              F.col("minx"), F.col("maxx"), u, cmax, b)))
-          .withColumn("_cy", F.explode(_cand_range_cols(
-              F.col("miny"), F.col("maxy"), u, cmax, b))))
-    xlo, xhi = _cell_window_cols(lvl, F.col("_cx"), k1c, k2c, k3c, k4c)
-    ylo, yhi = _cell_window_cols(lvl, F.col("_cy"), k1c, k2c, k3c, k4c)
-    rej = ((F.col("maxx") < xlo) | (F.col("minx") >= xhi) |
-           (F.col("maxy") < ylo) | (F.col("miny") >= yhi))
-    key = ((lvl.cast("long") * F.lit(1 << 50).cast("long"))
-           + (F.col("_cx") * F.lit(1 << 25).cast("long"))
-           + F.col("_cy"))
-    return (df.where(~rej)
-            .where(key.isin(*[int(k) for k in keys]))
-            .withColumn("role", F.when(
-                key.isin(*[int(k) for k in internal]) if internal
-                else F.lit(False), F.lit(1)).otherwise(F.lit(0)))
-            .withColumn("z", F.col("_lvl"))
-            .withColumn("x", F.col("_cx").cast("int"))
-            .withColumn("y", F.col("_cy").cast("int"))
-            .select(*TILED_COLUMNS, "role"))
+    def member(ks):
+        return (f"{key} IN ({', '.join(f'{int(k)}L' for k in ks)})"
+                if ks else "false")
+
+    internal = [k for k, r in keys.items() if r == 1]
+    rej, _ = _window_preds(options, "_cx", "_cy", "_lvl")
+    return (frontier0
+            .selectExpr("*", f"explode(array({levels})) AS _lvl")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('minx', 'maxx', '_lvl', b)}) AS _cx")
+            .selectExpr("*", "explode("
+                        f"{_cand_range_sql('miny', 'maxy', '_lvl', b)}) AS _cy")
+            .where(f"NOT {rej} AND {member(keys)}")
+            .selectExpr("_lvl AS z", "CAST(_cx AS INT) AS x",
+                        "CAST(_cy AS INT) AS y", *FEATURE_COLUMNS,
+                        f"CASE WHEN {member(internal)} THEN 1 ELSE 0 END "
+                        "AS role"))
 
 
 def _empty_tiled_table():

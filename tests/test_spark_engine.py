@@ -816,3 +816,304 @@ def test_slot_wave_matches_group_wave(spark, tmp_path, monkeypatch):
     pa_ = sorted(_os.listdir(tmp_path / "slot" / "subtree" / "b=1"))
     pb_ = sorted(_os.listdir(tmp_path / "grp" / "subtree" / "b=1"))
     assert pa_ == pb_  # per-cell deterministic names, wave-shape oblivious
+
+
+def _window_fn(opts):
+    """Scalar buffered window of cell ``c`` at zoom ``lvl`` — the float
+    sequence the kernel clips against."""
+    from geojson_vt_spark.pipeline import _cell_window
+    k1c = 0.5 * opts.buffer / opts.extent
+    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
+    return lambda lvl, c: _cell_window(lvl, c, *k)
+
+
+def _strict_vertex_recount(rows, opts, roots, levels):
+    """Driver recount of forest_vertex_probe_df: vertices strictly
+    inside each cell window, over rows whose bbox overlaps a root."""
+    window = _window_fn(opts)
+
+    def overlaps(r, lvl, x, y):
+        xlo, xhi = window(lvl, x)
+        ylo, yhi = window(lvl, y)
+        return not (r["maxx"] < xlo or r["minx"] >= xhi
+                    or r["maxy"] < ylo or r["miny"] >= yhi)
+
+    want = {}
+    for r in rows:
+        if not any(overlaps(r, *root) for root in roots):
+            continue
+        cs = r["coords"]
+        for j in range(0, len(cs), 3):
+            vx, vy = cs[j], cs[j + 1]
+            for lvl in levels:
+                for cx in range(1 << lvl):
+                    xlo, xhi = window(lvl, cx)
+                    if not (xlo < vx < xhi):
+                        continue
+                    for cy in range(1 << lvl):
+                        ylo, yhi = window(lvl, cy)
+                        if ylo < vy < yhi:
+                            k = (lvl, cx, cy)
+                            want[k] = want.get(k, 0) + 1
+    return want
+
+
+def test_vertex_probe_skips_empty_coords_row(spark, tmp_path):
+    """A frontier row with an EMPTY coords array (and a bbox over the
+    probed roots) must not fail the vertex probe under ANSI mode —
+    sequence(0, -1) would index the empty array — and contributes no
+    vertex: counts equal the driver recount."""
+    import json as _json
+    import math
+
+    from pyspark.sql import functions as F
+
+    from geojson_vt_spark.pipeline import (features_from_json_df,
+                                           forest_vertex_probe_df)
+
+    rows = []
+    for i in range(60):
+        cx_lon = (0.47 + (i % 30) * 0.001 - 0.5 + 0.03) * 360.0
+        ring = [[round(cx_lon + 11.0 * math.cos(2 * math.pi * k / 6), 5),
+                 round((i % 7 - 3) * 2.0
+                       + 5.0 * math.sin(2 * math.pi * k / 6), 5)]
+                for k in range(6)]
+        ring.append(ring[0])
+        rows.append((i, None, '{"type":"Feature","properties":{},'
+                     '"geometry":{"type":"Polygon","coordinates":['
+                     + _json.dumps(ring) + ']}}'))
+    opts = TileOptions(index_max_zoom=5, index_max_points=100)
+    feats = features_from_json_df(spark.createDataFrame(
+        rows, "input_ord long, gen_index long, feature_json string"), opts)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
+    fr0 = eng._frontier0_view(feats)
+    empty = fr0.limit(1).withColumn(
+        "coords", F.expr("CAST(array() AS array<double>)"))
+    fr0 = fr0.unionByName(empty)
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+    roots = [(1, 0, 0), (1, 1, 0), (1, 0, 1), (1, 1, 1)]
+    got = {(r["lvl"], r["x"], r["y"]): r["v"]
+           for r in forest_vertex_probe_df(fr0, opts, roots,
+                                           [1, 2]).collect()}
+    frows = fr0.select("coords", "minx", "miny", "maxx", "maxy").collect()
+    assert any(len(r["coords"]) == 0 for r in frows)
+    assert got == _strict_vertex_recount(frows, opts, roots, [1, 2])
+
+
+def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
+    """The SQL-text gate, router, vertex probe and deep-plan aggregates
+    must reproduce the scalar window floats exactly: bboxes and
+    vertices placed ON window edges (and one ulp either side), with a
+    non-power-of-two extent so the window constants are not dyadic,
+    agree with a driver recount from pipeline._cell_window."""
+    import math
+
+    from geojson_vt_spark.model import FEATURE_SCHEMA
+    from geojson_vt_spark.pipeline import (forest_gate_df, forest_route_df,
+                                           forest_vertex_probe_df)
+
+    opts = TileOptions(index_max_zoom=6, index_max_points=100,
+                       extent=4000, buffer=100)
+    window = _window_fn(opts)
+    levels = (1, 2, 3)
+
+    def variants(lo, hi):
+        dn, up = math.nextafter(lo, -2.0), math.nextafter(hi, 2.0)
+        return [(hi, hi), (lo, lo), (lo, hi), (dn, hi), (lo, up), (dn, dn),
+                (math.nextafter(hi, -2.0), up)]
+
+    # the forest only sees unwrapped features: bboxes inside [0, 1]
+    boxes = []
+    for lvl in levels:
+        for c in range(1 << lvl):
+            xs = variants(*window(lvl, c))
+            ys = variants(*window(lvl, (c + 1) % (1 << lvl)))
+            for i, (x0, x1) in enumerate(xs):
+                for j in (i, (i + 3) % len(ys)):
+                    box = (x0, ys[j][0], x1, ys[j][1])
+                    if all(0.0 <= v <= 1.0 for v in box):
+                        boxes.append(box)
+    src = spark.createDataFrame(
+        [([i], None, None, "LineString", [x0, y0, 0.0, x1, y1, 0.0], [2],
+          None, [0.0], [0.0], [0.0], x0, y0, x1, y1)
+         for i, (x0, y0, x1, y1) in enumerate(boxes)], FEATURE_SCHEMA)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "e"))
+    fr0 = eng._frontier0_view(src)
+
+    def cells_of(box, lvl):
+        x0, y0, x1, y1 = box
+        for cx in range(1 << lvl):
+            xlo, xhi = window(lvl, cx)
+            for cy in range(1 << lvl):
+                ylo, yhi = window(lvl, cy)
+                if not (x1 < xlo or x0 >= xhi or y1 < ylo or y0 >= yhi):
+                    yield cx, cy, (x0 >= xlo and x1 <= xhi
+                                   and y0 >= ylo and y1 <= yhi)
+
+    # gate: candidate + fully-inside masses per cell
+    want_gate = {}
+    for box in boxes:
+        for lvl in levels:
+            for cx, cy, inside in cells_of(box, lvl):
+                m, i = want_gate.get((lvl, cx, cy), (0, 0))
+                want_gate[(lvl, cx, cy)] = (m + 2, i + 2 * inside)
+    got_gate = {(r["lvl"], r["x"], r["y"]): (r["m"], r["i"])
+                for r in forest_gate_df(fr0, opts, max(levels)).collect()}
+    assert got_gate == want_gate
+
+    # router: every (row, cut cell, role) pair
+    cut = {(lvl, x, y): (x + y) % 2 for lvl in levels
+           for x in range(1 << lvl) for y in range(1 << lvl)}
+    want_route = {(n, lvl, cx, cy, cut[(lvl, cx, cy)])
+                  for n, box in enumerate(boxes) for lvl in levels
+                  for cx, cy, _ in cells_of(box, lvl)}
+    got_route = {(r["ord_path"][1], r["z"], r["x"], r["y"], r["role"])
+                 for r in forest_route_df(fr0, opts, cut).collect()}
+    assert got_route == want_route
+
+    # deep-plan aggregates over the z1 / z2 cells
+    row = fr0.agg(*eng._deep_plan_aggs("n_verts")).first()
+    for tag, lvl in (("a", 1), ("b", 2)):
+        for cx in range(1 << lvl):
+            for cy in range(1 << lvl):
+                m, i = want_gate.get((lvl, cx, cy), (0, 0))
+                assert (row[f"m{tag}{cx}_{cy}"], row[f"i{tag}{cx}_{cy}"]) \
+                    == (m, i), (tag, cx, cy)
+
+    # vertex probe: strict inside, vertices on the edges
+    roots = [(1, 0, 0), (1, 1, 0), (1, 0, 1), (1, 1, 1)]
+    got_v = {(r["lvl"], r["x"], r["y"]): r["v"]
+             for r in forest_vertex_probe_df(fr0, opts, roots,
+                                             list(levels)).collect()}
+    frows = fr0.select("coords", "minx", "miny", "maxx", "maxy").collect()
+    assert got_v == _strict_vertex_recount(frows, opts, roots, levels)
+
+
+def test_forest_straggler_factor_read_at_cut_time(spark, tmp_path,
+                                                  monkeypatch):
+    """GVT_FOREST_STRAGGLER set AFTER import still applies (read when
+    the cut runs), and a malformed value falls back to 2."""
+    opts = TileOptions(index_max_zoom=6, index_max_points=100)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "s"))
+    budget = eng._KERNEL_PTS_PER_TASK
+    # one z1 cell at 3 task budgets of work, no split proof (i == 0)
+    gate = [{"lvl": 1, "x": 0, "y": 0,
+             "m": 3 * budget // (opts.index_max_zoom - 1), "i": 0}]
+    monkeypatch.delenv("GVT_FOREST_STRAGGLER", raising=False)
+    leaves, _, _, stragglers = eng._forest_cut(gate)
+    assert stragglers == [(1, 0, 0)] and not leaves
+    monkeypatch.setenv("GVT_FOREST_STRAGGLER", "7")
+    leaves, _, _, stragglers = eng._forest_cut(gate)
+    assert leaves == [(1, 0, 0)] and not stragglers
+    monkeypatch.setenv("GVT_FOREST_STRAGGLER", "two")
+    leaves, _, _, stragglers = eng._forest_cut(gate)
+    assert stragglers == [(1, 0, 0)] and not leaves
+
+
+def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
+    """The z0 render starts before the forest gate; when the gate
+    raises, the build must wait for the render before propagating —
+    the render has finished (its store is committed) and no Spark job
+    of the failed build is still running."""
+    import geojson_vt_spark.engine as engine_mod
+    from geojson_vt_spark.pipeline import features_from_json_df
+    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
+                                                 synth_pages_df)
+
+    opts = TileOptions(index_max_zoom=6, index_max_points=100)
+    feats = features_from_json_df(
+        extract_geo_features_df(synth_pages_df(spark, 2500, seed=11)), opts)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("gate failed")
+
+    monkeypatch.setattr(engine_mod, "forest_gate_df", boom)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
+                          one_wave=True)
+    eng._KERNEL_PTS_PER_TASK = 2000  # forest path, cut not stats-proven
+    with pytest.raises(RuntimeError, match="gate failed"):
+        eng.build_from_converted(feats, approx_rows=2500)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert (tmp_path / "f" / "tilefeat" / "z=0" / "_SUCCESS").exists()
+
+
+def _clustered_collection(seed: int, n: int) -> dict:
+    """Polygons, lines and points around a few metro centres plus a
+    uniform background — no feature near the dateline (no wrap)."""
+    import math
+    import random
+
+    rng = random.Random(seed)
+    metros = [(-74.0, 40.7), (2.35, 48.85), (139.7, 35.7), (-46.6, -23.5)]
+    feats = []
+    for i in range(n):
+        if rng.random() < 0.8:
+            mx, my = rng.choice(metros)
+            cx, cy = rng.gauss(mx, 2.0), rng.gauss(my, 2.0)
+        else:
+            cx, cy = rng.uniform(-160, 160), rng.uniform(-70, 70)
+        kind = rng.random()
+        if kind < 0.6:
+            k, r = rng.randint(5, 12), rng.uniform(0.05, 1.5)
+            ring = [[round(cx + r * math.cos(2 * math.pi * j / k), 6),
+                     round(cy + r * math.sin(2 * math.pi * j / k), 6)]
+                    for j in range(k)]
+            geom = {"type": "Polygon", "coordinates": [ring + [ring[0]]]}
+        elif kind < 0.85:
+            pts = [[round(cx + rng.uniform(-1, 1), 6),
+                    round(cy + rng.uniform(-1, 1), 6)]
+                   for _ in range(rng.randint(2, 9))]
+            geom = {"type": "LineString", "coordinates": pts}
+        else:
+            geom = {"type": "Point",
+                    "coordinates": [round(cx, 6), round(cy, 6)]}
+        feats.append({"type": "Feature", "id": i,
+                      "properties": {"n": i % 5}, "geometry": geom})
+    return {"type": "FeatureCollection", "features": feats}
+
+
+def test_forest_stats_proven_cut_skips_gate(spark, tmp_path, monkeypatch):
+    """When the z0 stats prove the cut is the four z1 leaves
+    (num_points × (imz - 1) ≤ the task budget), the forest build runs
+    no gate job: lineage records forest with gate null, and the
+    pyramid equals the in-process kernel index tile for tile."""
+    import json as _json
+
+    import geojson_vt_spark.engine as engine_mod
+    from geojson_vt_spark.kernel import LocalTileIndex
+    from geojson_vt_spark.kernel.index import to_id
+
+    data = _clustered_collection(5, 400)
+    opts = TileOptions(index_max_zoom=5, index_max_points=50)
+    idx = LocalTileIndex(data, opts)
+    n_points = idx.tiles[to_id(0, 0, 0)].num_points
+
+    def no_gate(*_a, **_k):
+        raise AssertionError("gate job ran")
+
+    monkeypatch.setattr(engine_mod, "forest_gate_df", no_gate)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
+                          one_wave=True)
+    # the smallest budget that still proves the depth-1 cut: too small
+    # for the one-wave, so the forest path runs
+    eng._KERNEL_PTS_PER_TASK = n_points * (opts.index_max_zoom - 1)
+    eng.build_from_geojson(data)
+
+    lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
+    assert lin[0]["n_points"] == n_points
+    st = [r for r in lin if r.get("subtree_batch")][0]
+    assert st.get("forest") and st["steps"]["gate"] is None, st
+    assert st["steps"]["n_leaves"] == 4 and st["steps"]["n_internal"] == 0
+
+    want = {f"z{t.z}-{t.x}-{t.y}": idx.get_tile(t.z, t.x, t.y)["features"]
+            for t in list(idx.tiles.values())}
+    got = eng.enumerate_tiles()
+    assert set(got) == set(want)
+    assert not [k for k in want if got[k] != want[k]]
+    assert eng.tile_coords() == idx.tile_coords
+    for zxy in [(6, 37, 24), (7, 75, 48), (8, 220, 101)]:
+        a, b = eng.get_tile(*zxy), idx.get_tile(*zxy)
+        assert (a is None) == (b is None), zxy
+        if a is not None:
+            assert a["features"] == b["features"], zxy
