@@ -9,9 +9,13 @@ from pyspark.sql import functions as F
 
 
 def _drain(query, seconds=20, want_rows=1, spark=None, table=None):
+    # Poll instead of processAllAvailable(): a rate source always has
+    # new data, so that call can block forever once the host is too
+    # busy for the query to ever go idle between micro-batches.
     deadline = time.time() + seconds
     while time.time() < deadline:
-        query.processAllAvailable()
+        if query.exception() is not None:
+            raise query.exception()
         if spark is not None and table is not None:
             if spark.table(table).count() >= want_rows:
                 break
