@@ -28,7 +28,7 @@ PAGES = int(os.environ.get("SPARK_GRAFT_PAGES", "2000000"))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (SparkSession.builder.master(f"local[{cpus}]")
@@ -98,19 +98,15 @@ def main() -> None:
     for c in over:
         print("  ", c)
 
-    # leaf wave with per-cell acks
-    cut = {(l, x, y): 0 for (l, x, y, *_rest) in leaves + stragglers}
+    # leaf wave with per-cell acks: the engine's LPT-packed slot wave
+    # (pipeline.forest_slot_wave_df) over this cut, weighted by the
+    # same per-cell work estimates the engine's cut records
+    cut = [(l, x, y) for (l, x, y, *_rest) in leaves + stragglers]
     routed = forest_route_df(fr0, opts, cut)
-    from geojson_vt_spark.pipeline import one_wave_stage_df
-    import tempfile
-    out = tempfile.mkdtemp(prefix="gvt_probe_out_")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                   "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(max(64, 2 * len(cut))))
+    eng._forest_leaf_work = {(l, x, y): w
+                             for (l, x, y, m, i, w) in leaves + stragglers}
     t0 = time.monotonic()
-    acks = one_wave_stage_df(routed.where(F.col("role") == 0), opts,
-                             out_dir=out, from_zoom=0).collect()
+    acks = eng._forest_leaf_wave(cut, routed=routed)
     wall = time.monotonic() - t0
     acks = sorted(acks, key=lambda r: -r["secs"])
     print(f"leaf wave: {wall:.2f}s, {len(acks)} tasks, "
@@ -125,7 +121,7 @@ def main() -> None:
         json.dump([{k: r[k] for k in ("z", "x", "y", "n", "n_cand",
                                       "secs")} for r in acks], f)
     import shutil
-    shutil.rmtree(out, ignore_errors=True)
+    shutil.rmtree(wd, ignore_errors=True)
     spark.stop()
 
 

@@ -90,14 +90,14 @@ def main() -> None:
         synth_pages_df(spark, n_pages, seed=42)).write.parquet(ext)
     rows = spark.read.parquet(ext)
 
-    # GVT_LOOP=1 forces the per-zoom loop (one_wave=False) so the
-    # forest/one-wave paths can be A/B'd against it on the same grid
-    eng = SparkTileEngine(spark, opts, workdir=wd,
-                          one_wave=os.environ.get("GVT_LOOP",
-                                                  "0") != "1")
+    # GVT_LOOP=1 forces the per-zoom loop (a zero forest task budget
+    # makes no cut feasible) so the forest can be A/B'd against it on
+    # the same grid
+    eng = SparkTileEngine(spark, opts, workdir=wd)
+    if os.environ.get("GVT_LOOP", "0") == "1":
+        eng._KERNEL_PTS_PER_TASK = 0
     t0 = time.monotonic()
-    eng.build_from_converted(features_from_json_df(rows, opts),
-                             approx_rows=n_pages)
+    eng.build_from_converted(features_from_json_df(rows, opts))
     n_tiles = eng.tiles().count()
     dt = time.monotonic() - t0
 

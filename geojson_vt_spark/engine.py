@@ -48,15 +48,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .kernel.index import to_id
 from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _dbl, _subtree_out_pdf, _window_preds,
+from .pipeline import (_NV_SQL, _dbl, _subtree_out_pdf,
                        _write_subtree_part,
                        render_files_direct, split_files_direct,
-                       batch_split_subtree, deep_wave_route_df,
+                       batch_split_subtree,
                        features_from_json_df, forest_gate_df,
-                       forest_route_df,
+                       forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
-                       one_wave_children_df,
-                       one_wave_stage_df,
                        rendered_features_df,
                        split_children_df, straggler_probe_stats,
                        wave_children_df,
@@ -82,15 +80,6 @@ _TILE_STATS_SCHEMA = T.StructType([
 ])
 
 
-def _has_parquet(path: str) -> bool:
-    """True when ``path`` is a local dir holding ≥1 parquet part —
-    the eligibility gate for the direct (task-side pyarrow) stages."""
-    try:
-        return any(f.endswith(".parquet") for f in os.listdir(path))
-    except OSError:
-        return False
-
-
 def _pack_xy(x: int, y: int) -> int:
     return (x << 25) | y
 
@@ -104,8 +93,7 @@ class SparkTileEngine:
     def __init__(self, spark: SparkSession, options: TileOptions | None = None,
                  workdir: str | None = None,
                  target_points_per_partition: int = 2_000_000,
-                 subtree_max_points: int | None = None,
-                 one_wave: bool | None = None):
+                 subtree_max_points: int | None = None):
         self.spark = spark
         self.options = options or TileOptions()
         if workdir is None:
@@ -114,12 +102,6 @@ class SparkTileEngine:
         self.workdir = workdir
         self.target_points_per_partition = target_points_per_partition
         self.subtree_max_points = subtree_max_points
-        # one-wave fast path (small corpora): None → env default (set
-        # GVT_ONE_WAVE=0 to force the per-zoom distributed loop; the
-        # differential tests build both layouts and compare)
-        if one_wave is None:
-            one_wave = os.environ.get("GVT_ONE_WAVE", "1") != "0"
-        self.one_wave = one_wave
         os.makedirs(workdir, exist_ok=True)
         # drill-down overlay: tiles/sources created by get_tile after build
         self._drill_tiles: dict[int, dict] = {}
@@ -351,9 +333,8 @@ class SparkTileEngine:
             df = df.repartition(min(n, max(1, len(rows) // 16)))
         # route through the converted-features checkpoint: the wrap
         # decision + z0 stats ride the checkpoint write, and small
-        # inputs take the one-wave fast path exactly like corpus builds
-        self.build_from_converted(features_from_json_df(df, self.options),
-                                  approx_rows=len(rows))
+        # inputs take the forest path exactly like corpus builds
+        self.build_from_converted(features_from_json_df(df, self.options))
 
     # the handoff threshold targets ~1.5-2s tasks at the measured batch-
     # kernel rate (~300-500k vertex-levels/sec per core after the round-2
@@ -369,9 +350,8 @@ class SparkTileEngine:
     # distributed round against ~2 s subtree tasks — every avoided
     # round buys far more than a longer straggler task costs, so the
     # LOOP hands off at ~3× the kernel task unit (≈4-6 s tasks).  The
-    # one-wave eligibility and the low-zoom parallelism guard keep the
-    # smaller unit: task sizing inside a single fused wave is still
-    # latency-bound by the slowest task alone.
+    # forest cut keeps the smaller unit: task sizing inside a single
+    # fused wave is still latency-bound by the slowest task alone.
     _HANDOFF_PTS_PER_TASK = 1_800_000
 
     # skew guard: a split tile that holds > _SKEW_FACTOR x the mean
@@ -520,9 +500,9 @@ class SparkTileEngine:
     def _ensure_subtrees(self, lineage_rows, pool, futures) -> None:
         """Resume path: re-run any handoff batch whose output is missing
         (killed mid-write) from its recorded keys — the frontier
-        checkpoint it reads is still on disk.  One-wave rows re-run the
-        fused wave from the features checkpoint instead (there is no
-        materialized z1 frontier on that path)."""
+        checkpoint it reads is still on disk.  Forest rows re-run the
+        leaf wave from the features checkpoint instead (there is no
+        materialized frontier on that path)."""
         for row in lineage_rows:
             keys = row.get("handoff") or []
             if not keys:
@@ -539,188 +519,7 @@ class SparkTileEngine:
                 continue
             marker = self._p("subtree", f"b={row['zoom']}", "_SUCCESS")
             if not os.path.exists(marker):
-                if row.get("one_wave"):
-                    futures.append(pool.submit(self._one_wave_subtree_job))
-                else:
-                    self._submit_subtree(pool, futures, row["zoom"], keys)
-
-    # deep-wave gate: a cell whose candidate vertex mass x the levels
-    # below it exceeds this is subdivided into its four child subtree
-    # tasks (plus a root-only task for the cell itself) INSIDE the
-    # same fused wave — the one-wave's skew lever.  Half the kernel
-    # task budget: only cells carrying at least half a task of work
-    # are worth the extra group overhead (measured: subdividing past
-    # this point trades a solved straggler for pure per-group pipe +
-    # scheduling cost — a 44-task wave ran 2x the 12-task wall on the
-    # same corpus once the hottest task was already under 0.5 s).
-    _DEEP_WAVE_PTS = 300_000
-
-    def _deep_plan_aggs(self, nv: str) -> list:
-        """Agg expressions for the deep-wave plan: candidate vertex
-        mass (bbox not trivially rejected) and guaranteed-inside
-        vertex mass for the 4 z1 cells and 16 z2 cells, window floats
-        identical to wave_stage_df's (parent + const) / z2l clips.
-        ``nv`` is the SQL text of the per-feature vertex count.  A
-        zero-width bbox ON a window's upper edge is trivially rejected
-        by the clip (clip.js:18-19) although it is "inside", so the
-        inside mass counts only non-rejected rows, as the forest gate
-        does.  These ride the ingest job (cache-first path) or a
-        one-off gate agg (resume path) — see _deep_plan_decide."""
-        aggs = []
-        for tag, lvl in (("a", 1), ("b", 2)):
-            for cy in range(1 << lvl):
-                for cx in range(1 << lvl):
-                    rej, inside = _window_preds(self.options, str(cx),
-                                                str(cy), str(lvl))
-                    for name, cond in (
-                            (f"m{tag}{cx}_{cy}", f"NOT {rej}"),
-                            (f"i{tag}{cx}_{cy}", f"NOT {rej} AND {inside}")):
-                        aggs.append(F.expr(
-                            f"sum(CASE WHEN {cond} THEN {nv} "
-                            f"ELSE CAST(0 AS BIGINT) END) AS {name}"))
-        return aggs
-
-    def _deep_plan_decide(self, row) -> tuple[list[tuple[int, int]],
-                                              list[tuple[int, int]]]:
-        """(z1 cells, z2 cells) to subdivide from a _deep_plan_aggs
-        row: candidate mass × levels below over the task budget AND
-        guaranteed-split (the fully-inside vertex mass is an exact
-        lower bound on post-clip num_points — such features survive
-        the clip intact — so > index_max_points proves the stop rule
-        will split the cell; the child subtree tasks, root-only tasks
-        and empty-child back-fill are then exactly what the in-task
-        recursion would have emitted).  A z2 cell is only considered
-        under a subdivided z1 parent."""
-        opts = self.options
-        imz = opts.index_max_zoom
-        budget = self._DEEP_WAVE_PTS
-        deep1 = [(x, y) for y in (0, 1) for x in (0, 1)
-                 if (int(row[f"ma{x}_{y}"] or 0) * (imz - 1) > budget
-                     and int(row[f"ia{x}_{y}"] or 0)
-                     > opts.index_max_points)]
-        deep2 = []
-        if imz >= 3 and deep1:
-            d1 = set(deep1)
-            deep2 = [(x, y) for y in range(4) for x in range(4)
-                     if ((x >> 1, y >> 1) in d1
-                         and int(row[f"mb{x}_{y}"] or 0) * (imz - 2)
-                         > budget
-                         and int(row[f"ib{x}_{y}"] or 0)
-                         > opts.index_max_points)]
-        return deep1, deep2
-
-    def _deep_wave_plan(
-            self, fr0: DataFrame) -> tuple[list[tuple[int, int]],
-                                           list[tuple[int, int]]]:
-        """One-off gate agg over the z0 frontier (resume path; the
-        cache-first path rides these aggs on the stats job instead and
-        hands the decided plan down as _deep_plan_hint)."""
-        if self.options.index_max_zoom < 2:
-            return [], []
-        row = fr0.agg(*self._deep_plan_aggs("n_verts")).first()
-        return self._deep_plan_decide(row)
-
-    def _one_wave_subtree_job(
-            self, fr0: DataFrame | None = None,
-            n_points: int | None = None) -> list[tuple[int, int]]:
-        """The fused one-wave handoff: Column router (no map-side
-        Python) → group by z1 child → in-task clip-from-parent + whole
-        descendant pyramid (see pipeline.one_wave_stage_df).  Reads the
-        z0 frontier view (features checkpoint, or the caller-supplied
-        cached frontier); returns the z1 children that received
-        candidate rows (their tiles live in the subtree store — the
-        rest are the split root's empty children).
-
-        Heavy z1 children (see _deep_wave_plan) are subdivided in
-        the SAME wave job: a root-only z1 task emits the child's own
-        tile row from the full clipped state, and four z2 tasks build
-        the grandchild subtrees (clipping z0→z1→z2 in-task, level by
-        level — bit-identical to the recursion, pipeline.wave_stage_df);
-        z2 cells still over the budget recurse once more into a
-        root-only z2 task + four z3 subtree tasks.  Children that
-        received no candidates are back-filled driver-side as empty
-        stats rows, exactly like the z1 case (index.js:151-154 pushes
-        ``tl || []``)."""
-        restore: dict[str, str] = {}
-        if fr0 is None:
-            # resume / checkpoint mode: the kernel-session clone keeps
-            # AQE from gluing the handful of CPU-heavy groups together
-            fr0 = self._read_frontier(0, self._kernel_spark())
-        else:
-            # cached mode: the persisted frontier is bound to the main
-            # session, so flip the same two knobs there for this one
-            # job (the only concurrent job, the z0 render, shuffles
-            # nothing and is unaffected)
-            conf = self.spark.conf
-            for k, v in (
-                    ("spark.sql.adaptive.coalescePartitions.enabled",
-                     "false"),
-                    ("spark.sql.shuffle.partitions", "64")):
-                restore[k] = conf.get(k)
-                conf.set(k, v)
-        try:
-            import shutil
-            self._set_pool("gvt-subtree")
-            _t0 = time.monotonic()
-            # the deep plan normally arrives precomputed (its aggs rode
-            # the cache-first stats job, _deep_plan_hint); the resume
-            # path pays one tiny gate agg over the checkpoint — and
-            # both are skipped when the caller's exact z0 point count
-            # proves no child can exceed the budget holding ALL the mass
-            hint = self.__dict__.pop("_deep_plan_hint", None)
-            deep1: list[tuple[int, int]] = []
-            deep2: list[tuple[int, int]] = []
-            if hint is not None:
-                deep1, deep2 = hint
-            elif (n_points is None or n_points
-                    * (self.options.index_max_zoom - 1)
-                    > self._DEEP_WAVE_PTS):
-                deep1, deep2 = self._deep_wave_plan(fr0)
-            _t1 = time.monotonic()
-            if deep1:
-                # single-pass router: every wave group's candidate rows
-                # (z1 cells + subdivided children down to z3, roles
-                # tagged) from ONE projection + explode over the cached
-                # frontier — no per-level rescan
-                cands = deep_wave_route_df(fr0, self.options,
-                                           deep1, deep2)
-            else:
-                cands = one_wave_children_df(fr0, self.options)
-            out = self._p("subtree", "b=1")
-            if os.path.isdir(out):
-                shutil.rmtree(out)  # overwrite semantics incl. partials
-            acks = one_wave_stage_df(
-                cands, self.options, out_dir=out,
-                from_zoom=0 if deep1 else None).collect()
-            _t2 = time.monotonic()
-            self._last_wave_steps = {
-                "gate": round(_t1 - _t0, 2),
-                "stage": round(_t2 - _t1, 2),
-                "n_tasks": len(acks),
-                "n_deep1": len(deep1), "n_deep2": len(deep2),
-                "task_secs_sum": round(sum(r["secs"] for r in acks), 2),
-                "task_secs_max": round(max(
-                    (r["secs"] for r in acks), default=0.0), 2)}
-            os.makedirs(out, exist_ok=True)
-            open(os.path.join(out, "_SUCCESS"), "w").close()
-            for z, parents in ((2, deep1), (3, deep2)):
-                if not parents:
-                    continue
-                got = {(r["x"], r["y"]) for r in acks if r["z"] == z}
-                missing = [(2 * px + dx, 2 * py + dy)
-                           for px, py in parents
-                           for dx in (0, 1) for dy in (0, 1)
-                           if (2 * px + dx, 2 * py + dy) not in got]
-                if missing:
-                    self._write_empty_tiles(z, missing)
-        finally:
-            for k, v in restore.items():
-                self.spark.conf.set(k, v)
-        return sorted({(r["x"], r["y"]) for r in acks if r["z"] == 1}
-                      | {(r["x"] >> 1, r["y"] >> 1)
-                         for r in acks if r["z"] == 2}
-                      | {(r["x"] >> 2, r["y"] >> 2)
-                         for r in acks if r["z"] == 3})
+                self._submit_subtree(pool, futures, row["zoom"], keys)
 
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
         """z0 frontier view over an already-converted features frame
@@ -732,141 +531,19 @@ class SparkTileEngine:
             *[c for c in FEATURE_COLUMNS if c != "ord_path"],
             f"{_NV_SQL} AS n_verts")
 
-    def _write_empty_tiles(self, z: int, coords: list) -> None:
-        """Stats-only empty tile rows (a split tile's children all
-        exist, index.js:151-154) for wave children that received no
-        candidates — sentinel bbox, leaf, no source pack."""
-        import pandas as pd
-        n_e = len(coords)
-        self._write_local_parquet(pd.DataFrame({
-            "x": pd.Series([c[0] for c in coords], dtype="int32"),
-            "y": pd.Series([c[1] for c in coords], dtype="int32"),
-            "num_features": pd.Series([0] * n_e, dtype="int64"),
-            "num_points": pd.Series([0] * n_e, dtype="int64"),
-            "num_simplified": pd.Series([0] * n_e, dtype="int64"),
-            "minx": pd.Series([2.0] * n_e, dtype="float64"),
-            "miny": pd.Series([1.0] * n_e, dtype="float64"),
-            "maxx": pd.Series([-1.0] * n_e, dtype="float64"),
-            "maxy": pd.Series([0.0] * n_e, dtype="float64"),
-            "is_split": pd.Series([False] * n_e, dtype="bool"),
-            "has_source": pd.Series([True] * n_e, dtype="bool"),
-            "tile_id": pd.Series([to_id(z, cx, cy)
-                                  for cx, cy in coords],
-                                 dtype="int64"),
-        }), self._p("tiles", f"z={z}"))
-
-    def _build_one_wave(self, r0: dict, pool, futures,
-                        cached: DataFrame | None = None) -> None:
-        """Small-corpus fast path: the whole pyramid below z0 in ONE
-        fused wave, replacing the per-zoom distributed loop.
-
-        Engaged only when the z0 stats observed during the features
-        checkpoint write prove the remaining work fits one wave of
-        budget-sized kernel tasks (n_points × index_max_zoom ≤
-        parallelism × _KERNEL_PTS_PER_TASK) — the regime where every
-        extra distributed round is pure sync latency that added
-        parallelism cannot win back (the round-3 profile measured ~2 s
-        of fixed cost per round against ~1.2 core-seconds of total
-        kernel work at 30k pages).  Above the bound, build() keeps
-        distributing per zoom unchanged, so the 100-TB path never
-        enters here.
-
-        Output contract is identical to the loop path: tilefeat/z=0
-        holds the z0 render, the subtree store holds every z≥1 tile
-        (roots classified by the normal stop rule inside the kernel,
-        index.js:103-121), the tiles store carries z0 + the split
-        root's empty children (index.js:151-154 pushes ``tl || []``),
-        and lineage rows land only after every store is durable, so a
-        kill anywhere before that restarts the build cleanly."""
-        import pandas as pd
-        opts = self.options
-        from pyspark.sql import Observation
-        t0 = time.monotonic()
-        # the durable features checkpoint is already on disk (the
-        # ingest pass wrote it); a warm cache only changes what we scan
-        fr0 = (self._frontier0_view(cached) if cached is not None
-               else self._read_frontier(0))
-        obs_r = Observation()
-
-        def render_job():
-            self._set_pool("gvt-render")
-            (rendered_features_df(fr0, opts).drop("z")
-             .observe(obs_r, F.sum("n_simplified").alias("ns"))
-             .write.mode("overwrite")
-             .parquet(self._p("tilefeat", "z=0")))
-
-        fut_render = pool.submit(render_job)
-        t1 = time.monotonic()
-        present = self._one_wave_subtree_job(
-            fr0 if cached is not None else None,
-            n_points=int(r0["num_points"]))
-        wave_sec = time.monotonic() - t1
-        missing = [(x, y) for x in (0, 1) for y in (0, 1)
-                   if (x, y) not in set(present)]
-        _t = time.monotonic()
-        fut_render.result()
-        render_wait = time.monotonic() - _t
-        ns0 = int(obs_r.get["ns"] or 0)
-
-        self._write_local_parquet(pd.DataFrame({
-            "x": pd.Series([0], dtype="int32"),
-            "y": pd.Series([0], dtype="int32"),
-            "num_features": pd.Series([r0["num_features"]], dtype="int64"),
-            "num_points": pd.Series([r0["num_points"]], dtype="int64"),
-            "num_simplified": pd.Series([ns0], dtype="int64"),
-            "minx": pd.Series([r0["minx"]], dtype="float64"),
-            "miny": pd.Series([r0["miny"]], dtype="float64"),
-            "maxx": pd.Series([r0["maxx"]], dtype="float64"),
-            "maxy": pd.Series([r0["maxy"]], dtype="float64"),
-            "is_split": pd.Series([True], dtype="bool"),
-            "has_source": pd.Series([False], dtype="bool"),
-            "tile_id": pd.Series([to_id(0, 0, 0)], dtype="int64"),
-        }), self._p("tiles", "z=0"))
-        if missing:
-            self._write_empty_tiles(1, missing)
-
-        # lineage lands LAST, in zoom order — "complete" implies every
-        # store is durable (the resume contract); a kill before this
-        # point rebuilds from the features checkpoint
-        self._append_lineage({
-            "zoom": 0, "n_tiles": 1, "n_split": 1,
-            "n_points": int(r0["num_points"]), "heavy": [],
-            "handoff": [], "one_wave": True,
-            "wall_sec": time.monotonic() - t0,
-            "steps": {"render_wait": round(render_wait, 2)},
-            "complete": True, "final": False})
-        self._append_lineage({"subtree_batch": 1, "n_keys": len(present),
-                              "one_wave": True,
-                              "wall_sec": round(wave_sec, 2),
-                              "steps": getattr(self, "_last_wave_steps",
-                                               None)})
-        self._append_lineage({
-            "zoom": 1, "n_tiles": 4, "heavy": [],
-            "handoff": [list(k) for k in present], "one_wave": True,
-            "wall_sec": time.monotonic() - t0,
-            "complete": True, "final": True})
-
-    # cache-first gate: below this many (hinted) feature rows, the
-    # ingest pass also fills the block-manager cache, so a one-wave
-    # build scans warm memory instead of re-reading the checkpoint.
-    # Big corpora skip the cache: caching 100 TB of converted features
-    # is exactly the anti-pattern the per-zoom loop avoids.
-    _CACHE_FIRST_MAX_ROWS = 2_000_000
-
-    def _ingest_aggs(self, deep: bool) -> list:
+    def _ingest_aggs(self) -> list:
         """z0 classification stats (z0 holds exactly one tile, so they
         are global aggregates) plus the left/right wrap-candidate
-        counts — and, when ``deep``, the deep-wave plan masses — as
-        SQL-text aggregates for one observed pass over the features."""
+        counts, as SQL-text aggregates for one observed pass over the
+        features."""
         b = self.options.buffer / self.options.extent
-        aggs = [F.expr(e) for e in (
+        return [F.expr(e) for e in (
             f"sum(CAST(minx <= {_dbl(b)} AS BIGINT)) AS l",
             f"sum(CAST(maxx >= {_dbl(1 - b)} AS BIGINT)) AS r",
             "count(1) AS num_features",
             f"sum({_NV_SQL}) AS num_points",
             "min(minx) AS minx", "min(miny) AS miny",
             "max(maxx) AS maxx", "max(maxy) AS maxy")]
-        return aggs + (self._deep_plan_aggs(_NV_SQL) if deep else [])
 
     @staticmethod
     def _z0_stats(row) -> list[dict] | None:
@@ -885,108 +562,56 @@ class SparkTileEngine:
         before the wrap decision, so ingest/convert executes exactly once.
 
         ONE ingest job: the features checkpoint write carries the
-        wrap-candidate counts and z0 stats (and, for small inputs, the
-        deep-wave plan masses) as observed metrics, so the checkpoint
-        is durable and every build-path decision is known before any
-        other job runs.  In the common no-wrap case the z0 frontier is
-        served as a view over this checkpoint (``_read_frontier``) —
-        one materialization of the corpus total, not two.
+        wrap-candidate counts and z0 stats as observed metrics, so the
+        checkpoint is durable and every build-path decision is known
+        before any other job runs.  In the common no-wrap case the z0
+        frontier is served as a view over this checkpoint
+        (``_read_frontier``) — one materialization of the corpus total,
+        not two.
 
-        ``approx_rows``: caller-known rough feature count.  Small
-        hinted inputs are also cached by the ingest pass (see
-        ``_CACHE_FIRST_MAX_ROWS``); the hint only picks HOW the build
-        scans the features — eligibility for the one-wave path itself
-        is decided from the exact observed stats either way."""
+        ``approx_rows`` is accepted for callers that pass a rough
+        feature count and is ignored: the build path is chosen from the
+        exact observed stats."""
         from pyspark.sql import Observation
 
         opts = self.options
         path = self._p("features")
-        cache_first = (not resume and approx_rows is not None
-                       and approx_rows <= self._CACHE_FIRST_MAX_ROWS
-                       and self.one_wave and self.subtree_max_points is None
-                       and opts.index_max_zoom >= 1)
-        deep = cache_first and opts.index_max_zoom >= 2
-        src = features_df.persist() if cache_first else features_df
-        try:
-            if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
-                # resume path: re-aggregate the z0 stats in the SAME
-                # pass as the wrap counts, so a crash-resume of a
-                # forest-/one-wave-eligible corpus re-enters the same
-                # build path instead of falling back to the loop
-                row = self._read_features().agg(
-                    *self._ingest_aggs(False)).first()
-            else:
-                obs = Observation()
-                (src.observe(obs, *self._ingest_aggs(deep))
-                 .write.mode("overwrite").parquet(path))
-                row = obs.get
-            counts = (int(row["l"] or 0), int(row["r"] or 0))
-            z0_stats = self._z0_stats(row)
-            if (cache_first and not (counts[0] or counts[1]) and z0_stats
-                    and self._one_wave_eligible(
-                        z0_stats[0]["num_points"])):
-                self._deep_plan_hint = (self._deep_plan_decide(row)
-                                        if deep else ([], []))
-                try:
-                    self.build(None, z0_stats=z0_stats, cached_features=src)
-                finally:
-                    self.__dict__.pop("_deep_plan_hint", None)
-                return
-        finally:
-            if cache_first:
-                src.unpersist()
+        if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+            # resume path: re-aggregate the z0 stats in the SAME pass as
+            # the wrap counts, so a crash-resume of a forest-eligible
+            # corpus re-enters the same build path instead of falling
+            # back to the loop
+            row = self._read_features().agg(*self._ingest_aggs()).first()
+        else:
+            obs = Observation()
+            (features_df.observe(obs, *self._ingest_aggs())
+             .write.mode("overwrite").parquet(path))
+            row = obs.get
+        counts = (int(row["l"] or 0), int(row["r"] or 0))
+        z0_stats = self._z0_stats(row)
         if counts[0] or counts[1]:
             self.build(wrap_df(self._read_features(), opts, counts=counts),
                        resume=resume)
         else:
             self.build(None, resume=resume, z0_stats=z0_stats)
 
-    def _one_wave_eligible(self, n_points: int) -> bool:
-        """True when the whole pyramid below z0 fits ONE wave of
-        budget-sized kernel tasks — the regime where every distributed
-        round is pure sync latency (see _build_one_wave).
-
-        The bound is a QUARTER of the fleet's kernel budget: the
-        one-wave's skew lever subdivides at most two levels (z1
-        root-only + z2/z3 subtrees), so past ~par×budget/4 of total
-        work its hottest task stops shrinking while the forest cut
-        keeps subdividing — measured on the 120k-page imz-10 build:
-        one-wave 17.7-21.8 s (hottest task 13.0 s) vs forest
-        12.9-15.3 s (hottest 7.0 s) on the same warm session."""
-        opts = self.options
-        return (self.one_wave and self.subtree_max_points is None
-                and opts.index_max_zoom >= 1
-                and n_points > opts.index_max_points
-                and n_points * opts.index_max_zoom * 4
-                <= self.spark.sparkContext.defaultParallelism
-                * self._KERNEL_PTS_PER_TASK)
-
     # forest-wave cut: deepest subdivision level (gate cells grow 4^L;
-    # past z6 the cut bookkeeping stops paying), leaf task budget in
-    # vertex-levels, and the straggler factor past which the cut is
-    # declared infeasible and the per-zoom loop keeps the job.
+    # past z6 the cut bookkeeping stops paying).
     _FOREST_MAX_LEVEL = 6
 
-    @staticmethod
-    def _forest_straggler() -> int:
-        """Leaves above this many task budgets of estimated work are
-        probed and rendered partition-spread instead of becoming one
-        wave task; 2x keeps every wave task within ~2x the median
-        budget-sized task (round-4 residual: 19/119 over-budget
-        leaves, one 13 s straggler).  ``GVT_FOREST_STRAGGLER``
-        overrides it for same-boot A/B; read per cut, so a value set
-        after import applies, and a malformed one falls back to 2."""
-        try:
-            return int(os.environ.get("GVT_FOREST_STRAGGLER", "2"))
-        except ValueError:
-            return 2
+    # leaves above this many task budgets of estimated work are probed
+    # and rendered partition-spread instead of becoming one wave task;
+    # 2x keeps every wave task within ~2x the median budget-sized task
+    # (round-4 residual: 19/119 over-budget leaves, one 13 s straggler)
+    _FOREST_STRAGGLER = 2
 
     def _forest_eligible(self, n_points: int) -> bool:
-        """True when the corpus is too big for ONE wave but a bounded
-        quadtree cut of subtree tasks plausibly exists: the gate job
-        then decides for real (see _forest_cut)."""
+        """True when a bounded quadtree cut of subtree tasks plausibly
+        exists: the z0 stats prove a depth-1 cut outright
+        (_forest_cut_proven), otherwise the gate job decides for real
+        (see _forest_cut)."""
         opts = self.options
-        return (self.one_wave and self.subtree_max_points is None
+        return (self.subtree_max_points is None
                 and opts.index_max_zoom >= 2
                 and n_points > opts.index_max_points
                 and n_points * opts.index_max_zoom
@@ -998,13 +623,12 @@ class SparkTileEngine:
         four z1 cells as leaves, so no gate job is needed: a z1 cell
         holds at most the whole corpus, so its work m × (imz - 1) is
         at most ``n_points × max(imz - 1, 1)``, and at or under the
-        task budget (and the straggler bound) the walk of _forest_cut
-        makes every non-empty z1 cell a leaf.  Zero-mass cells get no
-        routed rows and are back-filled from missing acks, exactly as
-        the gate's empties would be."""
+        task budget (hence under the straggler bound) the walk of
+        _forest_cut makes every non-empty z1 cell a leaf.  Zero-mass
+        cells get no routed rows and are back-filled from missing acks,
+        exactly as the gate's empties would be."""
         work = n_points * max(self.options.index_max_zoom - 1, 1)
-        budget = self._KERNEL_PTS_PER_TASK
-        return work <= budget and work <= self._forest_straggler() * budget
+        return work <= self._KERNEL_PTS_PER_TASK
 
     def _forest_cut(self, gate_rows, fr0=None) -> tuple:
         """Quadtree cut from the gate masses: walk from the 4 z1 cells;
@@ -1012,7 +636,7 @@ class SparkTileEngine:
         own tile) while it is guaranteed-split, still above the leaf
         budget, and above neither the index_max_zoom ceiling nor
         _FOREST_MAX_LEVEL; otherwise it becomes a LEAF (one
-        wave_stage_df subtree task, its root classified by the normal
+        slot-wave subtree task, its root classified by the normal
         stop rule in-kernel).  Zero-mass children of internal cells
         are recorded for the driver-side empty back-fill
         (index.js:151-154 pushes ``tl || []``).
@@ -1033,7 +657,7 @@ class SparkTileEngine:
           routed by bbox like any leaf, zero-row ones back-filled
           from missing acks).
 
-        A cell over _forest_straggler() task budgets that NEITHER
+        A cell over _FOREST_STRAGGLER task budgets that NEITHER
         prover can split (e.g. a giant ring enclosing the cell with
         every vertex outside) is returned as a STRAGGLER: its exact
         stop boundary is then measured by the full clip-descent probe
@@ -1045,7 +669,7 @@ class SparkTileEngine:
         imp = opts.index_max_points
         budget = self._KERNEL_PTS_PER_TASK
         max_lvl = self._FOREST_MAX_LEVEL
-        straggler = self._forest_straggler()
+        straggler = self._FOREST_STRAGGLER
         self._forest_vprobe_sec = None
         cells = {(int(r["lvl"]), int(r["x"]), int(r["y"])):
                  (int(r["m"] or 0), int(r["i"] or 0))
@@ -1175,17 +799,16 @@ class SparkTileEngine:
         the leaf cut cells and clip each whole descendant subtree
         in-task into subtree b=1.
 
-        Default shape: DRIVER-PACKED slots — the cut's per-leaf work
-        estimates are LPT-packed into ceil(total/budget) bins (never
-        fewer than the fleet's slots), each bin becomes exactly one
-        task via driver-chosen slot ints (see _slot_values), and the
-        task slices its rows per cell through the shared per-cell
-        kernel (pipeline.forest_slot_wave_df).  groupBy(z,x,y) places
+        Shape: DRIVER-PACKED slots — the cut's per-leaf work estimates
+        are LPT-packed into ceil(total/budget) bins (never fewer than
+        the fleet's slots), each bin becomes exactly one task via
+        driver-chosen slot ints (see _slot_values), and the task slices
+        its rows per cell through the per-cell kernel
+        (pipeline.forest_slot_wave_df).  groupBy(z,x,y) would place
         groups by hash instead, where two hot cells colliding into one
         task double the wave wall and no bin-packing is possible; with
         ~2 cells/partition such collisions are the common case, and
         wave wall = max task IS the term a cluster pays.
-        GVT_NO_SLOTPACK=1 restores the group-keyed wave for A/B.
 
         Factored out of _build_forest so the resume path
         (_ensure_subtrees) can re-create a lost subtree store from the
@@ -1198,36 +821,31 @@ class SparkTileEngine:
         opts = self.options
         if routed is None:
             routed = forest_route_df(self._read_frontier(0), opts,
-                                     {tuple(c): 0 for c in leaves})
-        slotpack = (os.environ.get("GVT_NO_SLOTPACK", "0") != "1"
-                    and len(leaves) > 0)
+                                     [tuple(c) for c in leaves])
+        est = getattr(self, "_forest_leaf_work", None) or {}
+        werk = sorted(((est.get(tuple(c), 1), tuple(c)) for c in leaves),
+                      reverse=True)
+        total = sum(w for w, _ in werk)
+        par = self.spark.sparkContext.defaultParallelism
+        n_bins = max(1, min(len(leaves),
+                            max(par, -(-total
+                                       // max(self._KERNEL_PTS_PER_TASK,
+                                              1)))))
+        slot_vals = self._slot_values(n_bins)
+        self._forest_slot_bins = n_bins
         slot_map: dict = {}
-        n_bins = 0
-        if slotpack:
-            est = getattr(self, "_forest_leaf_work", None) or {}
-            werk = sorted(((est.get(tuple(c), 1), tuple(c))
-                           for c in leaves), reverse=True)
-            total = sum(w for w, _ in werk)
-            par = self.spark.sparkContext.defaultParallelism
-            n_bins = max(1, min(len(leaves),
-                                max(par, -(-total
-                                           // max(self._KERNEL_PTS_PER_TASK,
-                                                  1)))))
-            slot_vals = self._slot_values(n_bins)
-            self._forest_slot_bins = n_bins
-            heap = [(0, b) for b in range(n_bins)]
-            heapq.heapify(heap)
-            for w, c in werk:
-                load, b = heapq.heappop(heap)
-                slot_map[c] = slot_vals[b]
-                heapq.heappush(heap, (load + w, b))
+        heap = [(0, b) for b in range(n_bins)]
+        heapq.heapify(heap)
+        for w, c in werk:
+            load, b = heapq.heappop(heap)
+            slot_map[c] = slot_vals[b]
+            heapq.heappush(heap, (load + w, b))
         restore: dict = {}
         conf = self.spark.conf
         for k, v in (
                 ("spark.sql.adaptive.coalescePartitions.enabled",
                  "false"),
-                ("spark.sql.shuffle.partitions",
-                 str(n_bins if slotpack else max(64, 2 * len(leaves))))):
+                ("spark.sql.shuffle.partitions", str(n_bins))):
             restore[k] = conf.get(k)
             conf.set(k, v)
         try:
@@ -1235,20 +853,13 @@ class SparkTileEngine:
             out = self._p("subtree", "b=1")
             if os.path.isdir(out):
                 shutil.rmtree(out)
-            cand = routed.where(F.col("role") == 0)
-            if slotpack:
-                from .pipeline import forest_slot_wave_df
-                pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
-                                  for (z, x, y), v in slot_map.items())
-                cand = cand.withColumn("slot", F.expr(
-                    f"CAST(map({pairs})[CAST(z AS BIGINT) * "
-                    "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
-                    "+ CAST(y AS BIGINT)] AS INT)"))
-                acks = forest_slot_wave_df(cand, opts, out_dir=out,
-                                           from_zoom=0).collect()
-            else:
-                acks = one_wave_stage_df(cand, opts, out_dir=out,
-                                         from_zoom=0).collect()
+            pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
+                              for (z, x, y), v in slot_map.items())
+            cand = routed.withColumn("slot", F.expr(
+                f"CAST(map({pairs})[CAST(z AS BIGINT) * "
+                "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
+                "+ CAST(y AS BIGINT)] AS INT)"))
+            acks = forest_slot_wave_df(cand, opts, out_dir=out).collect()
             os.makedirs(out, exist_ok=True)
             open(os.path.join(out, "_SUCCESS"), "w").close()
             return acks
@@ -1258,12 +869,12 @@ class SparkTileEngine:
 
     def _build_forest(self, r0: dict, pool, futures) -> None:
         """Forest wave: the whole pyramid in ONE shuffle + two narrow
-        maps, replacing the per-zoom distributed loop for corpora too
-        big for the one-wave but coverable by a bounded quadtree cut.
+        maps, replacing the per-zoom distributed loop for every corpus
+        coverable by a bounded quadtree cut.  At small sizes the cut is
+        just the four z1 cells as leaves.
 
-        - LEAF cut cells → wave_stage_df subtree tasks (clip z0→cell
-          in-task, whole descendant pyramid; the one-wave machinery at
-          arbitrary depth).
+        - LEAF cut cells → slot-wave subtree tasks (clip z0→cell
+          in-task, whole descendant pyramid).
         - INTERNAL cut cells → internal_tree_direct: ONE narrow
           mapInArrow job whose tasks walk their partition of the z0
           frontier down the internal tree in-task — clip one level
@@ -1272,11 +883,11 @@ class SparkTileEngine:
           across scan partitions exactly like the z0 render (no
           per-tile funnel), tilefeat parts written task-side, stats
           rows back as slim acks.
-        - z0 renders concurrently as in the one-wave, started before
-          the cut is decided: it depends only on the frontier, so it
-          overlaps the gate and vertex-probe jobs (FAIR pools share the
-          fleet between them).  Its future joins ``futures``, so the
-          caller awaits it even when the cut raises.
+        - z0 renders concurrently, started before the cut is decided:
+          it depends only on the frontier, so it overlaps the gate and
+          vertex-probe jobs (FAIR pools share the fleet between them).
+          Its future joins ``futures``, so the caller awaits it even
+          when the cut raises.
         - No gate job at all when the z0 stats prove the cut is the
           four z1 leaves (_forest_cut_proven).
 
@@ -1324,8 +935,7 @@ class SparkTileEngine:
         # are rendered by the level-incremental chain below, straggler
         # cells (over-budget, unprovable split) by the probe + the same
         # partition-spread render
-        routed = (forest_route_df(fr0, opts, {c: 0 for c in leaves})
-                  if leaves else None)
+        routed = forest_route_df(fr0, opts, leaves) if leaves else None
 
         int_box: dict = {"acks": [], "stops": [], "extra_empties": [],
                          "internals": list(internals)}
@@ -1511,7 +1121,7 @@ class SparkTileEngine:
                     (r["secs"] for r in leaf_acks), default=0.0), 2)}})
         # the final row records the leaf cut keys so _ensure_subtrees
         # can re-create a lost subtree store for a completed forest
-        # build (one-wave rows already do the analogous re-run)
+        # build
         self._append_lineage({
             "zoom": max_z, "n_tiles": len(leaves) + len(internals),
             "heavy": [], "handoff": [list(c) for c in leaves],
@@ -1520,8 +1130,7 @@ class SparkTileEngine:
             "complete": True, "final": True})
 
     def build(self, features_df: DataFrame | None, resume: bool = False,
-              z0_stats: list[dict] | None = None,
-              cached_features: DataFrame | None = None) -> None:
+              z0_stats: list[dict] | None = None) -> None:
         """First-pass pyramid (cz == null path of splitTile).
 
         features_df: FEATURE_SCHEMA rows, already converted + wrapped —
@@ -1529,6 +1138,11 @@ class SparkTileEngine:
         served as a view (no-wrap fast path of build_from_converted).
         With resume=True, restarts after the last zoom whose lineage row
         is complete, reusing the checkpointed frontier.
+
+        Two paths: the forest cut (_build_forest) whenever the z0 stats
+        admit one, else the per-zoom loop below (dateline-wrapping
+        inputs, index_max_zoom < 2, cuts past _FOREST_MAX_LEVEL, and a
+        fixed ``subtree_max_points``).
         """
         opts = self.options
         spark = self.spark
@@ -1555,7 +1169,7 @@ class SparkTileEngine:
                 # Nothing durable is recorded yet (a kill landed before
                 # the first complete lineage row), so the restart is a
                 # fresh build in every way that matters — but a killed
-                # forest/one-wave attempt may have left task-side store
+                # forest attempt may have left task-side store
                 # parts (subtree b=1, tilefeat z=N are written by TASKS,
                 # not a committed job) that the root-level readers would
                 # union as phantom tiles if the rebuild's handoff/render
@@ -1596,22 +1210,6 @@ class SparkTileEngine:
                     shutil.rmtree(p)
 
         if (start_z == 0 and features_df is None and z0_stats
-                and self._one_wave_eligible(z0_stats[0]["num_points"])):
-            try:
-                self._build_one_wave(z0_stats[0], pool, futures,
-                                     cached=cached_features)
-            finally:
-                for f in futures:
-                    f.result()
-                pool.shutdown()
-                self._stats_cache = None
-                self._sub_meta_cache.clear()
-                self._source_rows_cache.clear()
-                self._df_cache.clear()
-            return
-
-        if (start_z == 0 and features_df is None
-                and cached_features is None and z0_stats
                 and self._forest_eligible(z0_stats[0]["num_points"])):
             try:
                 self._build_forest(z0_stats[0], pool, futures)
@@ -1750,32 +1348,23 @@ class SparkTileEngine:
             # a single 100MB tile string would serialize one reduce task)
             tilefeat_path = self._p("tilefeat", f"z={z}")
 
-            # direct per-file render when the frontier is a local
-            # parquet dir (pipeline.render_files_direct): pyarrow
-            # read/render/write task-side, nsim sums back as acks —
-            # removes the JVM decode, both Arrow pipe crossings, the
-            # JVM writer, AND the finalizer's re-scan groupBy job
-            render_in = seed0 = None
-            if os.environ.get("GVT_DIRECT_RENDER", "1") != "0":
-                fz = self._p("frontier", f"z={z}")
-                feat = self._p("features")
-                if _has_parquet(fz):
-                    render_in, seed0 = fz, False
-                elif z == 0 and _has_parquet(feat):
-                    render_in, seed0 = feat, True
+            # direct per-file render of the frontier parquet dir
+            # (pipeline.render_files_direct): pyarrow read/render/write
+            # task-side, nsim sums back as acks — no JVM decode, no
+            # Arrow pipe crossing, no JVM writer and no finalizer
+            # re-scan.  A view-mode z0 frontier (see _read_frontier)
+            # renders straight from the features checkpoint files.
+            fz = self._p("frontier", f"z={z}")
+            seed0 = z == 0 and not os.path.isdir(fz)
+            render_in = self._p("features") if seed0 else fz
             ns_box: dict = {}
 
-            def render_job(fr=frontier, p=tilefeat_path, z=z,
-                           render_in=render_in, seed0=seed0,
-                           parents=heavy_prev, ns_box=ns_box):
+            def render_job(p=tilefeat_path, z=z, render_in=render_in,
+                           seed0=seed0, parents=heavy_prev, ns_box=ns_box):
                 self._set_pool("gvt-render")
-                if render_in is not None:
-                    ns_box["nsim"] = render_files_direct(
-                        self.spark, z, parents, opts, render_in, p,
-                        z0_seed=seed0)
-                else:
-                    (rendered_features_df(fr, opts).drop("z")
-                     .write.mode("overwrite").parquet(p))
+                ns_box["nsim"] = render_files_direct(
+                    self.spark, z, parents, opts, render_in, p,
+                    z0_seed=seed0)
 
             fut_tilefeat = pool.submit(render_job)
 
@@ -1915,21 +1504,14 @@ class SparkTileEngine:
                          heavy=heavy, light=light, n_points=n_points,
                          n_empty=n_empty, fut_tilefeat=fut_tilefeat,
                          fut_sources=fut_sources, final=final,
-                         tilefeat_path=tilefeat_path, _tm=_tm, t0=t0,
-                         ns_box=ns_box, prev_fin=prev_finalize):
+                         _tm=_tm, t0=t0, ns_box=ns_box,
+                         prev_fin=prev_finalize):
                 import pandas as pd
                 self._set_pool("gvt-finalize")
                 _t = time.monotonic()
                 fut_tilefeat.result()
                 _tm["assemble_wait"] = time.monotonic() - _t
-                if "nsim" in ns_box:  # direct render returned the sums
-                    nsim = ns_box["nsim"]
-                else:
-                    nsim = {(r["x"], r["y"]): r["ns"] for r in
-                            (spark.read.parquet(tilefeat_path)
-                             .groupBy("x", "y")
-                             .agg(F.sum("n_simplified").alias("ns"))
-                             .collect())}
+                nsim = ns_box["nsim"]
                 _t = time.monotonic()
                 split_lookup = {(x, y) for x, y, _ in splits}
                 tiles_pdf = pd.DataFrame({
@@ -2010,74 +1592,37 @@ class SparkTileEngine:
             elif not final and z < opts.index_max_zoom:
                 # deferred split: the heavy set is known, so clip only
                 # the heavy parents' rows — light/leaf children come
-                # from the subtree batches and are never read
+                # from the subtree batches and are never read.  One
+                # task per frontier file, pyarrow read/clip/write
+                # task-side, slim acks back — the geometry never crosses
+                # the JVM and the acks ARE the next round's
+                # classification stats (see pipeline.split_files_direct;
+                # grid-measured in BENCH/SCALING.md round 4).  The
+                # frontier dir exists: this round's _read_frontier(z)
+                # read it.
                 self._set_pool("gvt-split")
-                in_dir = self._p("frontier", f"z={z}")
-                if (os.environ.get("GVT_DIRECT_SPLIT", "1") != "0"
-                        and os.path.isdir(in_dir)):
-                    # direct path: one task per frontier file, pyarrow
-                    # read/clip/write task-side, slim acks back — the
-                    # geometry never crosses the JVM and the acks ARE
-                    # the next round's classification stats (see
-                    # pipeline.split_files_direct; grid-measured in
-                    # BENCH/SCALING.md round 4)
-                    # size output shards so file count (= next
-                    # round's task parallelism) tracks data volume:
-                    # ~2 files per core, never ballooning as rows
-                    # shrink (clip adds ~10% boundary duplicates)
-                    hset = set(map(tuple, heavy))
-                    heavy_nf = sum(r["num_features"] for r in stats
-                                   if (r["x"], r["y"]) in hset)
-                    sr = max(4096, int(heavy_nf * 1.1) // (2 * par) + 1)
-                    direct_stats, acks = split_files_direct(
-                        spark, z, heavy, opts, in_dir,
-                        self._p("frontier", f"z={z+1}"), shard_rows=sr)
-                    next_direct = direct_stats
-                    _tm["split_sync"] = time.monotonic() - _t
-                    tasks = sorted(
-                        ((round(float(a["secs"]), 2), int(a["rows_in"]),
-                          int(a["rows_out"])) for a in acks),
-                        reverse=True)
-                    self._append_lineage({
-                        "split_for": z + 1, "n_heavy": len(heavy),
-                        "heavy_points": heavy_points, "mode": "direct",
-                        "n_files": len(acks),
-                        "top_tasks": [list(t) for t in tasks[:5]],
-                        "wall_sec": round(_tm["split_sync"], 2)})
-                else:
-                    hp = [_pack_xy(x, y) for x, y in heavy]
-                    fr_heavy = frontier.where(
-                        F.col("x").isin([int(x) for x, _ in heavy]) &
-                        F.col("y").isin([int(y) for _, y in heavy]) &
-                        _pack_col().isin(hp))
-                    n_parts = max(par, min(
-                        4096,
-                        heavy_points // self.target_points_per_partition
-                        + 1))
-                    out = split_children_df(fr_heavy, z, opts).select(
-                        "*", n_verts)
-                    if 4 * len(heavy) <= _OBS_MAX_CHILDREN:
-                        from pyspark.sql import Observation
-                        children = [(2 * hx + dx, 2 * hy + dy)
-                                    for hx, hy in heavy
-                                    for dx in (0, 1) for dy in (0, 1)]
-                        dobs = Observation()
-                        out = out.observe(dobs,
-                                          *_child_obs_metrics(children))
-                        next_obs = (dobs, children)
-                    if os.environ.get("GVT_NO_REPART", "0") != "1":
-                        out = out.repartition(n_parts)
-                    (out.write.mode("overwrite")
-                     .parquet(self._p("frontier", f"z={z+1}")))
-                    _tm["split_sync"] = time.monotonic() - _t
-                    # the zoom row itself is finalized asynchronously
-                    # and usually lands before this point — record the
-                    # round cadence gate as its own (resume-inert)
-                    # lineage row
-                    self._append_lineage({
-                        "split_for": z + 1, "n_heavy": len(heavy),
-                        "heavy_points": heavy_points,
-                        "wall_sec": round(_tm["split_sync"], 2)})
+                # size output shards so file count (= next round's task
+                # parallelism) tracks data volume: ~2 files per core,
+                # never ballooning as rows shrink (clip adds ~10%
+                # boundary duplicates)
+                hset = set(map(tuple, heavy))
+                heavy_nf = sum(r["num_features"] for r in stats
+                               if (r["x"], r["y"]) in hset)
+                sr = max(4096, int(heavy_nf * 1.1) // (2 * par) + 1)
+                next_direct, acks = split_files_direct(
+                    spark, z, heavy, opts, self._p("frontier", f"z={z}"),
+                    self._p("frontier", f"z={z+1}"), shard_rows=sr)
+                _tm["split_sync"] = time.monotonic() - _t
+                tasks = sorted(
+                    ((round(float(a["secs"]), 2), int(a["rows_in"]),
+                      int(a["rows_out"])) for a in acks),
+                    reverse=True)
+                self._append_lineage({
+                    "split_for": z + 1, "n_heavy": len(heavy),
+                    "heavy_points": heavy_points, "mode": "direct",
+                    "n_files": len(acks),
+                    "top_tasks": [list(t) for t in tasks[:5]],
+                    "wall_sec": round(_tm["split_sync"], 2)})
             split_obs = next_obs if not final else None
             split_direct = next_direct if not final else None
             prev_points = heavy_points

@@ -383,7 +383,7 @@ def split_children_df(frontier: DataFrame, z: int,
         retired mapInPandas run — pinned against the object kernel on
         mixed geometry by tests/test_pipeline.py::
         test_split_arrow_loop_matches_object_kernel and against the
-        wave kernel by test_one_wave_matches_loop_layout."""
+        wave kernel by test_depth1_forest_matches_loop_layout."""
         import pyarrow as pa
 
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -723,9 +723,9 @@ def split_files_direct(spark, z: int, heavy: list, options: TileOptions,
     per-task (rows, secs) for the lineage record.
 
     Spark here provides scheduling, retries and locality only; the
-    geometry never crosses the JVM.  The fallback mapInArrow path
-    (split_children_df) remains for frontiers that are not local
-    parquet directories."""
+    geometry never crosses the JVM.  The loop's z0 round, which splits
+    concurrently with its own classification, uses the mapInArrow
+    path (split_children_df) instead."""
     import shutil
 
     files = sorted(
@@ -1172,8 +1172,7 @@ def split_subtree(features, z0: int, x0: int, y0: int, options: TileOptions):
 
 def batch_split_subtree(records, z0: int, x0: int, y0: int,
                         options: TileOptions, state=None,
-                        root_forced_split: bool = True,
-                        stop_after_root: bool = False):
+                        root_forced_split: bool = True):
     """Vectorized subtree build: one batch_clip / batch_assemble pass per
     LEVEL covering every tile at that level at once — the per-feature
     clip windows come from each feature's tile assignment, so the whole
@@ -1185,17 +1184,10 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
     root was already classified as splitting by the driver's stop rule
     and its own tile row was rendered by the distributed tilefeat
     stage, so the root level only fans out (index.js skips the parent
-    tile inside splitTile the same way).  With ``False`` (the one-wave
-    fast path) the root is a freshly-clipped child whose stop rule has
+    tile inside splitTile the same way).  With ``False`` (the wave
+    handoffs) the root is a freshly-clipped child whose stop rule has
     NOT been evaluated: it is classified by the normal rule and its
     tile row (and leaf source, when it stops) IS emitted.
-
-    ``stop_after_root=True`` (the deep-wave root-only task): emit the
-    root's tile row exactly as above, then stop instead of recursing —
-    the root's descendant subtrees are built by sibling tasks one
-    level deeper (SparkTileEngine deep one-wave).  If the root turns
-    out to be a leaf this degenerates to the full build (no recursion
-    would have happened anyway).
 
     Returns (tile_rows, sources) where tile_rows are dicts of the
     subtree 'tile' kind and sources maps leaf (z,x,y) → a packed-array
@@ -1428,7 +1420,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             if leaf_list:
                 pack_leaves(leaf_list, perm, gstart, gend)
 
-        if not split_keys or (stop_after_root and z == z0):
+        if not split_keys:
             break
 
         skeys = np.sort(np.asarray([(gx << 32) | gy
@@ -1652,75 +1644,6 @@ def wave_children_df(frontier: DataFrame, z: int,
             .select(*TILED_COLUMNS))
 
 
-def one_wave_children_df(frontier0: DataFrame,
-                         options: TileOptions) -> DataFrame:
-    """z0 frontier → candidate (feature, z1 child) rows for the one-wave
-    fast path (the z=0 case of wave_children_df)."""
-    return wave_children_df(frontier0, 0, options)
-
-
-def deep_wave_route_df(frontier0: DataFrame, options: TileOptions,
-                       deep1: list[tuple[int, int]],
-                       deep2: list[tuple[int, int]]) -> DataFrame:
-    """One-pass deep-wave router: z0 frontier → candidate rows for
-    every wave group — the 4 z1 cells, the z2 children of subdivided
-    z1 cells, and the z3 children of subdivided z2 cells — in a single
-    projection + explode (the chained wave_children_df form rescanned
-    the frontier once per extra level; measured ~0.5 s/wave of pure
-    re-route at 30k pages).
-
-    Emits exactly the same rows: a cell's buffered window is contained
-    in its parent's for any buffer (child bounds (p + const)/2z2l lie
-    inside [parent - k1c, parent + k3c]/z2l), so testing each cell's
-    own window against the feature's original bbox reproduces the
-    route-then-reroute set, and the window floats are the identical
-    (parent + const) / z2l sequence wave_stage_df clips against.
-    role=1 marks root-only groups (subdivided cells), role=0 subtree
-    groups, matching SparkTileEngine._one_wave_subtree_job."""
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
-    d1, d2 = set(deep1), set(deep2)
-
-    def _accept(z: int, cx: int, cy: int):
-        z2l = 1 << (z - 1)
-        px, py = cx >> 1, cy >> 1
-        xlo = (px + (k2c if cx & 1 else -k1c)) / z2l
-        xhi = (px + (k4c if cx & 1 else k3c)) / z2l
-        ylo = (py + (k2c if cy & 1 else -k1c)) / z2l
-        yhi = (py + (k4c if cy & 1 else k3c)) / z2l
-        rej = ((F.col("maxx") < xlo) | (F.col("minx") >= xhi) |
-               (F.col("maxy") < ylo) | (F.col("miny") >= yhi))
-        return ~rej
-
-    targets = []
-    for cx, cy in ((x, y) for y in (0, 1) for x in (0, 1)):
-        role = 1 if (cx, cy) in d1 else 0
-        targets.append((1, cx, cy, role))
-    for px, py in deep1:
-        for dy in (0, 1):
-            for dx in (0, 1):
-                cx, cy = 2 * px + dx, 2 * py + dy
-                targets.append((2, cx, cy, 1 if (cx, cy) in d2 else 0))
-    for px, py in deep2:
-        for dy in (0, 1):
-            for dx in (0, 1):
-                targets.append((3, 2 * px + dx, 2 * py + dy, 0))
-    cells = [F.when(_accept(z, cx, cy), F.struct(
-        F.lit(z).cast("int").alias("z"),
-        F.lit(cx).cast("int").alias("x"),
-        F.lit(cy).cast("int").alias("y"),
-        F.lit(role).cast("int").alias("role")))
-        for z, cx, cy, role in targets]
-    return (frontier0
-            .withColumn("t", F.explode(
-                F.filter(F.array(*cells), lambda s: s.isNotNull())))
-            .withColumn("z", F.col("t.z"))
-            .withColumn("x", F.col("t.x"))
-            .withColumn("y", F.col("t.y"))
-            .withColumn("role", F.col("t.role"))
-            .select(*TILED_COLUMNS, "role"))
-
-
 def _arrow_state(tbl, sort=True, strings=True):
     """One Arrow table → kernel state (ord-sorted when ``sort``), zero
     pandas boxing: list columns flatten to their backing buffers
@@ -1803,15 +1726,16 @@ def _arrow_state(tbl, sort=True, strings=True):
             _np("tags_json") if strings else None)
 
 
-def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int, root_only: bool,
+def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
                       options: TileOptions, out_dir: str | None,
-                      from_zoom: int | None):
-    """The per-CELL wave task body, shared verbatim by the group-keyed
-    wave (wave_stage_df) and the driver-packed slot wave
-    (forest_slot_wave_df): clip the candidate rows from their origin
-    zoom down to the cell, one x-then-y level at a time with the exact
-    (parent + const)/z2 float sequence, then build the whole
-    descendant pyramid in-task and write the cell's subtree part.
+                      from_zoom: int):
+    """The per-CELL wave task body, shared verbatim by the loop's
+    child-grouped handoff wave (wave_stage_df) and the forest's
+    driver-packed slot wave (forest_slot_wave_df): clip the candidate
+    rows from their origin zoom ``from_zoom`` down to the cell, one
+    x-then-y level at a time with the exact (parent + const)/z2 float
+    sequence, then build the whole descendant pyramid in-task and
+    write the cell's subtree part.
     Returns (n_rows_written, subtree_table_or_None)."""
     import numpy as np
     import pyarrow as pa
@@ -1820,7 +1744,6 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int, root_only: bool,
 
     from .kernel.vec import batch_clip
 
-    fz = cz - 1 if from_zoom is None else from_zoom
     (rags, gcodes, mnx, mny, mxx, mxy,
      fids, tagss) = _arrow_state(tbl)
     k1c = 0.5 * options.buffer / options.extent
@@ -1833,7 +1756,7 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int, root_only: bool,
     # clip is bit-identical to the in-task recursion's clip-of-clip
     # (routing is a superset by original bbox; trivially-rejected
     # features emit nothing)
-    for lvl in range(fz + 1, cz + 1):
+    for lvl in range(from_zoom + 1, cz + 1):
         z2l = 1 << (lvl - 1)
         axl, ayl = cx >> (cz - lvl), cy >> (cz - lvl)
         pxl, pyl = axl >> 1, ayl >> 1
@@ -1855,8 +1778,7 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int, root_only: bool,
     state = (rags, gcodes, mnx, mny, mxx, mxy,
              fids.tolist(), tagss.tolist(), None)
     tile_rows, sources = batch_split_subtree(
-        None, cz, cx, cy, options, state=state,
-        root_forced_split=False, stop_after_root=root_only)
+        None, cz, cx, cy, options, state=state, root_forced_split=False)
     out = _subtree_out_pdf(tile_rows, sources)
     if out_dir is None:
         return len(out), pa.Table.from_pandas(
@@ -1867,8 +1789,7 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int, root_only: bool,
 
 
 def wave_stage_df(candidates: DataFrame, options: TileOptions,
-                  out_dir: str | None = None,
-                  from_zoom: int | None = None) -> DataFrame:
+                  out_dir: str | None = None) -> DataFrame:
     """Wave handoff: candidate rows from wave_children_df, grouped by
     CHILD tile; each group task clips its candidates against the
     child's buffered window (the exact x-then-y clip sequence
@@ -1892,12 +1813,11 @@ def wave_stage_df(candidates: DataFrame, options: TileOptions,
         t0 = time.monotonic()
         cz, cx, cy = (int(key[0].as_py()), int(key[1].as_py()),
                       int(key[2].as_py()))
-        root_only = len(key) > 3 and int(key[3].as_py()) == 1
         # clip-to-cell + descendant pyramid + part write: shared
         # per-cell body (post-clip-empty children still flow through —
         # the kernel emits the empty leaf tile row, index.js:151-154)
-        n_out, packed = _wave_cell_kernel(tbl, cz, cx, cy, root_only,
-                                          options, out_dir, from_zoom)
+        n_out, packed = _wave_cell_kernel(tbl, cz, cx, cy, options,
+                                          out_dir, cz - 1)
         if out_dir is None:
             return packed
         return pa.table(
@@ -1909,32 +1829,18 @@ def wave_stage_df(candidates: DataFrame, options: TileOptions,
                               ("n_cand", pa.int64()),
                               ("secs", pa.float64())]))
 
-    grp = (["z", "x", "y", "role"] if "role" in candidates.columns
-           else ["z", "x", "y"])
-    return candidates.groupBy(*grp).applyInArrow(
+    return candidates.groupBy("z", "x", "y").applyInArrow(
         run, SUBTREE_ACK_SCHEMA if out_dir is not None else SUBTREE_SCHEMA)
 
 
-def one_wave_stage_df(candidates: DataFrame, options: TileOptions,
-                      out_dir: str | None = None,
-                      from_zoom: int | None = None) -> DataFrame:
-    """One-wave handoff (the z0→z1 case of wave_stage_df): runs when
-    the driver's observed z0 stats prove the whole remaining pyramid
-    fits one wave of budget-sized tasks (SparkTileEngine
-    ._build_one_wave) — above that bound the per-zoom distributed
-    loop takes over, handing off via the same wave shape per batch."""
-    return wave_stage_df(candidates, options, out_dir=out_dir,
-                         from_zoom=from_zoom)
-
-
 def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
-                        out_dir: str, from_zoom: int = 0) -> DataFrame:
+                        out_dir: str) -> DataFrame:
     """Driver-packed leaf wave: candidates carry a ``slot`` column (an
     int whose Spark murmur3 bucket the DRIVER chose — see
     SparkTileEngine._slot_values — so hash-partitioning places each
     slot in its own task).  One task = one LPT-packed bin of cut
     cells; inside the task the rows are sliced per cell and each cell
-    runs the SAME per-cell kernel as the group-keyed wave
+    runs the SAME per-cell kernel as the loop's child-grouped wave
     (_wave_cell_kernel: clip-from-z0 chain, descendant pyramid,
     per-cell part write), emitting one ack row per cell.
 
@@ -1945,8 +1851,8 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     cluster pays, and with per-cell work estimates from the gate the
     driver can pack bins to the kernel budget (LPT), which no hash can
     do.  The on-disk layout (per-CELL deterministic part names) and
-    the ack schema are unchanged, so resume and every reader are
-    oblivious to which wave shape ran."""
+    the ack schema are the loop wave's, so resume and every reader
+    are oblivious to which wave wrote a part."""
     def run(key, tbl):
         import numpy as np
         import pyarrow as pa
@@ -1971,9 +1877,8 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
                 t0 = time.monotonic()
                 cz, cx, cy = int(zs[s]), int(xs[s]), int(ys[s])
                 sub = tbl.slice(s, e - s)
-                n_out, _ = _wave_cell_kernel(sub, cz, cx, cy, False,
-                                             options, out_dir,
-                                             from_zoom)
+                n_out, _ = _wave_cell_kernel(sub, cz, cx, cy, options,
+                                             out_dir, 0)
                 acks["z"].append(cz)
                 acks["x"].append(cx)
                 acks["y"].append(cy)
@@ -2171,29 +2076,22 @@ def forest_vertex_probe_df(frontier0: DataFrame, options: TileOptions,
 
 
 def forest_route_df(frontier0: DataFrame, options: TileOptions,
-                    cells: dict) -> DataFrame:
+                    cells) -> DataFrame:
     """Route z0 frontier rows to every cut cell they overlap, in one
     pass: explode the levels present in the cut, explode the
     arithmetic candidate rectangle per level, filter with the exact
     window floats, then keep only (lvl, x, y) ∈ cut (InSet over packed
-    int keys — scales to thousands of cells where the per-cell struct
-    router of deep_wave_route_df would blow up codegen).  ``cells``
-    maps (z, x, y) → role (1 = internal/root-render, 0 = leaf
-    subtree).  Feature columns ride unchanged; emitted row sets match
-    the level-by-level reroute exactly (child windows are contained in
-    their parents')."""
+    int keys — scales to thousands of cells where a per-cell struct
+    router would blow up codegen).  ``cells`` is an iterable of
+    (z, x, y) leaf cells.  Feature columns ride unchanged; emitted row
+    sets match the level-by-level reroute exactly (child windows are
+    contained in their parents')."""
+    cells = [tuple(int(v) for v in c) for c in cells]
     b = options.buffer / options.extent
     levels = ", ".join(str(z) for z in sorted({z for z, _, _ in cells}))
-    keys = {(z << 50) | (x << 25) | y: r
-            for (z, x, y), r in cells.items()}
+    keys = ", ".join(f"{(z << 50) | (x << 25) | y}L" for z, x, y in cells)
     key = ("(CAST(_lvl AS BIGINT) * 1125899906842624L "
            "+ _cx * 33554432L + _cy)")
-
-    def member(ks):
-        return (f"{key} IN ({', '.join(f'{int(k)}L' for k in ks)})"
-                if ks else "false")
-
-    internal = [k for k, r in keys.items() if r == 1]
     rej, _ = _window_preds(options, "_cx", "_cy", "_lvl")
     return (frontier0
             .selectExpr("*", f"explode(array({levels})) AS _lvl")
@@ -2201,11 +2099,9 @@ def forest_route_df(frontier0: DataFrame, options: TileOptions,
                         f"{_cand_range_sql('minx', 'maxx', '_lvl', b)}) AS _cx")
             .selectExpr("*", "explode("
                         f"{_cand_range_sql('miny', 'maxy', '_lvl', b)}) AS _cy")
-            .where(f"NOT {rej} AND {member(keys)}")
+            .where(f"NOT {rej} AND {key} IN ({keys})")
             .selectExpr("_lvl AS z", "CAST(_cx AS INT) AS x",
-                        "CAST(_cy AS INT) AS y", *FEATURE_COLUMNS,
-                        f"CASE WHEN {member(internal)} THEN 1 ELSE 0 END "
-                        "AS role"))
+                        "CAST(_cy AS INT) AS y", *FEATURE_COLUMNS))
 
 
 def _empty_tiled_table():

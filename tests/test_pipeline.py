@@ -46,7 +46,7 @@ def test_split_files_direct_matches_dataframe_split(spark, tmp_path):
     opts = TileOptions(max_zoom=5, index_max_zoom=4, index_max_points=4,
                        tolerance=1, buffer=64, line_metrics=True)
     eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "wd"),
-                          one_wave=False, subtree_max_points=30)
+                          subtree_max_points=30)
     eng.build_from_geojson(data)
     lineage = eng._read_lineage()
     z = 1
@@ -100,7 +100,7 @@ def test_split_arrow_loop_matches_object_kernel(spark, tmp_path):
                            line_metrics=lm)
         eng = SparkTileEngine(spark, opts,
                               workdir=str(tmp_path / f"lm{int(lm)}"),
-                              one_wave=False, subtree_max_points=40)
+                              subtree_max_points=40)
         eng.build_from_geojson(data)
         idx = LocalTileIndex(data, opts)
         expected = {}

@@ -17,6 +17,14 @@ def _gen_tiles_spark(spark, tmp_path, data, **opts):
     return eng
 
 
+def _loop_engine(spark, opts, workdir):
+    """An engine that always takes the per-zoom loop: a zero forest
+    task budget makes no cut feasible (the loop never reads it)."""
+    eng = SparkTileEngine(spark, opts, workdir=workdir)
+    eng._KERNEL_PTS_PER_TASK = 0
+    return eng
+
+
 @pytest.mark.parametrize("input_file,expected_file,opts", [
     ("feature.json", "feature-tiles.json", {}),
     ("collection.json", "collection-tiles.json", {}),
@@ -247,12 +255,15 @@ def test_spark_resume_view_mode_corpus(spark, tmp_path):
     assert resumed.enumerate_tiles() == full.enumerate_tiles()
 
 
-def test_one_wave_matches_loop_layout(spark, tmp_path):
-    """The one-wave fast path (router → clip-from-parent kernel groups,
-    no per-zoom rounds) must produce byte-identical tiles, stats,
+def test_depth1_forest_matches_loop_layout(spark, tmp_path):
+    """A small corpus on a default engine takes the forest with the
+    stats-proven depth-1 cut (four z1 leaf tasks, no gate job, no
+    per-zoom rounds) and must produce byte-identical tiles, stats,
     insertion order and drill-down behavior to the distributed loop on
     the same corpus — including z1 roots classified by the in-kernel
     stop rule and the split root's empty children."""
+    import json as _json
+
     from geojson_vt_spark.pipeline import features_from_json_df
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
                                                  synth_pages_df)
@@ -261,14 +272,17 @@ def test_one_wave_matches_loop_layout(spark, tmp_path):
     pages = synth_pages_df(spark, 2500, seed=11)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"),
-                           one_wave=True)
+    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
+    # approx_rows is still accepted, and ignored
     wave.build_from_converted(feats, approx_rows=2500)
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
 
-    # the wave layout really is one-wave (no z1 frontier, no z1 render)
+    lin = [_json.loads(ln) for ln in open(tmp_path / "w" / "lineage.json")]
+    st = [r for r in lin if r.get("subtree_batch")][0]
+    assert st.get("forest") and st["steps"]["gate"] is None, st
+    assert st["steps"]["n_leaves"] == 4 and st["steps"]["n_internal"] == 0
+    # the wave layout really is one wave (no z1 frontier, no z1 render)
     assert not (tmp_path / "w" / "frontier").exists()
     assert not (tmp_path / "w" / "tilefeat" / "z=1").exists()
     assert (tmp_path / "l" / "frontier" / "z=1").exists()
@@ -289,11 +303,12 @@ def test_one_wave_matches_loop_layout(spark, tmp_path):
     assert wave.verify_snapshot() == []
 
 
-def test_one_wave_resume_rebuilds_missing_wave(spark, tmp_path):
-    """Kill-and-resume on the one-wave path: a missing subtree batch is
-    re-run from the durable features checkpoint (there is no z1
-    frontier store to replay), and a completed build resumes as a
+def test_depth1_forest_resume_rebuilds_missing_wave(spark, tmp_path):
+    """Kill-and-resume on the depth-1 forest path: a missing subtree
+    batch is re-run from the durable features checkpoint (there is no
+    z1 frontier store to replay), and a completed build resumes as a
     no-op."""
+    import json as _json
     import shutil
 
     from geojson_vt_spark.pipeline import features_from_json_df
@@ -304,12 +319,12 @@ def test_one_wave_resume_rebuilds_missing_wave(spark, tmp_path):
     pages = synth_pages_df(spark, 1500, seed=23)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "e"),
-                          one_wave=True)
-    eng.build_from_converted(feats, approx_rows=1500)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "e"))
+    eng.build_from_converted(feats)
     want = eng.enumerate_tiles()
-    lineage = (tmp_path / "e" / "lineage.json").read_text()
-    assert '"one_wave": true' in lineage
+    lin = [_json.loads(ln) for ln in open(tmp_path / "e" / "lineage.json")]
+    st = [r for r in lin if r.get("subtree_batch")][0]
+    assert st.get("forest") and st["steps"]["gate"] is None, st
 
     # no-op resume: nothing to redo
     again = SparkTileEngine(spark, opts, workdir=str(tmp_path / "e"))
@@ -317,65 +332,11 @@ def test_one_wave_resume_rebuilds_missing_wave(spark, tmp_path):
     assert again.enumerate_tiles() == want
 
     # killed mid-wave: subtree batch gone, lineage intact → the resume
-    # path re-runs the fused wave from the features checkpoint
+    # path re-runs the leaf wave from the features checkpoint
     shutil.rmtree(tmp_path / "e" / "subtree")
     resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "e"))
     resumed.build_from_converted(feats, resume=True)
     assert resumed.enumerate_tiles() == want
-
-
-def test_deep_wave_matches_loop_layout(spark, tmp_path):
-    """Deep one-wave (heavy z1 children subdivided into a root-only z1
-    task + four z2 grandchild subtree tasks + driver-side empty
-    back-fill) must be indistinguishable from the distributed loop:
-    same tiles, stats, insertion order, drill-downs, snapshot
-    integrity.  _DEEP_WAVE_PTS is forced to 1 so every
-    guaranteed-split child takes the deep path."""
-    import os as _os
-
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
-    opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
-
-    deep = SparkTileEngine(spark, opts, workdir=str(tmp_path / "d"),
-                           one_wave=True)
-    deep._DEEP_WAVE_PTS = 1
-    deep.build_from_converted(feats, approx_rows=2500)
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
-    loop.build_from_converted(feats)
-
-    # the wave really subdivided: z2 subtree parts + root-only z1 parts
-    parts = _os.listdir(tmp_path / "d" / "subtree" / "b=1")
-    assert any(p.startswith("part-z2-") for p in parts), parts
-    assert any(p.startswith("part-z1-") for p in parts), parts
-
-    a, b = deep.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    assert deep.tile_coords() == loop.tile_coords()
-    ra = {(r["z"], r["x"], r["y"]): r for r in deep.tiles().collect()}
-    rb = {(r["z"], r["x"], r["y"]): r for r in loop.tiles().collect()}
-    assert ra == rb
-    for zxy in [(0, 0, 0), (1, 0, 0), (2, 1, 2), (4, 3, 7),
-                (9, 137, 190), (12, 1100, 1500)]:
-        ta, tb = deep.get_tile(*zxy), loop.get_tile(*zxy)
-        assert (ta is None) == (tb is None), zxy
-        if ta is not None:
-            assert ta["features"] == tb["features"], zxy
-    assert deep.verify_snapshot() == []
-
-    # kill-and-resume: the deep wave re-runs deterministically
-    import shutil as _sh
-    _sh.rmtree(tmp_path / "d" / "subtree")
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "d"))
-    resumed._DEEP_WAVE_PTS = 1
-    resumed.build_from_converted(feats, resume=True)
-    assert resumed.enumerate_tiles() == a
 
 
 def test_forest_wave_matches_loop_layout(spark, tmp_path):
@@ -383,7 +344,8 @@ def test_forest_wave_matches_loop_layout(spark, tmp_path):
     distributed renders of internal cells + driver empty back-fill)
     must be indistinguishable from the per-zoom loop: same tiles,
     stats, insertion order, drill-downs.  _KERNEL_PTS_PER_TASK is
-    shrunk so the one-wave is ineligible and the cut recurses deep."""
+    shrunk so the stats cannot prove a depth-1 cut and the cut recurses
+    deep."""
     import json as _json
     import shutil as _sh
 
@@ -395,18 +357,16 @@ def test_forest_wave_matches_loop_layout(spark, tmp_path):
     pages = synth_pages_df(spark, 2500, seed=11)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2500)
+    forest.build_from_converted(feats)
     lin = [_json.loads(ln)
            for ln in open(tmp_path / "f" / "lineage.json")]
     assert any(r.get("forest") for r in lin), lin
     st = [r for r in lin if r.get("subtree_batch")][0]["steps"]
     assert st["n_leaves"] and st["n_internal"], st
 
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
 
     a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
@@ -427,8 +387,7 @@ def test_forest_wave_matches_loop_layout(spark, tmp_path):
     # kill-and-resume: no lineage → clean rebuild from the checkpoint
     _sh.rmtree(tmp_path / "f" / "subtree")
     (tmp_path / "f" / "lineage.json").unlink()
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                              one_wave=True)
+    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
     assert resumed.enumerate_tiles() == a
@@ -446,12 +405,10 @@ def test_forest_wave_line_metrics_parity(spark, tmp_path):
                        line_metrics=True, tolerance=2, buffer=96)
     pages = synth_pages_df(spark, 1500, seed=23)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 1500
-    forest.build_from_converted(feats, approx_rows=1500)
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    forest.build_from_converted(feats)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
     a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
     assert set(a) == set(b)
@@ -464,7 +421,8 @@ def test_forest_wave_line_metrics_parity(spark, tmp_path):
 
 def test_tile_count_matches_tiles_count(spark, tmp_path):
     """tile_count() (parquet-footer metadata, no Spark job) must equal
-    tiles().count() on every build layout: loop, one-wave, forest."""
+    tiles().count() on every build layout: loop, depth-1 forest (the
+    default at this size) and a forest with internal cells."""
     from geojson_vt_spark.pipeline import features_from_json_df
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
                                                  synth_pages_df)
@@ -473,20 +431,17 @@ def test_tile_count_matches_tiles_count(spark, tmp_path):
     pages = synth_pages_df(spark, 2500, seed=11)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"),
-                           one_wave=True)
-    wave.build_from_converted(feats, approx_rows=2500)
+    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
+    wave.build_from_converted(feats)
     assert wave.tile_count() == wave.tiles().count()
 
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
     assert loop.tile_count() == loop.tiles().count()
 
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2500)
+    forest.build_from_converted(feats)
     assert forest.tile_count() == forest.tiles().count()
 
 
@@ -524,18 +479,16 @@ def test_forest_straggler_matches_loop_layout(spark, tmp_path):
             "input_ord long, gen_index long, feature_json string"))
     feats = features_from_json_df(ingest, opts)
 
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2501)
+    forest.build_from_converted(feats)
     lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
     assert any(r.get("forest") for r in lin), lin
     st = [r for r in lin if r.get("subtree_batch")][0]["steps"]
     assert st.get("n_stragglers", 0) >= 1, st
     assert st.get("n_stops", 0) >= 1, st
 
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
 
     a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
@@ -576,23 +529,20 @@ def test_forest_kill_resume_into_loop_leaves_no_phantoms(spark, tmp_path):
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
     # loop-only oracle in a separate workdir
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
     want = loop.enumerate_tiles()
 
     # forest build, then simulate the kill: all stores on disk but the
     # lineage (which the forest writes LAST) never landed
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2500)
+    forest.build_from_converted(feats)
     (tmp_path / "f" / "lineage.json").unlink()
     assert (tmp_path / "f" / "subtree" / "b=1").exists()
 
     # resume through the LOOP path on the same workdir
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                              one_wave=False)
+    resumed = _loop_engine(spark, opts, str(tmp_path / "f"))
     resumed.build_from_converted(feats, resume=True)
     got = resumed.enumerate_tiles()
     assert set(got) == set(want)
@@ -616,18 +566,16 @@ def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
     pages = synth_pages_df(spark, 2500, seed=11)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2500)
+    forest.build_from_converted(feats)
     want = forest.enumerate_tiles()
     lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
     final = [r for r in lin if r.get("final")][0]
     assert final.get("forest") and final.get("handoff"), final
 
     _sh.rmtree(tmp_path / "f" / "subtree")
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                              one_wave=True)
+    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
     got = resumed.enumerate_tiles()
@@ -652,10 +600,9 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     pages = synth_pages_df(spark, 2500, seed=11)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                             one_wave=True)
+    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats, approx_rows=2500)
+    forest.build_from_converted(feats)
     want = forest.enumerate_tiles()
 
     # kill everything but the features checkpoint
@@ -665,8 +612,7 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
             _sh.rmtree(p)
     (tmp_path / "f" / "lineage.json").unlink()
 
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                              one_wave=True)
+    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
     lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
@@ -713,8 +659,7 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
     opts = TileOptions(index_max_zoom=5, index_max_points=100)
     feats = features_from_json_df(src, opts)
 
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                          one_wave=True)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     eng._KERNEL_PTS_PER_TASK = 500
     fr0 = eng._frontier0_view(feats)
 
@@ -763,14 +708,13 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
     assert blind, z1  # the scenario really is i-blind
 
     # full build: the cut must subdivide (vprobe ran, internals exist)
-    eng.build_from_converted(feats, approx_rows=300)
+    eng.build_from_converted(feats)
     lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
     st = [r for r in lin if r.get("subtree_batch")][0]["steps"]
     assert st.get("vprobe") is not None, st
     assert st["n_internal"] >= 1, st
 
-    loop = SparkTileEngine(spark, opts, workdir=str(tmp_path / "l"),
-                           one_wave=False)
+    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
     loop.build_from_converted(feats)
     a, b = eng.enumerate_tiles(), loop.enumerate_tiles()
     assert set(a) == set(b)
@@ -778,44 +722,17 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
     assert eng.tile_coords() == loop.tile_coords()
 
 
-def test_slot_wave_matches_group_wave(spark, tmp_path, monkeypatch):
-    """The driver-packed slot wave (LPT bins, driver-chosen slot ints)
-    and the group-keyed wave must write identical stores: per-cell
-    part names, tiles, stats, insertion order.  Also pins
-    _slot_values: the driver's chosen ints must hash onto distinct
-    shuffle buckets (the whole point of the trick)."""
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
-    opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
-
-    a = SparkTileEngine(spark, opts, workdir=str(tmp_path / "slot"),
-                        one_wave=True)
-    a._KERNEL_PTS_PER_TASK = 2000
-    vals = a._slot_values(13)
+def test_slot_wave_matches_group_wave(spark, tmp_path):
+    """_slot_values pins the driver-packed slot wave's placement: the
+    driver's chosen ints must hash onto distinct shuffle buckets (a
+    bijection onto 0..g-1), so each LPT bin is exactly one task."""
     from pyspark.sql import functions as F
+
+    eng = SparkTileEngine(spark, TileOptions(), workdir=str(tmp_path))
+    vals = eng._slot_values(13)
     got = (spark.createDataFrame([(v,) for v in vals], "v int")
            .select(F.pmod(F.hash("v"), F.lit(13)).alias("b")).collect())
     assert sorted(r["b"] for r in got) == list(range(13))
-    a.build_from_converted(feats, approx_rows=2500)
-
-    monkeypatch.setenv("GVT_NO_SLOTPACK", "1")
-    b = SparkTileEngine(spark, opts, workdir=str(tmp_path / "grp"),
-                        one_wave=True)
-    b._KERNEL_PTS_PER_TASK = 2000
-    b.build_from_converted(feats, approx_rows=2500)
-
-    ta, tb = a.enumerate_tiles(), b.enumerate_tiles()
-    assert set(ta) == set(tb)
-    assert not [k for k in ta if ta[k] != tb[k]]
-    assert a.tile_coords() == b.tile_coords()
-    import os as _os
-    pa_ = sorted(_os.listdir(tmp_path / "slot" / "subtree" / "b=1"))
-    pb_ = sorted(_os.listdir(tmp_path / "grp" / "subtree" / "b=1"))
-    assert pa_ == pb_  # per-cell deterministic names, wave-shape oblivious
 
 
 def _window_fn(opts):
@@ -902,8 +819,8 @@ def test_vertex_probe_skips_empty_coords_row(spark, tmp_path):
 
 
 def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
-    """The SQL-text gate, router, vertex probe and deep-plan aggregates
-    must reproduce the scalar window floats exactly: bboxes and
+    """The SQL-text gate, router and vertex probe must reproduce the
+    scalar window floats exactly: bboxes and
     vertices placed ON window edges (and one ulp either side), with a
     non-power-of-two extent so the window constants are not dyadic,
     agree with a driver recount from pipeline._cell_window."""
@@ -962,24 +879,17 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
                 for r in forest_gate_df(fr0, opts, max(levels)).collect()}
     assert got_gate == want_gate
 
-    # router: every (row, cut cell, role) pair
-    cut = {(lvl, x, y): (x + y) % 2 for lvl in levels
-           for x in range(1 << lvl) for y in range(1 << lvl)}
-    want_route = {(n, lvl, cx, cy, cut[(lvl, cx, cy)])
+    # router: every (row, cut cell) pair, for a cut of half the cells
+    cut = {(lvl, x, y) for lvl in levels
+           for x in range(1 << lvl) for y in range(1 << lvl)
+           if (x + y) % 2 == 0}
+    want_route = {(n, lvl, cx, cy)
                   for n, box in enumerate(boxes) for lvl in levels
-                  for cx, cy, _ in cells_of(box, lvl)}
-    got_route = {(r["ord_path"][1], r["z"], r["x"], r["y"], r["role"])
+                  for cx, cy, _ in cells_of(box, lvl)
+                  if (lvl, cx, cy) in cut}
+    got_route = {(r["ord_path"][1], r["z"], r["x"], r["y"])
                  for r in forest_route_df(fr0, opts, cut).collect()}
     assert got_route == want_route
-
-    # deep-plan aggregates over the z1 / z2 cells
-    row = fr0.agg(*eng._deep_plan_aggs("n_verts")).first()
-    for tag, lvl in (("a", 1), ("b", 2)):
-        for cx in range(1 << lvl):
-            for cy in range(1 << lvl):
-                m, i = want_gate.get((lvl, cx, cy), (0, 0))
-                assert (row[f"m{tag}{cx}_{cy}"], row[f"i{tag}{cx}_{cy}"]) \
-                    == (m, i), (tag, cx, cy)
 
     # vertex probe: strict inside, vertices on the edges
     roots = [(1, 0, 0), (1, 1, 0), (1, 0, 1), (1, 1, 1)]
@@ -990,25 +900,22 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
     assert got_v == _strict_vertex_recount(frows, opts, roots, levels)
 
 
-def test_forest_straggler_factor_read_at_cut_time(spark, tmp_path,
-                                                  monkeypatch):
-    """GVT_FOREST_STRAGGLER set AFTER import still applies (read when
-    the cut runs), and a malformed value falls back to 2."""
+def test_forest_straggler_factor_read_at_cut_time(spark, tmp_path):
+    """The straggler factor is read from the engine when the cut runs:
+    a z1 cell at 3 task budgets with no split proof is a straggler
+    under the default factor of 2 and a plain leaf once the factor
+    admits 3 budgets."""
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
     eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "s"))
     budget = eng._KERNEL_PTS_PER_TASK
     # one z1 cell at 3 task budgets of work, no split proof (i == 0)
     gate = [{"lvl": 1, "x": 0, "y": 0,
              "m": 3 * budget // (opts.index_max_zoom - 1), "i": 0}]
-    monkeypatch.delenv("GVT_FOREST_STRAGGLER", raising=False)
     leaves, _, _, stragglers = eng._forest_cut(gate)
     assert stragglers == [(1, 0, 0)] and not leaves
-    monkeypatch.setenv("GVT_FOREST_STRAGGLER", "7")
+    eng._FOREST_STRAGGLER = 3
     leaves, _, _, stragglers = eng._forest_cut(gate)
     assert leaves == [(1, 0, 0)] and not stragglers
-    monkeypatch.setenv("GVT_FOREST_STRAGGLER", "two")
-    leaves, _, _, stragglers = eng._forest_cut(gate)
-    assert stragglers == [(1, 0, 0)] and not leaves
 
 
 def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
@@ -1029,11 +936,10 @@ def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
         raise RuntimeError("gate failed")
 
     monkeypatch.setattr(engine_mod, "forest_gate_df", boom)
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                          one_wave=True)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     eng._KERNEL_PTS_PER_TASK = 2000  # forest path, cut not stats-proven
     with pytest.raises(RuntimeError, match="gate failed"):
-        eng.build_from_converted(feats, approx_rows=2500)
+        eng.build_from_converted(feats)
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     assert (tmp_path / "f" / "tilefeat" / "z=0" / "_SUCCESS").exists()
 
@@ -1093,10 +999,8 @@ def test_forest_stats_proven_cut_skips_gate(spark, tmp_path, monkeypatch):
         raise AssertionError("gate job ran")
 
     monkeypatch.setattr(engine_mod, "forest_gate_df", no_gate)
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"),
-                          one_wave=True)
-    # the smallest budget that still proves the depth-1 cut: too small
-    # for the one-wave, so the forest path runs
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
+    # the smallest budget that still proves the depth-1 cut
     eng._KERNEL_PTS_PER_TASK = n_points * (opts.index_max_zoom - 1)
     eng.build_from_geojson(data)
 
@@ -1117,3 +1021,52 @@ def test_forest_stats_proven_cut_skips_gate(spark, tmp_path, monkeypatch):
         assert (a is None) == (b is None), zxy
         if a is not None:
             assert a["features"] == b["features"], zxy
+
+
+def test_forest_blind_leaves_backfilled(spark, tmp_path):
+    """Children of a proven internal cell at _FOREST_MAX_LEVEL join the
+    cut as BLIND leaves (no gate row).  Those that receive no candidate
+    rows produce no wave ack and no subtree part; the build must
+    back-fill them as sentinel rows in the tiles store, and the pyramid
+    must equal the in-process kernel index tile for tile."""
+    import json as _json
+
+    import pyarrow.parquet as pq
+
+    from geojson_vt_spark.kernel import LocalTileIndex
+
+    data = _clustered_collection(5, 200)
+    opts = TileOptions(index_max_zoom=8, index_max_points=5)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
+    eng._KERNEL_PTS_PER_TASK = 40  # the cut recurses to the gate depth
+    eng.build_from_geojson(data)
+
+    lvl = eng._FOREST_MAX_LEVEL
+    lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
+    final = [r for r in lin if r.get("final")][0]
+    assert final.get("forest"), final
+    blind = {tuple(c) for c in final["handoff"] if c[0] == lvl + 1}
+    assert blind, final["handoff"]
+    parts = {p for p in (tmp_path / "f" / "subtree" / "b=1").iterdir()}
+    acked = {c for c in blind
+             if tmp_path / "f" / "subtree" / "b=1" /
+             f"part-z{c[0]}-x{c[1]}-y{c[2]}.parquet" in parts}
+    empty = blind - acked
+    assert acked and empty, (len(acked), len(empty))
+
+    rows = pq.read_table(
+        str(tmp_path / "f" / "tiles" / f"z={lvl + 1}")).to_pylist()
+    sentinel = {(lvl + 1, r["x"], r["y"]) for r in rows
+                if r["num_features"] == 0 and r["num_points"] == 0
+                and (r["minx"], r["miny"], r["maxx"], r["maxy"])
+                == (2.0, 1.0, -1.0, 0.0)
+                and r["has_source"] and not r["is_split"]}
+    assert empty <= sentinel, sorted(empty - sentinel)
+
+    idx = LocalTileIndex(data, opts)
+    want = {f"z{t.z}-{t.x}-{t.y}": idx.get_tile(t.z, t.x, t.y)["features"]
+            for t in list(idx.tiles.values())}
+    got = eng.enumerate_tiles()
+    assert set(got) == set(want)
+    assert not [k for k in want if got[k] != want[k]]
+    assert eng.tile_coords() == idx.tile_coords
