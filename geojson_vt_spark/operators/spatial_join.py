@@ -4,13 +4,15 @@ The reference has no joins (single-dataset pipeline); the north_rule
 adds a cell-indexed spatial-join suite.  Design (SURVEY.md §2.8):
 
 1. assign each geometry a set of grid cells (Web-Mercator quadtree
-   tiles at a chosen resolution — pure Column arithmetic, see
-   functions/geo.py);
+   tiles at a chosen resolution — JVM-side arithmetic, see
+   functions/geo.py; the plans here are SQL text, so building one
+   costs a handful of Py4J calls);
 2. equi-join on cell id — Catalyst picks broadcast vs sort-merge, AQE
    handles runtime skew; an explicit salt is available for known-hot
    cells (dense metros);
-3. exact refine in a vectorized numpy kernel (ray-cast point-in-ring)
-   over the surviving candidate pairs only.
+3. drop candidates outside their polygon's bbox (exact, see
+   ``_BBOX_PREFILTER``), then refine exactly in a vectorized numpy
+   kernel (ray-cast point-in-ring) over the surviving pairs only.
 
 At 1000-executor scale the cell join is the only shuffle; its key space
 (cells) is dense and uniform at adequate resolution, and `salt_n`
@@ -21,10 +23,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.geo import (bbox_cells_col, cell_col, cell_xy_cols,
-                             project_x_col, project_y_col, tile_id_col)
+from ..functions.geo import (_bbox_cells_sql, _project_x_sql, _project_y_sql,
+                             _tile_coord_sql, _tile_id_sql, tile_id_col)
+from ..pipeline import _dbl
 
 
 def points_in_ring(px: np.ndarray, py: np.ndarray,
@@ -49,11 +52,30 @@ def points_in_ring(px: np.ndarray, py: np.ndarray,
 
 def _poly_bbox_cells(polys: DataFrame, res: int) -> DataFrame:
     """Explode polygons (poly_id, pxs, pys in projected space) into
-    (cell, poly...) build rows."""
+    (poly_id, pxs, pys, minx, miny, maxx, maxy, cell) build rows."""
     return (polys
-            .withColumn("cell", F.explode(bbox_cells_col(
-                F.array_min("pxs"), F.array_min("pys"),
-                F.array_max("pxs"), F.array_max("pys"), res))))
+            .selectExpr("poly_id", "pxs", "pys",
+                        "array_min(pxs) AS minx", "array_min(pys) AS miny",
+                        "array_max(pxs) AS maxx", "array_max(pys) AS maxy")
+            .selectExpr("*", "explode(%s) AS cell" % _bbox_cells_sql(
+                "minx", "miny", "maxx", "maxy", res)))
+
+
+def _projected(df: DataFrame, key: str, x: str, y: str) -> DataFrame:
+    """(key, x, y): a (lon, lat) frame in projected space."""
+    return df.selectExpr(key, f"{_project_x_sql('lon')} AS {x}",
+                         f"{_project_y_sql('lat')} AS {y}")
+
+
+# A candidate outside its polygon's bbox cannot pass the ray cast:
+# - below miny or above maxy no edge has (yi > py) != (yj > py);
+# - left of minx every crossing edge counts, and a closed ring has an
+#   even number of crossing edges;
+# - right of maxx no crossing edge has px < xint.
+# The 1e-9 margin on x dwarfs the few-ulp rounding of xint in the unit
+# square, so the filter drops no pair the refine would keep.
+_BBOX_PREFILTER = (f"py >= miny AND py <= maxy "
+                   f"AND px >= minx - {_dbl(1e-9)} AND px <= maxx + {_dbl(1e-9)}")
 
 
 def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
@@ -75,13 +97,12 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
     probe job is skipped entirely (the decision uses the hints, and
     the ring broadcast — when chosen — collects once as its payload,
     which it must do regardless)."""
-    pts = (points
-           .withColumn("px", project_x_col(F.col("lon")))
-           .withColumn("py", project_y_col(F.col("lat")))
-           .withColumn("cell", cell_col(F.col("lon"), F.col("lat"), res))
-           .select("point_id", "px", "py", "cell"))
+    pts = _projected(points, "point_id", "px", "py").selectExpr(
+        "point_id", "px", "py",
+        "%s AS cell" % _tile_id_sql(res, _tile_coord_sql("px", res),
+                                    _tile_coord_sql("py", res)))
 
-    build = _poly_bbox_cells(polys, res).select("poly_id", "pxs", "pys", "cell")
+    build = _poly_bbox_cells(polys, res)
 
     poly_rows = None
     if broadcast_polys is None and poly_count_hint is not None:
@@ -103,16 +124,15 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
 
     if salt_n > 0 and not broadcast_polys:
         # salting is only needed when the join actually shuffles
-        build = build.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1))))
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64("point_id"), F.lit(salt_n)))
+        build = build.selectExpr(
+            "*", f"explode(sequence(0, {salt_n - 1})) AS salt")
+        pts = pts.selectExpr("*", f"pmod(xxhash64(point_id), {salt_n}) AS salt")
         keys = ["cell", "salt"]
     else:
         keys = ["cell"]
 
     ring_bc = None
     if broadcast_polys:
-        build = F.broadcast(build)
         # ship the (small) ring table once per EXECUTOR via a Spark
         # broadcast (not once per task through the pickled closure)
         # instead of duplicating pxs/pys onto every candidate row — the
@@ -125,8 +145,8 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
             for r in poly_rows}
         ring_bc = points.sparkSession.sparkContext.broadcast(ring_lookup)
         del ring_lookup, poly_rows
-        build = build.drop("pxs", "pys")
-    cand = pts.join(build, keys)
+        build = F.broadcast(build.drop("pxs", "pys"))
+    cand = pts.join(build, keys).where(_BBOX_PREFILTER)
 
     def refine(batches):
         ring_lookup = ring_bc.value if ring_bc is not None else None
@@ -177,6 +197,8 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int = 6,
     Iterative cell-ring expansion: search the (2r+1)² cell block around
     each query, keep queries whose kth hit is provably closer than any
     unexplored cell (Chebyshev bound r·cellsize), double r for the rest.
+    A round that settles every remaining query (one count proves it)
+    ends the search with its checkpointed top-k.
     Output: (query_id, point_id, dist, rank), deterministic tie-break on
     point_id.
     """
@@ -185,21 +207,17 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int = 6,
     if max_ring is None:
         max_ring = n
 
-    pts = (points
-           .withColumn("px", project_x_col(F.col("lon")))
-           .withColumn("py", project_y_col(F.col("lat"))))
-    pxy = pts.select(
-        "point_id", "px", "py",
-        *[c.alias(a) for c, a in zip(
-            cell_xy_cols(F.col("lon"), F.col("lat"), res), ("cx", "cy"))])
+    def with_cells(df: DataFrame, x: str, y: str) -> DataFrame:
+        return df.selectExpr("*", f"{_tile_coord_sql(x, res)} AS cx",
+                             f"{_tile_coord_sql(y, res)} AS cy")
 
-    remaining = (queries
-                 .withColumn("qx", project_x_col(F.col("lon")))
-                 .withColumn("qy", project_y_col(F.col("lat")))
-                 .select("query_id", "qx", "qy",
-                         *[c.alias(a) for c, a in zip(
-                             cell_xy_cols(F.col("lon"), F.col("lat"), res),
-                             ("cx", "cy"))]))
+    pxy = with_cells(_projected(points, "point_id", "px", "py"), "px", "py")
+    remaining = with_cells(_projected(queries, "query_id", "qx", "qy"),
+                           "qx", "qy")
+    # a round's top-k holds at most one rank-k row per remaining query
+    # id, so a settled count equal to this row count (kept an upper
+    # bound across rounds) proves that every remaining query settled
+    n_remaining = remaining.count()
 
     results_parts: list[DataFrame] = []
     carried: DataFrame | None = None  # unsettled queries' top-k so far
@@ -211,59 +229,56 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int = 6,
         # (the provisional top-k dominates every candidate it dropped,
         # so re-ranking carried ∪ annulus equals ranking the full block)
         qcells = (remaining
-                  .withColumn("dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-                  .withColumn("dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-                  .where(F.greatest(F.abs(F.col("dx")),
-                                    F.abs(F.col("dy"))) > F.lit(prev))
-                  .withColumn("ncx", F.col("cx") + F.col("dx"))
-                  .withColumn("ncy", F.col("cy") + F.col("dy"))
-                  .where((F.col("ncx") >= 0) & (F.col("ncx") < n) &
-                         (F.col("ncy") >= 0) & (F.col("ncy") < n))
-                  .select("query_id", "qx", "qy",
-                          F.col("ncx").alias("cx"), F.col("ncy").alias("cy")))
+                  .selectExpr("*", f"explode(sequence({-r}, {r})) AS dx")
+                  .selectExpr("*", f"explode(sequence({-r}, {r})) AS dy")
+                  .where(f"greatest(abs(dx), abs(dy)) > {prev}")
+                  .selectExpr("query_id", "qx", "qy",
+                              "cx + dx AS cx", "cy + dy AS cy")
+                  .where(f"cx >= 0 AND cx < {n} AND cy >= 0 AND cy < {n}"))
 
-        cand = (qcells.join(pxy, ["cx", "cy"])
-                .withColumn("dist", F.sqrt(
-                    (F.col("px") - F.col("qx")) ** 2 +
-                    (F.col("py") - F.col("qy")) ** 2))
-                .select("query_id", "point_id", "dist"))
+        cand = qcells.join(pxy, ["cx", "cy"]).selectExpr(
+            "query_id", "point_id",
+            "sqrt(pow(px - qx, 2) + pow(py - qy, 2)) AS dist")
         if carried is not None:
             # a point lives in exactly one cell, so carried rows and
             # annulus candidates never duplicate
-            cand = cand.unionByName(
-                carried.select("query_id", "point_id", "dist"))
-        w = Window.partitionBy("query_id").orderBy(F.col("dist"), F.col("point_id"))
+            cand = cand.unionByName(carried.drop("rank"))
         # ONE checkpoint per round: everything downstream (settled,
         # carried, remaining) derives from this materialized top-k, so
         # the plan depth stays O(1) across rounds and the ranking job
         # runs once instead of once per consumer
-        topk = (cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", "point_id", "dist", "rank")
+        topk = (cand.selectExpr(
+                    "*", "row_number() OVER (PARTITION BY query_id "
+                         "ORDER BY dist, point_id) AS rank")
+                .where(f"rank <= {k}")
                 .localCheckpoint())
+        if r >= max_ring:
+            # the ring spans the grid: every top-k is final
+            results_parts.append(topk)
+            break
 
         # a query is settled if it has k hits and the kth is inside the
-        # guaranteed-complete radius (or the ring already spans the
-        # grid).  Both facts are visible in the top-k rows themselves —
-        # a query with fewer than k hits has no rank-k row — so no
-        # separate aggregation pass is needed
-        guarantee = r * cell_size
-        if r >= max_ring:
-            done_ids = topk.select("query_id").distinct()
-        else:
-            done_ids = (topk.where((F.col("rank") == k) &
-                                   (F.col("dist") < guarantee))
-                        .select("query_id"))
-
+        # guaranteed-complete radius.  Both facts are visible in the
+        # top-k rows themselves — a query with fewer than k hits has no
+        # rank-k row.  One count decides the round: when every remaining
+        # query settled, the top-k is the rest of the answer and the
+        # done-id join, anti-join and isEmpty job are not needed
+        settled = f"rank = {k} AND dist < {_dbl(r * cell_size)}"
+        n_settled = topk.where(settled).count()
+        if n_settled == n_remaining:
+            results_parts.append(topk)
+            break
+        done_ids = topk.where(settled).select("query_id")
         results_parts.append(topk.join(done_ids, "query_id"))
 
         # remaining/carried derive from the round's CHECKPOINTED top-k,
         # so their lineage stays shallow (one slim anti-join per round,
         # bounded by log2(max_ring) rounds) without a second eager job
         remaining = remaining.join(done_ids, "query_id", "left_anti")
-        if r >= max_ring or remaining.isEmpty():
+        if remaining.isEmpty():
             break
         carried = topk.join(done_ids, "query_id", "left_anti")
+        n_remaining -= n_settled
         prev, r = r, r * 2
 
     out = results_parts[0]

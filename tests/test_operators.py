@@ -94,24 +94,26 @@ def test_pip_join_salted_identical(spark, points, rects):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_knn_join_matches_brute_force(spark, points):
-    qs = points.where(F.col("point_id") % 400 == 0).select(
-        F.col("point_id").alias("query_id"), "lon", "lat")
-    got = knn_join(points, qs, k=5, res=5)
-
+def _brute_knn(pts, qs, k):
     px = project_x_col(F.col("lon"))
     py = project_y_col(F.col("lat"))
-    p2 = points.select("point_id", px.alias("px"), py.alias("py"))
+    p2 = pts.select("point_id", px.alias("px"), py.alias("py"))
     q2 = qs.select("query_id", px.alias("qx"), py.alias("qy"))
     brute = (q2.crossJoin(p2)
              .withColumn("dist", F.sqrt((F.col("px") - F.col("qx")) ** 2 +
                                         (F.col("py") - F.col("qy")) ** 2))
              .withColumn("rank", F.row_number().over(
                  Window.partitionBy("query_id").orderBy("dist", "point_id")))
-             .where(F.col("rank") <= 5))
+             .where(F.col("rank") <= k))
+    return sorted((r.query_id, r.point_id, r.rank) for r in brute.collect())
+
+
+def test_knn_join_matches_brute_force(spark, points):
+    qs = points.where(F.col("point_id") % 400 == 0).select(
+        F.col("point_id").alias("query_id"), "lon", "lat")
+    got = knn_join(points, qs, k=5, res=5)
     a = sorted((r.query_id, r.point_id, r.rank) for r in got.collect())
-    b = sorted((r.query_id, r.point_id, r.rank) for r in brute.collect())
-    assert a == b
+    assert a == _brute_knn(points, qs, 5)
 
 
 def test_knn_join_multi_round_sparse(spark):
@@ -127,20 +129,234 @@ def test_knn_join_multi_round_sparse(spark):
         [(0, -179.0, -80.0), (1, 10.0, 84.0), (2, 100.0, 0.0)],
         "query_id int, lon double, lat double")
     got = knn_join(pts, qs, k=7, res=8)
-
-    px = project_x_col(F.col("lon"))
-    py = project_y_col(F.col("lat"))
-    p2 = pts.select("point_id", px.alias("px"), py.alias("py"))
-    q2 = qs.select("query_id", px.alias("qx"), py.alias("qy"))
-    brute = (q2.crossJoin(p2)
-             .withColumn("dist", F.sqrt((F.col("px") - F.col("qx")) ** 2 +
-                                        (F.col("py") - F.col("qy")) ** 2))
-             .withColumn("rank", F.row_number().over(
-                 Window.partitionBy("query_id").orderBy("dist", "point_id")))
-             .where(F.col("rank") <= 7))
     a = sorted((r.query_id, r.point_id, r.rank) for r in got.collect())
-    b = sorted((r.query_id, r.point_id, r.rank) for r in brute.collect())
-    assert a == b
+    assert a == _brute_knn(pts, qs, 7)
+
+
+def test_knn_join_round_one_settle_skips_loop_jobs(spark):
+    """A dense lattice settles every query in ring 1: the one settle
+    count proves it, so the collect runs no done-id join, anti-join or
+    isEmpty job (11 jobs before the settle check, at most 8 with it)."""
+    pts = spark.range(61 * 61).select(
+        F.col("id").alias("point_id"),
+        (-60.0 + (F.col("id") % 61) * 2.0).alias("lon"),
+        (-60.0 + F.floor(F.col("id") / 61) * 2.0).alias("lat"))
+    qs = spark.createDataFrame(
+        [(i, -50.0 + 7.3 * i, -40.0 + 5.1 * i) for i in range(12)],
+        "query_id long, lon double, lat double")
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-settle", "kNN, every query settles in ring 1")
+    try:
+        got = knn_join(pts, qs, k=5, res=5).collect()
+    finally:
+        sc.setJobGroup("other", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("knn-settle"))
+    assert n_jobs <= 8, f"round-one kNN ran {n_jobs} jobs"
+    assert sorted((r.query_id, r.point_id, r.rank) for r in got) == \
+        _brute_knn(pts, qs, 5)
+
+
+def test_knn_join_mixed_rounds_match_brute_force(spark):
+    """Round-one settlers, queries that need 3+ ring doublings (one with
+    no point in its first ring) and a point set smaller than k all match
+    brute force, through both the settle check and the carried loop."""
+    dense = spark.range(400).select(
+        F.col("id").alias("point_id"),
+        (10.0 + (F.col("id") % 20) * 0.1).alias("lon"),
+        (10.0 + F.floor(F.col("id") / 20) * 0.1).alias("lat"))
+    sparse = spark.range(30).select(
+        (F.col("id") + 1000).alias("point_id"),
+        (-170.0 + F.col("id") * 11.3).alias("lon"),
+        ((F.col("id") * 37 % 120) - 60.0).cast("double").alias("lat"))
+    pts = dense.unionByName(sparse)
+    qs = spark.createDataFrame(
+        [(0, 11.0, 11.0),      # inside the dense block: ring 1
+         (1, 10.05, 12.2),     # dense block edge
+         (2, 100.0, 1.0),      # empty surroundings: several rounds
+         (3, -179.0, -80.0),   # grid corner, no point in its first ring
+         (4, 60.0, 70.0)],
+        "query_id long, lon double, lat double")
+    got = knn_join(pts, qs, k=5, res=8)
+    assert sorted((r.query_id, r.point_id, r.rank) for r in got.collect()) == \
+        _brute_knn(pts, qs, 5)
+
+    few = sparse.where(F.col("point_id") < 1003)
+    got = knn_join(few, qs, k=5, res=4)
+    rows = sorted((r.query_id, r.point_id, r.rank) for r in got.collect())
+    assert len(rows) == 3 * 5
+    assert rows == _brute_knn(few, qs, 5)
+
+
+def test_project_y_poles_match_kernel(spark):
+    """sin(±90°) is exactly ±1 (so is sin(±89.99999999°) in doubles):
+    the projection must clamp like the reference instead of dividing by
+    zero (a job-killing error under ANSI mode) or taking log(0).  The
+    SQL twin is pinned to this helper by the parity test below."""
+    import numpy as np
+
+    from geojson_vt_spark.kernel.vec import project_y_arr
+
+    lats = [-90.0, -89.99999999, -85.0511287798066, -45.0, 0.0, 45.0,
+            85.0511287798066, 89.99999999, 90.0]
+    df = spark.createDataFrame([(v,) for v in lats], "lat double")
+    rows = df.select("lat", project_y_col(F.col("lat")).alias("y")).collect()
+    want = project_y_arr(np.array(lats))
+    for r, w in zip(sorted(rows, key=lambda r: r.lat), want):
+        assert r.y == w, (r.lat, r.y, w)
+
+    # one degenerate row must not fail a whole join
+    points = spark.createDataFrame(
+        [(0, 10.0, 90.0), (1, 10.0, 0.0), (2, 10.5, 0.5), (3, -20.0, -90.0)],
+        "point_id long, lon double, lat double")
+    polys = spark.createDataFrame(
+        [(7, [0.52, 0.54, 0.54, 0.52, 0.52], [0.49, 0.49, 0.51, 0.51, 0.49])],
+        "poly_id long, pxs array<double>, pys array<double>")
+    assert sorted(map(tuple, point_in_polygon_join(points, polys, res=5)
+                      .collect())) == [(1, 7), (2, 7)]
+    qs = points.select(F.col("point_id").alias("query_id"), "lon", "lat")
+    got = knn_join(points, qs, k=2, res=5)
+    assert sorted((r.query_id, r.point_id, r.rank) for r in got.collect()) == \
+        _brute_knn(points, qs, 2)
+
+
+def test_sql_twins_match_column_helpers(spark):
+    """The SQL-text plans must compute bit-for-bit what the public Column
+    helpers compute: a seeded 100k-point cloud plus lon ±180, the
+    Mercator clamps, the poles and points on (and one ulp beside) cell
+    boundaries at res 5 and 9."""
+    import numpy as np
+
+    from geojson_vt_spark.functions import bbox_cells_col, cell_col, cell_xy_cols
+    from geojson_vt_spark.functions.geo import (_bbox_cells_sql,
+                                                _project_x_sql,
+                                                _project_y_sql,
+                                                _tile_coord_sql,
+                                                _tile_id_sql)
+
+    edge_lat = [-90.0, -89.99999999, -85.0511287798066, -85.06, 0.0,
+                85.0511287798066, 85.06, 89.99999999, 90.0]
+    lon = [-180.0, 180.0] * len(edge_lat)
+    lat = edge_lat * 2
+    for res in (5, 9):
+        n = 1 << res
+        for i in range(n + 1):
+            b_lon = (i / n - 0.5) * 360.0           # projects onto x = i/n
+            yb = i / n                               # inverse Mercator of y = i/n
+            b_lat = float(np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * yb)))))
+            for d in (-np.inf, None, np.inf):
+                lo = b_lon if d is None else float(np.nextafter(b_lon, d))
+                la = b_lat if d is None else float(np.nextafter(b_lat, d))
+                lon.append(lo)
+                lat.append(la)
+    cloud = spark.range(100_000).select(
+        (F.rand(7) * 360.0 - 180.0).alias("lon"),
+        (F.rand(8) * 172.0 - 86.0).alias("lat"))
+    pts = cloud.unionByName(spark.createDataFrame(
+        list(zip(lon, lat)), "lon double, lat double"))
+
+    x, y = F.col("lon"), F.col("lat")
+    cols = [project_x_col(x).alias("px_c"), project_y_col(y).alias("py_c"),
+            F.expr(_project_x_sql("lon")).alias("px_s"),
+            F.expr(_project_y_sql("lat")).alias("py_s")]
+    for res in (5, 9):
+        cx, cy = cell_xy_cols(x, y, res)
+        cols += [cx.alias(f"cx{res}_c"), cy.alias(f"cy{res}_c"),
+                 cell_col(x, y, res).alias(f"cell{res}_c"),
+                 F.expr(_tile_coord_sql(_project_x_sql("lon"), res)).alias(f"cx{res}_s"),
+                 F.expr(_tile_coord_sql(_project_y_sql("lat"), res)).alias(f"cy{res}_s"),
+                 F.expr(_tile_id_sql(
+                     res, _tile_coord_sql(_project_x_sql("lon"), res),
+                     _tile_coord_sql(_project_y_sql("lat"), res))).alias(f"cell{res}_s")]
+    got = pts.select(*cols).toPandas()
+    for a in ("px", "py"):
+        c = got[f"{a}_c"].to_numpy(dtype=np.float64)
+        s = got[f"{a}_s"].to_numpy(dtype=np.float64)
+        assert np.array_equal(c.view(np.int64), s.view(np.int64)), a
+    for res in (5, 9):
+        for a in (f"cx{res}", f"cy{res}", f"cell{res}"):
+            assert np.array_equal(got[f"{a}_c"].to_numpy(),
+                                  got[f"{a}_s"].to_numpy()), a
+
+    # bbox covers: small boxes anchored on the same points (cell edges
+    # included), up to a few cells wide at res 9
+    boxes = (pts.select(project_x_col(x).alias("minx"),
+                        project_y_col(y).alias("miny"))
+             .select("minx", "miny",
+                     F.least(F.col("minx") + 0.004, F.lit(1.0)).alias("maxx"),
+                     F.least(F.col("miny") + 0.003, F.lit(1.0)).alias("maxy")))
+    bad = 0
+    for res in (5, 9):
+        m, n_, M, N = (F.col(c) for c in ("minx", "miny", "maxx", "maxy"))
+        bad += (boxes.select(
+            bbox_cells_col(m, n_, M, N, res).alias("c"),
+            F.expr(_bbox_cells_sql("minx", "miny", "maxx", "maxy", res)).alias("s"))
+            .where(~F.col("c").eqNullSafe(F.col("s"))).count())
+    assert bad == 0
+
+
+def test_pip_prefilter_exact_on_boundaries(spark):
+    """Points on ring vertices, on horizontal edges, exactly on bbox
+    edges and one ulp either side of them: on both the broadcast and
+    the salted shuffle path the join (cell join + bbox prefilter +
+    refine) equals the ray cast over the full cross product."""
+    import numpy as np
+
+    from geojson_vt_spark.operators import points_in_ring
+
+    # a lattice in lon/lat; polygon vertices sit on the lattice's own
+    # projected coordinates, so lattice points land exactly on vertices,
+    # edges and bbox edges
+    lons = [-30.0 + 2.5 * i for i in range(17)]
+    lats = [-20.0 + 2.5 * j for j in range(17)]
+    pts = spark.createDataFrame(
+        [(i * 100 + j, lo, la) for i, lo in enumerate(lons)
+         for j, la in enumerate(lats)],
+        "point_id long, lon double, lat double")
+    proj = pts.select("point_id", project_x_col(F.col("lon")).alias("px"),
+                      project_y_col(F.col("lat")).alias("py")).toPandas()
+    X = sorted(set(proj["px"]))
+    Y = sorted(set(proj["py"]))
+    up = lambda v: float(np.nextafter(v, np.inf))      # noqa: E731
+    dn = lambda v: float(np.nextafter(v, -np.inf))     # noqa: E731
+    rings = {
+        # concave ring with horizontal and vertical edges on the lattice
+        1: [(X[2], Y[2]), (X[10], Y[2]), (X[10], Y[8]), (X[6], Y[8]),
+            (X[6], Y[5]), (X[2], Y[5]), (X[2], Y[2])],
+        # triangle with diagonal edges through lattice points
+        2: [(X[4], Y[9]), (X[12], Y[9]), (X[8], Y[15]), (X[4], Y[9])],
+        # rectangle one ulp outside lattice rows/columns
+        3: [(dn(X[11]), dn(Y[3])), (up(X[14]), dn(Y[3])),
+            (up(X[14]), up(Y[7])), (dn(X[11]), up(Y[7])),
+            (dn(X[11]), dn(Y[3]))],
+        # rectangle one ulp inside lattice rows/columns
+        4: [(up(X[0]), up(Y[10])), (dn(X[3]), up(Y[10])),
+            (dn(X[3]), dn(Y[16])), (up(X[0]), dn(Y[16])),
+            (up(X[0]), up(Y[10]))],
+        # open ring (no closing vertex) with a horizontal top edge
+        5: [(X[13], Y[10]), (X[16], Y[12]), (X[16], Y[14]), (X[13], Y[14])],
+    }
+    polys = spark.createDataFrame(
+        [(pid, [v[0] for v in ring], [v[1] for v in ring])
+         for pid, ring in rings.items()],
+        "poly_id long, pxs array<double>, pys array<double>")
+
+    px = proj["px"].to_numpy(dtype=np.float64)
+    py = proj["py"].to_numpy(dtype=np.float64)
+    pid = proj["point_id"].to_numpy()
+    want = []
+    for poly_id, ring in rings.items():
+        xs = np.array([v[0] for v in ring])
+        ys = np.array([v[1] for v in ring])
+        inside = points_in_ring(px, py, xs, ys)
+        want += [(int(p), poly_id) for p in pid[inside]]
+    want.sort()
+    assert len(want) > 40
+
+    bc = point_in_polygon_join(pts, polys, res=5)
+    shuffled = point_in_polygon_join(pts, polys, res=5, salt_n=3,
+                                     broadcast_polys=False)
+    assert sorted(map(tuple, bc.collect())) == want
+    assert sorted(map(tuple, shuffled.collect())) == want
 
 
 def test_raster_vector_overlay(spark, rects):
