@@ -65,7 +65,7 @@ def main() -> None:
     wd = tempfile.mkdtemp(prefix="gvt_probe_")
     eng = SparkTileEngine(spark, opts, workdir=wd)
     # no-wrap corpus: the z0 frontier is exactly this view (the same
-    # shape _read_frontier(0) serves from the features checkpoint)
+    # shape _read_frontier0() serves from the features checkpoint)
     fr0 = eng._frontier0_view(spark.read.parquet(FRONTIER))
     budget = SparkTileEngine._KERNEL_PTS_PER_TASK
     imz = opts.index_max_zoom

@@ -2,9 +2,9 @@
 """Per-stage pyramid profile on the standalone grid (or local[]).
 
 Builds the bench pyramid once with a KEPT workdir and prints every
-lineage row (per-zoom wall_sec + steps breakdown, subtree-batch walls)
-as JSON — the stage-by-stage decomposition of the serial spine that
-the N vs 4N efficiency model attributes as the non-scaling term.
+lineage row (the forest's wall_sec + steps breakdown: gate, vertex
+probe, z0 render, internal walk, leaf-wave walls) as JSON — the
+stage-by-stage decomposition of the build's critical path.
 
 Launch (grid up, gvt.zip built — see BENCH/SCALING.md):
 
@@ -90,12 +90,7 @@ def main() -> None:
         synth_pages_df(spark, n_pages, seed=42)).write.parquet(ext)
     rows = spark.read.parquet(ext)
 
-    # GVT_LOOP=1 forces the per-zoom loop (a zero forest task budget
-    # makes no cut feasible) so the forest can be A/B'd against it on
-    # the same grid
     eng = SparkTileEngine(spark, opts, workdir=wd)
-    if os.environ.get("GVT_LOOP", "0") == "1":
-        eng._KERNEL_PTS_PER_TASK = 0
     t0 = time.monotonic()
     eng.build_from_converted(features_from_json_df(rows, opts))
     n_tiles = eng.tiles().count()

@@ -1,39 +1,41 @@
 """SparkTileEngine — the distributed tile pyramid.
 
-Re-expresses the reference driver (/root/reference/src/index.js) as a
-bounded per-zoom DataFrame loop with a subtree handoff:
+geojson-vt builds its pyramid with one recursive splitTile and one stop
+rule (src/index.js:66-156).  The engine builds it in one shape too: a
+quadtree CUT of the tile tree, decided from the z0 stats (plus one slim
+gate job when they do not settle it), then one wave per kind of cell:
 
-    frontier(z)  --narrow split map-->  frontier(z+1)      [heavy tiles]
-        |--per-feature map + SQL agg--> assembled tiles (parquet, z dir)
-        |--driver stop rules----------> heavy / light / leaf per tile
-        |--leaf filter----------------> retained sources (parquet)
-        |--light groupBy applyInPandas> whole descendant subtrees
-        '--lineage row (zoom, keys, counts, wall) --> resumable
+    z0 frontier --narrow render-------------------> tilefeat/z=0
+        |--route to LEAF cells, slot wave---------> subtree b=1
+        |--INTERNAL cells, narrow in-task walk----> tilefeat/z=N
+        '--STRAGGLER cells, exact probe + walk----> tilefeat, sources
+    driver: tiles/z=N stats rows, lineage rows (written last)
+
+Cut shapes (see _build_forest): root-only when the z0 tile stops,
+depth-1 (the four z1 cells as leaves) when the stats prove it or
+index_max_zoom is 1, otherwise gated with internal cells down to
+_FOREST_MAX_LEVEL and stragglers for over-budget cells no prover can
+split.
 
 Scale design notes (SURVEY.md §4/§7):
-- the split and assembly maps are shuffle-free; the only shuffles are
-  the per-zoom tile aggregation (keyed by tile, the natural output key)
-  and the round-robin rebalance of the next frontier;
-- the driver loop runs only while tiles are HEAVY (num_points above an
-  adaptive threshold ~ total/4·parallelism).  Everything below is handed
-  off per-tile to a grouped Arrow task that builds the tile's entire
-  descendant pyramid with the parity-exact local kernel — tile counts
-  grow 4× per zoom, so parallelism comes free while per-task work stays
-  bounded by the threshold (no group outgrows executor memory);
-- per-zoom state (tile keys + stats) collected to the driver is
-  O(heavy tiles) = O(total_points / threshold) = O(parallelism) — it
-  does NOT grow with the 4^z tile count;
-- every zoom's frontier/tiles/sources land in parquet, cutting lineage
-  (the iterative-DataFrame plan-blowup trap) and enabling mid-pyramid
-  resume: a killed build restarts from the last complete zoom, and
-  pending subtree batches are re-run from their recorded keys;
-- lazy drill-down (getTile miss) replays the same split stages over the
+- the only shuffles are the gate/probe aggregations (≤ 4^level slim
+  rows) and the leaf wave's slot exchange; every render is a narrow map,
+  so the z0 tile holding the whole corpus never funnels into one task;
+- driver state is O(cut cells), not O(4^z tiles): the leaf subtrees are
+  built in-task by the batch kernel and written task-side;
+- a dateline-wrapping input is written once as frontier/z=0 (wrap_df's
+  world copies); otherwise the z0 frontier is a view over the features
+  checkpoint;
+- lineage lands only after every store is durable: a kill before the
+  final row restarts cleanly from the z0 frontier, and a finished
+  build whose subtree store is lost re-runs the leaf wave from the leaf
+  keys the final row records;
+- lazy drill-down (getTile miss) replays the kernel split over the
   retained source of the nearest ancestor, pruned to the target path.
 
-Run the session with ``spark.scheduler.mode=FAIR``: the build overlaps
-small classification jobs with long subtree-batch stages, and FIFO
-queues the small jobs behind them (measured ~2x the wall on a 480k-page
-build).
+Run the session with ``spark.scheduler.mode=FAIR``: the z0 render runs
+concurrently with the gate and the waves, and FIFO queues the small
+jobs behind the big stages.
 """
 
 from __future__ import annotations
@@ -43,41 +45,23 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .kernel.index import to_id
-from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS
+from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _dbl, _subtree_out_pdf,
-                       _write_subtree_part,
-                       render_files_direct, split_files_direct,
-                       batch_split_subtree,
-                       features_from_json_df, forest_gate_df,
-                       forest_route_df, forest_slot_wave_df,
+from .pipeline import (_NV_SQL, _dbl, features_from_json_df,
+                       forest_gate_df, forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
-                       rendered_features_df,
-                       split_children_df, straggler_probe_stats,
-                       wave_children_df,
-                       wave_stage_df, wrap_df)
+                       rendered_features_df, straggler_probe_stats, wrap_df)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
                 "maxx", "maxy", "is_split", "has_source"]
 
-_TILE_STATS_SCHEMA = T.StructType([
-    T.StructField("x", T.IntegerType(), False),
-    T.StructField("y", T.IntegerType(), False),
-    T.StructField("num_features", T.LongType(), False),
-    T.StructField("num_points", T.LongType(), False),
-    T.StructField("num_simplified", T.LongType(), False),
-    T.StructField("minx", T.DoubleType(), False),
-    T.StructField("miny", T.DoubleType(), False),
-    T.StructField("maxx", T.DoubleType(), False),
-    T.StructField("maxy", T.DoubleType(), False),
-    T.StructField("is_split", T.BooleanType(), False),
-    T.StructField("has_source", T.BooleanType(), False),
-    T.StructField("tile_id", T.LongType(), False),
-])
+# stats of a tile with no features (src/tile.js:14-17 sentinel bbox): a
+# leaf that keeps its (empty) source
+_EMPTY_TILE_STATS = [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]
 
 
 def _pack_xy(x: int, y: int) -> int:
@@ -91,27 +75,23 @@ def _pack_col():
 
 class SparkTileEngine:
     def __init__(self, spark: SparkSession, options: TileOptions | None = None,
-                 workdir: str | None = None,
-                 target_points_per_partition: int = 2_000_000,
-                 subtree_max_points: int | None = None):
+                 workdir: str | None = None):
         self.spark = spark
         self.options = options or TileOptions()
         if workdir is None:
             import tempfile
             workdir = tempfile.mkdtemp(prefix="gvt_spark_")
         self.workdir = workdir
-        self.target_points_per_partition = target_points_per_partition
-        self.subtree_max_points = subtree_max_points
         os.makedirs(workdir, exist_ok=True)
         # drill-down overlay: tiles/sources created by get_tile after build
         self._drill_tiles: dict[int, dict] = {}
         self._drill_sources: dict[int, list] = {}
         self._consumed_sources: set[int] = set()
-        # driver-side cache of the DISTRIBUTED-zoom tile stats (bounded
-        # by the driver-loop frontier, O(parallelism), NOT by the 4^z
-        # subtree output): existence, has_source and bbox checks become
-        # dict lookups instead of one Spark job per getTile.  Subtree
-        # tiles resolve through keyed parquet lookups, memoized below.
+        # driver-side cache of the tiles-store stats (internal cut cells,
+        # stops and empties: O(cut), NOT the 4^z subtree output):
+        # existence, has_source and bbox checks become dict lookups
+        # instead of one Spark job per getTile.  Subtree tiles resolve
+        # through keyed parquet lookups, memoized below.
         self._stats_cache: dict | None = None
         self._sub_meta_cache: dict = {}
         # batched-drill source cache: (z,x,y) → list of FEATURE record
@@ -122,26 +102,13 @@ class SparkTileEngine:
         # memoized store readers: parquet listing/schema discovery runs
         # once per engine lifetime, not once per lookup call
         self._df_cache: dict = {}
-        self._kernel_session = None
+        # per-build forest bookkeeping: leaf work estimates (the slot
+        # wave's LPT weights) and step figures for the lineage row
+        self._forest_leaf_work: dict = {}
+        self._forest_vprobe_sec: float | None = None
+        self._forest_slot_bins: int | None = None
         import threading
         self._lineage_lock = threading.Lock()
-
-    def _kernel_spark(self) -> SparkSession:
-        """Session clone for the grouped-map handoff jobs (shared JVM,
-        independent SQL conf).  AQE partition coalescing folds the small
-        handoff shuffle into ~1MB-floor partitions, gluing kernel groups
-        into the same task and serializing them — with a handful of
-        CPU-heavy groups, partitions must track GROUPS, not bytes.  The
-        clone turns coalescing off and widens the shuffle so each light
-        tile's subtree build is its own task."""
-        if self._kernel_session is None:
-            s = self.spark.newSession()
-            s.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                       "false")
-            par = self.spark.sparkContext.defaultParallelism
-            s.conf.set("spark.sql.shuffle.partitions", str(max(4 * par, 256)))
-            self._kernel_session = s
-        return self._kernel_session
 
     # ------------------------------------------------------------ paths
 
@@ -163,24 +130,22 @@ class SparkTileEngine:
                        os.path.join(path, "part-00000.parquet"))
         open(os.path.join(path, "_SUCCESS"), "w").close()
 
-    def _read_frontier(self, z: int, session: SparkSession | None = None) -> DataFrame:
-        """Frontier DataFrame for zoom z.  z=0 has a zero-copy mode: when
-        no dateline wrap is needed, the z0 frontier IS the converted
-        features checkpoint plus constant columns, served as a view —
-        the whole corpus is not rewritten a second time just to gain
-        (z=0, x=0, y=0) literals."""
-        spark = session or self.spark
-        path = self._p("frontier", f"z={z}")
-        if z == 0 and not os.path.isdir(path):
-            return self._frontier0_view(self._read_features(spark))
-        return spark.read.parquet(path)
+    def _read_frontier0(self) -> DataFrame:
+        """The z0 frontier: frontier/z=0 when a dateline-wrapping input
+        wrote its world copies there, else a zero-copy view over the
+        converted features checkpoint plus constant columns — the whole
+        corpus is not rewritten a second time just to gain (z=0, x=0,
+        y=0) literals."""
+        path = self._p("frontier", "z=0")
+        if os.path.isdir(path):
+            return self.spark.read.parquet(path)
+        return self._frontier0_view(self._read_features())
 
-    def _read_features(self, session: SparkSession | None = None
-                       ) -> DataFrame:
+    def _read_features(self) -> DataFrame:
         """The converted-features checkpoint, read with its known schema
         (no schema-inference job)."""
-        return ((session or self.spark).read.schema(FEATURE_SCHEMA)
-                .parquet(self._p("features")))
+        return self.spark.read.schema(FEATURE_SCHEMA).parquet(
+            self._p("features"))
 
     def _set_pool(self, name: str) -> None:
         """Assign the CURRENT THREAD's jobs to a FAIR scheduler pool.
@@ -188,11 +153,11 @@ class SparkTileEngine:
         (weight 1) and the task scheduler round-robins slots BETWEEN
         pools — without this, every concurrent build job lands in the
         one default pool, whose internal order is FIFO, so a wide
-        subtree wave monopolizes the fleet while the critical-path
-        split (and the next round with it) waits for leftovers: the
-        round-4 grid profile measured renders queueing 12-19 s behind
-        handoff batches.  Properties are thread-local; every pooled job
-        sets its class at entry because executor threads are reused."""
+        subtree wave monopolizes the fleet while the concurrent renders
+        wait for leftovers: the round-4 grid profile measured renders
+        queueing 12-19 s behind subtree batches.  Properties are
+        thread-local; every pooled job sets its class at entry because
+        executor threads are reused."""
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", name)
 
@@ -332,198 +297,20 @@ class SparkTileEngine:
         if len(rows) > 64:
             df = df.repartition(min(n, max(1, len(rows) // 16)))
         # route through the converted-features checkpoint: the wrap
-        # decision + z0 stats ride the checkpoint write, and small
-        # inputs take the forest path exactly like corpus builds
+        # decision + z0 stats ride the checkpoint write
         self.build_from_converted(features_from_json_df(df, self.options))
 
-    # the handoff threshold targets ~1.5-2s tasks at the measured batch-
+    # the forest task budget in vertex-levels (a cell's vertex mass × the
+    # levels its subtree spans), ~1.5-2 s per task at the measured batch-
     # kernel rate (~300-500k vertex-levels/sec per core after the round-2
-    # vectorization): T(z) = budget / levels_remaining.  Small inputs
-    # hand off near the root (the whole pyramid is a few core-seconds);
-    # big inputs keep distributing until per-tile subtrees shrink to
-    # task size — the formula self-balances, and a smaller budget also
-    # bounds the skew straggler (the hottest metro tile's subtree task)
+    # vectorization).  It sizes leaf cells, the slot wave's LPT bins and
+    # the straggler bound; a smaller budget also bounds the skew
+    # straggler (the hottest metro cell's subtree task)
     _KERNEL_PTS_PER_TASK = 600_000
-
-    # handoff budget for the per-zoom loop: round-4 lineage profiling
-    # at 2M pages / 4×8 executors measured ~9-15 s of wall per
-    # distributed round against ~2 s subtree tasks — every avoided
-    # round buys far more than a longer straggler task costs, so the
-    # LOOP hands off at ~3× the kernel task unit (≈4-6 s tasks).  The
-    # forest cut keeps the smaller unit: task sizing inside a single
-    # fused wave is still latency-bound by the slowest task alone.
-    _HANDOFF_PTS_PER_TASK = 1_800_000
-
-    # skew guard: a split tile that holds > _SKEW_FACTOR x the mean
-    # split-tile mass stays in the distributed loop even when it fits
-    # the task budget — otherwise the hottest metro tile becomes the
-    # one straggler task that gates the whole subtree wave
-    _SKEW_FACTOR = 4
-
-    def _subtree_threshold(self, z: int, n_points: int | None = None) -> int:
-        if self.subtree_max_points is not None:
-            return self.subtree_max_points
-        levels_left = max(1, self.options.index_max_zoom - z)
-        budget = self._HANDOFF_PTS_PER_TASK // levels_left
-        par = self.spark.sparkContext.defaultParallelism
-        if (n_points is not None and (1 << (2 * z)) < par
-                and n_points * levels_left > par * self._HANDOFF_PTS_PER_TASK):
-            # parallelism guard: handing off a handful of fat subtrees
-            # starves the executors (4 tasks on 32 cores), so while the
-            # zoom can't yet hold one tile per core (4^z < parallelism)
-            # keep distributing — tile count grows 4× per level, so the
-            # guard expires after log4(cores) zooms and never chases
-            # skewed hot tiles into deep, sync-round-dominated loops.
-            # It only pays when the REMAINING work exceeds one fleet
-            # wave of budget-sized tasks (par × task budget): below
-            # that, the whole rest of the pyramid completes in a single
-            # handoff wave, and every extra distributed round is a pure
-            # ~2s sync cost that no added parallelism can win back —
-            # the round-3 profile showed a 30k-page build spending 8 of
-            # its 14 s on exactly those guard-forced rounds
-            fair = n_points // (2 * par)
-            budget = min(budget, fair)
-        # floor keeps tasks from going microscopic (per-task Arrow +
-        # scheduling overhead dominates under ~20k vertex-levels)
-        return max(20_000, budget)
-
-    def _stats_via_pyarrow(self, z: int, heavy_prev) -> list | None:
-        """Per-tile classification stats read straight off the frontier
-        parquet's slim columns on the driver (no executor slots, no
-        queueing behind subtree tasks).  Exact same aggregation the
-        Spark fallback computes; returns None when the store is not a
-        readable local parquet dir (remote workdirs keep the fleet
-        path)."""
-        path = self._p("frontier", f"z={z}")
-        if not os.path.isdir(path):
-            return None
-        try:
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
-            parts = [os.path.join(path, f) for f in os.listdir(path)
-                     if f.endswith(".parquet")]  # skip _SUCCESS markers
-            if not parts:
-                return None
-            tbl = pads.dataset(parts, format="parquet").to_table(
-                columns=["x", "y", "n_verts",
-                         "minx", "miny", "maxx", "maxy"])
-            if heavy_prev is not None:
-                xs = tbl["x"].to_numpy(zero_copy_only=False)
-                ys = tbl["y"].to_numpy(zero_copy_only=False)
-                packed = (xs >> 1).astype("int64") * (1 << 25) + (ys >> 1)
-                want = np.fromiter(
-                    ((int(px) << 25) + int(py) for px, py in heavy_prev),
-                    dtype="int64", count=len(heavy_prev))
-                tbl = tbl.filter(pc.is_in(pa.array(packed),
-                                          value_set=pa.array(want)))
-            agg = tbl.group_by(["x", "y"]).aggregate([
-                ("n_verts", "count"), ("n_verts", "sum"),
-                ("minx", "min"), ("miny", "min"),
-                ("maxx", "max"), ("maxy", "max")])
-            out = []
-            cols = {name: agg[name].to_pylist() for name in agg.column_names}
-            for i in range(agg.num_rows):
-                out.append({
-                    "x": int(cols["x"][i]), "y": int(cols["y"][i]),
-                    "num_features": int(cols["n_verts_count"][i]),
-                    "num_points": int(cols["n_verts_sum"][i] or 0),
-                    "minx": float(cols["minx_min"][i]),
-                    "miny": float(cols["miny_min"][i]),
-                    "maxx": float(cols["maxx_max"][i]),
-                    "maxy": float(cols["maxy_max"][i])})
-            return out
-        except Exception:
-            return None
-
-    def _submit_subtree(self, pool, futures, z: int, keys: list) -> None:
-        """Async: build the whole descendant pyramid of each light tile.
-
-        The batch is CHILD-grouped (wave shape): features route to the
-        z+1 children of their handoff tile Column-side, each child's
-        subtree builds in its own task — 4× the tasks at a quarter of
-        the straggler size vs grouping by parent (the round-4 grid
-        profile measured a 10-parent tail batch idling 2/3 of a
-        4×8-core fleet for ~30 s).  Children that receive no candidate
-        rows still exist as tiles (index.js:151-154 pushes ``tl ||
-        []``): the driver back-fills their empty rows with the same
-        kernel call, so the subtree store's contract is unchanged."""
-        if not keys:
-            return
-        packed = [_pack_xy(int(x), int(y)) for x, y in keys]
-
-        def job(z=z, packed=packed, keys=keys):
-            import shutil
-            t0 = time.monotonic()
-            self._set_pool("gvt-subtree")
-            # x/y isin conjuncts are parquet-pushdownable (row-group
-            # pruning); the packed-pair filter alone is an expression
-            # over two columns and forces a full scan of the frontier
-            sel = self._read_frontier(z, self._kernel_spark()).where(
-                F.col("x").isin([int(x) for x, _ in keys]) &
-                F.col("y").isin([int(y) for _, y in keys]) &
-                _pack_col().isin(packed))
-            out = self._p("subtree", f"b={z}")
-            if os.path.isdir(out):
-                shutil.rmtree(out)  # overwrite semantics incl. partials
-            acks = wave_stage_df(
-                wave_children_df(sel, z, self.options), self.options,
-                out_dir=out).collect()
-            got = {(r["x"], r["y"]) for r in acks}
-            empties = [(cx, cy)
-                       for x, y in keys
-                       for cx in (2 * int(x), 2 * int(x) + 1)
-                       for cy in (2 * int(y), 2 * int(y) + 1)
-                       if (cx, cy) not in got]
-            for cx, cy in empties:
-                tile_rows, srcs = batch_split_subtree(
-                    [], z + 1, cx, cy, self.options,
-                    root_forced_split=False)
-                _write_subtree_part(_subtree_out_pdf(tile_rows, srcs),
-                                    out, z + 1, cx, cy)
-            os.makedirs(out, exist_ok=True)
-            open(os.path.join(out, "_SUCCESS"), "w").close()
-            tasks = sorted(((float(r["secs"]), int(r["n_cand"]),
-                             int(r["x"]), int(r["y"])) for r in acks),
-                           reverse=True)
-            self._append_lineage({
-                "subtree_batch": z, "n_keys": len(packed),
-                "wall_sec": round(time.monotonic() - t0, 2),
-                "n_tasks": len(tasks),
-                "task_secs_sum": round(sum(s for s, *_ in tasks), 2),
-                "top_tasks": [[x, y, nc, round(s, 2)]
-                              for s, nc, x, y in tasks[:5]]})
-
-        futures.append(pool.submit(job))
-
-    def _ensure_subtrees(self, lineage_rows, pool, futures) -> None:
-        """Resume path: re-run any handoff batch whose output is missing
-        (killed mid-write) from its recorded keys — the frontier
-        checkpoint it reads is still on disk.  Forest rows re-run the
-        leaf wave from the features checkpoint instead (there is no
-        materialized frontier on that path)."""
-        for row in lineage_rows:
-            keys = row.get("handoff") or []
-            if not keys:
-                continue
-            if row.get("forest"):
-                # forest leaf waves always write subtree b=1; the keys
-                # are the leaf cut cells, re-routable from the features
-                # checkpoint at any time
-                marker = self._p("subtree", "b=1", "_SUCCESS")
-                if not os.path.exists(marker):
-                    futures.append(pool.submit(
-                        self._forest_leaf_wave,
-                        [tuple(k) for k in keys]))
-                continue
-            marker = self._p("subtree", f"b={row['zoom']}", "_SUCCESS")
-            if not os.path.exists(marker):
-                self._submit_subtree(pool, futures, row["zoom"], keys)
 
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
         """z0 frontier view over an already-converted features frame
-        (same shape _read_frontier(0) serves from the checkpoint)."""
+        (same shape _read_frontier0 serves from the checkpoint)."""
         return src.selectExpr(
             "0 AS z", "0 AS x", "0 AS y",
             "concat(array(CAST(1 AS BIGINT)), ord_path, "
@@ -546,41 +333,36 @@ class SparkTileEngine:
             "max(maxx) AS maxx", "max(maxy) AS maxy")]
 
     @staticmethod
-    def _z0_stats(row) -> list[dict] | None:
+    def _z0_stats(row) -> dict | None:
         if not row["num_features"]:
             return None
-        return [{"x": 0, "y": 0,
-                 "num_features": int(row["num_features"]),
-                 "num_points": int(row["num_points"]),
-                 "minx": float(row["minx"]), "miny": float(row["miny"]),
-                 "maxx": float(row["maxx"]), "maxy": float(row["maxy"])}]
+        return {"num_features": int(row["num_features"]),
+                "num_points": int(row["num_points"]),
+                "minx": float(row["minx"]), "miny": float(row["miny"]),
+                "maxx": float(row["maxx"]), "maxy": float(row["maxy"])}
 
     def build_from_converted(self, features_df: DataFrame,
                              resume: bool = False,
                              approx_rows: int | None = None) -> None:
-        """Checkpoint the (expensive) converted-features stage to parquet
-        before the wrap decision, so ingest/convert executes exactly once.
+        """Build the pyramid from converted FEATURE_SCHEMA rows.
 
         ONE ingest job: the features checkpoint write carries the
         wrap-candidate counts and z0 stats as observed metrics, so the
-        checkpoint is durable and every build-path decision is known
-        before any other job runs.  In the common no-wrap case the z0
-        frontier is served as a view over this checkpoint
-        (``_read_frontier``) — one materialization of the corpus total,
-        not two.
+        checkpoint is durable and the cut's first decision is known
+        before any other job runs.  Without world copies the z0
+        frontier is a view over this checkpoint (``_read_frontier0``) —
+        one materialization of the corpus, not two.  A dateline-wrapping
+        input (non-zero left/right counts) hands ``wrap_df``'s
+        left ++ centre ++ right copies to ``build``, which writes them
+        once as frontier/z=0 and observes the z0 stats on that write.
 
         ``approx_rows`` is accepted for callers that pass a rough
-        feature count and is ignored: the build path is chosen from the
-        exact observed stats."""
+        feature count and is ignored: the cut is chosen from the exact
+        observed stats."""
         from pyspark.sql import Observation
 
-        opts = self.options
         path = self._p("features")
         if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
-            # resume path: re-aggregate the z0 stats in the SAME pass as
-            # the wrap counts, so a crash-resume of a forest-eligible
-            # corpus re-enters the same build path instead of falling
-            # back to the loop
             row = self._read_features().agg(*self._ingest_aggs()).first()
         else:
             obs = Observation()
@@ -588,15 +370,28 @@ class SparkTileEngine:
              .write.mode("overwrite").parquet(path))
             row = obs.get
         counts = (int(row["l"] or 0), int(row["r"] or 0))
-        z0_stats = self._z0_stats(row)
         if counts[0] or counts[1]:
-            self.build(wrap_df(self._read_features(), opts, counts=counts),
-                       resume=resume)
+            self.build(wrap_df(self._read_features(), self.options,
+                               counts=counts), resume=resume)
         else:
-            self.build(None, resume=resume, z0_stats=z0_stats)
+            self.build(None, resume=resume, z0_stats=self._z0_stats(row))
+
+    def _write_frontier0(self, features_df: DataFrame) -> dict | None:
+        """Write wrapped features once as frontier/z=0, in the layout
+        _read_frontier0 serves, and return the z0 stats observed on
+        that same write (they count the world copies)."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        (features_df.selectExpr("0 AS z", "0 AS x", "0 AS y",
+                                *FEATURE_COLUMNS, f"{_NV_SQL} AS n_verts")
+         .observe(obs, *self._ingest_aggs())
+         .write.mode("overwrite").parquet(self._p("frontier", "z=0")))
+        return self._z0_stats(obs.get)
 
     # forest-wave cut: deepest subdivision level (gate cells grow 4^L;
-    # past z6 the cut bookkeeping stops paying).
+    # past z6 the cut bookkeeping stops paying).  Cells below it are
+    # blind leaves or stragglers, so no input is too large for the cut.
     _FOREST_MAX_LEVEL = 6
 
     # leaves above this many task budgets of estimated work are probed
@@ -605,30 +400,19 @@ class SparkTileEngine:
     # (round-4 residual: 19/119 over-budget leaves, one 13 s straggler)
     _FOREST_STRAGGLER = 2
 
-    def _forest_eligible(self, n_points: int) -> bool:
-        """True when a bounded quadtree cut of subtree tasks plausibly
-        exists: the z0 stats prove a depth-1 cut outright
-        (_forest_cut_proven), otherwise the gate job decides for real
-        (see _forest_cut)."""
-        opts = self.options
-        return (self.subtree_max_points is None
-                and opts.index_max_zoom >= 2
-                and n_points > opts.index_max_points
-                and n_points * opts.index_max_zoom
-                <= (4 ** self._FOREST_MAX_LEVEL)
-                * self._KERNEL_PTS_PER_TASK)
-
     def _forest_cut_proven(self, n_points: int) -> bool:
         """True when the z0 stats alone prove the cut is exactly the
-        four z1 cells as leaves, so no gate job is needed: a z1 cell
-        holds at most the whole corpus, so its work m × (imz - 1) is
-        at most ``n_points × max(imz - 1, 1)``, and at or under the
-        task budget (hence under the straggler bound) the walk of
-        _forest_cut makes every non-empty z1 cell a leaf.  Zero-mass
-        cells get no routed rows and are back-filled from missing acks,
-        exactly as the gate's empties would be."""
-        work = n_points * max(self.options.index_max_zoom - 1, 1)
-        return work <= self._KERNEL_PTS_PER_TASK
+        four z1 cells as leaves, so no gate job is needed.  With
+        index_max_zoom 1 the z1 cells sit at the ceiling and stop
+        whatever their mass.  Otherwise a z1 cell holds at most the
+        whole corpus, so its work m × (imz - 1) is at most
+        ``n_points × (imz - 1)``, and at or under the task budget
+        (hence under the straggler bound) the walk of _forest_cut makes
+        every non-empty z1 cell a leaf.  Zero-mass cells get no routed
+        rows and are back-filled from missing acks, exactly as the
+        gate's empties would be."""
+        imz = self.options.index_max_zoom
+        return imz == 1 or n_points * (imz - 1) <= self._KERNEL_PTS_PER_TASK
 
     def _forest_cut(self, gate_rows, fr0=None) -> tuple:
         """Quadtree cut from the gate masses: walk from the 4 z1 cells;
@@ -653,9 +437,11 @@ class SparkTileEngine:
           identical duplicated candidate mass, i == 0, 15 s of
           serial kernel each).  Internal cells are eligible up to
           l == _FOREST_MAX_LEVEL; their children beyond the gate's
-          deepest level join the cut as BLIND leaves (no mass info —
-          routed by bbox like any leaf, zero-row ones back-filled
-          from missing acks).
+          deepest level are BLIND (no gate row): each is estimated at
+          a quarter of its parent's mass over the imz - l levels its
+          subtree renders, and joins the cut as a leaf (routed by bbox,
+          zero-row ones back-filled from missing acks) or, over the
+          straggler bound, as a straggler.
 
         A cell over _FOREST_STRAGGLER task budgets that NEITHER
         prover can split (e.g. a giant ring enclosing the cell with
@@ -675,7 +461,7 @@ class SparkTileEngine:
                  (int(r["m"] or 0), int(r["i"] or 0))
                  for r in gate_rows}
         # per-leaf estimated work, consumed by the slot wave's LPT
-        # bin-packing (blind leaves have no gate row and default to 1)
+        # bin-packing
         leaf_work: dict = {}
         self._forest_leaf_work = leaf_work
 
@@ -699,13 +485,17 @@ class SparkTileEngine:
                                      and vcells.get((l, x, y), 0) > imp)
                 if eligible and proven:
                     internals.append((l, x, y))
+                    blind = m // 4 * max(imz - l, 1)
                     for dy in (0, 1):
                         for dx in (0, 1):
                             c = (l + 1, 2 * x + dx, 2 * y + dy)
-                            if l + 1 > max_lvl:
-                                leaves.append(c)   # blind: no gate row
-                            else:
+                            if l + 1 <= max_lvl:
                                 stack.append(c)
+                            elif blind > straggler * budget:
+                                stragglers.append(c)
+                            else:
+                                leaves.append(c)
+                                leaf_work[c] = blind
                 elif eligible and vcells is None:
                     opaque.append((l, x, y))
                 elif work > straggler * budget:
@@ -810,19 +600,19 @@ class SparkTileEngine:
         ~2 cells/partition such collisions are the common case, and
         wave wall = max task IS the term a cluster pays.
 
-        Factored out of _build_forest so the resume path
-        (_ensure_subtrees) can re-create a lost subtree store from the
-        cut keys recorded in the forest lineage row — the z0 frontier
-        it reads is the features-checkpoint view, still on disk for
-        any resumable workdir (estimates are absent there: the pack
-        falls back to uniform weights, same disk layout either way)."""
+        Factored out of _build_forest so a resume (build) can
+        re-create a lost subtree store from the cut keys recorded in
+        the final lineage row — the z0 frontier it reads is still on
+        disk for any resumable workdir (estimates are absent there: the
+        pack falls back to uniform weights, same disk layout either
+        way)."""
         import heapq
         import shutil
         opts = self.options
         if routed is None:
-            routed = forest_route_df(self._read_frontier(0), opts,
+            routed = forest_route_df(self._read_frontier0(), opts,
                                      [tuple(c) for c in leaves])
-        est = getattr(self, "_forest_leaf_work", None) or {}
+        est = self._forest_leaf_work
         werk = sorted(((est.get(tuple(c), 1), tuple(c)) for c in leaves),
                       reverse=True)
         total = sum(w for w, _ in werk)
@@ -867,44 +657,65 @@ class SparkTileEngine:
             for k, v in restore.items():
                 self.spark.conf.set(k, v)
 
-    def _build_forest(self, r0: dict, pool, futures) -> None:
-        """Forest wave: the whole pyramid in ONE shuffle + two narrow
-        maps, replacing the per-zoom distributed loop for every corpus
-        coverable by a bounded quadtree cut.  At small sizes the cut is
-        just the four z1 cells as leaves.
 
-        - LEAF cut cells → slot-wave subtree tasks (clip z0→cell
-          in-task, whole descendant pyramid).
-        - INTERNAL cut cells → internal_tree_direct: ONE narrow
-          mapInArrow job whose tasks walk their partition of the z0
-          frontier down the internal tree in-task — clip one level
-          per node on the shrinking parent state, render through the
-          shared kernel; an internal tile's features stay spread
-          across scan partitions exactly like the z0 render (no
-          per-tile funnel), tilefeat parts written task-side, stats
-          rows back as slim acks.
-        - z0 renders concurrently, started before the cut is decided:
-          it depends only on the frontier, so it overlaps the gate and
-          vertex-probe jobs (FAIR pools share the fleet between them).
-          Its future joins ``futures``, so the caller awaits it even
-          when the cut raises.
-        - No gate job at all when the z0 stats prove the cut is the
-          four z1 leaves (_forest_cut_proven).
-
-        The per-zoom spine (split → frontier write → classify → split,
-        ~8 s/round of pure cadence measured on the 2M-page grid) is
-        gone: wall = route + max(leaf task) + narrow renders.  Output
-        layout is the loop's for internal zooms (tilefeat/z=N +
-        tiles/z=N) and the wave's for leaves (subtree b=1), both
-        native to every reader; lineage lands only after all stores
-        are durable, so a kill anywhere restarts the build cleanly."""
+    def _write_tile_rows(self, z: int, rows: list) -> None:
+        """tiles/z=N from driver rows ``(x, y, stats)``, stats =
+        [num_features, num_points, num_simplified, minx, miny, maxx,
+        maxy, is_split, has_source]: tiny, so one local parquet file
+        and no Spark job."""
         import pandas as pd
-        import shutil
+        rows = sorted(rows, key=lambda t: (t[0], t[1]))
+        cols = list(zip(*(t[2] for t in rows))) or [()] * 9
+        dtypes = ["int64"] * 3 + ["float64"] * 4 + ["bool"] * 2
+        self._write_local_parquet(pd.DataFrame({
+            "x": pd.Series([t[0] for t in rows], dtype="int32"),
+            "y": pd.Series([t[1] for t in rows], dtype="int32"),
+            **{name: pd.Series(col, dtype=dt) for name, col, dt in zip(
+                TILE_COLUMNS[4:], cols, dtypes)},
+            "tile_id": pd.Series([to_id(z, t[0], t[1]) for t in rows],
+                                 dtype="int64"),
+        }), self._p("tiles", f"z={z}"))
+
+    def _build_forest(self, r0: dict, pool, futures) -> None:
+        """The whole pyramid from the z0 frontier, in one quadtree cut
+        whose shape follows the z0 stats ``r0``:
+
+        - ROOT-ONLY: the z0 tile stops (num_points ≤ index_max_points,
+          or index_max_zoom 0).  z0 renders and keeps its source
+          (sources/z=0 holds the z0 frontier rows); no other tile
+          exists.
+        - DEPTH-1: the four z1 cells are leaves, with no gate job, when
+          index_max_zoom is 1 or the stats prove it
+          (_forest_cut_proven).  Every small corpus takes this cut.
+        - GATED: forest_gate_df measures per-cell masses and _forest_cut
+          walks them into leaf, internal, empty and straggler cells.
+
+        The stages, concurrent where independent:
+        - z0 renders at once: it depends only on the frontier, so it
+          overlaps the gate and vertex-probe jobs (FAIR pools share the
+          fleet between them).  Its future joins ``futures``, so the
+          caller awaits it even when the cut raises.
+        - LEAF cells → slot-wave subtree tasks (_forest_leaf_wave: clip
+          z0→cell in-task, then the whole descendant pyramid) into
+          subtree b=1.
+        - INTERNAL cells → internal_tree_direct: ONE narrow mapInArrow
+          job whose tasks walk their partition of the z0 frontier down
+          the internal tree — clip one level per node on the shrinking
+          parent state, render through the shared kernel; an internal
+          tile's features stay spread across scan partitions exactly
+          like the z0 render (no per-tile funnel), tilefeat parts are
+          written task-side and stats rows come back as slim acks.
+        - STRAGGLER cells → straggler_probe_stats places their exact
+          stop boundary, then the same walk renders them; their stop
+          tiles also write sources/z=N.
+        The driver then writes the tiles/z=N stats rows (z0, internal
+        and stop cells, empty back-fills) and the lineage rows LAST, so
+        a kill anywhere restarts the build cleanly."""
         from pyspark.sql import Observation
         opts = self.options
         t0 = time.monotonic()
-        fr0 = self._read_frontier(0)  # planned once per build
-        _steps: dict = {}
+        fr0 = self._read_frontier0()  # planned once per build
+        steps: dict = {}
         obs_r = Observation()
 
         def render_job():
@@ -914,17 +725,28 @@ class SparkTileEngine:
              .observe(obs_r, F.sum("n_simplified").alias("ns"))
              .write.mode("overwrite")
              .parquet(self._p("tilefeat", "z=0")))
-            _steps["render0"] = round(time.monotonic() - _t, 2)
+            steps["render0"] = round(time.monotonic() - _t, 2)
 
         fut_render = pool.submit(render_job)
         futures.append(fut_render)
 
-        gate_sec = None
-        if self._forest_cut_proven(int(r0["num_points"])):
+        n0 = int(r0["num_points"])
+        root_only = (opts.index_max_zoom == 0
+                     or n0 <= opts.index_max_points)
+        leaves, internals, empties, stragglers = [], [], [], []
+        self._forest_leaf_work = {}
+        self._forest_vprobe_sec = self._forest_slot_bins = None
+        gate_sec = fut_src = None
+        if root_only:
+            def source_job():
+                self._set_pool("gvt-sources")
+                (fr0.drop("z").write.mode("overwrite")
+                 .parquet(self._p("sources", "z=0")))
+
+            fut_src = pool.submit(source_job)
+            futures.append(fut_src)
+        elif self._forest_cut_proven(n0):
             leaves = [(1, x, y) for y in (0, 1) for x in (0, 1)]
-            internals, empties, stragglers = [], [], []
-            self._forest_leaf_work = {}
-            self._forest_vprobe_sec = None
         else:
             _tg = time.monotonic()
             leaves, internals, empties, stragglers = self._forest_cut(
@@ -932,25 +754,15 @@ class SparkTileEngine:
                 fr0=fr0)
             gate_sec = round(time.monotonic() - _tg, 2)
         # only LEAF cells go through the grouped wave; internal cells
-        # are rendered by the level-incremental chain below, straggler
-        # cells (over-budget, unprovable split) by the probe + the same
-        # partition-spread render
+        # are rendered by the in-task walk below, straggler cells
+        # (over-budget, unprovable split) by the probe + the same walk
         routed = forest_route_df(fr0, opts, leaves) if leaves else None
 
-        int_box: dict = {"acks": [], "stops": [], "extra_empties": [],
-                         "internals": list(internals)}
-        for z in sorted({l for l, _, _ in internals}):
-            # stale parts from a killed attempt with a different task
-            # count must not survive (deterministic per-task names
-            # only guard same-plan retries)
-            p = self._p("tilefeat", f"z={z}")
-            if os.path.isdir(p):
-                shutil.rmtree(p)
+        walk: dict = {"acks": [], "stops": [], "extra_empties": [],
+                      "internals": list(internals)}
 
         def internal_job():
             self._set_pool("gvt-internal")
-            all_int = list(internals)
-            s_stop: list = []
             if stragglers:
                 # exact stop boundary first: one slim distributed
                 # probe, then the straggler subtrees render through
@@ -960,63 +772,38 @@ class SparkTileEngine:
                     fr0, stragglers, opts).collect()
                 s_int, s_stop, s_emp = self._straggler_boundary(
                     acks, stragglers)
-                _steps["probe"] = round(time.monotonic() - _t, 2)
-                _steps["n_stragglers"] = len(stragglers)
-                _steps["n_stops"] = len(s_stop)
-                all_int += s_int
-                int_box["stops"] = s_stop
-                int_box["extra_empties"] = s_emp
-                int_box["internals"] = all_int
-                known = {l for l, _, _ in internals}
-                for z in sorted({c[0] for c in s_int + s_stop}
-                                - known):
-                    p = self._p("tilefeat", f"z={z}")
-                    if os.path.isdir(p):
-                        shutil.rmtree(p)
-                for z in sorted({c[0] for c in s_stop}):
-                    p = self._p("sources", f"z={z}")
-                    if os.path.isdir(p):
-                        shutil.rmtree(p)
-            if not (all_int or s_stop):
+                steps["probe"] = round(time.monotonic() - _t, 2)
+                steps["n_stragglers"] = len(stragglers)
+                steps["n_stops"] = len(s_stop)
+                walk.update(internals=list(internals) + s_int,
+                            stops=s_stop, extra_empties=s_emp)
+            if not (walk["internals"] or walk["stops"]):
                 return
             _t = time.monotonic()
-            int_box["acks"] = internal_tree_direct(
-                fr0, all_int, opts, self._p("tilefeat"),
-                stops=s_stop, sources_root=self._p("sources"))
-            _steps["internal"] = round(time.monotonic() - _t, 2)
+            walk["acks"] = internal_tree_direct(
+                fr0, walk["internals"], opts, self._p("tilefeat"),
+                stops=walk["stops"], sources_root=self._p("sources"))
+            steps["internal"] = round(time.monotonic() - _t, 2)
 
-        fut_int = (pool.submit(internal_job)
-                   if (internals or stragglers) else None)
+        fut_int = None
+        if internals or stragglers:
+            fut_int = pool.submit(internal_job)
+            futures.append(fut_int)
 
         _t1 = time.monotonic()
         leaf_acks = (self._forest_leaf_wave(leaves, routed=routed)
                      if leaves else [])
         wave_sec = time.monotonic() - _t1
-        if fut_int is not None:
-            fut_int.result()
+        for fut in (fut_int, fut_src):
+            if fut is not None:
+                fut.result()
         _t2 = time.monotonic()
         fut_render.result()
         render_wait = time.monotonic() - _t2
         ns0 = int(obs_r.get["ns"] or 0)
 
-        # driver-side rows: z0, internal-cell stats, empty children
-        self._write_local_parquet(pd.DataFrame({
-            "x": pd.Series([0], dtype="int32"),
-            "y": pd.Series([0], dtype="int32"),
-            "num_features": pd.Series([r0["num_features"]],
-                                      dtype="int64"),
-            "num_points": pd.Series([r0["num_points"]], dtype="int64"),
-            "num_simplified": pd.Series([ns0], dtype="int64"),
-            "minx": pd.Series([r0["minx"]], dtype="float64"),
-            "miny": pd.Series([r0["miny"]], dtype="float64"),
-            "maxx": pd.Series([r0["maxx"]], dtype="float64"),
-            "maxy": pd.Series([r0["maxy"]], dtype="float64"),
-            "is_split": pd.Series([True], dtype="bool"),
-            "has_source": pd.Series([False], dtype="bool"),
-            "tile_id": pd.Series([to_id(0, 0, 0)], dtype="int64"),
-        }), self._p("tiles", "z=0"))
         merged: dict = {}
-        for r in int_box.get("acks", []):
+        for r in walk["acks"]:
             key = (int(r["z"]), int(r["x"]), int(r["y"]))
             cur = merged.get(key)
             if cur is None:
@@ -1032,76 +819,48 @@ class SparkTileEngine:
                 cur[4] = min(cur[4], float(r["miny"]))
                 cur[5] = max(cur[5], float(r["maxx"]))
                 cur[6] = max(cur[6], float(r["maxy"]))
-        # one tiles/z=N write per level: internal-cell stats rows plus
-        # empty-children sentinels (a second _write_local_parquet to
-        # the same level would overwrite the first).  Straggler STOP
-        # cells are leaf tiles: is_split=False, has_source=True; a
-        # stop cell with no ack clipped empty everywhere and joins the
-        # sentinel back-fill.
-        stop_set = {tuple(c) for c in int_box.get("stops", [])}
-        # BLIND leaves (children of a _FOREST_MAX_LEVEL internal, no
-        # gate mass info) that received no candidate rows produce no
-        # wave group and no subtree part: back-fill their sentinel
-        # rows from the missing acks, same as gate-proven empties
+        # one tiles/z=N write per level: z0, internal-cell stats rows
+        # and empty-children sentinels.  Straggler STOP cells are leaf
+        # tiles (is_split=False, has_source=True); a stop cell with no
+        # ack clipped empty everywhere and joins the sentinel back-fill.
+        # Leaves that received no candidate rows (blind leaves, or z1
+        # cells of a stats-proven cut) produce no wave group and no
+        # subtree part: back-fill them from the missing acks too.
+        stop_set = {tuple(c) for c in walk["stops"]}
         acked = {(int(r["z"]), int(r["x"]), int(r["y"]))
                  for r in leaf_acks}
-        all_empties = (list(empties) + list(int_box.get("extra_empties",
-                                                        []))
+        all_empties = (list(empties) + list(walk["extra_empties"])
                        + [c for c in stop_set if c not in merged]
                        + [tuple(c) for c in leaves
                           if tuple(c) not in acked])
-        by_level: dict = {}
+        by_level: dict = {0: [(0, 0, [
+            r0["num_features"], n0, ns0, r0["minx"], r0["miny"],
+            r0["maxx"], r0["maxy"], not root_only, root_only])]}
         for (z, x, y), st in merged.items():
             is_stop = (z, x, y) in stop_set
             by_level.setdefault(z, []).append(
                 (x, y, st + [not is_stop, is_stop]))
         for z, x, y in all_empties:
-            by_level.setdefault(z, []).append(
-                (x, y, [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]))
+            by_level.setdefault(z, []).append((x, y, _EMPTY_TILE_STATS))
         for z, rows in sorted(by_level.items()):
-            rows.sort(key=lambda t: (t[0], t[1]))
-            self._write_local_parquet(pd.DataFrame({
-                "x": pd.Series([t[0] for t in rows], dtype="int32"),
-                "y": pd.Series([t[1] for t in rows], dtype="int32"),
-                "num_features": pd.Series([t[2][0] for t in rows],
-                                          dtype="int64"),
-                "num_points": pd.Series([t[2][1] for t in rows],
-                                        dtype="int64"),
-                "num_simplified": pd.Series([t[2][2] for t in rows],
-                                            dtype="int64"),
-                "minx": pd.Series([t[2][3] for t in rows],
-                                  dtype="float64"),
-                "miny": pd.Series([t[2][4] for t in rows],
-                                  dtype="float64"),
-                "maxx": pd.Series([t[2][5] for t in rows],
-                                  dtype="float64"),
-                "maxy": pd.Series([t[2][6] for t in rows],
-                                  dtype="float64"),
-                "is_split": pd.Series([t[2][7] for t in rows],
-                                      dtype="bool"),
-                "has_source": pd.Series([t[2][8] for t in rows],
-                                        dtype="bool"),
-                "tile_id": pd.Series([to_id(z, t[0], t[1])
-                                      for t in rows], dtype="int64"),
-            }), self._p("tiles", f"z={z}"))
-        for z in sorted({l for l, _, _ in int_box["internals"]}
-                        | {c[0] for c in stop_set if c in merged}):
-            os.makedirs(self._p("tilefeat", f"z={z}"), exist_ok=True)
-            open(os.path.join(self._p("tilefeat", f"z={z}"),
-                              "_SUCCESS"), "w").close()
-        for z in sorted({c[0] for c in stop_set if c in merged}):
-            os.makedirs(self._p("sources", f"z={z}"), exist_ok=True)
-            open(os.path.join(self._p("sources", f"z={z}"),
-                              "_SUCCESS"), "w").close()
+            self._write_tile_rows(z, rows)
+        stop_levels = {c[0] for c in stop_set if c in merged}
+        for store, levels in (
+                ("tilefeat", {l for l, _, _ in walk["internals"]}
+                 | stop_levels),
+                ("sources", stop_levels)):
+            for z in sorted(levels):
+                p = self._p(store, f"z={z}")
+                os.makedirs(p, exist_ok=True)
+                open(os.path.join(p, "_SUCCESS"), "w").close()
 
-        # lineage lands LAST (resume contract: no lineage → clean
-        # rebuild from the features checkpoint)
-        max_z = max([l for l, _, _ in leaves]
-                    + [c[0] for c in stop_set] or [1])
+        # lineage lands LAST (resume contract: no final row → clean
+        # rebuild from the z0 frontier)
+        max_z = max([l for l, _, _ in leaves] + [c[0] for c in stop_set],
+                    default=int(not root_only))
         self._append_lineage({
-            "zoom": 0, "n_tiles": 1, "n_split": 1,
-            "n_points": int(r0["num_points"]), "heavy": [],
-            "handoff": [], "forest": True,
+            "zoom": 0, "n_tiles": 1, "n_split": int(not root_only),
+            "n_points": n0, "forest": True,
             "wall_sec": time.monotonic() - t0,
             "steps": {"render_wait": round(render_wait, 2)},
             "complete": True, "final": False})
@@ -1111,543 +870,95 @@ class SparkTileEngine:
             "steps": {
                 "n_leaves": len(leaves), "n_internal": len(internals),
                 "n_empty": len(empties),
-                "n_slots": getattr(self, "_forest_slot_bins", None),
+                "n_slots": self._forest_slot_bins,
                 "gate": gate_sec,
-                "vprobe": getattr(self, "_forest_vprobe_sec", None),
-                **_steps,
+                "vprobe": self._forest_vprobe_sec,
+                **steps,
                 "task_secs_sum": round(sum(
                     r["secs"] for r in leaf_acks), 2),
                 "task_secs_max": round(max(
                     (r["secs"] for r in leaf_acks), default=0.0), 2)}})
-        # the final row records the leaf cut keys so _ensure_subtrees
-        # can re-create a lost subtree store for a completed forest
-        # build
+        # the final row records the leaf cut keys so a resume can
+        # re-create a lost subtree store for a completed build
         self._append_lineage({
             "zoom": max_z, "n_tiles": len(leaves) + len(internals),
-            "heavy": [], "handoff": [list(c) for c in leaves],
-            "forest": True,
+            "handoff": [list(c) for c in leaves], "forest": True,
             "wall_sec": time.monotonic() - t0,
             "complete": True, "final": True})
 
-    def build(self, features_df: DataFrame | None, resume: bool = False,
-              z0_stats: list[dict] | None = None) -> None:
-        """First-pass pyramid (cz == null path of splitTile).
+    def _reset_stores(self) -> None:
+        """Fresh-build cleanup.  Stores, lineage and snapshot history of
+        an earlier (or killed) build in this workdir must not survive:
+        task-side parts of a killed attempt, or the dirs of a cut with
+        another shape, would surface through the root-level readers
+        (tiles(), _subtree_df) as phantom tiles."""
+        import shutil
+        for store in ("tiles", "tilefeat", "frontier", "sources",
+                      "subtree", "snapshots"):
+            p = self._p(store)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+        for p in (self._lineage_path(), self._version_path()):
+            if os.path.exists(p):
+                os.remove(p)
 
-        features_df: FEATURE_SCHEMA rows, already converted + wrapped —
-        or None, meaning the z0 frontier is the features checkpoint
-        served as a view (no-wrap fast path of build_from_converted).
-        With resume=True, restarts after the last zoom whose lineage row
-        is complete, reusing the checkpointed frontier.
+    def build(self, features_df: DataFrame | None = None,
+              resume: bool = False, z0_stats: dict | None = None) -> None:
+        """Build the pyramid (the first, cz == null pass of splitTile)
+        through the forest cut (_build_forest), the only build path.
 
-        Two paths: the forest cut (_build_forest) whenever the z0 stats
-        admit one, else the per-zoom loop below (dateline-wrapping
-        inputs, index_max_zoom < 2, cuts past _FOREST_MAX_LEVEL, and a
-        fixed ``subtree_max_points``).
-        """
-        opts = self.options
-        spark = self.spark
-        par = spark.sparkContext.defaultParallelism
-        pool = ThreadPoolExecutor(max_workers=12)
-        futures: list = []
+        ``features_df``: converted FEATURE_SCHEMA rows, already wrapped
+        (wrap_df).  They are written once as frontier/z=0 and the z0
+        stats are observed on that same write.  ``None`` means the z0
+        frontier is the features checkpoint served as a view, with
+        ``z0_stats`` observed by build_from_converted's ingest job.
 
-        start_z = 0
-        heavy_prev: list | None = None
+        ``resume=True``: when the lineage holds the final row the build
+        is done, and only a lost subtree store is re-run from the leaf
+        keys that row records.  Anything less restarts the build: the
+        forest appends its lineage only after every store is durable."""
         if resume:
-            done = [r for r in self._read_lineage() if r.get("complete")]
-            if done:
-                self._ensure_subtrees(done, pool, futures)
-                last = max(r["zoom"] for r in done)
-                last_row = [r for r in done if r["zoom"] == last][-1]
-                if last_row.get("final"):
-                    for f in futures:
-                        f.result()
-                    pool.shutdown()
-                    return  # build already finished
-                start_z = last + 1
-                heavy_prev = [tuple(k) for k in last_row.get("heavy", [])]
-            else:
-                # Nothing durable is recorded yet (a kill landed before
-                # the first complete lineage row), so the restart is a
-                # fresh build in every way that matters — but a killed
-                # forest attempt may have left task-side store
-                # parts (subtree b=1, tilefeat z=N are written by TASKS,
-                # not a committed job) that the root-level readers would
-                # union as phantom tiles if the rebuild's handoff/render
-                # levels don't coincide.  Run the fresh-build cleanup,
-                # including any non-complete lineage rows (subtree_batch
-                # acks) and the snapshot manifests that rode them.
-                import shutil
-                for store in ("tiles", "tilefeat", "frontier", "sources",
-                              "subtree"):
-                    p = self._p(store)
-                    if os.path.isdir(p):
-                        shutil.rmtree(p)
-                if os.path.exists(self._lineage_path()):
-                    os.remove(self._lineage_path())
-                if os.path.isdir(self._snap_dir()):
-                    shutil.rmtree(self._snap_dir())
-                if os.path.exists(self._version_path()):
-                    os.remove(self._version_path())
-        if not resume and os.path.exists(self._lineage_path()):
-            os.remove(self._lineage_path())
-        if not resume:
-            # a fresh build starts a fresh snapshot history
-            import shutil
-            if os.path.isdir(self._snap_dir()):
-                shutil.rmtree(self._snap_dir())
-            if os.path.exists(self._version_path()):
-                os.remove(self._version_path())
-            # stale stores from a previous build in the same workdir
-            # must not survive: each write is overwrite-mode, but a
-            # build of different depth or handoff shape leaves
-            # differently-NAMED zoom/batch dirs behind, and the
-            # root-level readers (tiles(), _subtree_df) union whatever
-            # is on disk
-            for store in ("tiles", "tilefeat", "frontier", "sources",
-                          "subtree"):
-                p = self._p(store)
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-
-        if (start_z == 0 and features_df is None and z0_stats
-                and self._forest_eligible(z0_stats[0]["num_points"])):
-            try:
-                self._build_forest(z0_stats[0], pool, futures)
-            finally:
-                for f in futures:
-                    f.result()
-                pool.shutdown()
-                self._stats_cache = None
-                self._sub_meta_cache.clear()
-                self._source_rows_cache.clear()
-                self._df_cache.clear()
-            return
-
-        n_verts = (F.size("coords") / 3).cast("long").alias("n_verts")
-        if start_z == 0:
-            if features_df is not None:
-                frontier = (features_df
-                            .withColumn("z", F.lit(0))
-                            .withColumn("x", F.lit(0))
-                            .withColumn("y", F.lit(0))
-                            .select(*TILED_COLUMNS, n_verts))
-                frontier.write.mode("overwrite").parquet(
-                    self._p("frontier", "z=0"))
-            else:
-                # view mode: clear any stale materialized z0 frontier so
-                # _read_frontier(0) serves the features-checkpoint view
-                import shutil
-                p0 = self._p("frontier", "z=0")
-                if os.path.isdir(p0):
-                    shutil.rmtree(p0)
-
-        def _child_obs_metrics(children):
-            """Per-child conditional aggregates: the next zoom's
-            classification stats, observed during the split job itself
-            (used only while the child set is small — the blocking
-            stats agg disappears for the low zooms where it is pure
-            round latency)."""
-            metrics = []
-            for (cx, cy) in children:
-                cond = (F.col("x") == cx) & (F.col("y") == cy)
-                p = f"c{cx}_{cy}"
-                metrics += [
-                    F.sum(F.when(cond, 1).otherwise(0)).alias(f"{p}_nf"),
-                    F.sum(F.when(cond, F.col("n_verts"))).alias(f"{p}_np"),
-                    F.min(F.when(cond, F.col("minx"))).alias(f"{p}_minx"),
-                    F.min(F.when(cond, F.col("miny"))).alias(f"{p}_miny"),
-                    F.max(F.when(cond, F.col("maxx"))).alias(f"{p}_maxx"),
-                    F.max(F.when(cond, F.col("maxy"))).alias(f"{p}_maxy"),
-                ]
-            return metrics
-
-        _OBS_MAX_CHILDREN = 16
-
-        z = start_z
-        prev_points = 0
-        prev_finalize = None
-        split_obs = None  # (Observation, child_keys) from the last split
-        split_direct = None  # ack-aggregated stats from a direct split
-        while True:
-            t0 = time.monotonic()
-            frontier = self._read_frontier(z)
-            if heavy_prev is not None:
-                # the previous split ran optimistically over every tile;
-                # only children of HEAVY splits belong to this zoom's
-                # distributed frontier (light subtrees + leaf sources
-                # were handled from the z-1 frontier)
-                parents = [_pack_xy(x, y) for x, y in heavy_prev]
-                pcol = (F.shiftleft(F.shiftright(F.col("x"), 1)
-                                    .cast("long"), 25)
-                        + F.shiftright(F.col("y"), 1).cast("long"))
-                frontier = frontier.where(pcol.isin(parents))
-
-            # CLASSIFY-THEN-SPLIT: from round 4 on, every z≥1 round
-            # defers the split until the stop rules ran — stats come
-            # from the previous split's observed metrics or a
-            # driver-side pyarrow scan of the frontier parquet (both
-            # sub-second off-fleet reads), so classification no longer
-            # costs a fleet round trip and splitting the whole frontier
-            # optimistically is pure dead work: light/leaf tiles'
-            # children were written to frontier z+1 but never read
-            # (their subtrees rebuild the same clip inside the handoff
-            # wave).  Deferring also shrinks the frontier store to
-            # HEAVY children only — smaller writes, smaller scans.
-            # The z0 round keeps the concurrent split: its stats are
-            # precomputed and the root is heavy by construction.
-            fut_split = None
-            split_group = None
-            defer_split = heavy_prev is not None
-            next_obs = None
-            next_direct = None
-            if z < opts.index_max_zoom and not defer_split:
-                n_parts = max(par, min(
-                    4096,
-                    prev_points // self.target_points_per_partition + 1))
-                split_group = f"gvt-split-z{z + 1}"
-                split_flag = {"cancelled": False}
-                cur_keys = ([(0, 0)] if heavy_prev is None else
-                            [(2 * px + dx, 2 * py + dy)
-                             for px, py in heavy_prev
-                             for dx in (0, 1) for dy in (0, 1)])
-                obs = children = None
-                if 4 * len(cur_keys) <= _OBS_MAX_CHILDREN:
-                    from pyspark.sql import Observation
-                    children = [(2 * cx + dx, 2 * cy + dy)
-                                for cx, cy in cur_keys
-                                for dx in (0, 1) for dy in (0, 1)]
-                    obs = Observation()
-                    next_obs = (obs, children)
-
-                def split_job(fr=frontier, z=z, n=n_parts, grp=split_group,
-                              flag=split_flag, obs=obs, children=children):
-                    if flag["cancelled"]:
-                        return
-                    self._set_pool("gvt-split")
-                    spark.sparkContext.setLocalProperty(
-                        "spark.jobGroup.id", grp)
-                    try:
-                        out = split_children_df(fr, z, opts).select(
-                            "*", n_verts)
-                        if obs is not None:
-                            out = out.observe(
-                                obs, *_child_obs_metrics(children))
-                        (out.repartition(n).write.mode("overwrite")
-                         .parquet(self._p("frontier", f"z={z+1}")))
-                    finally:
-                        spark.sparkContext.setLocalProperty(
-                            "spark.jobGroup.id", None)
-
-                fut_split = pool.submit(split_job)
-
-            # render per-feature tile output rows (tolerance filter,
-            # rewind, integer transform, JSON) as a NARROW map — no
-            # shuffle, no per-tile string concat: a z0 tile holding the
-            # whole corpus stays distributed across its input partitions
-            # (the per-tile features_json is materialized lazily on read;
-            # a single 100MB tile string would serialize one reduce task)
-            tilefeat_path = self._p("tilefeat", f"z={z}")
-
-            # direct per-file render of the frontier parquet dir
-            # (pipeline.render_files_direct): pyarrow read/render/write
-            # task-side, nsim sums back as acks — no JVM decode, no
-            # Arrow pipe crossing, no JVM writer and no finalizer
-            # re-scan.  A view-mode z0 frontier (see _read_frontier)
-            # renders straight from the features checkpoint files.
-            fz = self._p("frontier", f"z={z}")
-            seed0 = z == 0 and not os.path.isdir(fz)
-            render_in = self._p("features") if seed0 else fz
-            ns_box: dict = {}
-
-            def render_job(p=tilefeat_path, z=z, render_in=render_in,
-                           seed0=seed0, parents=heavy_prev, ns_box=ns_box):
-                self._set_pool("gvt-render")
-                ns_box["nsim"] = render_files_direct(
-                    self.spark, z, parents, opts, render_in, p,
-                    z0_seed=seed0)
-
-            fut_tilefeat = pool.submit(render_job)
-
-            # classification stats come straight from the frontier with
-            # a pure-SQL agg (num_points counts every vertex incl. rings
-            # dropped later, tile.js:89 — exactly sum(size(coords)/3)),
-            # so the stop rules never wait for the render job
-            # n_verts was precomputed at frontier-write time, so this
-            # agg scans only slim integer/double columns.  z0 stats may
-            # arrive precomputed (observed during the features write)
-            if z == 0 and z0_stats is not None:
-                stats = z0_stats
-            elif split_direct is not None:
-                # this zoom's stats came back as direct-split acks —
-                # heavy-only by construction, no re-scan, no filter
-                stats = split_direct
-            elif split_obs is not None:
-                # this zoom's stats were observed during the split job
-                # that produced its frontier; restrict to children of
-                # heavy parents (the same filter the frontier read uses)
-                got = split_obs[0].get
-                hp = set(heavy_prev or [])
-                stats = []
-                for (cx, cy) in split_obs[1]:
-                    if (cx >> 1, cy >> 1) not in hp:
-                        continue
-                    nf = got.get(f"c{cx}_{cy}_nf")
-                    if not nf:
-                        continue
-                    p = f"c{cx}_{cy}"
-                    stats.append({
-                        "x": cx, "y": cy, "num_features": int(nf),
-                        "num_points": int(got[f"{p}_np"] or 0),
-                        "minx": float(got[f"{p}_minx"]),
-                        "miny": float(got[f"{p}_miny"]),
-                        "maxx": float(got[f"{p}_maxx"]),
-                        "maxy": float(got[f"{p}_maxy"])})
-            else:
-                # classification stats come off-fleet: a driver-side
-                # pyarrow scan of the just-written frontier parquet's
-                # SLIM columns (x, y, n_verts, bbox — the geometry
-                # arrays are never touched).  The round-4 profile
-                # measured the equivalent Spark agg at 5-7 s per zoom,
-                # all of it slot-wait behind multi-second subtree
-                # tasks under FAIR — pure critical-path latency the
-                # executors cannot give back.  Falls back to the Spark
-                # agg if the frontier is not a local parquet dir.
-                stats = self._stats_via_pyarrow(z, heavy_prev)
-                if stats is None:
-                    stats = (frontier
-                             .groupBy("x", "y")
-                             .agg(F.count(F.lit(1)).alias("num_features"),
-                                  F.sum("n_verts").alias("num_points"),
-                                  F.min("minx").alias("minx"),
-                                  F.min("miny").alias("miny"),
-                                  F.max("maxx").alias("maxx"),
-                                  F.max("maxy").alias("maxy"))
-                             .collect())
-            _tm = {"stats": time.monotonic() - t0}
-            present = {(r["x"], r["y"]) for r in stats}
-            n_points = sum(r["num_points"] for r in stats)
-            splits = [(r["x"], r["y"], r["num_points"])
-                      for r in stats
-                      if not (z == opts.index_max_zoom or
-                              r["num_points"] <= opts.index_max_points)]
-            threshold = self._subtree_threshold(z, n_points)
-            if splits:
-                # only chase outliers whose subtree task would exceed
-                # ~1.5s of kernel time — splitting smaller ones costs
-                # more in extra sync rounds than the straggler saves
-                mean_sp = sum(p for *_, p in splits) / len(splits)
-                lv = max(1, opts.index_max_zoom - z)
-                threshold = min(threshold,
-                                max(500_000 // lv,
-                                    self._SKEW_FACTOR * mean_sp))
-            light = [(x, y) for x, y, np_ in splits if np_ <= threshold]
-            heavy = [(x, y) for x, y, np_ in splits if np_ > threshold]
-            heavy_points = sum(np_ for _, _, np_ in splits if np_ > threshold)
-            if z == opts.index_max_zoom - 1 and heavy and light:
-                # final-level rule: when any tile stays heavy, the
-                # z+1 round happens regardless — and that round's
-                # render/stats/sources are all NARROW distributed maps
-                # that absorb max-zoom leaves at fleet parallelism.
-                # Handing off the light splits would only convert
-                # their children into single-task wave stragglers (the
-                # densest metro leaf gated the 2M/4M grid builds for
-                # 20-60 s of near-idle fleet), so route everything
-                # through the final distributed round instead.
-                heavy = [(x, y) for x, y, _ in splits]
-                light = []
-                heavy_points = sum(np_ for _, _, np_ in splits)
-
-            # all 4 children of every split tile at z-1 exist as tiles,
-            # even empty ones (index.js:151-154 pushes `tl || []`);
-            # children of light splits come from their subtree batch.
-            # The tiles table itself is tiny (stats only) and is written
-            # straight from the driver rows — no extra Spark jobs
-            missing = []
-            if z > 0 and heavy_prev:
-                missing = [(cx, cy)
-                           for px, py in heavy_prev
-                           for cx in (2 * px, 2 * px + 1)
-                           for cy in (2 * py, 2 * py + 1)
-                           if (cx, cy) not in present]
-            n_empty = len(missing)
-
-            # leaf tiles retain their source features for drill-down;
-            # positive key filter — the frontier file also holds children
-            # of light/leaf tiles from the optimistic split, which belong
-            # to no tile at this zoom
-            split_set = {(x, y) for x, y, _ in splits}
-            leaf_packed = [_pack_xy(x, y) for (x, y) in present
-                           if (x, y) not in split_set]
-            leaf_keys = [(x, y) for (x, y) in present
-                         if (x, y) not in split_set]
-            fut_sources = None
-            if leaf_keys:
-                def sources_job(z=z, lp=list(leaf_packed), lk=leaf_keys):
-                    self._set_pool("gvt-sources")
-                    (self._read_frontier(z).where(
-                        F.col("x").isin([int(x) for x, _ in lk]) &
-                        F.col("y").isin([int(y) for _, y in lk]) &
-                        _pack_col().isin(lp))
-                     .drop("z").write.mode("overwrite")
-                     .parquet(self._p("sources", f"z={z}")))
-                fut_sources = pool.submit(sources_job)
-
-            self._submit_subtree(pool, futures, z, light)
-            final = not heavy
-
-            # everything below only FINALIZES this zoom (nsim sums,
-            # stats parquet, lineage row); the loop's forward progress
-            # needs none of it, so it runs async — the lineage row lands
-            # only after the zoom's stores are durable, which is exactly
-            # the resume contract (a kill before that re-runs the zoom)
-            def finalize(z=z, stats=stats, missing=missing, splits=splits,
-                         heavy=heavy, light=light, n_points=n_points,
-                         n_empty=n_empty, fut_tilefeat=fut_tilefeat,
-                         fut_sources=fut_sources, final=final,
-                         _tm=_tm, t0=t0, ns_box=ns_box,
-                         prev_fin=prev_finalize):
-                import pandas as pd
-                self._set_pool("gvt-finalize")
-                _t = time.monotonic()
-                fut_tilefeat.result()
-                _tm["assemble_wait"] = time.monotonic() - _t
-                nsim = ns_box["nsim"]
-                _t = time.monotonic()
-                split_lookup = {(x, y) for x, y, _ in splits}
-                tiles_pdf = pd.DataFrame({
-                    "x": pd.Series([r["x"] for r in stats]
-                                   + [c[0] for c in missing], dtype="int32"),
-                    "y": pd.Series([r["y"] for r in stats]
-                                   + [c[1] for c in missing], dtype="int32"),
-                    "num_features": pd.Series(
-                        [r["num_features"] for r in stats] + [0] * n_empty,
-                        dtype="int64"),
-                    "num_points": pd.Series(
-                        [r["num_points"] for r in stats] + [0] * n_empty,
-                        dtype="int64"),
-                    "num_simplified": pd.Series(
-                        [nsim.get((r["x"], r["y"]), 0) for r in stats]
-                        + [0] * n_empty, dtype="int64"),
-                    "minx": pd.Series([r["minx"] for r in stats]
-                                      + [2.0] * n_empty, dtype="float64"),
-                    "miny": pd.Series([r["miny"] for r in stats]
-                                      + [1.0] * n_empty, dtype="float64"),
-                    "maxx": pd.Series([r["maxx"] for r in stats]
-                                      + [-1.0] * n_empty, dtype="float64"),
-                    "maxy": pd.Series([r["maxy"] for r in stats]
-                                      + [0.0] * n_empty, dtype="float64"),
-                    "is_split": pd.Series(
-                        [(r["x"], r["y"]) in split_lookup for r in stats]
-                        + [False] * n_empty, dtype="bool"),
-                    "has_source": pd.Series(
-                        [(r["x"], r["y"]) not in split_lookup for r in stats]
-                        + [True] * n_empty, dtype="bool"),
-                    "tile_id": pd.Series(
-                        [to_id(z, r["x"], r["y"]) for r in stats]
-                        + [to_id(z, cx, cy) for cx, cy in missing],
-                        dtype="int64"),
-                })
-                # tiny, driver-local — pyarrow write, no Spark job (a
-                # tiny job queues behind the big concurrent stages and
-                # was measured costing seconds of pure scheduler wait)
-                self._write_local_parquet(tiles_pdf,
-                                          self._p("tiles", f"z={z}"))
-                _tm["tiles_write"] = time.monotonic() - _t
-                if fut_sources is not None:
-                    fut_sources.result()
-                # lineage rows must land in zoom order: "complete up to
-                # z" has to imply every store below z is durable.  The
-                # pool is FIFO, so the previous finalize has started
-                # (or finished) by the time this one runs — no deadlock.
-                if prev_fin is not None:
-                    prev_fin.result()
-                self._append_lineage({
-                    "zoom": z, "n_tiles": len(stats) + n_empty,
-                    "n_split": len(splits), "n_points": n_points,
-                    "heavy": [list(k) for k in heavy],
-                    "handoff": [list(k) for k in light],
-                    "wall_sec": time.monotonic() - t0,
-                    "steps": {k: round(v, 2) for k, v in _tm.items()},
-                    "complete": True, "final": final,
-                })
-
-            prev_finalize = pool.submit(finalize)
-            futures.append(prev_finalize)
-
-            _t = time.monotonic()
-            if fut_split is not None:
-                if final:
-                    # the optimistic z+1 split is dead work on the last
-                    # round — cancel it so the subtree batches and the
-                    # finalizers get the executors
-                    split_flag["cancelled"] = True
-                    spark.sparkContext.cancelJobGroup(split_group)
-                    try:
-                        fut_split.result()
-                    except Exception:
-                        pass
-                else:
-                    fut_split.result()
-                    _tm["split_wait"] = time.monotonic() - _t
-            elif not final and z < opts.index_max_zoom:
-                # deferred split: the heavy set is known, so clip only
-                # the heavy parents' rows — light/leaf children come
-                # from the subtree batches and are never read.  One
-                # task per frontier file, pyarrow read/clip/write
-                # task-side, slim acks back — the geometry never crosses
-                # the JVM and the acks ARE the next round's
-                # classification stats (see pipeline.split_files_direct;
-                # grid-measured in BENCH/SCALING.md round 4).  The
-                # frontier dir exists: this round's _read_frontier(z)
-                # read it.
-                self._set_pool("gvt-split")
-                # size output shards so file count (= next round's task
-                # parallelism) tracks data volume: ~2 files per core,
-                # never ballooning as rows shrink (clip adds ~10%
-                # boundary duplicates)
-                hset = set(map(tuple, heavy))
-                heavy_nf = sum(r["num_features"] for r in stats
-                               if (r["x"], r["y"]) in hset)
-                sr = max(4096, int(heavy_nf * 1.1) // (2 * par) + 1)
-                next_direct, acks = split_files_direct(
-                    spark, z, heavy, opts, self._p("frontier", f"z={z}"),
-                    self._p("frontier", f"z={z+1}"), shard_rows=sr)
-                _tm["split_sync"] = time.monotonic() - _t
-                tasks = sorted(
-                    ((round(float(a["secs"]), 2), int(a["rows_in"]),
-                      int(a["rows_out"])) for a in acks),
-                    reverse=True)
-                self._append_lineage({
-                    "split_for": z + 1, "n_heavy": len(heavy),
-                    "heavy_points": heavy_points, "mode": "direct",
-                    "n_files": len(acks),
-                    "top_tasks": [list(t) for t in tasks[:5]],
-                    "wall_sec": round(_tm["split_sync"], 2)})
-            split_obs = next_obs if not final else None
-            split_direct = next_direct if not final else None
-            prev_points = heavy_points
+            final = [r for r in self._read_lineage()
+                     if r.get("final") and r.get("forest")]
             if final:
-                break
-            heavy_prev = heavy
-            z += 1
-
-        for f in futures:
-            f.result()
-        pool.shutdown()
-        self._stats_cache = None
-        self._sub_meta_cache.clear()
-        self._source_rows_cache.clear()
-        self._df_cache.clear()
+                keys = [tuple(k) for k in final[-1].get("handoff") or []]
+                if keys and not os.path.exists(
+                        self._p("subtree", "b=1", "_SUCCESS")):
+                    self._forest_leaf_wave(keys)
+                return
+        self._reset_stores()
+        r0 = (self._write_frontier0(features_df) if features_df is not None
+              else z0_stats)
+        pool = ThreadPoolExecutor(max_workers=4)
+        futures: list = []
+        try:
+            if r0 is None:
+                # empty input: no tiles, as LocalTileIndex builds none
+                self._write_tile_rows(0, [])
+                self._append_lineage({
+                    "zoom": 0, "n_tiles": 0, "n_points": 0,
+                    "forest": True, "complete": True, "final": True})
+            else:
+                self._build_forest(r0, pool, futures)
+        finally:
+            for f in futures:
+                f.result()
+            pool.shutdown()
+            self._stats_cache = None
+            self._sub_meta_cache.clear()
+            self._source_rows_cache.clear()
+            self._df_cache.clear()
 
     # ------------------------------------------------------------ read side
 
     def _stats(self) -> dict:
-        """(z,x,y) → {has_source, bbox} for DISTRIBUTED-zoom tiles only.
+        """(z,x,y) → {has_source, bbox} for tiles-store tiles only.
 
-        The per-zoom stats parquet holds O(driver-loop frontier) rows —
-        it does not grow with the 4^z subtree output, so caching it is
-        driver-safe at any pyramid depth.  Subtree tiles are served by
-        ``_subtree_meta`` keyed lookups instead of being collected."""
+        The tiles store holds O(cut) rows — z0, internal and stop cells,
+        empty back-fills — and does not grow with the 4^z subtree
+        output, so caching it is driver-safe at any pyramid depth.
+        Subtree tiles are served by ``_subtree_meta`` keyed lookups
+        instead of being collected."""
         if self._stats_cache is None:
             cache = {}
             if self._read_lineage() and os.path.isdir(self._p("tiles")):
@@ -1866,7 +1177,7 @@ class SparkTileEngine:
         if not self._read_lineage():
             return None
         if (z, x, y) in self._stats():
-            # distributed-zoom tile: zero-job existence, one pruned read
+            # tiles-store tile: zero-job existence, one pruned read
             # (the subtree root is never re-emitted there, so dist-first
             # order can't shadow anything)
             tf = self._tilefeat_df()
@@ -1895,7 +1206,7 @@ class SparkTileEngine:
 
     def _source_rows(self, z, x, y) -> list:
         """Collect retained-source feature records (plain dicts) for
-        (z,x,y) from the per-zoom sources store (row per feature) and
+        (z,x,y) from the sources store (row per feature) and
         the subtree batches (one packed row per leaf tile)."""
         from .pipeline import SOURCE_PACK_COLUMNS, unpack_source_pack
         if (z, x, y) in self._source_rows_cache:
@@ -1937,9 +1248,8 @@ class SparkTileEngine:
         """Targeted split from the ancestor to the requested tile using
         the same kernel; new tiles/sources land in the in-memory overlay.
 
-        parent_feats: sorted list of (ord_path, VTFeature).  At cluster
-        scale this path runs the distributed split stages with the
-        ancestor-chain predicate; source size here is driver-bounded."""
+        parent_feats: sorted list of (ord_path, VTFeature) — one
+        retained source, drilled in-process on the driver."""
         from .kernel.clip import clip_features
         from .kernel.tile import create_tile
         from .kernel.transform import transform_tile
@@ -2120,7 +1430,7 @@ class SparkTileEngine:
         Same semantics as per-request get_tile (drill-downs included),
         but hits are served in TWO Spark jobs for the whole batch: one
         pruned read of the tilefeat store covering every requested
-        distributed tile (all zooms OR-ed into a single predicate) and
+        tiles-store tile (all zooms OR-ed into a single predicate) and
         one keyed read of the subtree store for the rest.  Only genuine
         misses fall back to the drill path, and each retained source is
         drilled at most once for the whole batch."""

@@ -7,7 +7,7 @@ for lazy drill-down, ancestor pruning, and getTile x-wrap.
 
 This class is the kernel-level oracle used by the test-suite; the
 distributed engine (``geojson_vt_spark.engine``) re-expresses the same
-loop as per-zoom DataFrame stages and is cross-checked against it.
+split as a quadtree cut of Spark stages and is cross-checked against it.
 """
 
 from __future__ import annotations

@@ -200,7 +200,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int = 6,
     A round that settles every remaining query (one count proves it)
     ends the search with its checkpointed top-k.
     Output: (query_id, point_id, dist, rank), deterministic tie-break on
-    point_id.
+    point_id.  A query with a NULL lon or lat gets no rows.
     """
     n = 1 << res
     cell_size = 1.0 / n
@@ -212,8 +212,14 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int = 6,
                              f"{_tile_coord_sql(y, res)} AS cy")
 
     pxy = with_cells(_projected(points, "point_id", "px", "py"), "px", "py")
-    remaining = with_cells(_projected(queries, "query_id", "qx", "qy"),
-                           "qx", "qy")
+    # a query with a NULL coordinate has no place and so no neighbour;
+    # it leaves before the search and gets no rows.  Kept in, greatest()
+    # skips the NULL and projects it onto a map edge (NULL lat) or
+    # gives it NULL distances that never settle (NULL lon), and either
+    # way it drives ring doublings up to max_ring
+    remaining = with_cells(
+        _projected(queries.where("lon IS NOT NULL AND lat IS NOT NULL"),
+                   "query_id", "qx", "qy"), "qx", "qy")
     # a round's top-k holds at most one rank-k row per remaining query
     # id, so a settled count equal to this row count (kept an upper
     # bound across rounds) proves that every remaining query settled

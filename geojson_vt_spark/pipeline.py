@@ -1,17 +1,22 @@
 """Distributed DataFrame stages of the tile pyramid.
 
-Spark-first design (SURVEY.md §7): the reference's recursive splitTile
-(/root/reference/src/index.js:66-156) becomes a per-zoom *narrow* map —
-no shuffle in the split itself.  The trivial bbox accept/reject that
-geojson-vt performs per feature (/root/reference/src/clip.js:18-19,
-30-34) is expressed as pure Column predicates, so features that land
-wholly inside or outside a child window never leave the JVM; only
-boundary-crossing features reach the Arrow/pandas clip kernel.
+Spark-first design (SURVEY.md §7): geojson-vt's recursive splitTile
+(src/index.js:66-156) becomes a quadtree CUT of the tile tree built from
+the z0 frontier in a few jobs (engine._build_forest):
 
-Per-tile statistics that drive the stop rules (numPoints/numFeatures,
-/root/reference/src/index.js:107) are plain SQL aggregations —
-``sum(size(coords)/3)`` — so Catalyst handles them with map-side
-partial aggregation.
+- ingest: convert (features_from_json_df) and the dateline wrap
+  (wrap_df, Column-level trivial accept/reject, kernel clip only for
+  crossing features);
+- cut: slim SQL-text mass aggregations per quadtree cell
+  (forest_gate_df, forest_vertex_probe_df) — the stop rule's numPoints
+  is ``sum(size(coords)/3)`` (src/index.js:107), so Catalyst runs them
+  with map-side partial aggregation;
+- render: narrow per-feature maps (rendered_features_df for z0,
+  internal_tree_direct for internal and straggler cells), no per-tile
+  funnel;
+- leaves: routed rows (forest_route_df) grouped into driver-packed
+  slots, each cell's whole descendant pyramid built in-task by the
+  batch kernel (forest_slot_wave_df → batch_split_subtree).
 """
 
 from __future__ import annotations
@@ -26,10 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .kernel.clip import clip_features
 from .model import (FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS,
-                    TILED_FEATURE_SCHEMA, feature_to_record, pdf_rows,
-                    record_to_feature, records_to_pdf)
+                    TILED_FEATURE_SCHEMA, records_to_pdf)
 from .options import TileOptions
 
 # ---------------------------------------------------------------- ingest
@@ -117,8 +120,6 @@ def _clip_df(df: DataFrame, k1: float, k2: float, axis: int,
 
     clipped = crossing.mapInPandas(run, FEATURE_SCHEMA)
     return passed.unionByName(clipped)
-
-
 
 
 def _pdf_state(pdf):
@@ -235,41 +236,6 @@ def _clip_out_geometry_arrays(res) -> dict:
     }
 
 
-def clip_result_records(res, srcs_by_out, ords) -> list[dict]:
-    """Materialize a ClipResult into FEATURE records; fid/tags come from
-    the per-output source records (aligned with output features),
-    ord_path from the caller's bookkeeping."""
-    from .kernel.vec import GT_MPOLY, GTYPES, rags_to_feature_arrays
-    rg = res.rags
-    f_roff, xyz = rags_to_feature_arrays(rg)
-    lens3 = (rg.ring_lens() * 3).astype(np.int32)
-    out = []
-    for oi in range(res.n_feats):
-        r0, r1 = int(f_roff[oi]), int(f_roff[oi + 1])
-        v0 = int(rg.roff[r0])
-        v1 = int(rg.roff[r1])
-        src = srcs_by_out[oi]
-        code = int(res.gcodes[oi])
-        poly_lens = None
-        if code == GT_MPOLY:
-            poly_lens = np.bincount(rg.rpoly[r0:r1]).astype(np.int32)
-        out.append({
-            "ord_path": [int(v) for v in ords[oi]],
-            "fid_json": src["fid_json"],
-            "tags_json": src["tags_json"],
-            "gtype": GTYPES[code],
-            "coords": xyz[3 * v0:3 * v1],
-            "ring_lens": lens3[r0:r1],
-            "poly_lens": poly_lens,
-            "ring_size": rg.rsize[r0:r1],
-            "ring_start": rg.rstart[r0:r1],
-            "ring_end": rg.rend[r0:r1],
-            "minx": float(res.minx[oi]), "miny": float(res.miny[oi]),
-            "maxx": float(res.maxx[oi]), "maxy": float(res.maxy[oi]),
-        })
-    return out
-
-
 def _shift_df(df: DataFrame, offset: float) -> DataFrame:
     """World-copy x shift as pure Column ops
     (/root/reference/src/wrap.js:21-68): adding a constant commutes with
@@ -324,91 +290,12 @@ def wrap_df(df: DataFrame, options: TileOptions,
 
 # ---------------------------------------------------------------- split
 
-def split_children_df(frontier: DataFrame, z: int,
-                      options: TileOptions) -> DataFrame:
-    """One pyramid step: features of splitting tiles at zoom z → features
-    of their ≤4 buffered children at z+1 (/root/reference/src/index.js:123-154).
-
-    Narrow map: per (feature, quadrant) a Column-level router decides
-    PASS (fully inside the buffered child window — new tile coords via
-    arithmetic only), DROP (fully outside), or KERNEL (crossing → Arrow
-    batch into the numpy clip)."""
-    z2 = 1 << z
-    k1c = 0.5 * options.buffer / options.extent
-    k2c = 0.5 - k1c
-    k3c = 0.5 + k1c
-    k4c = 1 + k1c
-    lm = options.line_metrics
-
-    quad_exprs = []
-    udf_mask = F.lit(0)
-    for q in range(4):
-        dx, dy = q & 1, q >> 1
-        xlo = (F.col("x") + (k2c if dx else -k1c)) / z2
-        xhi = (F.col("x") + (k4c if dx else k3c)) / z2
-        ylo = (F.col("y") + (k2c if dy else -k1c)) / z2
-        yhi = (F.col("y") + (k4c if dy else k3c)) / z2
-        acc_x = (F.col("minx") >= xlo) & (F.col("maxx") < xhi)
-        rej_x = (F.col("maxx") < xlo) | (F.col("minx") >= xhi)
-        acc_y = (F.col("miny") >= ylo) & (F.col("maxy") < yhi)
-        rej_y = (F.col("maxy") < ylo) | (F.col("miny") >= yhi)
-
-        quad_exprs.append(F.when(acc_x & acc_y, F.struct(
-            F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))))
-        needs_udf = ~(acc_x & acc_y) & ~(rej_x | rej_y)
-        udf_mask = udf_mask + F.when(needs_udf, F.lit(1 << q)).otherwise(F.lit(0))
-
-    # one scan emits all trivially-accepted (feature, quadrant) child rows
-    passed = (frontier
-              .withColumn("q", F.explode(
-                  F.filter(F.array(*quad_exprs), lambda s: s.isNotNull())))
-              .withColumn("z", F.lit(z + 1))
-              .withColumn("x", F.col("x") * 2 + F.col("q.dx"))
-              .withColumn("y", F.col("y") * 2 + F.col("q.dy"))
-              .withColumn("ord_path", F.concat(
-                  F.col("ord_path"),
-                  F.array(F.lit(0).cast("long"), F.lit(0).cast("long"))))
-              .select(*TILED_COLUMNS))
-
-    crossing = (frontier
-                .withColumn("udf_mask", udf_mask)
-                .where(F.col("udf_mask") > 0))
-
-    def run_arrow(batches):
-        """Arrow-native crossing kernel: list columns flatten straight
-        into the rag flats (_arrow_state) and the clip results emit as
-        pa.ListArray batches (_clip_out_geometry_arrays); fid/tags
-        pass through as Arrow strings via pc.take — no pandas object
-        boxing on either side of the kernel.  Byte-identical to the
-        retired mapInPandas run — pinned against the object kernel on
-        mixed geometry by tests/test_pipeline.py::
-        test_split_arrow_loop_matches_object_kernel and against the
-        wave kernel by test_depth1_forest_matches_loop_layout."""
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(TILED_FEATURE_SCHEMA)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            mask = tbl.column("udf_mask").to_numpy(
-                zero_copy_only=False).astype(np.int64, copy=False)
-            for t in _split_crossing_tables(tbl, z, options, mask):
-                yield t.cast(pa.schema(out_schema)).to_batches()[0]
-
-    clipped = crossing.mapInArrow(run_arrow, TILED_FEATURE_SCHEMA)
-    return passed.unionByName(clipped.select(*TILED_COLUMNS))
-
-
 def _split_crossing_tables(tbl, z: int, options: TileOptions, mask):
-    """The loop-split crossing kernel over one Arrow table: for each
-    child quadrant flagged in ``mask`` (bit q = dy*2+dx), clip the
-    row's geometry against the buffered child window and yield one
-    pa.Table of TILED_COLUMNS per non-empty (dx, dy) pass.  Shared by
-    split_children_df's mapInArrow task and the direct per-file split
-    (split_files_direct) — both paths emit byte-identical rows."""
+    """The crossing half of a one-level split over one Arrow table: for
+    each child quadrant flagged in ``mask`` (bit q = dy*2+dx), clip the
+    row's geometry against the buffered child window (the x-then-y
+    clip sequence of src/index.js:134-147) and yield one pa.Table of
+    TILED_COLUMNS per non-empty (dx, dy) pass."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -511,23 +398,11 @@ def _split_crossing_tables(tbl, z: int, options: TileOptions, mask):
             yield pa.Table.from_arrays(arrays, names=TILED_COLUMNS)
 
 
-# ----------------------------------------------------- direct split
-
-def _tiled_arrow_schema():
-    """Spark's Arrow schema for TILED_FEATURE_SCHEMA + n_verts — the
-    on-disk frontier layout both split paths produce."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    base = to_arrow_schema(TILED_FEATURE_SCHEMA)
-    return base.append(pa.field("n_verts", pa.int64()))
-
-
 def _quadrant_route(tbl, z: int, options: TileOptions):
-    """numpy twin of split_children_df's Column router: per row, the
-    per-quadrant trivial-accept booleans (a row may be accepted by
-    several overlapping buffered windows, matching the Column array
-    explode) and the crossing bit-mask (bit q = dy*2+dx)."""
+    """The trivial accept/reject of a one-level split (clip.js:18-34)
+    over one Arrow table: per row, the per-quadrant trivial-accept
+    booleans (a row may be accepted by several overlapping buffered
+    windows) and the crossing bit-mask (bit q = dy*2+dx)."""
     z2 = 1 << z
     k1c = 0.5 * options.buffer / options.extent
     k2c = 0.5 - k1c
@@ -563,7 +438,8 @@ def _quadrant_route(tbl, z: int, options: TileOptions):
 def _pass_table(tbl, z: int, acc):
     """Trivially-accepted (feature, quadrant) child rows as one Arrow
     table: geometry columns pass through untouched (pc.take), the ord
-    path appends the same [0, 0] marker the Column branch appends."""
+    path appends a [0, 0] marker where a clipped row appends its two
+    clip sub-ordinals."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -614,180 +490,8 @@ def _pass_table(tbl, z: int, acc):
     return pa.Table.from_arrays(arrays, names=TILED_COLUMNS)
 
 
-def _direct_split_file(fi: int, path: str, z: int, heavy: list,
-                       options: TileOptions, out_dir: str,
-                       codec: str, shard_rows: int | None = None) -> dict:
-    """One direct-split task: read ONE frontier parquet file with
-    pyarrow, keep rows of heavy parents, route + clip to z+1 children
-    with the shared crossing kernel, and write the output parquet
-    shards straight from the task (tmp + rename under deterministic
-    names, so a retry overwrites rather than duplicates — the same
-    committer-free pattern as _write_subtree_part).  Returns a slim
-    ack dict whose per-child aggregates ARE the next round's
-    classification stats, so the driver never re-scans the store.
+# ---------------------------------------------------------------- assembly
 
-    Scale rationale (measured, BENCH/SCALING.md round 4): the
-    mapInArrow form of this stage spent most of its wall moving
-    geometry JVM→Python→JVM around a fast numpy kernel — JVM parquet
-    decode, two Arrow pipe crossings, a full-geometry repartition
-    exchange, and the JVM writer.  Task-side Arrow-native I/O removes
-    every crossing: the only bytes that touch the JVM are the file
-    path in and the ack out.  Balance is preserved without the
-    exchange by sharding each task's output to ≤ its input row count
-    (next-round tasks = files, so parallelism tracks data volume),
-    and the heavy-parent filter prunes at the row level exactly like
-    the pushed-down isin."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t0 = time.monotonic()
-    tbl = pq.read_table(path)
-    rows_in = tbl.num_rows
-    ack = {"file": fi, "rows_in": rows_in, "rows_kept": 0,
-           "rows_out": 0, "stats": [], "secs": 0.0}
-    if rows_in:
-        tx = tbl.column("x").to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        ty = tbl.column("y").to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        want = np.fromiter(((int(x) << 32) + int(y) for x, y in heavy),
-                           dtype=np.int64, count=len(heavy))
-        m = np.isin((tx << 32) + ty, want)
-        if not m.all():
-            tbl = tbl.take(pa.array(np.nonzero(m)[0])).combine_chunks()
-    if not tbl.num_rows:
-        ack["secs"] = time.monotonic() - t0
-        return ack
-    ack["rows_kept"] = tbl.num_rows
-    acc, mask = _quadrant_route(tbl, z, options)
-    parts = []
-    pt = _pass_table(tbl, z, acc)
-    if pt is not None:
-        parts.append(pt)
-    cross = np.nonzero(mask > 0)[0]
-    if len(cross):
-        ct = tbl.take(pa.array(cross)).combine_chunks()
-        parts.extend(_split_crossing_tables(ct, z, options, mask[cross]))
-    if not parts:
-        ack["secs"] = time.monotonic() - t0
-        return ack
-    out = pa.concat_tables(parts).combine_chunks()
-    nv = pc.cast(pc.divide(pc.list_value_length(out.column("coords")),
-                           3), pa.int64())
-    out = (out.append_column("n_verts", nv)
-           .cast(_tiled_arrow_schema()))
-    n_out = out.num_rows
-    ack["rows_out"] = n_out
-
-    agg = out.select(["x", "y", "n_verts", "minx", "miny",
-                      "maxx", "maxy"]).group_by(["x", "y"]).aggregate([
-        ("n_verts", "count"), ("n_verts", "sum"),
-        ("minx", "min"), ("miny", "min"),
-        ("maxx", "max"), ("maxy", "max")])
-    cols = {name: agg[name].to_pylist() for name in agg.column_names}
-    ack["stats"] = [
-        {"x": int(cols["x"][i]), "y": int(cols["y"][i]),
-         "num_features": int(cols["n_verts_count"][i]),
-         "num_points": int(cols["n_verts_sum"][i] or 0),
-         "minx": float(cols["minx_min"][i]),
-         "miny": float(cols["miny_min"][i]),
-         "maxx": float(cols["maxx_max"][i]),
-         "maxy": float(cols["maxy_max"][i])}
-        for i in range(agg.num_rows)]
-
-    if shard_rows is None:
-        shard_rows = max(4096, rows_in)
-    n_shards = max(1, -(-n_out // shard_rows))
-    per = -(-n_out // n_shards)
-    for si in range(n_shards):
-        part = out.slice(si * per, per)
-        if not part.num_rows:
-            continue
-        final = os.path.join(out_dir, f"part-f{fi:05d}-s{si:03d}.parquet")
-        tmp = final + ".inprogress"
-        pq.write_table(part, tmp, compression=codec)
-        os.replace(tmp, final)
-    ack["secs"] = time.monotonic() - t0
-    return ack
-
-
-def split_files_direct(spark, z: int, heavy: list, options: TileOptions,
-                       in_dir: str, out_dir: str,
-                       shard_rows: int | None = None) -> tuple[list, list]:
-    """Direct per-file split job: one Spark task per frontier parquet
-    file, each reading/clipping/writing via pyarrow in the task (see
-    _direct_split_file).  Returns (stats, acks): stats rows are the
-    z+1 classification aggregates merged across files — identical to
-    the groupBy the blocking stats agg would compute — and acks carry
-    per-task (rows, secs) for the lineage record.
-
-    Spark here provides scheduling, retries and locality only; the
-    geometry never crosses the JVM.  The loop's z0 round, which splits
-    concurrently with its own classification, uses the mapInArrow
-    path (split_children_df) instead."""
-    import shutil
-
-    files = sorted(
-        os.path.join(in_dir, f) for f in os.listdir(in_dir)
-        if f.endswith(".parquet"))
-    if not files:
-        raise FileNotFoundError(f"no parquet parts under {in_dir}")
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    codec = os.environ.get("GVT_CODEC", "zstd")
-    heavy_keys = [(int(x), int(y)) for x, y in heavy]
-    opts = options
-    zz, od = z, out_dir
-    sr = shard_rows
-    acks = (spark.sparkContext
-            .parallelize(list(enumerate(files)), len(files))
-            .map(lambda t: _direct_split_file(
-                t[0], t[1], zz, heavy_keys, opts, od, codec, sr))
-            .collect())
-    if not any(a["rows_out"] for a in acks):
-        # keep the store readable: one empty file with the full schema
-        import pyarrow.parquet as pq
-        schema = _tiled_arrow_schema()
-        pq.write_table(schema.empty_table(),
-                       os.path.join(out_dir, "part-empty.parquet"),
-                       compression=codec)
-    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
-    merged: dict = {}
-    for a in acks:
-        for s in a["stats"]:
-            key = (s["x"], s["y"])
-            cur = merged.get(key)
-            if cur is None:
-                merged[key] = dict(s)
-            else:
-                cur["num_features"] += s["num_features"]
-                cur["num_points"] += s["num_points"]
-                cur["minx"] = min(cur["minx"], s["minx"])
-                cur["miny"] = min(cur["miny"], s["miny"])
-                cur["maxx"] = max(cur["maxx"], s["maxx"])
-                cur["maxy"] = max(cur["maxy"], s["maxy"])
-    return list(merged.values()), acks
-
-
-# ---------------------------------------------------------------- stats / assembly
-
-def tile_stats_df(frontier: DataFrame) -> DataFrame:
-    """Pure-SQL per-tile stats driving the stop rules
-    (numPoints counts every vertex incl. later-dropped rings,
-    /root/reference/src/tile.js:89,100)."""
-    return (frontier
-            .groupBy("z", "x", "y")
-            .agg(F.count(F.lit(1)).alias("num_features"),
-                 (F.sum(F.size("coords")) / 3).cast("long").alias("num_points"),
-                 F.min("minx").alias("minx"), F.min("miny").alias("miny"),
-                 F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy")))
-
-
-# per-(feature, tile) rendered rows: geometry rides as flat integer
-# pair arrays (gtype 0 = feature dropped by the tolerance filter but
-# kept for the stats sums); JSON/object form is built at read time
 _MAPPED_SCHEMA = ("z int, x int, y int, ord_path array<long>, gtype int, "
                   "coords array<int>, rlens array<int>, "
                   "tags_json string, fid_json string, "
@@ -817,28 +521,11 @@ def rendered_features_df(frontier: DataFrame,
     return frontier.mapInArrow(per_feature, _MAPPED_SCHEMA)
 
 
-def _mapped_arrow_schema():
-    """Arrow twin of _MAPPED_SCHEMA, built without a SparkContext so
-    direct-render worker tasks can cast to it."""
-    import pyarrow as pa
-    return pa.schema([
-        ("z", pa.int32()), ("x", pa.int32()), ("y", pa.int32()),
-        ("ord_path", pa.list_(pa.int64())),
-        ("gtype", pa.int32()),
-        ("coords", pa.list_(pa.int32())),
-        ("rlens", pa.list_(pa.int32())),
-        ("tags_json", pa.string()), ("fid_json", pa.string()),
-        ("n_points", pa.int64()), ("n_simplified", pa.int64()),
-        ("minx", pa.float64()), ("miny", pa.float64()),
-        ("maxx", pa.float64()), ("maxy", pa.float64()),
-    ])
-
-
 def _render_batch(tbl, options: TileOptions):
     """Render one Arrow table of TILED rows (z/x/y + FEATURE columns)
     to a _MAPPED_SCHEMA RecordBatch — the kernel body shared by
-    rendered_features_df's mapInArrow task and the direct per-file
-    render (render_files_direct)."""
+    rendered_features_df's mapInArrow task and internal_tree_direct's
+    in-task walk."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -903,124 +590,6 @@ def _render_batch(tbl, options: TileOptions):
     ], names=["z", "x", "y", "ord_path", "gtype", "coords",
               "rlens", "tags_json", "fid_json", "n_points",
               "n_simplified", "minx", "miny", "maxx", "maxy"])
-
-
-def _direct_render_file(fi: int, path: str, z: int, parents,
-                        options: TileOptions, out_dir: str,
-                        codec: str, z0_seed: bool) -> dict:
-    """One direct-render task: read ONE frontier parquet file with
-    pyarrow, render with the shared batch kernel, write the tilefeat
-    shard task-side (tmp + deterministic rename), and return per-tile
-    n_simplified sums so the zoom finalizer never re-scans the store.
-    ``z0_seed`` reads a FEATURES checkpoint file instead, synthesizing
-    the (z=0, x=0, y=0) literals and the [1, …, 0] ord wrapper that
-    engine._frontier0_view adds Column-side."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    t0 = time.monotonic()
-    tbl = pq.read_table(path)
-    ack = {"file": fi, "rows": 0, "nsim": [], "secs": 0.0}
-    if z0_seed and tbl.num_rows:
-        tbl = tbl.select(FEATURE_COLUMNS).combine_chunks()
-        n = tbl.num_rows
-        ord_lens = pc.fill_null(
-            pc.list_value_length(tbl.column("ord_path")),
-            0).to_numpy(zero_copy_only=False).astype(np.int64)
-        ord_flat = pc.list_flatten(tbl.column("ord_path")).to_numpy(
-            zero_copy_only=False).astype(np.int64, copy=False)
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(ord_lens, out=offs[1:])
-        new_lens = ord_lens + 2
-        noffs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(new_lens, out=noffs[1:])
-        flat = np.zeros(int(noffs[-1]), dtype=np.int64)
-        flat[noffs[:-1]] = 1          # world prefix
-        put = (np.arange(int(offs[-1]))
-               + np.repeat(noffs[:-1] + 1 - offs[:-1], ord_lens))
-        flat[put] = ord_flat          # original path; trailing 0 stays
-        ord_arr = pa.ListArray.from_arrays(
-            pa.array(noffs.astype(np.int32), pa.int32()),
-            pa.array(flat, pa.int64()))
-        zeros = pa.array(np.zeros(n, dtype=np.int32), pa.int32())
-        tbl = (tbl.set_column(tbl.schema.get_field_index("ord_path"),
-                              "ord_path", ord_arr)
-               .add_column(0, "y", zeros)
-               .add_column(0, "x", zeros)
-               .add_column(0, "z", zeros))
-    elif parents is not None and tbl.num_rows:
-        tx = tbl.column("x").to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        ty = tbl.column("y").to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        want = np.fromiter(((int(x) << 32) + int(y) for x, y in parents),
-                           dtype=np.int64, count=len(parents))
-        m = np.isin(((tx >> 1) << 32) + (ty >> 1), want)
-        if not m.all():
-            tbl = tbl.take(pa.array(np.nonzero(m)[0])).combine_chunks()
-    if not tbl.num_rows:
-        ack["secs"] = time.monotonic() - t0
-        return ack
-    out = pa.Table.from_batches([_render_batch(tbl, options)])
-    out = out.cast(_mapped_arrow_schema()).drop_columns(["z"])
-    ack["rows"] = out.num_rows
-    agg = (out.select(["x", "y", "n_simplified"])
-           .group_by(["x", "y"]).aggregate([("n_simplified", "sum")]))
-    ack["nsim"] = [[int(a), int(b), int(c or 0)] for a, b, c in zip(
-        agg["x"].to_pylist(), agg["y"].to_pylist(),
-        agg["n_simplified_sum"].to_pylist())]
-    final = os.path.join(out_dir, f"part-f{fi:05d}.parquet")
-    tmp = final + ".inprogress"
-    pq.write_table(out, tmp, compression=codec)
-    os.replace(tmp, final)
-    ack["secs"] = time.monotonic() - t0
-    return ack
-
-
-def render_files_direct(spark, z: int, parents, options: TileOptions,
-                        in_dir: str, out_dir: str,
-                        z0_seed: bool = False) -> dict:
-    """Direct per-file render job (the tilefeat twin of
-    split_files_direct): one task per frontier file, pyarrow I/O
-    task-side, slim acks back.  Returns {(x, y): n_simplified_sum} —
-    the aggregate the zoom finalizer previously recomputed with a
-    second scan of the store it had just written."""
-    import shutil
-
-    files = sorted(
-        os.path.join(in_dir, f) for f in os.listdir(in_dir)
-        if f.endswith(".parquet"))
-    if not files:
-        raise FileNotFoundError(f"no parquet parts under {in_dir}")
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    codec = os.environ.get("GVT_CODEC", "zstd")
-    par = None if parents is None else [(int(x), int(y))
-                                        for x, y in parents]
-    opts, zz, od, seed = options, z, out_dir, z0_seed
-    acks = (spark.sparkContext
-            .parallelize(list(enumerate(files)), len(files))
-            .map(lambda t: _direct_render_file(
-                t[0], t[1], zz, par, opts, od, codec, seed))
-            .collect())
-    if not any(a["rows"] for a in acks):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        schema = _mapped_arrow_schema()
-        schema = pa.schema([f for f in schema if f.name != "z"])
-        pq.write_table(schema.empty_table(),
-                       os.path.join(out_dir, "part-empty.parquet"),
-                       compression=codec)
-    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
-    nsim: dict = {}
-    for a in acks:
-        for x, y, s in a["nsim"]:
-            nsim[(x, y)] = nsim.get((x, y), 0) + s
-    return nsim
 
 
 # ---------------------------------------------------------------- subtree
@@ -1115,61 +684,6 @@ def unpack_source_pack(row) -> list[dict]:
     return out
 
 
-def split_subtree(features, z0: int, x0: int, y0: int, options: TileOptions):
-    """Run the reference split loop (/root/reference/src/index.js:66-156,
-    first-pass stop rules) over one tile's entire subtree in-process.
-
-    The root (z0,x0,y0) is a tile the distributed loop already assembled
-    and classified as splitting, so the root tile itself is NOT emitted;
-    returns (tiles, sources) for every descendant, where tiles is a list
-    of (Tile, is_split) and sources maps leaf (z,x,y) → feature list."""
-    from .kernel.clip import clip_features
-    from .kernel.tile import create_tile
-
-    tiles_out: list[tuple] = []
-    sources_out: list[tuple] = []
-    stack = [(features, z0, x0, y0)]
-    while stack:
-        feats, z, x, y = stack.pop()
-        tile = create_tile(feats, z, x, y, options)
-        is_root = z == z0
-        splits = not (z == options.index_max_zoom or
-                      tile.num_points <= options.index_max_points)
-        if is_root:
-            splits = True  # classified by the distributed stop rule
-        else:
-            tiles_out.append((tile, splits))
-        if not splits:
-            sources_out.append((z, x, y, feats))
-            continue
-        if not feats:
-            continue
-        z2 = 1 << z
-        k1 = 0.5 * options.buffer / options.extent
-        k2, k3, k4 = 0.5 - k1, 0.5 + k1, 1 + k1
-        lm = options.line_metrics
-        tl = bl = tr = br = None
-        left = clip_features(feats, z2, x - k1, x + k3, 0,
-                             tile.minx, tile.maxx, lm)
-        right = clip_features(feats, z2, x + k2, x + k4, 0,
-                              tile.minx, tile.maxx, lm)
-        if left:
-            tl = clip_features(left, z2, y - k1, y + k3, 1,
-                               tile.miny, tile.maxy, lm)
-            bl = clip_features(left, z2, y + k2, y + k4, 1,
-                               tile.miny, tile.maxy, lm)
-        if right:
-            tr = clip_features(right, z2, y - k1, y + k3, 1,
-                               tile.miny, tile.maxy, lm)
-            br = clip_features(right, z2, y + k2, y + k4, 1,
-                               tile.miny, tile.maxy, lm)
-        stack.append((tl or [], z + 1, x * 2, y * 2))
-        stack.append((bl or [], z + 1, x * 2, y * 2 + 1))
-        stack.append((tr or [], z + 1, x * 2 + 1, y * 2))
-        stack.append((br or [], z + 1, x * 2 + 1, y * 2 + 1))
-    return tiles_out, sources_out
-
-
 def batch_split_subtree(records, z0: int, x0: int, y0: int,
                         options: TileOptions, state=None,
                         root_forced_split: bool = True):
@@ -1177,17 +691,14 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
     LEVEL covering every tile at that level at once — the per-feature
     clip windows come from each feature's tile assignment, so the whole
     level's 4-way split costs six flat-numpy clips regardless of tile
-    count.  Output semantics identical to split_subtree (index.js
-    splitTile, first-pass stop rules).
+    count.  Output semantics are splitTile's first pass (src/index.js
+    66-156, first-pass stop rules).
 
-    ``root_forced_split=True`` (the distributed-handoff contract): the
-    root was already classified as splitting by the driver's stop rule
-    and its own tile row was rendered by the distributed tilefeat
-    stage, so the root level only fans out (index.js skips the parent
-    tile inside splitTile the same way).  With ``False`` (the wave
-    handoffs) the root is a freshly-clipped child whose stop rule has
-    NOT been evaluated: it is classified by the normal rule and its
-    tile row (and leaf source, when it stops) IS emitted.
+    ``root_forced_split=True``: the root is taken as already classified
+    as splitting, so the root level only fans out and its own tile row
+    is not emitted.  With ``False`` (the forest's leaf cells, and a
+    whole pyramid from z0) the root is classified by the normal rule
+    and its tile row (and leaf source, when it stops) IS emitted.
 
     Returns (tile_rows, sources) where tile_rows are dicts of the
     subtree 'tile' kind and sources maps leaf (z,x,y) → a packed-array
@@ -1562,87 +1073,7 @@ def _write_subtree_part(out_pdf: pd.DataFrame, out_dir: str,
     os.replace(tmp, path)
 
 
-def subtree_stage_df(frontier: DataFrame, options: TileOptions,
-                     out_dir: str | None = None) -> DataFrame:
-    """Grouped-map handoff: each light splitting tile's features become
-    one Arrow batch; the whole descendant pyramid of that tile is built
-    inside the task with the parity-exact local kernel.
-
-    This is the scale hinge of the engine (SURVEY.md §4): the
-    distributed per-zoom loop runs only while tiles are heavy (few,
-    skewed), then 4^z-way tile parallelism takes over with zero further
-    driver coordination — per-task work is bounded by the handoff
-    threshold, so no group can exceed executor memory.
-
-    With ``out_dir`` set, each task writes its own parquet part there
-    (see _write_subtree_part) and the returned frame carries one slim
-    ack row per group instead of the packed rows."""
-    def run(key, pdf):
-        t0 = time.monotonic()
-        z0, x0, y0 = int(key[0]), int(key[1]), int(key[2])
-        # materialize sort keys once — a per-comparison .iloc lambda
-        # costs ~10µs/row and was a visible slice of the task wall
-        ords = [tuple(v) for v in pdf["ord_path"]]
-        order = sorted(range(len(ords)), key=ords.__getitem__)
-        pdf = pdf.iloc[order].reset_index(drop=True)
-        state = _pdf_state(pdf)
-        tile_rows, sources = batch_split_subtree(None, z0, x0, y0, options,
-                                                 state=state)
-        out = _subtree_out_pdf(tile_rows, sources)
-        if out_dir is None:
-            return out
-        _write_subtree_part(out, out_dir, z0, x0, y0)
-        return pd.DataFrame({"z": [z0], "x": [x0], "y": [y0],
-                             "n": [len(out)], "n_cand": [len(pdf)],
-                             "secs": [time.monotonic() - t0]})
-
-    return frontier.groupBy("z", "x", "y").applyInPandas(
-        run, SUBTREE_ACK_SCHEMA if out_dir is not None else SUBTREE_SCHEMA)
-
-
 # --------------------------------------------------------------- wave
-
-def wave_children_df(frontier: DataFrame, z: int,
-                     options: TileOptions) -> DataFrame:
-    """Tiles-at-zoom-z frontier → candidate (feature, z+1 child) rows:
-    each feature is routed to every quadrant of ITS OWN tile that its
-    bbox is not trivially rejected from (the same rejection windows
-    splitTile's clip uses, /root/reference/src/index.js:123-140 +
-    clip.js:13-20).
-
-    Pure Column explode — NO map-side Python and NO clipping here: the
-    wave kernel clips each group against its child window itself, so
-    geometry crosses the Arrow pipe exactly once.  Features are NOT
-    modified (ord_path, coords, clip bookkeeping all ride unchanged);
-    a feature spanning several quadrants is duplicated per quadrant,
-    exactly the candidate set the parent clip would hand each child.
-
-    Grouping handoff batches by CHILD instead of parent quarters the
-    straggler task and quadruples wave parallelism — the round-4
-    2M-page grid profile measured the tail batch (10 parent tasks on
-    32 cores) gating the build for ~30 s of mostly-idle fleet."""
-    z2 = 1 << z
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
-    quads = []
-    for q in range(4):
-        dx, dy = q & 1, q >> 1
-        xlo = (F.col("x") + (k2c if dx else -k1c)) / z2
-        xhi = (F.col("x") + (k4c if dx else k3c)) / z2
-        ylo = (F.col("y") + (k2c if dy else -k1c)) / z2
-        yhi = (F.col("y") + (k4c if dy else k3c)) / z2
-        rej = ((F.col("maxx") < xlo) | (F.col("minx") >= xhi) |
-               (F.col("maxy") < ylo) | (F.col("miny") >= yhi))
-        quads.append(F.when(~rej, F.struct(
-            F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))))
-    return (frontier
-            .withColumn("q", F.explode(
-                F.filter(F.array(*quads), lambda s: s.isNotNull())))
-            .withColumn("z", F.lit(z + 1))
-            .withColumn("x", F.col("x") * 2 + F.col("q.dx"))
-            .withColumn("y", F.col("y") * 2 + F.col("q.dy"))
-            .select(*TILED_COLUMNS))
-
 
 def _arrow_state(tbl, sort=True, strings=True):
     """One Arrow table → kernel state (ord-sorted when ``sort``), zero
@@ -1727,20 +1158,13 @@ def _arrow_state(tbl, sort=True, strings=True):
 
 
 def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
-                      options: TileOptions, out_dir: str | None,
-                      from_zoom: int):
-    """The per-CELL wave task body, shared verbatim by the loop's
-    child-grouped handoff wave (wave_stage_df) and the forest's
-    driver-packed slot wave (forest_slot_wave_df): clip the candidate
-    rows from their origin zoom ``from_zoom`` down to the cell, one
-    x-then-y level at a time with the exact (parent + const)/z2 float
-    sequence, then build the whole descendant pyramid in-task and
-    write the cell's subtree part.
-    Returns (n_rows_written, subtree_table_or_None)."""
+                      options: TileOptions, out_dir: str) -> int:
+    """The per-CELL body of the forest's slot wave
+    (forest_slot_wave_df): clip the z0 candidate rows down to the cell,
+    one x-then-y level at a time with the exact (parent + const)/z2
+    float sequence, then build the whole descendant pyramid in-task and
+    write the cell's subtree part.  Returns the rows written."""
     import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .kernel.vec import batch_clip
 
@@ -1749,14 +1173,14 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
     k1c = 0.5 * options.buffer / options.extent
     k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
     lm = options.line_metrics
-    # clip the candidates down from their origin zoom to the cell, one
+    # clip the candidates down from z0 to the cell, one
     # x-then-y level at a time — for level l the windows use the cell's
     # zoom-l ancestor coordinates with EXACTLY the (parent + const)/z2
     # float sequence of the single-level case, so a multi-level wave
     # clip is bit-identical to the in-task recursion's clip-of-clip
     # (routing is a superset by original bbox; trivially-rejected
     # features emit nothing)
-    for lvl in range(from_zoom + 1, cz + 1):
+    for lvl in range(1, cz + 1):
         z2l = 1 << (lvl - 1)
         axl, ayl = cx >> (cz - lvl), cy >> (cz - lvl)
         pxl, pyl = axl >> 1, ayl >> 1
@@ -1780,57 +1204,8 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
     tile_rows, sources = batch_split_subtree(
         None, cz, cx, cy, options, state=state, root_forced_split=False)
     out = _subtree_out_pdf(tile_rows, sources)
-    if out_dir is None:
-        return len(out), pa.Table.from_pandas(
-            out, schema=to_arrow_schema(SUBTREE_SCHEMA),
-            preserve_index=False)
     _write_subtree_part(out, out_dir, cz, cx, cy)
-    return len(out), None
-
-
-def wave_stage_df(candidates: DataFrame, options: TileOptions,
-                  out_dir: str | None = None) -> DataFrame:
-    """Wave handoff: candidate rows from wave_children_df, grouped by
-    CHILD tile; each group task clips its candidates against the
-    child's buffered window (the exact x-then-y clip sequence
-    splitTile applies, /root/reference/src/index.js:134-147) and then
-    builds the whole descendant pyramid with the batch kernel — the
-    root classified by the NORMAL stop rule and emitted, since no
-    distributed round ever touched it.
-
-    Window floats are computed as (parent + const) / parent_z2 —
-    bit-identical to split_children_df and the reference's
-    (x ± k)/z2, so child-grouped and parent-grouped handoffs emit
-    byte-identical tiles.
-
-    Scale posture: per-task work is bounded by a quarter of the
-    handoff threshold, and a wave of B parent keys yields up to 4B
-    concurrent tasks — the shape that keeps a 4N-executor fleet busy
-    on the tail batches (grid-measured; see BENCH/SCALING.md round 4)."""
-    def run(key, tbl):
-        import pyarrow as pa
-
-        t0 = time.monotonic()
-        cz, cx, cy = (int(key[0].as_py()), int(key[1].as_py()),
-                      int(key[2].as_py()))
-        # clip-to-cell + descendant pyramid + part write: shared
-        # per-cell body (post-clip-empty children still flow through —
-        # the kernel emits the empty leaf tile row, index.js:151-154)
-        n_out, packed = _wave_cell_kernel(tbl, cz, cx, cy, options,
-                                          out_dir, cz - 1)
-        if out_dir is None:
-            return packed
-        return pa.table(
-            {"z": [cz], "x": [cx], "y": [cy], "n": [n_out],
-             "n_cand": [tbl.num_rows],
-             "secs": [time.monotonic() - t0]},
-            schema=pa.schema([("z", pa.int32()), ("x", pa.int32()),
-                              ("y", pa.int32()), ("n", pa.int64()),
-                              ("n_cand", pa.int64()),
-                              ("secs", pa.float64())]))
-
-    return candidates.groupBy("z", "x", "y").applyInArrow(
-        run, SUBTREE_ACK_SCHEMA if out_dir is not None else SUBTREE_SCHEMA)
+    return len(out)
 
 
 def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
@@ -1840,9 +1215,9 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     SparkTileEngine._slot_values — so hash-partitioning places each
     slot in its own task).  One task = one LPT-packed bin of cut
     cells; inside the task the rows are sliced per cell and each cell
-    runs the SAME per-cell kernel as the loop's child-grouped wave
-    (_wave_cell_kernel: clip-from-z0 chain, descendant pyramid,
-    per-cell part write), emitting one ack row per cell.
+    runs the per-cell kernel (_wave_cell_kernel: clip-from-z0 chain,
+    descendant pyramid, per-cell part write), emitting one ack row per
+    cell.
 
     Why not groupBy(z,x,y): group→task placement is then
     hash-partitioned, so (a) two hot cells can collide into one task
@@ -1850,9 +1225,8 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     driver cannot bin-pack — wave wall = max task is THE term the
     cluster pays, and with per-cell work estimates from the gate the
     driver can pack bins to the kernel budget (LPT), which no hash can
-    do.  The on-disk layout (per-CELL deterministic part names) and
-    the ack schema are the loop wave's, so resume and every reader
-    are oblivious to which wave wrote a part."""
+    do.  Part names are per CELL and deterministic, so a task retry
+    overwrites rather than duplicates."""
     def run(key, tbl):
         import numpy as np
         import pyarrow as pa
@@ -1877,8 +1251,8 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
                 t0 = time.monotonic()
                 cz, cx, cy = int(zs[s]), int(xs[s]), int(ys[s])
                 sub = tbl.slice(s, e - s)
-                n_out, _ = _wave_cell_kernel(sub, cz, cx, cy, options,
-                                             out_dir, 0)
+                n_out = _wave_cell_kernel(sub, cz, cx, cy, options,
+                                          out_dir)
                 acks["z"].append(cz)
                 acks["x"].append(cx)
                 acks["y"].append(cy)
@@ -2105,23 +1479,20 @@ def forest_route_df(frontier0: DataFrame, options: TileOptions,
 
 
 def _empty_tiled_table():
-    import pyarrow as pa
-    sch = _tiled_arrow_schema()
-    return pa.Table.from_arrays(
-        [pa.array([], f.type) for f in sch if f.name != "n_verts"],
-        names=[f.name for f in sch if f.name != "n_verts"]
-    ).select(TILED_COLUMNS)
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return (to_arrow_schema(TILED_FEATURE_SCHEMA).empty_table()
+            .select(TILED_COLUMNS))
 
 
 def clip_table_to_cell(tbl, cz: int, cx: int, cy: int,
                        options: TileOptions, from_zoom: int = 0):
     """Clip TILED rows (z/x/y = the from_zoom ancestor of the target
-    cell) down to (cz, cx, cy) one level at a time, reproducing the
-    loop split's accept/clip dispatch EXACTLY — trivially-accepted
-    rows pass through _pass_table (ord appends [0, 0]), crossing rows
-    go through _split_crossing_tables (ord appends the clip sub_ords)
-    — so the surviving rows are byte-identical to the rows
-    frontier/z=cz would hold for this tile after cz split rounds."""
+    cell) down to (cz, cx, cy) one level at a time, with the one-level
+    split's accept/clip dispatch — trivially-accepted rows pass through
+    _pass_table (ord appends [0, 0]), crossing rows go through
+    _split_crossing_tables (ord appends the clip sub_ords) — so the
+    surviving rows are the cell tile's features after cz - from_zoom
+    splitTile levels, in ord order."""
     import pyarrow as pa
     for lvl in range(from_zoom, cz):
         if not tbl.num_rows:
@@ -2161,7 +1532,7 @@ def straggler_probe_stats(fr0: DataFrame, probes: list,
     boundary-crossing polygons: huge candidate mass, zero
     guaranteed-inside mass).  One narrow mapInArrow job: each task
     clips ITS partition of the z0 frontier down to each straggler root
-    (clip_table_to_cell, the loop split's exact dispatch) and then
+    (clip_table_to_cell, the one-level split's exact dispatch) and then
     descends OPTIMISTICALLY — every non-empty child, one clip level
     per node, until index_max_zoom — returning slim
     (z, x, y, num_points) partials.  The driver sums the partials and
@@ -2229,8 +1600,8 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     """Single-job render of the forest cut's INTERNAL cells: each
     mapInArrow task materializes its partition of the z0 frontier and
     walks it down the internal-cell tree IN-TASK — clip ONE level from
-    the parent state per node (clip_table_to_cell, the loop split's
-    exact accept/clip dispatch and ord extension), render the node
+    the parent state per node (clip_table_to_cell, the one-level
+    split's exact accept/clip dispatch and ord extension), render the node
     through the shared kernel, recurse into its internal children on
     the shrinking clipped state.  No shuffle, no inter-level job
     barrier: the level-chained form re-introduced a 5-round spine
@@ -2245,7 +1616,7 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     ``stops``: STOP-boundary cells under probed stragglers (see
     straggler_probe_stats) — rendered exactly like internal cells but
     never recursed into, and their retained SOURCE (the clipped
-    feature rows at the node, the loop's row-per-feature sources/z=N
+    feature rows at the node, in the row-per-feature sources/z=N
     layout) is written task-side next to the tilefeat part; readers
     union the per-task partials and re-order by ord, the same
     contract the multi-part tilefeat store already has."""

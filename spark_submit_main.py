@@ -6,8 +6,9 @@
         --pages 30000 --index-max-zoom 7 --workdir /tmp/gvt_out
 
 Builds the full corpus→pyramid index with checkpointed lineage and
-prints per-zoom lineage + totals.  Re-running with the same --workdir
-resumes after the last complete zoom (kill-safe).
+prints the lineage rows + totals.  Re-running with --resume and the same
+--workdir skips a finished build (re-running only a lost leaf wave) and
+restarts an unfinished one from the features checkpoint (kill-safe).
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ import json
 
 from geojson_vt_spark import TileOptions
 from geojson_vt_spark.engine import SparkTileEngine
-from geojson_vt_spark.pipeline import features_from_json_df, wrap_df
+from geojson_vt_spark.pipeline import features_from_json_df
 from geojson_vt_spark.sources import read_geojson
 
 from .util_fixtures import FIXTURE_DIR, load_fixture
@@ -14,7 +14,7 @@ from .util_fixtures import FIXTURE_DIR, load_fixture
 def _build_from_file(spark, tmp_path, name, opts):
     eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
     df = read_geojson(spark, f"{FIXTURE_DIR}/{name}")
-    eng.build(wrap_df(features_from_json_df(df, opts), opts))
+    eng.build_from_converted(features_from_json_df(df, opts))
     return eng
 
 

@@ -156,6 +156,33 @@ def test_knn_join_round_one_settle_skips_loop_jobs(spark):
         _brute_knn(pts, qs, 5)
 
 
+def test_knn_join_null_query_runs_no_extra_rounds(spark):
+    """A query with a NULL lat has no place and so no neighbour: it
+    gets no rows, and it must leave before the ring search instead of
+    driving ring doublings up to max_ring (146 jobs against 34)."""
+    pts = spark.range(2000).select(
+        F.col("id").alias("point_id"),
+        (F.rand(7) * 360.0 - 180.0).alias("lon"),
+        (F.rand(8) * 160.0 - 80.0).alias("lat"))
+    valid = [(0, 12.5, 41.9), (1, -73.9, 40.7)]
+    sc = spark.sparkContext
+    jobs, rows = {}, {}
+    for name, qrows in (("valid", valid),
+                        ("null", [valid[0], (1, -73.9, None)])):
+        qs = spark.createDataFrame(qrows,
+                                   "query_id long, lon double, lat double")
+        sc.setJobGroup(f"knn-{name}", f"kNN, {name} queries")
+        try:
+            rows[name] = sorted((r.query_id, r.point_id, r.rank)
+                                for r in knn_join(pts, qs, k=3,
+                                                  res=8).collect())
+        finally:
+            sc.setJobGroup("other", "")
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"knn-{name}"))
+    assert jobs["null"] <= jobs["valid"], jobs
+    assert rows["null"] == [r for r in rows["valid"] if r[0] == 0]
+
+
 def test_knn_join_mixed_rounds_match_brute_force(spark):
     """Round-one settlers, queries that need 3+ ring doublings (one with
     no point in its first ring) and a point set smaller than k all match

@@ -1,27 +1,45 @@
-"""Distributed split-path differential: the per-zoom loop (whose
-crossing features run the Arrow-native split kernel in
-pipeline.split_children_df) must match the object kernel — itself
-pinned to the live reference by test_property_parity — on corpora
-mixing every geometry kind, id shape, and lineMetrics, with a tiny
-handoff budget so splits happen at every zoom instead of fusing into
-one wave."""
+"""Seeded differential: the Spark engine against the kernel
+LocalTileIndex — itself pinned to the live reference by
+test_property_parity — tile for tile, on random GeoJSON mixing every
+geometry kind, id shape and dateline-wrapping (±180/±540) coordinates,
+across every cut shape: empty input, root-only (index_max_zoom 0, or
+n ≤ index_max_points), depth-1 (index_max_zoom 1, stats-proven) and
+gated cuts, with and without lineMetrics and world copies, and with
+promoteId / generateId."""
 
 import random
+
+import pytest
 
 from geojson_vt_spark import TileOptions
 from geojson_vt_spark.engine import SparkTileEngine
 from geojson_vt_spark.kernel import LocalTileIndex
 
 from .test_property_parity import _rand_geometry
+from .util_fixtures import assert_engine_matches_index
 
 
-def _mixed_collection(seed: int, n: int) -> dict:
+def _squeeze(geom):
+    """The same geometry with every longitude divided by 4: nothing
+    near the dateline, so no world copies."""
+    if geom["type"] == "GeometryCollection":
+        return {**geom, "geometries": [_squeeze(g) for g in geom["geometries"]]}
+
+    def walk(c):
+        if isinstance(c[0], (int, float)):
+            return [round(c[0] / 4, 6), c[1]]
+        return [walk(v) for v in c]
+    return {**geom, "coordinates": walk(geom["coordinates"])}
+
+
+def _mixed_collection(seed: int, n: int, wrap: bool = True) -> dict:
     rng = random.Random(seed)
     feats = []
     for i in range(n):
+        geom = _rand_geometry(rng)
         f = {"type": "Feature",
              "properties": {"p": rng.randint(0, 9), "prop0": f"v{i}"},
-             "geometry": _rand_geometry(rng)}
+             "geometry": geom if wrap else _squeeze(geom)}
         fid = rng.choice([None, i, str(i), f"id-{i}"])
         if fid is not None:
             f["id"] = fid
@@ -29,92 +47,66 @@ def _mixed_collection(seed: int, n: int) -> dict:
     return {"type": "FeatureCollection", "features": feats}
 
 
-def test_split_files_direct_matches_dataframe_split(spark, tmp_path):
-    """The direct per-file split (task-side pyarrow I/O, no JVM
-    geometry crossing) must emit the exact row multiset of the
-    declarative split_children_df path, and its ack-aggregated stats
-    must equal the blocking groupBy."""
-    import os
+# (seed, features, options, forest task budget or None, world copies,
+#  the cut shape the build must take)
+CASES = [
+    (1, 40, dict(index_max_zoom=0, index_max_points=100000,
+                 promote_id="prop0"), None, True, "root"),
+    (2, 40, dict(index_max_zoom=0, index_max_points=5, line_metrics=True),
+     None, True, "root"),
+    (3, 40, dict(index_max_zoom=1, index_max_points=20), None, True,
+     "depth1"),
+    (4, 40, dict(index_max_zoom=2, index_max_points=30), None, True,
+     "depth1"),
+    (5, 60, dict(index_max_zoom=3, index_max_points=30), 300, True, "gated"),
+    (6, 30, dict(index_max_zoom=3, generate_id=True), None, True, "root"),
+    (7, 50, dict(index_max_zoom=3, index_max_points=20,
+                 line_metrics=True), None, True, "depth1"),
+    (8, 50, dict(index_max_zoom=2, index_max_points=20,
+                 line_metrics=True), 200, True, "gated"),
+    (9, 40, dict(index_max_zoom=3, index_max_points=25), None, False,
+     "depth1"),
+    (10, 40, dict(index_max_zoom=3, index_max_points=25), 200, False,
+     "gated"),
+    (11, 0, dict(index_max_zoom=3, index_max_points=25), None, True,
+     "empty"),
+    (12, 60, dict(index_max_zoom=4, index_max_points=10, tolerance=1,
+                  buffer=128), 150, True, "gated"),
+]
 
-    from pyspark.sql import functions as F
 
-    from geojson_vt_spark.engine import SparkTileEngine, _pack_xy
-    from geojson_vt_spark.pipeline import (split_children_df,
-                                           split_files_direct)
+def _cut_shape(eng) -> str:
+    lin = eng._read_lineage()
+    if not lin[0]["n_tiles"]:
+        return "empty"
+    steps = [r for r in lin if "subtree_batch" in r][0]["steps"]
+    if not lin[0]["n_split"]:
+        return "root"
+    return "depth1" if steps["gate"] is None else "gated"
 
-    data = _mixed_collection(123, 60)
-    opts = TileOptions(max_zoom=5, index_max_zoom=4, index_max_points=4,
-                       tolerance=1, buffer=64, line_metrics=True)
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "wd"),
-                          subtree_max_points=30)
+
+@pytest.mark.parametrize("seed,n,opts,budget,wrap,shape", CASES,
+                         ids=[f"seed{c[0]}" for c in CASES])
+def test_engine_matches_local_index(spark, tmp_path, seed, n, opts,
+                                    budget, wrap, shape):
+    data = _mixed_collection(seed, n, wrap)
+    options = TileOptions(max_zoom=8, **opts)
+    eng = SparkTileEngine(spark, options, workdir=str(tmp_path))
+    if budget is not None:
+        eng._KERNEL_PTS_PER_TASK = budget
     eng.build_from_geojson(data)
-    lineage = eng._read_lineage()
-    z = 1
-    heavy = [tuple(k) for r in lineage
-             if r.get("zoom") == z and "heavy" in r
-             for k in r["heavy"]]
-    assert heavy, "fixture produced no heavy z1 tiles"
-    in_dir = os.path.join(str(tmp_path / "wd"), "frontier", f"z={z}")
-    assert os.path.isdir(in_dir)
+    idx = LocalTileIndex(data, options)
+    assert _cut_shape(eng) == shape
 
-    stats, acks = split_files_direct(
-        spark, z, heavy, opts, in_dir, str(tmp_path / "direct_out"))
-    got = spark.read.parquet(str(tmp_path / "direct_out")).drop("n_verts")
+    # world copies are written once as the z0 frontier; without them
+    # the frontier is a view over the features checkpoint
+    assert (tmp_path / "frontier" / "z=0").exists() == (wrap and n > 0)
 
-    fr = spark.read.parquet(in_dir)
-    hp = [_pack_xy(x, y) for x, y in heavy]
-    pack = (F.shiftleft(F.col("x").cast("long"), 25)
-            + F.col("y").cast("long"))
-    fr_heavy = fr.where(
-        F.col("x").isin([int(x) for x, _ in heavy]) &
-        F.col("y").isin([int(y) for _, y in heavy]) & pack.isin(hp))
-    want = split_children_df(fr_heavy, z, opts)
-
-    def canon(df):
-        rows = [tuple(repr(v) for v in r) for r in
-                df.select(*sorted(df.columns)).collect()]
-        return sorted(rows)
-
-    assert canon(got) == canon(want)
-
-    agg = {(r["x"], r["y"]): r for r in
-           (want.groupBy("x", "y")
-            .agg(F.count(F.lit(1)).alias("nf"),
-                 (F.sum(F.size("coords")) / 3).cast("long").alias("np"),
-                 F.min("minx").alias("minx"), F.min("miny").alias("miny"),
-                 F.max("maxx").alias("maxx"), F.max("maxy").alias("maxy"))
-            .collect())}
-    assert {(s["x"], s["y"]) for s in stats} == set(agg)
-    for s in stats:
-        w = agg[(s["x"], s["y"])]
-        assert (s["num_features"], s["num_points"]) == (w["nf"], w["np"])
-        assert (s["minx"], s["miny"], s["maxx"], s["maxy"]) == \
-            (w["minx"], w["miny"], w["maxx"], w["maxy"]), s
-
-
-def test_split_arrow_loop_matches_object_kernel(spark, tmp_path):
-    data = _mixed_collection(77, 48)
-    for lm in (False, True):
-        opts = TileOptions(max_zoom=5, index_max_zoom=3,
-                           index_max_points=8, tolerance=1, buffer=64,
-                           line_metrics=lm)
-        eng = SparkTileEngine(spark, opts,
-                              workdir=str(tmp_path / f"lm{int(lm)}"),
-                              subtree_max_points=40)
-        eng.build_from_geojson(data)
-        idx = LocalTileIndex(data, opts)
-        expected = {}
-        for t in list(idx.tiles.values()):
-            expected[f"z{t.z}-{t.x}-{t.y}"] = \
-                idx.get_tile(t.z, t.x, t.y)["features"]
-        got = eng.enumerate_tiles()
-        assert set(got) == set(expected), lm
-        bad = [k for k in expected if got[k] != expected[k]]
-        assert not bad, (lm, bad[:5])
-        # drill past the built pyramid on both sides
-        for zxy in [(5, 15, 15), (4, 7, 8), (5, 0, 17)]:
-            a = eng.get_tile(*zxy)
-            b = idx.get_tile(*zxy)
-            assert (a is None) == (b is None), zxy
-            if a is not None:
-                assert a["features"] == b["features"], zxy
+    rng = random.Random(seed)
+    leaves = sorted((t.z, t.x, t.y) for t in idx.tiles.values()
+                    if t.source)
+    probes = [(21, rng.randrange(1 << 21), rng.randrange(1 << 21))]
+    for z, x, y in rng.sample(leaves, min(2, len(leaves))):
+        probes.append((z + 2, 4 * x + rng.randrange(4),
+                       4 * y + rng.randrange(4)))
+    assert_engine_matches_index(eng, idx, probes)

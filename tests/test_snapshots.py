@@ -11,11 +11,12 @@ from .util_fixtures import load_fixture
 
 
 def _build(spark, tmp_path):
-    # subtree_max_points forces a few distributed zoom rounds so the
-    # history holds several zoom commits plus handoff batches
+    # a small task budget gives a gated cut, so the history holds zoom
+    # commits over internal-cell stores plus the leaf batch
     eng = SparkTileEngine(spark, TileOptions(index_max_zoom=3,
                                              index_max_points=200),
-                          workdir=str(tmp_path), subtree_max_points=500)
+                          workdir=str(tmp_path))
+    eng._KERNEL_PTS_PER_TASK = 500
     eng.build_from_geojson(load_fixture("us-states.json"))
     return eng
 

@@ -1,12 +1,16 @@
 """Distributed engine parity: the Spark pyramid must reproduce the
-reference goldens tile-for-tile, byte-identically."""
+reference goldens and the kernel LocalTileIndex tile-for-tile,
+byte-identically, on every cut shape, and survive kill-and-resume."""
+
+import json
 
 import pytest
 
 from geojson_vt_spark import TileOptions
 from geojson_vt_spark.engine import SparkTileEngine
+from geojson_vt_spark.kernel import LocalTileIndex
 
-from .util_fixtures import load_fixture
+from .util_fixtures import assert_engine_matches_index, load_fixture
 
 
 def _gen_tiles_spark(spark, tmp_path, data, **opts):
@@ -17,12 +21,38 @@ def _gen_tiles_spark(spark, tmp_path, data, **opts):
     return eng
 
 
-def _loop_engine(spark, opts, workdir):
-    """An engine that always takes the per-zoom loop: a zero forest
-    task budget makes no cut feasible (the loop never reads it)."""
-    eng = SparkTileEngine(spark, opts, workdir=workdir)
-    eng._KERNEL_PTS_PER_TASK = 0
-    return eng
+def _corpus(spark, n_pages, seed, opts, extra=()):
+    """Converted synthetic-corpus features, plus the same extracted
+    features (and ``extra`` ingest rows) as a GeoJSON FeatureCollection
+    in input order, for LocalTileIndex."""
+    from geojson_vt_spark.pipeline import features_from_json_df
+    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
+                                                 synth_pages_df)
+
+    ingest = extract_geo_features_df(synth_pages_df(spark, n_pages,
+                                                    seed=seed))
+    if extra:
+        ingest = ingest.unionByName(spark.createDataFrame(
+            list(extra), "input_ord long, gen_index long, "
+            "feature_json string"))
+    rows = sorted(ingest.collect(), key=lambda r: r.input_ord)
+    data = {"type": "FeatureCollection",
+            "features": [json.loads(r.feature_json) for r in rows]}
+    return features_from_json_df(ingest, opts), data
+
+
+def _lineage(workdir) -> list:
+    with open(f"{workdir}/lineage.json") as fh:
+        return [json.loads(ln) for ln in fh]
+
+
+def _steps(workdir) -> dict:
+    return [r for r in _lineage(workdir) if r.get("subtree_batch")][0]["steps"]
+
+
+# drill probes under the synthetic corpus' metros and off the map
+_PROBES = [(0, 0, 0), (1, 0, 0), (2, 1, 2), (4, 3, 7), (9, 137, 190),
+           (12, 1100, 1500)]
 
 
 @pytest.mark.parametrize("input_file,expected_file,opts", [
@@ -68,39 +98,86 @@ def test_spark_get_tile_drilldown(spark, tmp_path):
     assert eng.total_tiles() == 37
 
 
-def test_spark_resume_mid_pyramid(spark, tmp_path):
-    """Kill-and-resume: lineage checkpoints let a new engine continue
-    without recomputing finished zooms (north_rule requirement)."""
+def _feats(spark, data, opts):
     from geojson_vt_spark.pipeline import (features_from_json_df,
-                                           geojson_to_input_rows, wrap_df)
-    data = load_fixture("us-states.json")
-    opts = TileOptions(index_max_zoom=4, index_max_points=200)
+                                           geojson_to_input_rows)
+    return features_from_json_df(spark.createDataFrame(
+        geojson_to_input_rows(data),
+        "input_ord long, gen_index long, feature_json string"), opts)
 
-    full = SparkTileEngine(spark, opts, workdir=str(tmp_path / "full"))
-    full.build_from_geojson(data)
 
-    # simulate a killed run: copy checkpoints of zooms 0..2 only
-    import json as _json
+def test_wrap_build_kill_resume(spark, tmp_path):
+    """Kill-and-resume of a dateline-wrapping build, whose world copies
+    live in frontier/z=0.  A kill before the final lineage row (part of
+    the leaf wave lost, lineage cut after its first row) restarts the
+    build from a rewritten frontier; a finished build whose subtree
+    store is lost re-runs the leaf wave from the frontier on disk.  Both
+    end equal to LocalTileIndex."""
     import shutil
-    part_dir = tmp_path / "part"
-    for sub in ("frontier", "tiles", "tilefeat", "sources"):
-        for zdir in sorted((tmp_path / "full" / sub).glob("z=*")):
-            zv = int(zdir.name.split("=")[1])
-            if zv <= 3 if sub == "frontier" else zv <= 2:
-                shutil.copytree(zdir, part_dir / sub / zdir.name)
-    lines = [_json.loads(ln) for ln in
-             (tmp_path / "full" / "lineage.json").read_text().splitlines()]
-    (part_dir / "lineage.json").write_text(
-        "\n".join(_json.dumps(r) for r in lines if r.get("zoom", 99) <= 2) + "\n")
 
-    resumed = SparkTileEngine(spark, opts, workdir=str(part_dir))
-    df = features_from_json_df(
-        spark.createDataFrame(geojson_to_input_rows(data),
-                              "input_ord long, gen_index long, feature_json string"),
-        opts)
-    resumed.build(wrap_df(df, opts), resume=True)
+    from .test_pipeline import _mixed_collection
 
-    assert resumed.enumerate_tiles() == full.enumerate_tiles()
+    data = _mixed_collection(21, 60)
+    opts = TileOptions(max_zoom=8, index_max_zoom=4, index_max_points=20)
+    wd = tmp_path / "w"
+    feats = _feats(spark, data, opts)
+    eng = SparkTileEngine(spark, opts, workdir=str(wd))
+    eng._KERNEL_PTS_PER_TASK = 400  # a gated cut: internals + leaves
+    eng.build_from_converted(feats)
+    assert (wd / "frontier" / "z=0").exists()
+    st = _steps(wd)
+    assert st["n_leaves"] and st["n_internal"], st
+    idx = LocalTileIndex(data, opts)
+    want = eng.enumerate_tiles()
+    assert_engine_matches_index(eng, idx)
+
+    # killed mid-wave: half the leaf parts gone, lineage cut short
+    lin = _lineage(wd)
+    (wd / "lineage.json").write_text(json.dumps(lin[0]) + "\n")
+    parts = sorted((wd / "subtree" / "b=1").glob("part-*.parquet"))
+    for f in parts[::2]:
+        f.unlink()
+    (wd / "subtree" / "b=1" / "_SUCCESS").unlink()
+    resumed = SparkTileEngine(spark, opts, workdir=str(wd))
+    resumed._KERNEL_PTS_PER_TASK = 400
+    resumed.build_from_converted(feats, resume=True)
+    assert resumed.enumerate_tiles() == want
+
+    # a finished build that lost its subtree store
+    shutil.rmtree(wd / "subtree")
+    again = SparkTileEngine(spark, opts, workdir=str(wd))
+    again.build_from_converted(feats, resume=True)
+    assert again.enumerate_tiles() == want
+    assert again.tile_coords() == idx.tile_coords
+
+
+def test_root_only_build_kill_resume(spark, tmp_path):
+    """A root-only build (the z0 tile stops) renders z0 and keeps its
+    whole source in sources/z=0; no other tile exists.  A kill before
+    the final lineage row, with the z0 render lost, restarts cleanly,
+    and the resumed pyramid — drill-downs through the z0 source
+    included — equals LocalTileIndex."""
+    import shutil
+
+    data = _clustered_collection(7, 150)
+    opts = TileOptions(index_max_zoom=5, index_max_points=100_000)
+    wd = tmp_path / "r"
+    feats = _feats(spark, data, opts)
+    eng = SparkTileEngine(spark, opts, workdir=str(wd))
+    eng.build_from_converted(feats)
+    rows = eng.tiles().collect()
+    assert [(r["z"], r["is_split"], r["has_source"]) for r in rows] == \
+        [(0, False, True)]
+    assert (wd / "sources" / "z=0" / "_SUCCESS").exists()
+    assert not (wd / "subtree").exists()
+
+    lin = _lineage(wd)
+    (wd / "lineage.json").write_text(json.dumps(lin[0]) + "\n")
+    shutil.rmtree(wd / "tilefeat")
+    resumed = SparkTileEngine(spark, opts, workdir=str(wd))
+    resumed.build_from_converted(feats, resume=True)
+    assert_engine_matches_index(resumed, LocalTileIndex(data, opts),
+                                [(3, 2, 3), (6, 18, 24), (9, 150, 192)])
 
 
 def test_spark_get_tiles_batch(spark, tmp_path):
@@ -214,8 +291,9 @@ def test_spark_batch_deep_drill_bounded_jobs(spark, tmp_path):
 def test_spark_resume_view_mode_corpus(spark, tmp_path):
     """Kill-and-resume through build_from_converted's no-wrap fast path,
     where the z0 frontier is a VIEW over the features checkpoint (no
-    frontier/z=0 directory exists on disk)."""
-    import json as _json
+    frontier/z=0 directory exists on disk): a kill after the first
+    lineage row, with only the low-zoom stores on disk, restarts the
+    build from the checkpoint and ends equal to the full build."""
     import shutil
 
     from geojson_vt_spark.pipeline import features_from_json_df
@@ -226,80 +304,49 @@ def test_spark_resume_view_mode_corpus(spark, tmp_path):
     pages = synth_pages_df(spark, 2000, seed=5)
     feats = features_from_json_df(extract_geo_features_df(pages), opts)
 
-    full = SparkTileEngine(spark, opts, workdir=str(tmp_path / "full"),
-                           subtree_max_points=500)
+    full = SparkTileEngine(spark, opts, workdir=str(tmp_path / "full"))
+    full._KERNEL_PTS_PER_TASK = 2000  # a gated cut with internal zooms
     full.build_from_converted(feats)
     assert not (tmp_path / "full" / "frontier" / "z=0").exists(), \
         "no-wrap corpus build must use the z0 view"
 
-    # simulate a kill after zoom 1: features + early checkpoints only
+    # simulate a kill after the first lineage row: features + early
+    # stores only
     part = tmp_path / "part"
     shutil.copytree(tmp_path / "full" / "features", part / "features")
-    for sub in ("frontier", "tiles", "tilefeat", "sources"):
-        src = tmp_path / "full" / sub
-        if not src.exists():
-            continue
-        for zdir in sorted(src.glob("z=*")):
-            zv = int(zdir.name.split("=")[1])
-            if (zv <= 2 if sub == "frontier" else zv <= 1):
+    for sub in ("tiles", "tilefeat"):
+        for zdir in sorted((tmp_path / "full" / sub).glob("z=*")):
+            if int(zdir.name.split("=")[1]) <= 1:
                 shutil.copytree(zdir, part / sub / zdir.name)
-    lines = [_json.loads(ln) for ln in
-             (tmp_path / "full" / "lineage.json").read_text().splitlines()]
-    (part / "lineage.json").write_text(
-        "\n".join(_json.dumps(r) for r in lines
-                  if r.get("zoom", 99) <= 1) + "\n")
+    lines = _lineage(tmp_path / "full")
+    (part / "lineage.json").write_text(json.dumps(lines[0]) + "\n")
 
-    resumed = SparkTileEngine(spark, opts, workdir=str(part),
-                              subtree_max_points=500)
+    resumed = SparkTileEngine(spark, opts, workdir=str(part))
+    resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
     assert resumed.enumerate_tiles() == full.enumerate_tiles()
 
 
 def test_depth1_forest_matches_loop_layout(spark, tmp_path):
     """A small corpus on a default engine takes the forest with the
-    stats-proven depth-1 cut (four z1 leaf tasks, no gate job, no
-    per-zoom rounds) and must produce byte-identical tiles, stats,
-    insertion order and drill-down behavior to the distributed loop on
-    the same corpus — including z1 roots classified by the in-kernel
-    stop rule and the split root's empty children."""
-    import json as _json
-
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
+    stats-proven depth-1 cut (four z1 leaf tasks, no gate job) and must
+    equal LocalTileIndex: tiles, stats, insertion order and drill-downs
+    — including z1 roots classified by the in-kernel stop rule and the
+    split root's empty children."""
     opts = TileOptions(index_max_zoom=6, index_max_points=500)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
+    feats, data = _corpus(spark, 2500, 11, opts)
 
     wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
     # approx_rows is still accepted, and ignored
     wave.build_from_converted(feats, approx_rows=2500)
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
 
-    lin = [_json.loads(ln) for ln in open(tmp_path / "w" / "lineage.json")]
-    st = [r for r in lin if r.get("subtree_batch")][0]
+    st = [r for r in _lineage(tmp_path / "w") if r.get("subtree_batch")][0]
     assert st.get("forest") and st["steps"]["gate"] is None, st
     assert st["steps"]["n_leaves"] == 4 and st["steps"]["n_internal"] == 0
-    # the wave layout really is one wave (no z1 frontier, no z1 render)
+    # the wave layout really is one wave (no frontier, no z1 render)
     assert not (tmp_path / "w" / "frontier").exists()
     assert not (tmp_path / "w" / "tilefeat" / "z=1").exists()
-    assert (tmp_path / "l" / "frontier" / "z=1").exists()
-
-    a, b = wave.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    assert wave.tile_coords() == loop.tile_coords()
-    ra = {(r["z"], r["x"], r["y"]): r for r in wave.tiles().collect()}
-    rb = {(r["z"], r["x"], r["y"]): r for r in loop.tiles().collect()}
-    assert ra == rb
-    for zxy in [(0, 0, 0), (1, 0, 0), (1, 1, 1), (4, 3, 7),
-                (9, 137, 190), (12, 1100, 1500)]:
-        ta, tb = wave.get_tile(*zxy), loop.get_tile(*zxy)
-        assert (ta is None) == (tb is None), zxy
-        if ta is not None:
-            assert ta["features"] == tb["features"], zxy
+    assert_engine_matches_index(wave, LocalTileIndex(data, opts), _PROBES)
     assert wave.verify_snapshot() == []
 
 
@@ -340,48 +387,24 @@ def test_depth1_forest_resume_rebuilds_missing_wave(spark, tmp_path):
 
 
 def test_forest_wave_matches_loop_layout(spark, tmp_path):
-    """Forest wave (bounded quadtree cut: leaf subtree tasks + narrow
-    distributed renders of internal cells + driver empty back-fill)
-    must be indistinguishable from the per-zoom loop: same tiles,
-    stats, insertion order, drill-downs.  _KERNEL_PTS_PER_TASK is
-    shrunk so the stats cannot prove a depth-1 cut and the cut recurses
-    deep."""
-    import json as _json
+    """Forest wave with a gated cut (leaf subtree tasks + narrow renders
+    of internal cells + driver empty back-fill) must equal
+    LocalTileIndex: same tiles, stats, insertion order, drill-downs.
+    _KERNEL_PTS_PER_TASK is shrunk so the stats cannot prove a depth-1
+    cut and the cut recurses deep."""
     import shutil as _sh
 
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
+    feats, data = _corpus(spark, 2500, 11, opts)
 
     forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
     forest.build_from_converted(feats)
-    lin = [_json.loads(ln)
-           for ln in open(tmp_path / "f" / "lineage.json")]
-    assert any(r.get("forest") for r in lin), lin
-    st = [r for r in lin if r.get("subtree_batch")][0]["steps"]
+    assert any(r.get("forest") for r in _lineage(tmp_path / "f"))
+    st = _steps(tmp_path / "f")
     assert st["n_leaves"] and st["n_internal"], st
-
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-
-    a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    assert forest.tile_coords() == loop.tile_coords()
-    ra = {(r["z"], r["x"], r["y"]): r for r in forest.tiles().collect()}
-    rb = {(r["z"], r["x"], r["y"]): r for r in loop.tiles().collect()}
-    assert ra == rb
-    for zxy in [(0, 0, 0), (1, 0, 0), (2, 1, 2), (4, 3, 7),
-                (9, 137, 190), (12, 1100, 1500)]:
-        ta, tb = forest.get_tile(*zxy), loop.get_tile(*zxy)
-        assert (ta is None) == (tb is None), zxy
-        if ta is not None:
-            assert ta["features"] == tb["features"], zxy
+    want = forest.enumerate_tiles()
+    assert_engine_matches_index(forest, LocalTileIndex(data, opts), _PROBES)
     assert forest.verify_snapshot() == []
 
     # kill-and-resume: no lineage → clean rebuild from the checkpoint
@@ -390,59 +413,42 @@ def test_forest_wave_matches_loop_layout(spark, tmp_path):
     resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
-    assert resumed.enumerate_tiles() == a
+    assert resumed.enumerate_tiles() == want
 
 
 def test_forest_wave_line_metrics_parity(spark, tmp_path):
     """Forest parity on the lineMetrics + nondefault tolerance/buffer
     surface (the clip-start/end tag injection rides the shared render
     kernel inside the narrow internal-cell render)."""
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
     opts = TileOptions(index_max_zoom=5, index_max_points=60,
                        line_metrics=True, tolerance=2, buffer=96)
-    pages = synth_pages_df(spark, 1500, seed=23)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
+    feats, data = _corpus(spark, 1500, 23, opts)
     forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 1500
     forest.build_from_converted(feats)
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-    a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    ra = {(r["z"], r["x"], r["y"]): r for r in forest.tiles().collect()}
-    rb = {(r["z"], r["x"], r["y"]): r for r in loop.tiles().collect()}
-    assert ra == rb
-    assert forest.tile_coords() == loop.tile_coords()
+    assert _steps(tmp_path / "f")["n_internal"]
+    assert_engine_matches_index(forest, LocalTileIndex(data, opts))
 
 
 def test_tile_count_matches_tiles_count(spark, tmp_path):
     """tile_count() (parquet-footer metadata, no Spark job) must equal
-    tiles().count() on every build layout: loop, depth-1 forest (the
-    default at this size) and a forest with internal cells."""
+    tiles().count() on every cut shape: root-only, depth-1 (the default
+    at this size) and a gated cut with internal cells."""
     from geojson_vt_spark.pipeline import features_from_json_df
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
                                                  synth_pages_df)
 
-    opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
-
-    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
-    wave.build_from_converted(feats)
-    assert wave.tile_count() == wave.tiles().count()
-
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-    assert loop.tile_count() == loop.tiles().count()
-
-    forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
-    forest._KERNEL_PTS_PER_TASK = 2000
-    forest.build_from_converted(feats)
-    assert forest.tile_count() == forest.tiles().count()
+    ingest = extract_geo_features_df(synth_pages_df(spark, 2500, seed=11))
+    for name, opts, budget in (
+            ("r", TileOptions(index_max_zoom=6,
+                              index_max_points=10**6), None),
+            ("w", TileOptions(index_max_zoom=6, index_max_points=100), None),
+            ("f", TileOptions(index_max_zoom=6, index_max_points=100), 2000)):
+        eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / name))
+        if budget is not None:
+            eng._KERNEL_PTS_PER_TASK = budget
+        eng.build_from_converted(features_from_json_df(ingest, opts))
+        assert eng.tile_count() == eng.tiles().count(), name
 
 
 def test_forest_straggler_matches_loop_layout(spark, tmp_path):
@@ -450,104 +456,72 @@ def test_forest_straggler_matches_loop_layout(spark, tmp_path):
     polygon gives cut cells huge candidate mass with zero
     guaranteed-inside mass, so the subdivision-soundness rule cannot
     split them.  The probe + partition-spread render path (round-5)
-    must make them bit-identical to the per-zoom loop — tiles, stats,
+    must make them bit-identical to LocalTileIndex — tiles, stats,
     insertion order, and drill-down THROUGH a straggler stop tile's
     task-written per-feature source parts."""
-    import json as _json
     import math as _math
 
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
     ring = [(60.0 * _math.cos(2 * _math.pi * i / 2000),
              60.0 * _math.sin(2 * _math.pi * i / 2000))
             for i in range(2000)]
     ring.append(ring[0])
-    giant = _json.dumps({
+    giant = json.dumps({
         "type": "Feature", "id": 999999,
         "properties": {"url": "https://example.test/giant"},
         "geometry": {"type": "Polygon",
                      "coordinates": [[[round(x, 6), round(y, 6)]
                                       for x, y in ring]]},
     }, separators=(",", ":"))
-    ingest = extract_geo_features_df(pages).unionByName(
-        spark.createDataFrame(
-            [(999999, 999999, giant)],
-            "input_ord long, gen_index long, feature_json string"))
-    feats = features_from_json_df(ingest, opts)
+    feats, data = _corpus(spark, 2500, 11, opts,
+                          extra=[(999999, 999999, giant)])
 
     forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
     forest.build_from_converted(feats)
-    lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
-    assert any(r.get("forest") for r in lin), lin
-    st = [r for r in lin if r.get("subtree_batch")][0]["steps"]
+    st = _steps(tmp_path / "f")
     assert st.get("n_stragglers", 0) >= 1, st
     assert st.get("n_stops", 0) >= 1, st
 
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-
-    a, b = forest.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    assert forest.tile_coords() == loop.tile_coords()
-    ra = {(r["z"], r["x"], r["y"]): r for r in forest.tiles().collect()}
-    rb = {(r["z"], r["x"], r["y"]): r for r in loop.tiles().collect()}
-    assert ra == rb
     # drill through the straggler region (stop-tile sources) and beyond
-    stops = sorted(k for k, r in ra.items()
-                   if r["has_source"] and not r["is_split"]
-                   and r["num_points"] > 0)
+    stops = sorted((r["z"], r["x"], r["y"]) for r in forest.tiles()
+                   .where("has_source AND NOT is_split AND num_points > 0")
+                   .collect())
     deep = []
     for z, x, y in stops[:3] + stops[-3:]:
         deep.append((z + 2, 4 * x + 1, 4 * y + 2))
         deep.append((z + 3, 8 * x + 3, 8 * y + 5))
-    for zxy in deep + [(0, 0, 0), (9, 255, 255), (12, 2047, 2047)]:
-        ta, tb = forest.get_tile(*zxy), loop.get_tile(*zxy)
-        assert (ta is None) == (tb is None), zxy
-        if ta is not None:
-            assert ta["features"] == tb["features"], zxy
+    assert_engine_matches_index(
+        forest, LocalTileIndex(data, opts),
+        deep + [(0, 0, 0), (9, 255, 255), (12, 2047, 2047)])
 
 
 def test_forest_kill_resume_into_loop_leaves_no_phantoms(spark, tmp_path):
     """A kill mid-forest-wave leaves partial TASK-side store parts
     (subtree b=1, tilefeat z=N) with no lineage.  If the resume then
-    runs the per-zoom LOOP (different handoff/render levels), the
-    stale parts must not surface as phantom/duplicate tiles — resume
-    with zero complete lineage rows performs the fresh-build store
+    takes a cut of another shape (the default budget's depth-1 cut
+    instead of the gated one, so other handoff and render levels), the
+    stale parts must not surface as phantom or duplicate tiles: a
+    resume without the final lineage row performs the fresh-build store
     cleanup."""
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
-
-    # loop-only oracle in a separate workdir
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-    want = loop.enumerate_tiles()
+    feats, data = _corpus(spark, 2500, 11, opts)
 
     # forest build, then simulate the kill: all stores on disk but the
     # lineage (which the forest writes LAST) never landed
     forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
     forest.build_from_converted(feats)
+    assert _steps(tmp_path / "f")["n_internal"]
     (tmp_path / "f" / "lineage.json").unlink()
     assert (tmp_path / "f" / "subtree" / "b=1").exists()
+    assert (tmp_path / "f" / "tilefeat" / "z=2").exists()
 
-    # resume through the LOOP path on the same workdir
-    resumed = _loop_engine(spark, opts, str(tmp_path / "f"))
+    # resume on the same workdir with a cut of another shape
+    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed.build_from_converted(feats, resume=True)
-    got = resumed.enumerate_tiles()
-    assert set(got) == set(want)
-    assert not [k for k in got if got[k] != want[k]]
-    assert resumed.tile_coords() == loop.tile_coords()
+    assert _steps(tmp_path / "f")["n_internal"] == 0
+    assert_engine_matches_index(resumed, LocalTileIndex(data, opts))
 
 
 def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
@@ -585,11 +559,9 @@ def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
 
 def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     """A crash-resume with nothing durable except the features
-    checkpoint must re-enter the same build path the original attempt
-    took: the resume agg re-derives the z0 classification stats in the
-    same pass as the wrap counts, so a forest-eligible corpus rebuilds
-    through the forest wave, not the per-zoom loop."""
-    import json as _json
+    checkpoint must rebuild the same cut the original attempt took: the
+    resume agg re-derives the z0 classification stats in the same pass
+    as the wrap counts."""
     import shutil as _sh
 
     from geojson_vt_spark.pipeline import features_from_json_df
@@ -604,6 +576,7 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     forest._KERNEL_PTS_PER_TASK = 2000
     forest.build_from_converted(feats)
     want = forest.enumerate_tiles()
+    cut = _steps(tmp_path / "f")
 
     # kill everything but the features checkpoint
     for store in ("tiles", "tilefeat", "subtree", "sources", "frontier"):
@@ -615,8 +588,9 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     resumed._KERNEL_PTS_PER_TASK = 2000
     resumed.build_from_converted(feats, resume=True)
-    lin = [_json.loads(ln) for ln in open(tmp_path / "f" / "lineage.json")]
-    assert any(r.get("forest") for r in lin), lin  # same path, not loop
+    got_cut = _steps(tmp_path / "f")
+    assert [got_cut[k] for k in ("n_leaves", "n_internal", "n_empty")] == \
+        [cut[k] for k in ("n_leaves", "n_internal", "n_empty")]
     got = resumed.enumerate_tiles()
     assert set(got) == set(want)
     assert not [k for k in got if got[k] != want[k]]
@@ -630,7 +604,7 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
     post-clip num_points.  The cut must subdivide the boundary cells
     (internal, no funneled mega-task), the probe counts must equal a
     driver-side recount with the same window floats, and the forest
-    output must stay loop-identical."""
+    output must equal LocalTileIndex."""
     import json as _json
     import math
 
@@ -714,18 +688,17 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
     assert st.get("vprobe") is not None, st
     assert st["n_internal"] >= 1, st
 
-    loop = _loop_engine(spark, opts, str(tmp_path / "l"))
-    loop.build_from_converted(feats)
-    a, b = eng.enumerate_tiles(), loop.enumerate_tiles()
-    assert set(a) == set(b)
-    assert not [k for k in a if a[k] != b[k]]
-    assert eng.tile_coords() == loop.tile_coords()
+    data = {"type": "FeatureCollection",
+            "features": [_json.loads(fj) for _, _, fj in rows]}
+    assert_engine_matches_index(eng, LocalTileIndex(data, opts))
 
 
 def test_slot_wave_matches_group_wave(spark, tmp_path):
     """_slot_values pins the driver-packed slot wave's placement: the
     driver's chosen ints must hash onto distinct shuffle buckets (a
-    bijection onto 0..g-1), so each LPT bin is exactly one task."""
+    bijection onto 0..g-1), so each LPT bin is exactly one task.  A
+    build whose leaves are packed into more bins than cells per bin
+    must equal LocalTileIndex."""
     from pyspark.sql import functions as F
 
     eng = SparkTileEngine(spark, TileOptions(), workdir=str(tmp_path))
@@ -733,6 +706,15 @@ def test_slot_wave_matches_group_wave(spark, tmp_path):
     got = (spark.createDataFrame([(v,) for v in vals], "v int")
            .select(F.pmod(F.hash("v"), F.lit(13)).alias("b")).collect())
     assert sorted(r["b"] for r in got) == list(range(13))
+
+    data = _clustered_collection(3, 300)
+    opts = TileOptions(index_max_zoom=5, index_max_points=40)
+    wave = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
+    wave._KERNEL_PTS_PER_TASK = 300
+    wave.build_from_geojson(data)
+    st = _steps(tmp_path / "w")
+    assert st["n_slots"] > 1 and st["n_leaves"] > st["n_slots"], st
+    assert_engine_matches_index(wave, LocalTileIndex(data, opts))
 
 
 def _window_fn(opts):
@@ -1070,3 +1052,28 @@ def test_forest_blind_leaves_backfilled(spark, tmp_path):
     assert set(got) == set(want)
     assert not [k for k in want if got[k] != want[k]]
     assert eng.tile_coords() == idx.tile_coords
+
+
+def test_forest_blind_leaf_over_budget_goes_straggler(spark, tmp_path):
+    """A BLIND child (below a proven internal at _FOREST_MAX_LEVEL, no
+    gate row) is estimated at a quarter of its parent's mass over the
+    imz - l levels its subtree renders.  Over the straggler bound it
+    takes the exact probe and the partition-spread render instead of
+    becoming one wave task, and the pyramid still equals
+    LocalTileIndex."""
+    from geojson_vt_spark.pipeline import forest_gate_df
+
+    data = _clustered_collection(5, 800)
+    opts = TileOptions(index_max_zoom=8, index_max_points=5)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
+    eng._KERNEL_PTS_PER_TASK = 40  # the cut recurses to the gate depth
+    eng.build_from_geojson(data)
+
+    lvl = eng._FOREST_MAX_LEVEL
+    fr0 = eng._read_frontier0()
+    _, _, _, stragglers = eng._forest_cut(
+        forest_gate_df(fr0, opts, lvl).collect(), fr0=fr0)
+    blind = [c for c in stragglers if c[0] == lvl + 1]
+    assert blind, stragglers
+    assert _steps(tmp_path / "f")["n_stragglers"] >= len(blind)
+    assert_engine_matches_index(eng, LocalTileIndex(data, opts))

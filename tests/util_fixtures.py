@@ -30,3 +30,33 @@ def gen_tiles(data, **opts):
         key = f"z{tile.z}-{tile.x}-{tile.y}"
         out[key] = index.get_tile(tile.z, tile.x, tile.y)["features"]
     return out
+
+
+def assert_engine_matches_index(eng, idx, probes=()):
+    """A built SparkTileEngine must equal the kernel LocalTileIndex over
+    the same input: the same tiles with the same features and stats,
+    tileCoords order, and tile count; then each drill probe on both
+    sides, and tileCoords again with the drilled tiles appended."""
+    want_stats = {(t.z, t.x, t.y): (
+        t.num_features, t.num_points, t.num_simplified,
+        t.minx, t.miny, t.maxx, t.maxy, t.source is None)
+        for t in idx.tiles.values()}
+    want = {f"z{z}-{x}-{y}": idx.get_tile(z, x, y)["features"]
+            for z, x, y in want_stats}
+    got = eng.enumerate_tiles()
+    assert set(got) == set(want), sorted(set(got) ^ set(want))[:5]
+    bad = [k for k in want if got[k] != want[k]]
+    assert not bad, bad[:5]
+    got_stats = {(r["z"], r["x"], r["y"]): (
+        r["num_features"], r["num_points"], r["num_simplified"],
+        r["minx"], r["miny"], r["maxx"], r["maxy"], r["is_split"])
+        for r in eng.tiles().collect()}
+    assert got_stats == want_stats
+    assert eng.tile_count() == len(want)
+    assert eng.tile_coords() == idx.tile_coords
+    for zxy in probes:
+        a, b = eng.get_tile(*zxy), idx.get_tile(*zxy)
+        assert (a is None) == (b is None), zxy
+        if a is not None:
+            assert a["features"] == b["features"], zxy
+    assert eng.tile_coords() == idx.tile_coords
