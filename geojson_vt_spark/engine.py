@@ -30,8 +30,14 @@ Scale design notes (SURVEY.md §4/§7):
   final row restarts cleanly from the z0 frontier, and a finished
   build whose subtree store is lost re-runs the leaf wave from the leaf
   keys the final row records;
-- lazy drill-down (getTile miss) replays the kernel split over the
-  retained source of the nearest ancestor, pruned to the target path.
+- a root-only cut keeps no copy of its source: the z0 tile's retained
+  source is the z0 frontier itself.
+
+Serving runs no Spark job: get_tiles reads the stores on the driver
+through one pyarrow reader (_read), and get_tile is a one-key
+get_tiles.  A miss (getTile's lazy drill-down) replays the kernel split
+over the retained source of its nearest ancestor, pruned to the target
+path, under one engine lock.
 
 Run the session with ``spark.scheduler.mode=FAIR``: the z0 render runs
 concurrently with the gate and the waves, and FIFO queues the small
@@ -42,18 +48,21 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .kernel.index import to_id
-from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
+from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, record_to_feature
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _dbl, features_from_json_df,
-                       forest_gate_df, forest_route_df, forest_slot_wave_df,
+from .pipeline import (_NV_SQL, _dbl, SOURCE_PACK_COLUMNS,
+                       features_from_json_df, forest_gate_df,
+                       forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
-                       rendered_features_df, straggler_probe_stats, wrap_df)
+                       rendered_features_df, straggler_probe_stats,
+                       unpack_source_pack, wrap_df)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
@@ -63,14 +72,13 @@ TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
 # leaf that keeps its (empty) source
 _EMPTY_TILE_STATS = [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]
 
+# the z0 frontier's ord_path is [head] + a checkpoint row's ord_path +
+# [tail] (wrap_df's centre-world envelope); _frontier0_view (SQL) and
+# _frontier0_rows (driver) both build it from here
+_Z0_ORD_ENVELOPE = (1, 0)
 
-def _pack_xy(x: int, y: int) -> int:
-    return (x << 25) | y
-
-
-def _pack_col():
-    return (F.shiftleft(F.col("x").cast("long"), 25)
-            + F.col("y").cast("long"))
+# the has_source / bbox columns a drill reads for a stored tile
+_META_COLUMNS = ["has_source", "minx", "miny", "maxx", "maxy"]
 
 
 class SparkTileEngine:
@@ -83,31 +91,25 @@ class SparkTileEngine:
             workdir = tempfile.mkdtemp(prefix="gvt_spark_")
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        # drill-down overlay: tiles/sources created by get_tile after build
+        # drill-down overlay: tiles and kernel-feature sources created
+        # by get_tiles misses after the build
         self._drill_tiles: dict[int, dict] = {}
         self._drill_sources: dict[int, list] = {}
         self._consumed_sources: set[int] = set()
         # driver-side cache of the tiles-store stats (internal cut cells,
-        # stops and empties: O(cut), NOT the 4^z subtree output):
-        # existence, has_source and bbox checks become dict lookups
-        # instead of one Spark job per getTile.  Subtree tiles resolve
-        # through keyed parquet lookups, memoized below.
+        # stops and empties: O(cut), NOT the 4^z subtree output)
         self._stats_cache: dict | None = None
-        self._sub_meta_cache: dict = {}
-        # batched-drill source cache: (z,x,y) → list of FEATURE record
-        # dicts, filled by _prefetch_drill so a miss-driven get_tiles
-        # batch drills entirely on warm caches (O(ancestors asked
-        # about), not data-proportional)
-        self._source_rows_cache: dict = {}
-        # memoized store readers: parquet listing/schema discovery runs
-        # once per engine lifetime, not once per lookup call
-        self._df_cache: dict = {}
+        # pyarrow datasets over the store directories, opened once
+        # (listing and footer discovery) and dropped by a build
+        self._datasets: dict = {}
+        # one get_tiles at a time: a drill consumes its root's source
+        # before it has written the children that now hold it
+        self._serve_lock = threading.Lock()
         # per-build forest bookkeeping: leaf work estimates (the slot
         # wave's LPT weights) and step figures for the lineage row
         self._forest_leaf_work: dict = {}
         self._forest_vprobe_sec: float | None = None
         self._forest_slot_bins: int | None = None
-        import threading
         self._lineage_lock = threading.Lock()
 
     # ------------------------------------------------------------ paths
@@ -170,6 +172,12 @@ class SparkTileEngine:
                 return [json.loads(line) for line in fh if line.strip()]
         except FileNotFoundError:
             return []
+
+    def _final_lineage(self) -> dict | None:
+        """The forest's final lineage row (the build is done), or None."""
+        final = [r for r in self._read_lineage()
+                 if r.get("final") and r.get("forest")]
+        return final[-1] if final else None
 
     def _append_lineage(self, row: dict) -> None:
         with self._lineage_lock:
@@ -311,10 +319,11 @@ class SparkTileEngine:
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
         """z0 frontier view over an already-converted features frame
         (same shape _read_frontier0 serves from the checkpoint)."""
+        head, tail = _Z0_ORD_ENVELOPE
         return src.selectExpr(
             "0 AS z", "0 AS x", "0 AS y",
-            "concat(array(CAST(1 AS BIGINT)), ord_path, "
-            "array(CAST(0 AS BIGINT))) AS ord_path",
+            f"concat(array(CAST({head} AS BIGINT)), ord_path, "
+            f"array(CAST({tail} AS BIGINT))) AS ord_path",
             *[c for c in FEATURE_COLUMNS if c != "ord_path"],
             f"{_NV_SQL} AS n_verts")
 
@@ -358,9 +367,16 @@ class SparkTileEngine:
 
         ``approx_rows`` is accepted for callers that pass a rough
         feature count and is ignored: the cut is chosen from the exact
-        observed stats."""
+        observed stats.
+
+        ``resume=True`` on a finished build (the lineage holds the final
+        row) goes straight to ``build``, which runs no job unless the
+        subtree store is lost."""
         from pyspark.sql import Observation
 
+        if resume and self._final_lineage() is not None:
+            self.build(resume=True)
+            return
         path = self._p("features")
         if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
             row = self._read_features().agg(*self._ingest_aggs()).first()
@@ -681,9 +697,9 @@ class SparkTileEngine:
         whose shape follows the z0 stats ``r0``:
 
         - ROOT-ONLY: the z0 tile stops (num_points ≤ index_max_points,
-          or index_max_zoom 0).  z0 renders and keeps its source
-          (sources/z=0 holds the z0 frontier rows); no other tile
-          exists.
+          or index_max_zoom 0).  z0 renders and keeps its source, which
+          is the z0 frontier (_frontier0_rows serves it); no other
+          tile exists.
         - DEPTH-1: the four z1 cells are leaves, with no gate job, when
           index_max_zoom is 1 or the stats prove it
           (_forest_cut_proven).  Every small corpus takes this cut.
@@ -736,15 +752,9 @@ class SparkTileEngine:
         leaves, internals, empties, stragglers = [], [], [], []
         self._forest_leaf_work = {}
         self._forest_vprobe_sec = self._forest_slot_bins = None
-        gate_sec = fut_src = None
+        gate_sec = None
         if root_only:
-            def source_job():
-                self._set_pool("gvt-sources")
-                (fr0.drop("z").write.mode("overwrite")
-                 .parquet(self._p("sources", "z=0")))
-
-            fut_src = pool.submit(source_job)
-            futures.append(fut_src)
+            pass  # z0 alone; its retained source is the z0 frontier
         elif self._forest_cut_proven(n0):
             leaves = [(1, x, y) for y in (0, 1) for x in (0, 1)]
         else:
@@ -794,9 +804,8 @@ class SparkTileEngine:
         leaf_acks = (self._forest_leaf_wave(leaves, routed=routed)
                      if leaves else [])
         wave_sec = time.monotonic() - _t1
-        for fut in (fut_int, fut_src):
-            if fut is not None:
-                fut.result()
+        if fut_int is not None:
+            fut_int.result()
         _t2 = time.monotonic()
         fut_render.result()
         render_wait = time.monotonic() - _t2
@@ -891,7 +900,7 @@ class SparkTileEngine:
         an earlier (or killed) build in this workdir must not survive:
         task-side parts of a killed attempt, or the dirs of a cut with
         another shape, would surface through the root-level readers
-        (tiles(), _subtree_df) as phantom tiles."""
+        (tiles(), _read) as phantom tiles."""
         import shutil
         for store in ("tiles", "tilefeat", "frontier", "sources",
                       "subtree", "snapshots"):
@@ -917,11 +926,12 @@ class SparkTileEngine:
         is done, and only a lost subtree store is re-run from the leaf
         keys that row records.  Anything less restarts the build: the
         forest appends its lineage only after every store is durable."""
+        self._stats_cache = None
+        self._datasets.clear()
         if resume:
-            final = [r for r in self._read_lineage()
-                     if r.get("final") and r.get("forest")]
-            if final:
-                keys = [tuple(k) for k in final[-1].get("handoff") or []]
+            final = self._final_lineage()
+            if final is not None:
+                keys = [tuple(k) for k in final.get("handoff") or []]
                 if keys and not os.path.exists(
                         self._p("subtree", "b=1", "_SUCCESS")):
                     self._forest_leaf_wave(keys)
@@ -944,132 +954,96 @@ class SparkTileEngine:
             for f in futures:
                 f.result()
             pool.shutdown()
-            self._stats_cache = None
-            self._sub_meta_cache.clear()
-            self._source_rows_cache.clear()
-            self._df_cache.clear()
 
     # ------------------------------------------------------------ read side
 
+    def _dataset(self, store: str):
+        """pyarrow dataset over one store directory under the workdir
+        (``tilefeat``, ``frontier/z=0``, ...): hive ``z=``/``b=``
+        directories become columns, ``_SUCCESS`` and dot files are
+        skipped.  Opened once per engine until the next build; None
+        when the directory is absent or holds no data file."""
+        if store not in self._datasets:
+            import pyarrow.dataset as ds
+            path = self._p(*store.split("/"))
+            dset = (ds.dataset(path, format="parquet", partitioning="hive")
+                    if os.path.isdir(path) else None)
+            self._datasets[store] = dset if dset and dset.files else None
+        return self._datasets[store]
+
+    def _read(self, store: str, columns=(), keys=None,
+              kind: str | None = None) -> list[dict]:
+        """Rows of one store as plain dicts: z/x/y (where the store has
+        them) plus ``columns``, for every row or only the tiles in
+        ``keys``.  Tile rows (the tiles store, subtree ``kind='tile'``)
+        filter on ``tile_id``; tilefeat and source rows, which carry no
+        tile_id, on z/x/y, a superset narrowed here.  ``kind`` picks
+        subtree rows.  Parquet row-group statistics prune the scan, and
+        no Spark job runs."""
+        import pyarrow.dataset as ds
+        dset = self._dataset(store)
+        if dset is None or (keys is not None and not keys):
+            return []
+        names = dset.schema.names
+        filt = None if kind is None else ds.field("kind") == kind
+        if keys is not None:
+            keys = set(keys)
+            if "tile_id" in names and kind != "source":
+                f = ds.field("tile_id").isin([to_id(*k) for k in keys])
+            else:
+                f = (ds.field("z").isin(list({k[0] for k in keys}))
+                     & ds.field("x").isin(list({k[1] for k in keys}))
+                     & ds.field("y").isin(list({k[2] for k in keys})))
+            filt = f if filt is None else filt & f
+        cols = [c for c in ("z", "x", "y") if c in names] + list(columns)
+        rows = dset.to_table(columns=cols, filter=filt).to_pylist()
+        if keys is None:
+            return rows
+        return [r for r in rows if (r["z"], r["x"], r["y"]) in keys]
+
     def _stats(self) -> dict:
-        """(z,x,y) → {has_source, bbox} for tiles-store tiles only.
+        """(z,x,y) → has_source and bbox of the tiles-store tiles.
 
         The tiles store holds O(cut) rows — z0, internal and stop cells,
         empty back-fills — and does not grow with the 4^z subtree
-        output, so caching it is driver-safe at any pyramid depth.
-        Subtree tiles are served by ``_subtree_meta`` keyed lookups
-        instead of being collected."""
+        output, so caching it is driver-safe at any pyramid depth."""
         if self._stats_cache is None:
-            cache = {}
-            if self._read_lineage() and os.path.isdir(self._p("tiles")):
-                for r in (self.spark.read.parquet(self._p("tiles"))
-                          .select("z", "x", "y", "has_source",
-                                  "minx", "miny", "maxx", "maxy").collect()):
-                    cache[(r["z"], r["x"], r["y"])] = {
-                        "has_source": r["has_source"],
-                        "bbox": (r["minx"], r["miny"],
-                                 r["maxx"], r["maxy"])}
-            self._stats_cache = cache
+            self._stats_cache = {(r["z"], r["x"], r["y"]): r
+                                 for r in self._read("tiles", _META_COLUMNS)}
         return self._stats_cache
 
-    def _subtree_meta(self, z, x, y) -> dict | None:
-        """has_source/bbox of one subtree-built tile via a keyed
-        (predicate-pushdown) parquet lookup, memoized per request —
-        driver memory stays O(tiles actually asked about)."""
-        key = (z, x, y)
-        if key in self._sub_meta_cache:
-            return self._sub_meta_cache[key]
-        meta = None
-        sub = self._subtree_df()
-        if sub is not None:
-            rows = (sub.where((F.col("kind") == "tile") &
-                              (F.col("z") == z) & (F.col("x") == x) &
-                              (F.col("y") == y))
-                    .select("has_source", "minx", "miny", "maxx", "maxy")
-                    .collect())
-            if rows:
-                r = rows[0]
-                meta = {"has_source": r["has_source"],
-                        "bbox": (r["minx"], r["miny"],
-                                 r["maxx"], r["maxy"])}
-        self._sub_meta_cache[key] = meta
-        return meta
-
-    def _tile_meta(self, z, x, y) -> dict | None:
-        st = self._stats().get((z, x, y))
-        return st if st is not None else self._subtree_meta(z, x, y)
-
     def warm(self) -> None:
-        """Open the tile stores for serving: load the (bounded) stats
-        cache and run parquet listing/schema discovery once, so each
-        subsequent get_tile is a single pruned read and an all-hit
-        get_tiles batch is at most two jobs."""
-        self._stats()
-        self._tilefeat_df()
-        self._subtree_df()
-
-    def _subtree_df(self) -> DataFrame | None:
-        if "subtree" not in self._df_cache:
-            path = self._p("subtree")
-            self._df_cache["subtree"] = (
-                self.spark.read.parquet(path) if os.path.isdir(path)
-                else None)
-        return self._df_cache["subtree"]
-
-    def _tilefeat_df(self) -> DataFrame | None:
-        """Root read of the per-feature tile store — the z partition
-        column comes from directory discovery, so zoom filters prune."""
-        if "tilefeat" not in self._df_cache:
-            path = self._p("tilefeat")
-            self._df_cache["tilefeat"] = (
-                self.spark.read.parquet(path) if os.path.isdir(path)
-                else None)
-        return self._df_cache["tilefeat"]
+        """Open the tile stores for serving: load the stats cache and
+        list every store's files once."""
+        with self._serve_lock:
+            self._stats()
+            for store in ("tilefeat", "subtree", "sources"):
+                self._dataset(store)
 
     def tiles(self) -> DataFrame:
+        """Every stored tile's TILE_COLUMNS row as a Spark DataFrame:
+        the tiles store plus the subtree store's tile rows."""
         base = (self.spark.read.parquet(self._p("tiles"))
                 .select(*TILE_COLUMNS))
-        sub = self._subtree_df()
-        if sub is not None:
+        path = self._p("subtree")
+        if os.path.isdir(path):
             base = base.unionByName(
-                sub.where(F.col("kind") == "tile").select(*TILE_COLUMNS))
+                self.spark.read.parquet(path)
+                .where(F.col("kind") == "tile").select(*TILE_COLUMNS))
         return base
 
     def tile_count(self) -> int:
         """Exact generated-tile count without a Spark job: parquet
-        footers for the stats stores plus one slim driver-side 'kind'
-        column read over the subtree parts.  The reference's
-        equivalent is ``tileCoords.length`` — an in-memory array
-        length — so serving the count from store metadata is the
-        parity-faithful shape; pinned equal to ``tiles().count()`` by
-        tests on every build path."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        total = 0
-        troot = self._p("tiles")
-        if os.path.isdir(troot):
-            for zdir in os.listdir(troot):
-                zp = os.path.join(troot, zdir)
-                if not (zdir.startswith("z=") and os.path.isdir(zp)):
-                    continue
-                for f in os.listdir(zp):
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(zp, f)).metadata.num_rows
-        sroot = self._p("subtree")
-        if os.path.isdir(sroot):
-            for bdir in os.listdir(sroot):
-                bp = os.path.join(sroot, bdir)
-                if not (bdir.startswith("b=") and os.path.isdir(bp)):
-                    continue
-                for f in os.listdir(bp):
-                    if f.endswith(".parquet"):
-                        kinds = pq.read_table(
-                            os.path.join(bp, f),
-                            columns=["kind"]).column("kind")
-                        total += int(pc.sum(pc.equal(
-                            kinds, "tile").cast("int64")).as_py() or 0)
-        return total
+        footers for the tiles store plus one slim 'kind' column read
+        over the subtree parts.  The reference's equivalent is
+        ``tileCoords.length`` — an in-memory array length — so serving
+        the count from store metadata is the parity-faithful shape;
+        pinned equal to ``tiles().count()`` by tests."""
+        import pyarrow.dataset as ds
+        tiles, sub = self._dataset("tiles"), self._dataset("subtree")
+        return ((tiles.count_rows() if tiles else 0)
+                + (sub.count_rows(filter=ds.field("kind") == "tile")
+                   if sub else 0))
 
     _TILEFEAT_COLS = ["ord_path", "gtype", "coords", "rlens",
                       "tags_json", "fid_json"]
@@ -1106,186 +1080,186 @@ class SparkTileEngine:
                                    r["ftags"][i], r["ffids"][i]))
         return out
 
+
     def enumerate_tiles(self) -> dict[str, list]:
         """genTiles equivalent (/root/reference/test/test-full.js:49-64):
         every generated tile's transformed features keyed z{z}-{x}-{y}.
 
-        Small-scale/test path: collects every tile.  Distributed tiles
-        materialize their features from the rendered per-feature store."""
+        Small-scale/test path: reads every tile onto the driver."""
         out = {}
         if not self._read_lineage():
             return out
-        for row in self.tiles().select("z", "x", "y").collect():
-            out[f"z{row['z']}-{row['x']}-{row['y']}"] = []
+        for r in self._read("tiles"):
+            out[f"z{r['z']}-{r['x']}-{r['y']}"] = []
         grouped: dict[str, list] = {}
-        tf = self._tilefeat_df()
-        if tf is not None:
-            for r in (tf
-                      .select("z", "x", "y", *self._TILEFEAT_COLS)
-                      .collect()):
-                grouped.setdefault(
-                    f"z{r['z']}-{r['x']}-{r['y']}", []).append(r)
+        for r in self._read("tilefeat", self._TILEFEAT_COLS):
+            grouped.setdefault(f"z{r['z']}-{r['x']}-{r['y']}", []).append(r)
         for key, rows in grouped.items():
             out[key] = self._assemble_features(rows)
-        sub = self._subtree_df()
-        if sub is not None:
-            for r in (sub.where(F.col("kind") == "tile")
-                      .select("z", "x", "y", *self._PACK_COLS).collect()):
-                out[f"z{r['z']}-{r['x']}-{r['y']}"] = \
-                    self._unpack_tile_features(r)
-        for tid, tile in self._drill_tiles.items():
+        for r in self._read("subtree", self._PACK_COLS, kind="tile"):
+            out[f"z{r['z']}-{r['x']}-{r['y']}"] = \
+                self._unpack_tile_features(r)
+        for tile in self._drill_tiles.values():
             out[f"z{tile['z']}-{tile['x']}-{tile['y']}"] = tile["features"]
         return out
 
     def total_tiles(self) -> int:
-        base = self.tiles().count() if self._read_lineage() else 0
+        """Stored tiles plus the tiles drill-downs added."""
+        base = self.tile_count() if self._read_lineage() else 0
         return base + len(self._drill_tiles)
 
     # ------------------------------------------------------------ getTile
 
     def get_tile(self, z, x, y):
         """Tile lookup with lazy drill-down
-        (/root/reference/src/index.js:158-199)."""
-        z, x, y = int(float(z)), int(float(x)), int(float(y))
-        if z < 0 or z > 24:
-            return None
-        z2 = 1 << z
-        x = (x + z2) & (z2 - 1)
-        tid = to_id(z, x, y)
+        (/root/reference/src/index.js:158-199): a one-key get_tiles."""
+        return self.get_tiles([(z, x, y)])[(z, x, y)]
 
-        hit = self._lookup(tid, z, x, y)
-        if hit is not None:
-            return hit
+    def get_tiles(self, coords) -> dict:
+        """Batch getTile: {request: tile or None} for many (z, x, y)
+        requests, with getTile's semantics (x wraps, z outside 0..24 is
+        None, a miss drills down).  No Spark job runs: the hits come
+        from one tilefeat and one subtree read, the misses' drills from
+        one meta read and one source read per store.  Misses drill in
+        request order, so tiles an earlier drill made serve later
+        requests.  One call runs at a time per engine."""
+        norm: dict = {}
+        for c in coords:
+            c = tuple(c)
+            z, x, y = (int(float(v)) for v in c)
+            norm[c] = (None if z < 0 or z > 24
+                       else (z, (x + (1 << z)) & ((1 << z) - 1), y))
+        out: dict = {}
+        with self._serve_lock:
+            keys = [k for k in dict.fromkeys(norm.values())
+                    if k is not None and to_id(*k) not in self._drill_tiles]
+            feats: dict = {}
+            if keys and self._read_lineage():
+                feats = self._stored_tiles(keys)
+                self._drill_misses([k for k in keys if k not in feats])
+            for c, k in norm.items():
+                t = None if k is None else self._drill_tiles.get(to_id(*k))
+                f = t["features"] if t is not None else feats.get(k)
+                out[c] = None if f is None else {
+                    "features": f, "z": k[0], "x": k[1], "y": k[2]}
+        return out
 
-        # walk ancestors to the nearest tile retaining source
-        z0, x0, y0 = z, x, y
-        parent = None
-        while parent is None and z0 > 0:
-            z0 -= 1
-            x0 >>= 1
-            y0 >>= 1
-            parent = self._lookup_source(z0, x0, y0)
-        if parent is None:
-            return None
-        self._drill(parent, z0, x0, y0, z, x, y)
-        return self._lookup(tid, z, x, y)
+    def _stored_tiles(self, keys) -> dict:
+        """(z,x,y) → features of the stored tiles among ``keys``: a
+        tiles-store tile from its tilefeat rows (none for an empty
+        tile), a subtree tile from its one packed row."""
+        stats = self._stats()
+        grouped: dict = {k: [] for k in keys if k in stats}
+        for r in self._read("tilefeat", self._TILEFEAT_COLS, list(grouped)):
+            grouped[(r["z"], r["x"], r["y"])].append(r)
+        out = {k: self._assemble_features(rows)
+               for k, rows in grouped.items()}
+        for r in self._read("subtree", self._PACK_COLS,
+                            [k for k in keys if k not in stats],
+                            kind="tile"):
+            out[(r["z"], r["x"], r["y"])] = self._unpack_tile_features(r)
+        return out
 
-    def _lookup(self, tid, z, x, y):
-        if tid in self._drill_tiles:
-            t = self._drill_tiles[tid]
-            return {"features": t["features"], "z": z, "x": x, "y": y}
-        if not self._read_lineage():
-            return None
-        if (z, x, y) in self._stats():
-            # tiles-store tile: zero-job existence, one pruned read
-            # (the subtree root is never re-emitted there, so dist-first
-            # order can't shadow anything)
-            tf = self._tilefeat_df()
-            rows = []
-            if tf is not None:
-                rows = (tf.where((F.col("z") == z) & (F.col("x") == x) &
-                                 (F.col("y") == y))
-                        .select(*self._TILEFEAT_COLS).collect())
-            return {"features": self._assemble_features(rows),
-                    "z": z, "x": x, "y": y}
-        sub = self._subtree_df()
-        if sub is not None:
-            # known-absent shortcut: a batched meta probe may have
-            # already proven this tile does not exist in the subtree
-            # store — skip the per-tile read entirely
-            if (z, x, y) in self._sub_meta_cache and \
-                    self._sub_meta_cache[(z, x, y)] is None:
-                return None
-            rows = (sub.where((F.col("kind") == "tile") & (F.col("z") == z) &
-                              (F.col("x") == x) & (F.col("y") == y))
-                    .select(*self._PACK_COLS).collect())
-            if rows:
-                return {"features": self._unpack_tile_features(rows[0]),
-                        "z": z, "x": x, "y": y}
-        return None
+    def _drill_misses(self, misses) -> None:
+        """getTile's drill-down for each miss in turn: walk up to the
+        nearest ancestor that still holds a non-empty source and split
+        it toward the miss (_drill).  One read fetches the metas of the
+        ancestors outside the stats cache, one read per store the
+        sources of the stored ancestors that keep one — a stored source
+        belongs to a leaf, so each chain holds at most one."""
+        chains = {(z, x, y): [(z - d, x >> d, y >> d)
+                              for d in range(1, z + 1)]
+                  for z, x, y in misses}
+        stats = self._stats()
+        sub = {(r["z"], r["x"], r["y"]): r for r in self._read(
+            "subtree", _META_COLUMNS,
+            {a for ch in chains.values() for a in ch if a not in stats},
+            kind="tile")}
 
-    def _source_rows(self, z, x, y) -> list:
-        """Collect retained-source feature records (plain dicts) for
-        (z,x,y) from the sources store (row per feature) and
-        the subtree batches (one packed row per leaf tile)."""
-        from .pipeline import SOURCE_PACK_COLUMNS, unpack_source_pack
-        if (z, x, y) in self._source_rows_cache:
-            return self._source_rows_cache[(z, x, y)]
-        rows: list[dict] = []
-        p1 = self._p("sources", f"z={z}")
-        if os.path.isdir(p1):
-            rows.extend(
-                r.asDict() for r in self.spark.read.parquet(p1)
-                .where((F.col("x") == x) & (F.col("y") == y))
-                .select(*FEATURE_COLUMNS).collect())
-        sub = self._subtree_df()
-        if sub is not None:
-            for r in (sub.where((F.col("kind") == "source") &
-                                (F.col("z") == z) &
-                                (F.col("x") == x) & (F.col("y") == y))
-                      .select(*SOURCE_PACK_COLUMNS).collect()):
-                rows.extend(unpack_source_pack(r))
+        def meta(a):
+            return stats.get(a) or sub.get(a)
+
+        sources = self._stored_sources(
+            {a for ch in chains.values() for a in ch
+             if to_id(*a) not in self._consumed_sources
+             and (m := meta(a)) is not None and m["has_source"]})
+        for k, chain in chains.items():
+            if to_id(*k) in self._drill_tiles:
+                continue  # an earlier miss's drill made it
+            for a in chain:
+                aid = to_id(*a)
+                if aid in self._consumed_sources:
+                    continue
+                feats = self._drill_sources.get(aid, sources.get(a))
+                if feats:
+                    m = meta(a)
+                    self._drill(feats, a, k, m and (
+                        m["minx"], m["miny"], m["maxx"], m["maxy"]))
+                    break
+
+    def _stored_sources(self, keys) -> dict:
+        """(z,x,y) → the retained source of each stored tile in
+        ``keys``, as kernel features in ord_path order: a straggler
+        stop's row-per-feature sources/z=N, a subtree leaf's packed
+        source row, and a root-only z0's z0 frontier."""
+        recs: dict = {k: [] for k in keys}
+        for r in self._read("sources", FEATURE_COLUMNS, keys):
+            recs[(r["z"], r["x"], r["y"])].append(r)
+        for r in self._read("subtree", SOURCE_PACK_COLUMNS, keys,
+                            kind="source"):
+            recs[(r["z"], r["x"], r["y"])].extend(unpack_source_pack(r))
+        if (0, 0, 0) in recs:
+            recs[(0, 0, 0)] = self._frontier0_rows()
+        return {k: [f for _, f in sorted(map(record_to_feature, rows),
+                                         key=lambda t: t[0])]
+                for k, rows in recs.items()}
+
+    def _frontier0_rows(self) -> list[dict]:
+        """The z0 frontier as FEATURE records on the driver (a root-only
+        cut's z0 source): frontier/z=0 when a wrapping input wrote it,
+        else the features checkpoint inside _Z0_ORD_ENVELOPE, the rows
+        _frontier0_view serves to Spark."""
+        if self._dataset("frontier/z=0") is not None:
+            return self._read("frontier/z=0", FEATURE_COLUMNS)
+        head, tail = _Z0_ORD_ENVELOPE
+        rows = self._read("features", FEATURE_COLUMNS)
+        for r in rows:
+            r["ord_path"] = [head, *r["ord_path"], tail]
         return rows
 
-    def _lookup_source(self, z, x, y):
-        """Return kernel features of the retained source for (z,x,y), or None."""
-        tid = to_id(z, x, y)
-        if tid in self._consumed_sources:
-            return None
-        if tid in self._drill_sources:
-            feats = self._drill_sources[tid]
-            return feats if feats else None
-        st = self._tile_meta(z, x, y)
-        if st is None or not st["has_source"]:
-            return None
-        from .model import record_to_feature
-        feats = sorted((record_to_feature(r)
-                        for r in self._source_rows(z, x, y)),
-                       key=lambda t: t[0])
-        return feats if feats else None
-
-    def _drill(self, parent_feats, z0, x0, y0, cz, cx, cy):
-        """Targeted split from the ancestor to the requested tile using
-        the same kernel; new tiles/sources land in the in-memory overlay.
-
-        parent_feats: sorted list of (ord_path, VTFeature) — one
-        retained source, drilled in-process on the driver."""
+    def _drill(self, feats, root, target, root_bbox) -> None:
+        """splitTile's drill-down pass (src/index.js:66-156 with cz):
+        split ``feats`` — ``root``'s retained source, kernel features in
+        order — toward ``target`` with the scalar kernel, in-process on
+        the driver.  New tiles, and the sources the off-path ones keep,
+        land in the in-memory overlay."""
         from .kernel.clip import clip_features
         from .kernel.tile import create_tile
         from .kernel.transform import transform_tile
         opts = self.options
-
-        feats = [f for _, f in parent_feats]
-        self._consumed_sources.add(to_id(z0, x0, y0))
-        stack = [(feats, z0, x0, y0, list(range(len(parent_feats))))]
-        # keep parallel ord tracking so assembly order matches; kernel
-        # clip preserves list order so ordinals stay aligned implicitly
+        cz, cx, cy = target
+        self._consumed_sources.add(to_id(*root))
+        stack = [(feats, *root)]
         while stack:
-            features, z, x, y, _ords = stack.pop()
+            features, z, x, y = stack.pop()
             tid = to_id(z, x, y)
-            # only the drill root pre-exists in the stores (its source
-            # came from a LEAF, which by definition was never split), so
-            # descendants need no per-tile store lookups — just the
-            # in-memory overlay from earlier drills
-            known = (tid in self._drill_tiles
-                     or (z, x, y) == (z0, x0, y0))
-            if not known:
+            # only the drill root can pre-exist in the stores (it was
+            # never split), so every other tile is new or in the overlay
+            t = self._drill_tiles.get(tid)
+            if t is None and (z, x, y) != root:
                 tile = create_tile(features, z, x, y, opts)
-                transformed = transform_tile(tile, opts.extent)
-                self._drill_tiles[tid] = {
+                t = self._drill_tiles[tid] = {
                     "z": z, "x": x, "y": y,
-                    "features": transformed["features"],
+                    "features": transform_tile(
+                        tile, opts.extent)["features"],
                     "num_points": tile.num_points,
                     "minx": tile.minx, "miny": tile.miny,
                     "maxx": tile.maxx, "maxy": tile.maxy,
                 }
-
-            if z == opts.max_zoom or z == cz:
-                self._drill_sources[tid] = list(zip(range(len(features)), features))
-                continue
-            zoom_steps = cz - z
-            if x != cx >> zoom_steps or y != cy >> zoom_steps:
-                self._drill_sources[tid] = list(zip(range(len(features)), features))
+            steps = cz - z
+            if (z == opts.max_zoom or z == cz
+                    or x != cx >> steps or y != cy >> steps):
+                self._drill_sources[tid] = features
                 continue
 
             self._consumed_sources.add(tid)
@@ -1293,7 +1267,8 @@ class SparkTileEngine:
             if not features:
                 continue
 
-            bbox = self._tile_bbox(tid, z, x, y)
+            bbox = root_bbox if t is None else (
+                t["minx"], t["miny"], t["maxx"], t["maxy"])
             z2 = 1 << z
             k1 = 0.5 * opts.buffer / opts.extent
             k2, k3, k4 = 0.5 - k1, 0.5 + k1, 1 + k1
@@ -1309,199 +1284,10 @@ class SparkTileEngine:
             if right:
                 tr = clip_features(right, z2, y - k1, y + k3, 1, bbox[1], bbox[3], lm)
                 br = clip_features(right, z2, y + k2, y + k4, 1, bbox[1], bbox[3], lm)
-            stack.append((tl or [], z + 1, x * 2, y * 2, None))
-            stack.append((bl or [], z + 1, x * 2, y * 2 + 1, None))
-            stack.append((tr or [], z + 1, x * 2 + 1, y * 2, None))
-            stack.append((br or [], z + 1, x * 2 + 1, y * 2 + 1, None))
-
-    def _tile_exists(self, tid, z, x, y) -> bool:
-        if tid in self._drill_tiles:
-            return True
-        return self._tile_meta(z, x, y) is not None
-
-    def _tile_bbox(self, tid, z, x, y):
-        if tid in self._drill_tiles:
-            t = self._drill_tiles[tid]
-            return (t["minx"], t["miny"], t["maxx"], t["maxy"])
-        st = self._tile_meta(z, x, y)
-        if st is not None:
-            return st["bbox"]
-        return (2.0, 1.0, -1.0, 0.0)
-
-    def _prefetch_drill(self, misses) -> None:
-        """Batch every store lookup a miss-driven drill will need, so
-        the per-tile get_tile fallbacks run purely on warm caches and
-        the in-process kernel (VERDICT r2 #8 — deep drills were one
-        keyed read per ancestor per miss).
-
-        Two jobs bound the whole batch regardless of miss count: one
-        keyed subtree probe covering every requested tile + ancestor
-        chain (also caching proven ABSENCE, so the misses' own lookups
-        go jobless), and one source fetch per touched store for every
-        has_source ancestor."""
-        if not self._read_lineage():
-            return
-        from .pipeline import SOURCE_PACK_COLUMNS, unpack_source_pack
-        chains: dict = {}
-        universe: set = set()
-        for k in misses:
-            z, x, y = k
-            chain = []
-            while z > 0:
-                z -= 1
-                x >>= 1
-                y >>= 1
-                chain.append((z, x, y))
-            chains[k] = chain
-            universe.add(k)
-            universe.update(chain)
-        stats = self._stats()
-        sub = self._subtree_df()
-        need_meta = [a for a in universe
-                     if a not in stats and a not in self._sub_meta_cache]
-        if sub is not None and need_meta:
-            ids = [to_id(*a) for a in need_meta]
-            found = {}
-            for r in (sub.where((F.col("kind") == "tile") &
-                                F.col("tile_id").isin(ids))
-                      .select("z", "x", "y", "has_source",
-                              "minx", "miny", "maxx", "maxy").collect()):
-                found[(r["z"], r["x"], r["y"])] = {
-                    "has_source": r["has_source"],
-                    "bbox": (r["minx"], r["miny"],
-                             r["maxx"], r["maxy"])}
-            for a in need_meta:
-                self._sub_meta_cache[a] = found.get(a)
-
-        # every has_source ancestor can end up the drill root (a nearer
-        # one may hold an empty source, sending the walk further up)
-        want_src: set = set()
-        for chain in chains.values():
-            for a in chain:
-                meta = stats.get(a) or self._sub_meta_cache.get(a)
-                if meta is not None and meta["has_source"]:
-                    want_src.add(a)
-        fetch = [a for a in want_src
-                 if a not in self._source_rows_cache
-                 and to_id(*a) not in self._drill_sources
-                 and to_id(*a) not in self._consumed_sources]
-        if not fetch:
-            return
-        for a in fetch:
-            self._source_rows_cache[a] = []
-        by_z: dict = {}
-        for (z, x, y) in fetch:
-            by_z.setdefault(z, []).append((x, y))
-        for z, keys in sorted(by_z.items()):
-            p1 = self._p("sources", f"z={z}")
-            if not os.path.isdir(p1):
-                continue
-            sel = (self.spark.read.parquet(p1)
-                   .where(F.col("x").isin([x for x, _ in keys]) &
-                          F.col("y").isin([y for _, y in keys]) &
-                          _pack_col().isin([_pack_xy(x, y)
-                                            for x, y in keys]))
-                   .select("x", "y", *FEATURE_COLUMNS))
-            for r in sel.collect():
-                d = r.asDict()
-                key = (z, d.pop("x"), d.pop("y"))
-                if key in self._source_rows_cache:
-                    self._source_rows_cache[key].append(d)
-        if sub is not None:
-            ids = [to_id(*a) for a in fetch]
-            zs = sorted({z for z, _, _ in fetch})
-            pred = None
-            for zv in zs:
-                packed = [_pack_xy(x, y) for (z, x, y) in fetch if z == zv]
-                p = (F.col("z") == zv) & _pack_col().isin(packed)
-                pred = p if pred is None else (pred | p)
-            for r in (sub.where((F.col("kind") == "source") &
-                                F.col("z").isin(zs) & pred)
-                      .select("z", "x", "y", *SOURCE_PACK_COLUMNS)
-                      .collect()):
-                key = (r["z"], r["x"], r["y"])
-                if key in self._source_rows_cache:
-                    self._source_rows_cache[key].extend(
-                        unpack_source_pack(r))
-
-    def get_tiles(self, coords) -> dict:
-        """Batch getTile: resolve many (z, x, y) requests in one sweep.
-
-        Same semantics as per-request get_tile (drill-downs included),
-        but hits are served in TWO Spark jobs for the whole batch: one
-        pruned read of the tilefeat store covering every requested
-        tiles-store tile (all zooms OR-ed into a single predicate) and
-        one keyed read of the subtree store for the rest.  Only genuine
-        misses fall back to the drill path, and each retained source is
-        drilled at most once for the whole batch."""
-        norm: dict = {}
-        for c in coords:
-            c = tuple(c)
-            z, x, y = (int(float(v)) for v in c)
-            if z < 0 or z > 24:
-                norm[c] = None
-                continue
-            z2 = 1 << z
-            norm[c] = (z, (x + z2) & (z2 - 1), y)
-
-        want = {k for k in norm.values() if k is not None}
-        feats: dict = {}
-        for key in list(want):
-            t = self._drill_tiles.get(to_id(*key))
-            if t is not None:
-                feats[key] = t["features"]
-                want.discard(key)
-
-        if want and self._read_lineage():
-            dist = [k for k in want if k in self._stats()]
-            tf = self._tilefeat_df() if dist else None
-            if tf is not None:
-                zs = sorted({z for z, _, _ in dist})
-                pred = None
-                for zv in zs:
-                    packed = [_pack_xy(x, y) for (z, x, y) in dist if z == zv]
-                    p = (F.col("z") == zv) & _pack_col().isin(packed)
-                    pred = p if pred is None else (pred | p)
-                grouped: dict = {k: [] for k in dist}
-                for r in (tf.where(F.col("z").isin(zs) & pred)
-                          .select("z", "x", "y", *self._TILEFEAT_COLS)
-                          .collect()):
-                    grouped[(r["z"], r["x"], r["y"])].append(r)
-                for k in dist:
-                    feats[k] = self._assemble_features(grouped[k])
-                    want.discard(k)
-            sub = self._subtree_df() if want else None
-            if sub is not None:
-                ids = [to_id(*k) for k in want]
-                for r in (sub.where((F.col("kind") == "tile") &
-                                    F.col("tile_id").isin(ids))
-                          .select("z", "x", "y", *self._PACK_COLS)
-                          .collect()):
-                    k = (r["z"], r["x"], r["y"])
-                    feats[k] = self._unpack_tile_features(r)
-                    want.discard(k)
-            if sub is not None:
-                for k in want:
-                    # the keyed fetch just proved these absent — cache
-                    # that so their per-tile lookups go jobless
-                    self._sub_meta_cache.setdefault(k, None)
-            if want:
-                # genuine misses: batch the meta/source lookups their
-                # drills will need (2 jobs for the whole batch), then
-                # the get_tile fallbacks below run on warm caches + the
-                # in-process kernel
-                self._prefetch_drill(sorted(want))
-
-        out = {}
-        for c, key in norm.items():
-            if key is None:
-                out[c] = None
-            elif key in feats:
-                out[c] = {"features": feats[key],
-                          "z": key[0], "x": key[1], "y": key[2]}
-            else:
-                out[c] = self.get_tile(*key)
-        return out
+            stack.append((tl or [], z + 1, x * 2, y * 2))
+            stack.append((bl or [], z + 1, x * 2, y * 2 + 1))
+            stack.append((tr or [], z + 1, x * 2 + 1, y * 2))
+            stack.append((br or [], z + 1, x * 2 + 1, y * 2 + 1))
 
     def tile_coords(self) -> list[tuple[int, int, int]]:
         """Insertion-ordered tile enumeration matching the reference's
@@ -1517,7 +1303,8 @@ class SparkTileEngine:
         out: list[tuple[int, int, int]] = []
         if self._read_lineage():
             present = {(r["z"], r["x"], r["y"])
-                       for r in self.tiles().select("z", "x", "y").collect()}
+                       for r in (self._read("tiles")
+                                 + self._read("subtree", kind="tile"))}
             stack = [(0, 0, 0)] if (0, 0, 0) in present else []
             while stack:
                 z, x, y = stack.pop()

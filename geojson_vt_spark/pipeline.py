@@ -248,25 +248,22 @@ def _shift_df(df: DataFrame, offset: float) -> DataFrame:
 
 
 def wrap_df(df: DataFrame, options: TileOptions,
-            counts: tuple[int, int] | None = None) -> DataFrame:
+            counts: tuple[int, int]) -> DataFrame:
     """Distributed dateline wrap (/root/reference/src/wrap.js:5-19).
 
     ord_path gains a [world, ..., slice] envelope; world 0/1/2 =
     left/center/right reproduces the reference's concat order.
 
-    One tiny agg decides whether side copies exist: the left clip
-    window is [-1-b, b] and projected x ≥ 0 > -1-b always, so the clip
-    output is non-empty iff some feature bbox reaches x ≤ b (point clip
-    keeps x == k2 inclusively, clip.js:92, hence <=); a candidate whose
-    clip comes out empty only adds an empty union branch — harmless —
-    so the bbox test errs exclusively on the safe side."""
+    ``counts`` = (left, right) wrap-candidate counts decide whether side
+    copies exist: features whose bbox reaches x ≤ b, resp. x ≥ 1 - b
+    (the ingest job observes them).  The left clip window is [-1-b, b]
+    and projected x ≥ 0 > -1-b always, so the clip output is non-empty
+    iff some feature bbox reaches x ≤ b (point clip keeps x == k2
+    inclusively, clip.js:92, hence <=); a candidate whose clip comes
+    out empty only adds an empty union branch — harmless — so the bbox
+    test errs exclusively on the safe side."""
     b = options.buffer / options.extent
 
-    if counts is None:
-        row = df.agg(
-            F.sum((F.col("minx") <= b).cast("long")).alias("l"),
-            F.sum((F.col("maxx") >= 1 - b).cast("long")).alias("r")).first()
-        counts = (row["l"] or 0, row["r"] or 0)
     has_left = bool(counts[0])
     has_right = bool(counts[1])
 

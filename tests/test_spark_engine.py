@@ -152,11 +152,13 @@ def test_wrap_build_kill_resume(spark, tmp_path):
 
 
 def test_root_only_build_kill_resume(spark, tmp_path):
-    """A root-only build (the z0 tile stops) renders z0 and keeps its
-    whole source in sources/z=0; no other tile exists.  A kill before
-    the final lineage row, with the z0 render lost, restarts cleanly,
-    and the resumed pyramid — drill-downs through the z0 source
-    included — equals LocalTileIndex."""
+    """A root-only build (the z0 tile stops) renders z0 and keeps no
+    copy of its source: drills read the z0 frontier, here a view over
+    the features checkpoint, so sources/z=0 does not exist; no other
+    tile exists.  A kill before the final lineage row, with the z0
+    render lost, restarts cleanly, and the resumed pyramid —
+    drill-downs through the z0 source included — equals
+    LocalTileIndex."""
     import shutil
 
     data = _clustered_collection(7, 150)
@@ -168,7 +170,8 @@ def test_root_only_build_kill_resume(spark, tmp_path):
     rows = eng.tiles().collect()
     assert [(r["z"], r["is_split"], r["has_source"]) for r in rows] == \
         [(0, False, True)]
-    assert (wd / "sources" / "z=0" / "_SUCCESS").exists()
+    assert not (wd / "sources" / "z=0").exists()
+    assert not (wd / "frontier").exists()
     assert not (wd / "subtree").exists()
 
     lin = _lineage(wd)
@@ -178,6 +181,104 @@ def test_root_only_build_kill_resume(spark, tmp_path):
     resumed.build_from_converted(feats, resume=True)
     assert_engine_matches_index(resumed, LocalTileIndex(data, opts),
                                 [(3, 2, 3), (6, 18, 24), (9, 150, 192)])
+
+
+def test_resume_of_finished_build_runs_no_job(spark, tmp_path):
+    """build_from_converted(resume=True) on a finished build reads the
+    lineage first and returns without a Spark job: it does not
+    re-aggregate the features checkpoint."""
+    from .test_pipeline import _mixed_collection
+
+    data = _mixed_collection(9, 40)
+    opts = TileOptions(max_zoom=8, index_max_zoom=3, index_max_points=20)
+    feats = _feats(spark, data, opts)
+    SparkTileEngine(spark, opts, workdir=str(tmp_path)).build_from_converted(
+        feats)
+    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    sc = spark.sparkContext
+    sc.setJobGroup("gvt-resume-finished", "resume a finished build")
+    try:
+        resumed.build_from_converted(feats, resume=True)
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(
+            "gvt-resume-finished"))
+        sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"no-op resume ran {n_jobs} Spark jobs"
+    assert_engine_matches_index(resumed, LocalTileIndex(data, opts))
+
+
+def test_concurrent_get_tile_waits_for_drill(spark, tmp_path, monkeypatch):
+    """Two clients of one engine: while the first drills the z0 source,
+    a second request under that source waits for the drill.  Without
+    the engine lock it walked past the consumed source, before the
+    drill had written the children that now hold it, and answered None
+    for a tile that exists.  Then more clients than cores drill one
+    fresh engine with frequent thread switches; every answer equals
+    LocalTileIndex."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from geojson_vt_spark.kernel import tile as ktile
+
+    data = _clustered_collection(7, 150)
+    opts = TileOptions(index_max_zoom=5, index_max_points=100_000)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    eng.build_from_converted(_feats(spark, data, opts))
+    eng.warm()
+    idx = LocalTileIndex(data, opts)
+    # two z3 tiles that exist, in different z1 quadrants
+    pick = LocalTileIndex(data, opts)
+    first, second = [next(c for c in sorted(
+        (3, x, y) for x in range(8) for y in range(8)
+        if x >> 2 == qx and y >> 2 == qy) if pick.get_tile(*c))
+        for qx, qy in ((0, 0), (1, 0))]
+
+    real = ktile.create_tile
+    started, release = threading.Event(), threading.Event()
+
+    def paused(*args, **kwargs):
+        if not started.is_set():
+            started.set()
+            release.wait(timeout=30)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ktile, "create_tile", paused)
+    got: dict = {}
+
+    def client(c):
+        got[c] = eng.get_tile(*c)
+
+    a = threading.Thread(target=client, args=(first,))
+    a.start()
+    assert started.wait(timeout=60)
+    b = threading.Thread(target=client, args=(second,))
+    b.start()
+    b.join(timeout=2)  # unguarded, the second client answers here
+    release.set()
+    a.join(timeout=60)
+    b.join(timeout=60)
+    assert not a.is_alive() and not b.is_alive()
+    for c in (first, second):
+        assert got[c] is not None, c
+        assert got[c]["features"] == idx.get_tile(*c)["features"], c
+
+    fresh = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    coords = [(z, x, y) for z in (2, 4, 5) for x in range(0, 1 << z, 3)
+              for y in range(1 << z >> 2, 1 << z >> 1)][:48]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=12) as pool:
+            futs = [pool.submit(fresh.get_tile, *c) for c in coords]
+            answers = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    for c, a in zip(coords, answers):
+        want = idx.get_tile(*c)
+        assert (a is None) == (want is None), c
+        if a is not None:
+            assert a["features"] == want["features"], c
 
 
 def test_spark_get_tiles_batch(spark, tmp_path):
@@ -222,7 +323,7 @@ def test_spark_tile_coords_matches_reference_order(spark, tmp_path):
 
 def test_spark_get_tiles_all_hit_two_jobs(spark, tmp_path):
     """An all-hit batch (distributed + subtree tiles, several zooms)
-    must resolve in at most 2 Spark jobs (VERDICT r1 #7)."""
+    runs no Spark job: the stores are read on the driver."""
     eng = SparkTileEngine(spark, TileOptions(index_max_zoom=3,
                                              index_max_points=200),
                           workdir=str(tmp_path))
@@ -237,17 +338,17 @@ def test_spark_get_tiles_all_hit_two_jobs(spark, tmp_path):
     batch = eng.get_tiles(coords)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("gvt-batch-hit"))
     sc.setJobGroup(None, None)
-    assert n_jobs <= 2, f"all-hit batch ran {n_jobs} Spark jobs"
+    assert n_jobs == 0, f"all-hit batch ran {n_jobs} Spark jobs"
     for c in coords:
         one = eng.get_tile(*c)
         assert batch[c]["features"] == one["features"]
 
 
 def test_spark_batch_deep_drill_bounded_jobs(spark, tmp_path):
-    """A get_tiles batch of 100+ drill-down descendants of one retained
-    source must resolve in a BOUNDED number of Spark jobs (existence
-    fetch + the 2-job drill prefetch — VERDICT r2 #8), with outputs
-    identical to the reference kernel per-call path."""
+    """A get_tiles batch of 100+ drill-down descendants of two retained
+    sources runs no Spark job (the hit, meta and source reads are
+    driver-side), with outputs identical to the reference kernel
+    per-call path."""
     from geojson_vt_spark.kernel import LocalTileIndex
 
     data = load_fixture("us-states.json")
@@ -277,7 +378,7 @@ def test_spark_batch_deep_drill_bounded_jobs(spark, tmp_path):
     batch = eng.get_tiles(coords)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("gvt-batch-drill"))
     sc.setJobGroup(None, None)
-    assert n_jobs <= 4, f"deep-drill batch ran {n_jobs} Spark jobs"
+    assert n_jobs == 0, f"deep-drill batch ran {n_jobs} Spark jobs"
 
     ref = LocalTileIndex(data, opts)
     for c in coords:

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from geojson_vt_spark import TileOptions
+from geojson_vt_spark.engine import SparkTileEngine
 from geojson_vt_spark.kernel import LocalTileIndex
 
 FIXTURE_DIR = "/root/reference/test/fixtures"
@@ -36,7 +38,10 @@ def assert_engine_matches_index(eng, idx, probes=()):
     """A built SparkTileEngine must equal the kernel LocalTileIndex over
     the same input: the same tiles with the same features and stats,
     tileCoords order, and tile count; then each drill probe on both
-    sides, and tileCoords again with the drilled tiles appended."""
+    sides, and tileCoords again with the drilled tiles appended.
+    Last, a fresh engine over the same workdir serves one get_tiles
+    batch — every built tile, the probes and an out-of-range key —
+    without a Spark job, equal to LocalTileIndex."""
     want_stats = {(t.z, t.x, t.y): (
         t.num_features, t.num_points, t.num_simplified,
         t.minx, t.miny, t.maxx, t.maxy, t.source is None)
@@ -60,3 +65,21 @@ def assert_engine_matches_index(eng, idx, probes=()):
         if a is not None:
             assert a["features"] == b["features"], zxy
     assert eng.tile_coords() == idx.tile_coords
+
+    fresh = SparkTileEngine(eng.spark, eng.options, workdir=eng.workdir)
+    batch = [*want_stats, *probes, (25, 0, 0)]
+    sc = eng.spark.sparkContext
+    group = f"gvt-batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one get_tiles batch")
+    try:
+        got = fresh.get_tiles(batch)
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"get_tiles batch ran {n_jobs} Spark jobs"
+    for zxy in batch:
+        a, b = got[zxy], idx.get_tile(*zxy)
+        assert (a is None) == (b is None), zxy
+        if a is not None:
+            assert a["features"] == b["features"], zxy
+    assert fresh.tile_coords() == idx.tile_coords
