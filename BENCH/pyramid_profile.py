@@ -48,8 +48,7 @@ def main() -> None:
                .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                        "20000")
-               .config("spark.sql.parquet.compression.codec",
-                       os.environ.get("GVT_CODEC", "zstd"))
+               .config("spark.sql.parquet.compression.codec", "zstd")
                .config("spark.ui.enabled", "false"))
     if cpus:
         builder = (builder.master(f"local[{cpus}]")

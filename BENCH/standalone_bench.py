@@ -48,8 +48,7 @@ def main() -> None:
                # zstd for the per-zoom stores: ~16% fewer bytes and a
                # faster decode than snappy (measured on the frontier
                # store) — the build is store-I/O-heavy at scale
-               .config("spark.sql.parquet.compression.codec",
-                       os.environ.get("GVT_CODEC", "zstd"))
+               .config("spark.sql.parquet.compression.codec", "zstd")
                .config("spark.ui.enabled", "false"))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -80,6 +80,9 @@ _Z0_ORD_ENVELOPE = (1, 0)
 # the has_source / bbox columns a drill reads for a stored tile
 _META_COLUMNS = ["has_source", "minx", "miny", "maxx", "maxy"]
 
+# the build's output stores (the features checkpoint is ingest's)
+_STORES = ("tiles", "tilefeat", "frontier", "sources", "subtree")
+
 
 class SparkTileEngine:
     def __init__(self, spark: SparkSession, options: TileOptions | None = None,
@@ -204,9 +207,11 @@ class SparkTileEngine:
         """Iceberg-style commit metadata, written per lineage append
         (caller holds the lineage lock).
 
-        Each commit records WHICH store directories it made durable and
-        their exact file manifests (name + byte size), then atomically
-        advances VERSION.json (write-temp + rename — the same
+        The forest appends its lineage rows only after every store is
+        durable, so the FINAL commit records the exact file manifest
+        (name + byte size) of every store directory
+        (_store_manifests); each commit then atomically advances
+        VERSION.json (write-temp + rename — the same
         single-pointer commit protocol Iceberg's version-hint uses).
         A reader that follows VERSION → snapshot → manifests sees only
         complete commits; ``verify_snapshot`` audits the manifests
@@ -216,24 +221,12 @@ class SparkTileEngine:
         semantics the north rule needs — snapshot isolation for
         resume — on plain parquet dirs."""
         if "zoom" in row:
-            z = row["zoom"]
             op = "append-zoom"
-            stores = [f"tiles/z={z}", f"tilefeat/z={z}",
-                      f"frontier/z={z}", f"sources/z={z}", "features"]
         elif "subtree_batch" in row:
             op = "subtree-batch"
-            stores = [f"subtree/b={row['subtree_batch']}"]
         else:
             op = "misc"
-            stores = []
-        manifests = {}
-        for s in stores:
-            p = self._p(*s.split("/"))
-            if not os.path.isdir(p):
-                continue
-            manifests[s] = [
-                {"name": fn, "bytes": os.path.getsize(os.path.join(p, fn))}
-                for fn in sorted(os.listdir(p))]
+        manifests = self._store_manifests() if row.get("final") else {}
         prev = self.current_snapshot_id()
         sid = prev + 1
         os.makedirs(self._snap_dir(), exist_ok=True)
@@ -255,6 +248,21 @@ class SparkTileEngine:
         with open(tmp, "w") as fh:
             json.dump({"snapshot_id": sid}, fh)
         os.replace(tmp, self._version_path())
+
+    def _store_manifests(self) -> dict:
+        """{store dir relative to the workdir: [{name, bytes}]} for every
+        file under the build's stores — the final commit's manifest, so
+        no level or part of any store escapes verify_snapshot."""
+        manifests = {}
+        for store in ("features", *_STORES):
+            for d, _, files in sorted(os.walk(self._p(store))):
+                if files:
+                    rel = os.path.relpath(d, self.workdir).replace(os.sep, "/")
+                    manifests[rel] = [
+                        {"name": fn,
+                         "bytes": os.path.getsize(os.path.join(d, fn))}
+                        for fn in sorted(files)]
+        return manifests
 
     def snapshots(self) -> list[dict]:
         """All committed snapshots up to the current VERSION pointer,
@@ -902,8 +910,7 @@ class SparkTileEngine:
         another shape, would surface through the root-level readers
         (tiles(), _read) as phantom tiles."""
         import shutil
-        for store in ("tiles", "tilefeat", "frontier", "sources",
-                      "subtree", "snapshots"):
+        for store in (*_STORES, "snapshots"):
             p = self._p(store)
             if os.path.isdir(p):
                 shutil.rmtree(p)
@@ -941,6 +948,7 @@ class SparkTileEngine:
               else z0_stats)
         pool = ThreadPoolExecutor(max_workers=4)
         futures: list = []
+        errors: list = []
         try:
             if r0 is None:
                 # empty input: no tiles, as LocalTileIndex builds none
@@ -950,10 +958,18 @@ class SparkTileEngine:
                     "forest": True, "complete": True, "final": True})
             else:
                 self._build_forest(r0, pool, futures)
-        finally:
-            for f in futures:
+        except BaseException as e:
+            errors.append(e)
+        # a failed build leaves no stage running: every stage is
+        # awaited before the first error propagates
+        for f in futures:
+            try:
                 f.result()
-            pool.shutdown()
+            except BaseException as e:
+                errors.append(e)
+        pool.shutdown()
+        if errors:
+            raise errors[0]
 
     # ------------------------------------------------------------ read side
 

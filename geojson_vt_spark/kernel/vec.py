@@ -1112,32 +1112,10 @@ def concat_rags(parts: list[Rags]) -> Rags:
     return out
 
 
-def arrays_to_rags(coords_list, ring_lens3_list, gcodes, poly_lens_list,
-                   sizes_list, starts_list, ends_list):
-    """Column-of-arrays (one Arrow batch) → Rags, vectorized.
-
-    Only MultiPolygon features need a scalar loop (poly regrouping);
-    everything else is np.concatenate / repeat / ragged_arange."""
-    n = len(gcodes)
-    nr = np.fromiter((len(r) for r in ring_lens3_list), dtype=np.int64,
-                     count=n)
-    R = int(nr.sum())
-    rlens3 = (np.concatenate(ring_lens3_list).astype(np.int64)
-              if R else np.empty(0, dtype=np.int64))
-    xyz = (np.concatenate(coords_list)
-           if n else np.empty(0))
-    rsize = (np.concatenate(sizes_list) if R else np.empty(0))
-    rstart = (np.concatenate(starts_list) if R else np.empty(0))
-    rend = (np.concatenate(ends_list) if R else np.empty(0))
-    return flats_to_rags(xyz, nr, rlens3, rsize, rstart, rend, gcodes,
-                         poly_lens_list.__getitem__)
-
-
 def flats_to_rags(xyz, nr, rlens3, rsize, rstart, rend, gcodes,
                   poly_lens_for):
-    """Flat ragged buffers → Rags: the zero-boxing constructor both the
-    pandas column-of-arrays path (arrays_to_rags) and the Arrow-native
-    path (pipeline._arrow_state) share.
+    """Flat ragged buffers → Rags: the zero-boxing constructor behind
+    the Arrow ingress (pipeline._arrow_state).
 
     xyz: all coords concatenated; nr: rings per feature; rlens3:
     concatenated ring lens (×3); rsize/rstart/rend: concatenated ring
@@ -1419,14 +1397,3 @@ def convert_rows_to_records(rows, options) -> list[dict]:
         })
     return records
 
-
-def convert_rows_to_state(rows, options):
-    """Batch convert straight to the split-state tuple — skips the
-    record-dict round trip (build + re-parse) that the parquet-row
-    format needs; used by in-process subtree builds and benchmarks."""
-    ords, gcodes_l, fids, tagss, ringss = parse_feature_rows(rows, options)
-    gcodes = np.asarray(gcodes_l, dtype=np.int64)
-    rags = build_rags(gcodes_l, ringss, options)
-    minx, miny, maxx, maxy = feature_bboxes(rags, gcodes)
-    return (rags, gcodes, minx, miny, maxx, maxy,
-            list(fids), list(tagss), list(ords))

@@ -45,13 +45,6 @@ FEATURE_FIELDS = [
 
 FEATURE_SCHEMA = T.StructType(FEATURE_FIELDS)
 
-TILED_FEATURE_SCHEMA = T.StructType([
-    T.StructField("z", T.IntegerType(), False),
-    T.StructField("x", T.IntegerType(), False),
-    T.StructField("y", T.IntegerType(), False),
-    *FEATURE_FIELDS,
-])
-
 FEATURE_COLUMNS = [f.name for f in FEATURE_FIELDS]
 TILED_COLUMNS = ["z", "x", "y", *FEATURE_COLUMNS]
 
@@ -135,9 +128,3 @@ def records_to_pdf(records: list[dict],
     cols = {name: [r[name] for r in records] for name in columns}
     return pd.DataFrame(cols, columns=columns)
 
-
-def pdf_rows(pdf: pd.DataFrame):
-    """Iterate a pandas batch as plain record dicts."""
-    arrays = {c: pdf[c].to_numpy() for c in pdf.columns}
-    for i in range(len(pdf)):
-        yield {c: arrays[c][i] for c in pdf.columns}

@@ -7,6 +7,12 @@ the z0 frontier in a few jobs (engine._build_forest):
 - ingest: convert (features_from_json_df) and the dateline wrap
   (wrap_df, Column-level trivial accept/reject, kernel clip only for
   crossing features);
+- clip: ONE path from a cell's ancestor down to the cell — _clip_chain
+  (batch_clip on x then y per level, windows from _cell_window) between
+  one Arrow ingress (_arrow_state) and one Arrow egress
+  (_clip_out_geometry_arrays).  The leaf wave (_wave_cell_kernel), the
+  internal walk and the straggler probe (clip_table_to_cell) run it;
+  the wrap runs the same boundary around a single x clip;
 - cut: slim SQL-text mass aggregations per quadtree cell
   (forest_gate_df, forest_vertex_probe_df) — the stop rule's numPoints
   is ``sum(size(coords)/3)`` (src/index.js:107), so Catalyst runs them
@@ -32,8 +38,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .model import (FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS,
-                    TILED_FEATURE_SCHEMA, records_to_pdf)
+                    records_to_pdf)
 from .options import TileOptions
+
+# parquet codec of the task-side store writes (subtree, tilefeat and
+# sources parts)
+_CODEC = "zstd"
 
 # ---------------------------------------------------------------- ingest
 
@@ -89,96 +99,90 @@ def _ord_extend(world: int | None, idx_col):
     return F.concat(*cols)
 
 
-def _clip_df(df: DataFrame, k1: float, k2: float, axis: int,
-             options: TileOptions, world: int) -> DataFrame:
-    """Clip every feature to [k1,k2] on ``axis`` (scale 1), prepending
+def _clip_df(df: DataFrame, k1: float, k2: float, options: TileOptions,
+             world: int) -> DataFrame:
+    """Clip every feature to [k1, k2] on x (scale 1), prepending
     ``world`` and appending the within-feature slice index to ord_path.
 
-    Column-level trivial accept/reject; only crossing features hit the
-    pandas kernel."""
-    lo, hi = ("minx", "maxx") if axis == 0 else ("miny", "maxy")
-    accept = (F.col(lo) >= k1) & (F.col(hi) < k2)
-    reject = (F.col(hi) < k1) | (F.col(lo) >= k2)
-
-    passed = df.where(accept).withColumn(
-        "ord_path", _ord_extend(world, F.lit(0)))
-
-    crossing = df.where(~accept & ~reject)
+    Column-level trivial accept/reject; only crossing features cross
+    the Arrow boundary (_arrow_state → batch_clip →
+    _clip_out_geometry_arrays)."""
+    accept = (F.col("minx") >= k1) & (F.col("maxx") < k2)
+    reject = (F.col("maxx") < k1) | (F.col("minx") >= k2)
     lm = options.line_metrics
 
     def run(batches):
-        from .kernel.vec import batch_clip
-        for pdf in batches:
-            (rags, gcodes, mnx, mny, mxx, mxy,
-             fids, tagss, ords_in) = _pdf_state(pdf)
-            n = len(gcodes)
-            res = batch_clip(rags, gcodes, mnx, mny, mxx, mxy,
-                             np.full(n, k1), np.full(n, k2), axis, lm)
-            ords = [[world, *ords_in[int(sr)], int(i)]
-                    for sr, i in zip(res.src, res.sub_ord)]
-            yield _clip_out_pdf(res, fids, tagss, ords)
+        import pyarrow as pa
 
-    clipped = crossing.mapInPandas(run, FEATURE_SCHEMA)
+        from .kernel.vec import batch_clip
+        for rb in batches:
+            tbl = pa.Table.from_batches([rb])
+            state = _arrow_state(tbl, sort=False, strings=False)[:6]
+            n = rb.num_rows
+            res = batch_clip(*state, np.full(n, k1), np.full(n, k2), 0, lm)
+            yield from _feature_table(
+                tbl, res.src, res.sub_ord[:, None],
+                _clip_out_geometry_arrays(res)).to_batches()
+
+    passed = df.where(accept).withColumn(
+        "ord_path", _ord_extend(world, F.lit(0)))
+    clipped = (df.where(~accept & ~reject).mapInArrow(run, FEATURE_SCHEMA)
+               .withColumn("ord_path", F.concat(
+                   F.array(F.lit(world).cast("long")), F.col("ord_path"))))
     return passed.unionByName(clipped)
 
 
-def _pdf_state(pdf):
-    """One Arrow batch of FEATURE/TILED rows → (rags, gcodes, bboxes,
-    fids, tags, ords), fully vectorized at the boundary."""
-    from .kernel.vec import GT_CODE, arrays_to_rags
-    gtypes = pdf["gtype"].to_numpy()
-    n = len(gtypes)
-    gcodes = np.fromiter((GT_CODE[g] for g in gtypes), dtype=np.int64,
-                         count=n)
-    rags = arrays_to_rags(
-        pdf["coords"].to_numpy(), pdf["ring_lens"].to_numpy(), gcodes,
-        pdf["poly_lens"].to_numpy(), pdf["ring_size"].to_numpy(),
-        pdf["ring_start"].to_numpy(), pdf["ring_end"].to_numpy())
-    return (rags, gcodes,
-            pdf["minx"].to_numpy(dtype=np.float64),
-            pdf["miny"].to_numpy(dtype=np.float64),
-            pdf["maxx"].to_numpy(dtype=np.float64),
-            pdf["maxy"].to_numpy(dtype=np.float64),
-            pdf["fid_json"].to_numpy(), pdf["tags_json"].to_numpy(),
-            pdf["ord_path"].to_numpy())
+def _ord_append(ords, rows, tail):
+    """The ord_path list column at ``rows`` with row i of the int matrix
+    ``tail`` appended to row i, built through the list offsets (so any
+    ord width, fixed or mixed, takes the same path)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .kernel.vec import ragged_arange
+    lens = pc.list_value_length(ords).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    flat = pc.list_flatten(ords).to_numpy(zero_copy_only=False)
+    ioff = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=ioff[1:])
+    k, w = tail.shape
+    rows = np.asarray(rows, dtype=np.int64)
+    olen = lens[rows]
+    ooff = np.zeros(k + 1, dtype=np.int64)
+    np.cumsum(olen + w, out=ooff[1:])
+    out = np.empty(int(ooff[-1]), dtype=np.int64)
+    row = np.repeat(np.arange(k), olen)
+    rel = ragged_arange(olen)
+    out[ooff[row] + rel] = flat[ioff[rows][row] + rel]
+    out[(ooff[:-1] + olen)[:, None] + np.arange(w)] = tail
+    return pa.ListArray.from_arrays(
+        pa.array(ooff.astype(np.int32), pa.int32()),
+        pa.array(out, pa.int64()))
 
 
-def _clip_out_pdf(res, fids, tagss, ords, extra=None,
-                  src=None) -> pd.DataFrame:
-    """ClipResult → FEATURE_SCHEMA pandas batch via np.split columns.
+def _feature_table(tbl, rows, tail, geo=None):
+    """FEATURE_COLUMNS of ``tbl`` at ``rows`` as one Arrow table:
+    ord_path gains ``tail`` (_ord_append), fid/tags are taken, and the
+    geometry columns are ``geo`` (a clip's _clip_out_geometry_arrays)
+    or, when None, the rows' own."""
+    import pyarrow as pa
 
-    ``src`` maps each output feature to the index space of fids/tagss
-    (defaults to res.src — pass the composed mapping when the result
-    came from a chained clip)."""
-    from .kernel.vec import GTYPES, rags_split_columns
-    if src is None:
-        src = res.src
-    coords, ring_lens, poly_lens, sizes, starts, ends = \
-        rags_split_columns(res.rags, res.gcodes)
-    data = {}
-    if extra:
-        data.update(extra)
-    data.update({
-        "ord_path": ords,
-        "fid_json": [fids[int(i)] for i in src],
-        "tags_json": [tagss[int(i)] for i in src],
-        "gtype": [GTYPES[int(c)] for c in res.gcodes],
-        "coords": coords, "ring_lens": ring_lens, "poly_lens": poly_lens,
-        "ring_size": sizes, "ring_start": starts, "ring_end": ends,
-        "minx": res.minx, "miny": res.miny,
-        "maxx": res.maxx, "maxy": res.maxy,
-    })
-    cols = (list(extra) if extra else []) + FEATURE_COLUMNS
-    return pd.DataFrame(data, columns=cols)
+    idx = pa.array(np.asarray(rows, dtype=np.int64))
+    geo = geo or {}
+    return pa.Table.from_arrays(
+        [_ord_append(tbl.column("ord_path"), rows, tail)]
+        + [geo[c] if c in geo else tbl.column(c).take(idx)
+           for c in FEATURE_COLUMNS[1:]],
+        names=FEATURE_COLUMNS)
 
 
 def _clip_out_geometry_arrays(res) -> dict:
     """ClipResult → Arrow arrays for the FEATURE geometry columns
     (gtype/coords/ring_lens/poly_lens/ring metrics/bbox), built
     straight from the rag flats with ``pa.ListArray.from_arrays`` —
-    the Arrow egress twin of _clip_out_pdf, with zero per-feature
-    object boxing.  poly_lens regrouping is a flat bincount over
-    global (feature, poly) ids instead of the per-MultiPolygon loop."""
+    the one Arrow egress of every clip, with zero per-feature object
+    boxing.  poly_lens regrouping is a flat bincount over global
+    (feature, poly) ids instead of the per-MultiPolygon loop."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -270,9 +274,9 @@ def wrap_df(df: DataFrame, options: TileOptions,
     if not has_left and not has_right:
         return df.withColumn("ord_path", _ord_extend(1, F.lit(0)))
 
-    left = _shift_df(_clip_df(df, -1 - b, b, 0, options, 0), 1.0)
-    right = _shift_df(_clip_df(df, 1 - b, 2 + b, 0, options, 2), -1.0)
-    center = _clip_df(df, -b, 1 + b, 0, options, 1)
+    left = _shift_df(_clip_df(df, -1 - b, b, options, 0), 1.0)
+    right = _shift_df(_clip_df(df, 1 - b, 2 + b, options, 2), -1.0)
+    center = _clip_df(df, -b, 1 + b, options, 1)
     parts = []
     if has_left:
         parts.append(left)
@@ -283,208 +287,6 @@ def wrap_df(df: DataFrame, options: TileOptions,
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-# ---------------------------------------------------------------- split
-
-def _split_crossing_tables(tbl, z: int, options: TileOptions, mask):
-    """The crossing half of a one-level split over one Arrow table: for
-    each child quadrant flagged in ``mask`` (bit q = dy*2+dx), clip the
-    row's geometry against the buffered child window (the x-then-y
-    clip sequence of src/index.js:134-147) and yield one pa.Table of
-    TILED_COLUMNS per non-empty (dx, dy) pass."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .kernel.vec import batch_clip, take_features
-
-    z2 = 1 << z
-    k1c = 0.5 * options.buffer / options.extent
-    k2c = 0.5 - k1c
-    k3c = 0.5 + k1c
-    k4c = 1 + k1c
-    lm = options.line_metrics
-    n = tbl.num_rows
-    if not n:
-        return
-    (rags, gcodes, mnx, mny, mxx, mxy,
-     _, _) = _arrow_state(tbl, sort=False, strings=False)
-    tbl = tbl.combine_chunks()
-    fid_col = tbl.column("fid_json").chunk(0)
-    tags_col = tbl.column("tags_json").chunk(0)
-    ord_lens = pc.fill_null(
-        pc.list_value_length(tbl.column("ord_path")),
-        0).to_numpy(zero_copy_only=False).astype(np.int64)
-    ord_flat = pc.list_flatten(tbl.column("ord_path")).to_numpy(
-        zero_copy_only=False).astype(np.int64, copy=False)
-    fixed = ord_lens.min() == ord_lens.max()
-    if fixed:
-        w = int(ord_lens[0])
-        ords_mat = ord_flat.reshape(n, w)
-    else:  # mixed-depth ord groups (never produced by one build)
-        ooffs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(ord_lens, out=ooffs[1:])
-
-    def _np(name, dtype):
-        return tbl.column(name).to_numpy(
-            zero_copy_only=False).astype(dtype, copy=False)
-
-    tx = _np("x", np.int64)
-    ty = _np("y", np.int64)
-    for dx in (0, 1):
-        selx = np.nonzero(mask & ((1 << dx) | (1 << (dx + 2))))[0]
-        if not len(selx):
-            continue
-        xk1 = (tx[selx] + (k2c if dx else -k1c)) / z2
-        xk2 = (tx[selx] + (k4c if dx else k3c)) / z2
-        side = batch_clip(take_features(rags, selx), gcodes[selx],
-                          mnx[selx], mny[selx], mxx[selx], mxy[selx],
-                          xk1, xk2, 0, lm)
-        if side.n_feats == 0:
-            continue
-        side_orig = selx[side.src]  # original record index
-        for dy in (0, 1):
-            q = dy * 2 + dx
-            keep = np.nonzero(mask[side_orig] & (1 << q))[0]
-            if not len(keep):
-                continue
-            sub = take_features(side.rags, keep)
-            yk1 = (ty[side_orig[keep]] + (k2c if dy else -k1c)) / z2
-            yk2 = (ty[side_orig[keep]] + (k4c if dy else k3c)) / z2
-            resq = batch_clip(sub, side.gcodes[keep],
-                              side.minx[keep], side.miny[keep],
-                              side.maxx[keep], side.maxy[keep],
-                              yk1, yk2, 1, lm)
-            k = resq.n_feats
-            if k == 0:
-                continue
-            orig = side_orig[keep][resq.src]
-            xi = side.sub_ord[keep][resq.src]
-            if fixed:
-                out_mat = np.empty((k, w + 2), dtype=np.int64)
-                out_mat[:, :w] = ords_mat[orig]
-                out_mat[:, w] = xi
-                out_mat[:, w + 1] = resq.sub_ord
-                ord_arr = pa.ListArray.from_arrays(
-                    pa.array((np.arange(k + 1) * (w + 2)).astype(
-                        np.int32), pa.int32()),
-                    pa.array(out_mat.ravel(), pa.int64()))
-            else:
-                ord_arr = pa.array(
-                    [[*ord_flat[ooffs[o]:ooffs[o + 1]],
-                      int(i), int(j)]
-                     for o, i, j in zip(orig, xi, resq.sub_ord)],
-                    pa.list_(pa.int64()))
-            geo = _clip_out_geometry_arrays(resq)
-            idx = pa.array(orig)
-            arrays = [
-                pa.array(np.full(k, z + 1, dtype=np.int32),
-                         pa.int32()),
-                pa.array((tx[orig] * 2 + dx).astype(np.int32),
-                         pa.int32()),
-                pa.array((ty[orig] * 2 + dy).astype(np.int32),
-                         pa.int32()),
-                ord_arr,
-                pc.take(fid_col, idx),
-                pc.take(tags_col, idx),
-                geo["gtype"], geo["coords"], geo["ring_lens"],
-                geo["poly_lens"], geo["ring_size"],
-                geo["ring_start"], geo["ring_end"],
-                geo["minx"], geo["miny"], geo["maxx"], geo["maxy"],
-            ]
-            yield pa.Table.from_arrays(arrays, names=TILED_COLUMNS)
-
-
-def _quadrant_route(tbl, z: int, options: TileOptions):
-    """The trivial accept/reject of a one-level split (clip.js:18-34)
-    over one Arrow table: per row, the per-quadrant trivial-accept
-    booleans (a row may be accepted by several overlapping buffered
-    windows) and the crossing bit-mask (bit q = dy*2+dx)."""
-    z2 = 1 << z
-    k1c = 0.5 * options.buffer / options.extent
-    k2c = 0.5 - k1c
-    k3c = 0.5 + k1c
-    k4c = 1 + k1c
-
-    def _np(name, dtype):
-        return tbl.column(name).to_numpy(
-            zero_copy_only=False).astype(dtype, copy=False)
-
-    tx = _np("x", np.int64)
-    ty = _np("y", np.int64)
-    mnx = _np("minx", np.float64)
-    mny = _np("miny", np.float64)
-    mxx = _np("maxx", np.float64)
-    mxy = _np("maxy", np.float64)
-    n = tbl.num_rows
-    acc = np.zeros((4, n), dtype=bool)
-    mask = np.zeros(n, dtype=np.int64)
-    for q in range(4):
-        dx, dy = q & 1, q >> 1
-        xlo = (tx + (k2c if dx else -k1c)) / z2
-        xhi = (tx + (k4c if dx else k3c)) / z2
-        ylo = (ty + (k2c if dy else -k1c)) / z2
-        yhi = (ty + (k4c if dy else k3c)) / z2
-        acc_q = (mnx >= xlo) & (mxx < xhi) & (mny >= ylo) & (mxy < yhi)
-        rej_q = (mxx < xlo) | (mnx >= xhi) | (mxy < ylo) | (mny >= yhi)
-        acc[q] = acc_q
-        mask |= np.where(~acc_q & ~rej_q, np.int64(1 << q), np.int64(0))
-    return acc, mask
-
-
-def _pass_table(tbl, z: int, acc):
-    """Trivially-accepted (feature, quadrant) child rows as one Arrow
-    table: geometry columns pass through untouched (pc.take), the ord
-    path appends a [0, 0] marker where a clipped row appends its two
-    clip sub-ordinals."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    idx_parts, dx_parts, dy_parts = [], [], []
-    for q in range(4):
-        iq = np.nonzero(acc[q])[0]
-        if len(iq):
-            idx_parts.append(iq)
-            dx_parts.append(np.full(len(iq), q & 1, dtype=np.int64))
-            dy_parts.append(np.full(len(iq), q >> 1, dtype=np.int64))
-    if not idx_parts:
-        return None
-    idx = np.concatenate(idx_parts)
-    dxs = np.concatenate(dx_parts)
-    dys = np.concatenate(dy_parts)
-    k = len(idx)
-    tbl = tbl.combine_chunks()
-    ord_lens = pc.fill_null(
-        pc.list_value_length(tbl.column("ord_path")),
-        0).to_numpy(zero_copy_only=False).astype(np.int64)
-    ord_flat = pc.list_flatten(tbl.column("ord_path")).to_numpy(
-        zero_copy_only=False).astype(np.int64, copy=False)
-    if ord_lens.min() == ord_lens.max():
-        w = int(ord_lens[0]) if len(ord_lens) else 0
-        out_mat = np.zeros((k, w + 2), dtype=np.int64)
-        out_mat[:, :w] = ord_flat.reshape(-1, w)[idx]
-        ord_arr = pa.ListArray.from_arrays(
-            pa.array((np.arange(k + 1) * (w + 2)).astype(np.int32),
-                     pa.int32()),
-            pa.array(out_mat.ravel(), pa.int64()))
-    else:  # mixed-depth ord groups (never produced by one build)
-        offs = np.zeros(len(ord_lens) + 1, dtype=np.int64)
-        np.cumsum(ord_lens, out=offs[1:])
-        ord_arr = pa.array(
-            [[*ord_flat[offs[i]:offs[i + 1]], 0, 0] for i in idx],
-            pa.list_(pa.int64()))
-    take = pa.array(idx)
-    tx = tbl.column("x").to_numpy(zero_copy_only=False).astype(np.int64)
-    ty = tbl.column("y").to_numpy(zero_copy_only=False).astype(np.int64)
-    arrays = [
-        pa.array(np.full(k, z + 1, dtype=np.int32), pa.int32()),
-        pa.array((tx[idx] * 2 + dxs).astype(np.int32), pa.int32()),
-        pa.array((ty[idx] * 2 + dys).astype(np.int32), pa.int32()),
-        ord_arr,
-    ]
-    for name in TILED_COLUMNS[4:]:
-        arrays.append(pc.take(tbl.column(name).chunk(0), take))
-    return pa.Table.from_arrays(arrays, names=TILED_COLUMNS)
 
 
 # ---------------------------------------------------------------- assembly
@@ -1060,13 +862,12 @@ def _write_subtree_part(out_pdf: pd.DataFrame, out_dir: str,
 
     from pyspark.sql.pandas.types import to_arrow_schema
     os.makedirs(out_dir, exist_ok=True)
-    codec = os.environ.get("GVT_CODEC", "zstd")
     path = os.path.join(out_dir, f"part-z{z}-x{x}-y{y}.parquet")
     tmp = path + ".inprogress"
     pq.write_table(
         pa.Table.from_pandas(out_pdf, schema=to_arrow_schema(SUBTREE_SCHEMA),
                              preserve_index=False),
-        tmp, compression=codec)
+        tmp, compression=_CODEC)
     os.replace(tmp, path)
 
 
@@ -1154,50 +955,79 @@ def _arrow_state(tbl, sort=True, strings=True):
             _np("tags_json") if strings else None)
 
 
+def _window_consts(options: TileOptions) -> tuple:
+    """(k1, k2, k3, k4) of splitTile (src/index.js) in tile units: the buffered child windows are [x - k1, x + k3] (left) and
+    [x + k2, x + k4] (right) around parent coordinate x."""
+    k1c = 0.5 * options.buffer / options.extent
+    return k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c
+
+
+def _cell_window(lvl: int, c: int, k1c: float, k2c: float,
+                 k3c: float, k4c: float) -> tuple[float, float]:
+    """Scalar twin of _cell_window_sql: the exact (parent + const) /
+    2^(lvl-1) float pair the kernel clips cell ``c`` at zoom ``lvl``
+    against."""
+    z2l = float(1 << (lvl - 1))
+    par = float(c >> 1)
+    if c & 1:
+        return (par + k2c) / z2l, (par + k4c) / z2l
+    return (par - k1c) / z2l, (par + k3c) / z2l
+
+
+def _clip_chain(state, cz: int, cx: int, cy: int, options: TileOptions,
+                from_zoom: int = 0):
+    """Clip kernel state (rags, gcodes, minx, miny, maxx, maxy) whose
+    features sit in the ``from_zoom`` ancestor of cell (cz, cx, cy)
+    down to that cell: per level, batch_clip on x and then on y against
+    the ancestor's window (_cell_window) — the x-then-y clip sequence
+    of splitTile (src/index.js:134-147), so the result is bit-identical
+    to the recursion's clip-of-clip.  Returns (res, src, subs): the
+    last ClipResult (its rags, gcodes and bboxes are the cell's
+    features), each output feature's input index, and the (n, 2·levels)
+    matrix of its x and y clip sub-ordinals per level."""
+    from .kernel.vec import ClipResult, batch_clip
+
+    k = _window_consts(options)
+    lm = options.line_metrics
+    rags, gcodes, mnx, mny, mxx, mxy = state
+    n = len(gcodes)
+    res = ClipResult(rags, gcodes, np.arange(n), np.zeros(n, np.int64),
+                     mnx, mny, mxx, mxy)
+    src = np.arange(n)
+    subs = np.zeros((n, 0), dtype=np.int64)
+    for lvl in range(from_zoom + 1, cz + 1):
+        lo, hi = _cell_window(lvl, cx >> (cz - lvl), *k)
+        n = res.n_feats
+        side = batch_clip(res.rags, res.gcodes, res.minx, res.miny,
+                          res.maxx, res.maxy, np.full(n, lo),
+                          np.full(n, hi), 0, lm)
+        lo, hi = _cell_window(lvl, cy >> (cz - lvl), *k)
+        m = side.n_feats
+        res = batch_clip(side.rags, side.gcodes, side.minx, side.miny,
+                         side.maxx, side.maxy, np.full(m, lo),
+                         np.full(m, hi), 1, lm)
+        sel = side.src[res.src]
+        src = src[sel]
+        subs = np.column_stack(
+            [subs[sel], side.sub_ord[res.src], res.sub_ord]).astype(
+            np.int64, copy=False)
+    return res, src, subs
+
+
 def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
                       options: TileOptions, out_dir: str) -> int:
     """The per-CELL body of the forest's slot wave
-    (forest_slot_wave_df): clip the z0 candidate rows down to the cell,
-    one x-then-y level at a time with the exact (parent + const)/z2
-    float sequence, then build the whole descendant pyramid in-task and
-    write the cell's subtree part.  Returns the rows written."""
-    import numpy as np
-
-    from .kernel.vec import batch_clip
-
+    (forest_slot_wave_df): clip the z0 candidate rows down to the cell
+    through _clip_chain (routing is a superset by original bbox;
+    trivially-rejected features emit nothing), then build the whole
+    descendant pyramid in-task and write the cell's subtree part.
+    Returns the rows written."""
     (rags, gcodes, mnx, mny, mxx, mxy,
      fids, tagss) = _arrow_state(tbl)
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
-    lm = options.line_metrics
-    # clip the candidates down from z0 to the cell, one
-    # x-then-y level at a time — for level l the windows use the cell's
-    # zoom-l ancestor coordinates with EXACTLY the (parent + const)/z2
-    # float sequence of the single-level case, so a multi-level wave
-    # clip is bit-identical to the in-task recursion's clip-of-clip
-    # (routing is a superset by original bbox; trivially-rejected
-    # features emit nothing)
-    for lvl in range(1, cz + 1):
-        z2l = 1 << (lvl - 1)
-        axl, ayl = cx >> (cz - lvl), cy >> (cz - lvl)
-        pxl, pyl = axl >> 1, ayl >> 1
-        n = rags.n_feats
-        xk1 = np.full(n, (pxl + (k2c if axl & 1 else -k1c)) / z2l)
-        xk2 = np.full(n, (pxl + (k4c if axl & 1 else k3c)) / z2l)
-        side = batch_clip(rags, gcodes, mnx, mny, mxx, mxy,
-                          xk1, xk2, 0, lm)
-        fid_s = fids[side.src]
-        tag_s = tagss[side.src]
-        m = side.n_feats
-        yk1 = np.full(m, (pyl + (k2c if ayl & 1 else -k1c)) / z2l)
-        yk2 = np.full(m, (pyl + (k4c if ayl & 1 else k3c)) / z2l)
-        q = batch_clip(side.rags, side.gcodes, side.minx, side.miny,
-                       side.maxx, side.maxy, yk1, yk2, 1, lm)
-        rags, gcodes = q.rags, q.gcodes
-        mnx, mny, mxx, mxy = q.minx, q.miny, q.maxx, q.maxy
-        fids, tagss = fid_s[q.src], tag_s[q.src]
-    state = (rags, gcodes, mnx, mny, mxx, mxy,
-             fids.tolist(), tagss.tolist(), None)
+    res, src, _ = _clip_chain((rags, gcodes, mnx, mny, mxx, mxy),
+                              cz, cx, cy, options)
+    state = (res.rags, res.gcodes, res.minx, res.miny, res.maxx, res.maxy,
+             fids[src].tolist(), tagss[src].tolist(), None)
     tile_rows, sources = batch_split_subtree(
         None, cz, cx, cy, options, state=state, root_forced_split=False)
     out = _subtree_out_pdf(tile_rows, sources)
@@ -1323,8 +1153,7 @@ def _window_preds(options: TileOptions, x: str, y: str, lvl: str):
     """(reject, inside) SQL predicates of the bbox columns against the
     buffered window of cell (``x``, ``y``) at zoom ``lvl`` — the
     trivial-reject test of clip.js:18-19 and its fully-inside twin."""
-    k1c = 0.5 * options.buffer / options.extent
-    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
+    k = _window_consts(options)
     xlo, xhi = _cell_window_sql(lvl, x, *k)
     ylo, yhi = _cell_window_sql(lvl, y, *k)
     rej = (f"(maxx < {xlo} OR minx >= {xhi} "
@@ -1368,18 +1197,6 @@ def forest_gate_df(frontier0: DataFrame, options: TileOptions,
             .agg(F.expr("sum(_nv) AS m"), F.expr("sum(_in) AS i")))
 
 
-def _cell_window(lvl: int, c: int, k1c: float, k2c: float,
-                 k3c: float, k4c: float) -> tuple[float, float]:
-    """Scalar twin of _cell_window_sql: the exact (parent + const) /
-    2^(lvl-1) float pair the kernel clips cell ``c`` at zoom ``lvl``
-    against."""
-    z2l = float(1 << (lvl - 1))
-    par = float(c >> 1)
-    if c & 1:
-        return (par + k2c) / z2l, (par + k4c) / z2l
-    return (par - k1c) / z2l, (par + k3c) / z2l
-
-
 def forest_vertex_probe_df(frontier0: DataFrame, options: TileOptions,
                            roots: list, levels: list) -> DataFrame:
     """Vertex-survival masses for the forest cut where the bbox
@@ -1417,9 +1234,8 @@ def forest_vertex_probe_df(frontier0: DataFrame, options: TileOptions,
     JVM-side vertex explode (no Python), arithmetic candidate cells
     per vertex, exact strict window filter, partial-agg groupBy
     collapsing to ≤4^lvl rows per level before the only exchange."""
-    k1c = 0.5 * options.buffer / options.extent
-    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
-    b = 2 * k1c
+    k = _window_consts(options)
+    b = 2 * k[0]
 
     overlap = [f"NOT {_window_preds(options, str(rx), str(ry), str(rl))[0]}"
                for rl, rx, ry in roots]
@@ -1475,44 +1291,51 @@ def forest_route_df(frontier0: DataFrame, options: TileOptions,
                         "CAST(_cy AS INT) AS y", *FEATURE_COLUMNS))
 
 
-def _empty_tiled_table():
-    from pyspark.sql.pandas.types import to_arrow_schema
-    return (to_arrow_schema(TILED_FEATURE_SCHEMA).empty_table()
-            .select(TILED_COLUMNS))
-
-
 def clip_table_to_cell(tbl, cz: int, cx: int, cy: int,
                        options: TileOptions, from_zoom: int = 0):
     """Clip TILED rows (z/x/y = the from_zoom ancestor of the target
-    cell) down to (cz, cx, cy) one level at a time, with the one-level
-    split's accept/clip dispatch — trivially-accepted rows pass through
-    _pass_table (ord appends [0, 0]), crossing rows go through
-    _split_crossing_tables (ord appends the clip sub_ords) — so the
-    surviving rows are the cell tile's features after cz - from_zoom
-    splitTile levels, in ord order."""
+    cell) down to (cz, cx, cy): the cell tile's features after
+    cz - from_zoom splitTile levels, as TILED rows of that cell (row
+    order unspecified; readers order by ord_path).
+
+    One bbox test against the target window first.  Child windows lie
+    inside their parents', so a row the target window trivially accepts
+    was accepted at every level: it passes through untouched and its
+    ord_path gains [0, 0] per level.  A row the target window rejects
+    is dropped.  The rest go _arrow_state → _clip_chain →
+    _clip_out_geometry_arrays, and their ord_path gains the chain's
+    sub-ordinals."""
     import pyarrow as pa
-    for lvl in range(from_zoom, cz):
-        if not tbl.num_rows:
-            return _empty_tiled_table()
-        ax, ay = cx >> (cz - lvl - 1), cy >> (cz - lvl - 1)
-        q = (ay & 1) * 2 + (ax & 1)
-        acc, mask = _quadrant_route(tbl, lvl, options)
-        acc_t = np.zeros_like(acc)
-        acc_t[q] = acc[q]
-        mask_t = mask & (1 << q)
-        parts = []
-        pt = _pass_table(tbl, lvl, acc_t)
-        if pt is not None:
-            parts.append(pt)
-        cross = np.nonzero(mask_t > 0)[0]
-        if len(cross):
-            ct = tbl.take(pa.array(cross)).combine_chunks()
-            parts.extend(_split_crossing_tables(ct, lvl, options,
-                                                mask_t[cross]))
-        if not parts:
-            return _empty_tiled_table()
-        tbl = pa.concat_tables(parts).combine_chunks()
-    return tbl
+
+    tbl = tbl.select(TILED_COLUMNS).combine_chunks()
+    k = _window_consts(options)
+    xlo, xhi = _cell_window(cz, cx, *k)
+    ylo, yhi = _cell_window(cz, cy, *k)
+    mnx, mny, mxx, mxy = (tbl.column(c).to_numpy(zero_copy_only=False)
+                          for c in ("minx", "miny", "maxx", "maxy"))
+    inside = (mnx >= xlo) & (mxx < xhi) & (mny >= ylo) & (mxy < yhi)
+    outside = (mxx < xlo) | (mnx >= xhi) | (mxy < ylo) | (mny >= yhi)
+    keep = np.nonzero(inside)[0]
+    cross = np.nonzero(~inside & ~outside)[0]
+    parts = []
+    if len(keep):
+        parts.append(_feature_table(
+            tbl, keep, np.zeros((len(keep), 2 * (cz - from_zoom)),
+                                dtype=np.int64)))
+    if len(cross):
+        state = _arrow_state(tbl.take(pa.array(cross)), sort=False,
+                             strings=False)[:6]
+        res, src, subs = _clip_chain(state, cz, cx, cy, options, from_zoom)
+        if res.n_feats:
+            parts.append(_feature_table(tbl, cross[src], subs,
+                                        _clip_out_geometry_arrays(res)))
+    if not parts:
+        return tbl.slice(0, 0)
+    feats = pa.concat_tables(parts)
+    n = feats.num_rows
+    return pa.Table.from_arrays(
+        [pa.array(np.full(n, v, dtype=np.int32), pa.int32())
+         for v in (cz, cx, cy)] + feats.columns, names=TILED_COLUMNS)
 
 
 FOREST_ACK_SCHEMA = ("z int, x int, y int, n_feats long, n_points long, "
@@ -1529,7 +1352,7 @@ def straggler_probe_stats(fr0: DataFrame, probes: list,
     boundary-crossing polygons: huge candidate mass, zero
     guaranteed-inside mass).  One narrow mapInArrow job: each task
     clips ITS partition of the z0 frontier down to each straggler root
-    (clip_table_to_cell, the one-level split's exact dispatch) and then
+    (clip_table_to_cell, the shared clip chain) and then
     descends OPTIMISTICALLY — every non-empty child, one clip level
     per node, until index_max_zoom — returning slim
     (z, x, y, num_points) partials.  The driver sums the partials and
@@ -1597,8 +1420,8 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     """Single-job render of the forest cut's INTERNAL cells: each
     mapInArrow task materializes its partition of the z0 frontier and
     walks it down the internal-cell tree IN-TASK — clip ONE level from
-    the parent state per node (clip_table_to_cell, the one-level
-    split's exact accept/clip dispatch and ord extension), render the node
+    the parent state per node (clip_table_to_cell: trivial accept
+    passes through, crossing rows run the clip chain), render the node
     through the shared kernel, recurse into its internal children on
     the shrinking clipped state.  No shuffle, no inter-level job
     barrier: the level-chained form re-introduced a 5-round spine
@@ -1682,7 +1505,6 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
                     else:
                         stack.append((cz, cx, cy, clipped))
         pid = TaskContext.get().partitionId()
-        codec = os.environ.get("GVT_CODEC", "zstd")
         for root, by_z in ((tilefeat_root, rendered),
                            (sources_root, sources)):
             for cz, tables in by_z.items():
@@ -1691,7 +1513,7 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
                 final = os.path.join(out_dir, f"part-i{pid:05d}.parquet")
                 pq.write_table(
                     pa.concat_tables(tables).combine_chunks(),
-                    final + ".inprogress", compression=codec)
+                    final + ".inprogress", compression=_CODEC)
                 os.replace(final + ".inprogress", final)
         rows = [(z, x, y, *st) for (z, x, y), st in acc.items()]
         yield pa.RecordBatch.from_arrays(

@@ -5,10 +5,14 @@ geometry kind, id shape and dateline-wrapping (±180/±540) coordinates,
 across every cut shape: empty input, root-only (index_max_zoom 0, or
 n ≤ index_max_points), depth-1 (index_max_zoom 1, stats-proven) and
 gated cuts, with and without lineMetrics and world copies, and with
-promoteId / generateId."""
+promoteId / generateId.  The multi-level Arrow clip the internal walk
+and the straggler probe share (clip_table_to_cell) is pinned against
+the scalar clip kernel without Spark."""
 
+import json
 import random
 
+import numpy as np
 import pytest
 
 from geojson_vt_spark import TileOptions
@@ -16,6 +20,7 @@ from geojson_vt_spark.engine import SparkTileEngine
 from geojson_vt_spark.kernel import LocalTileIndex
 
 from .test_property_parity import _rand_geometry
+from .test_vec_kernel import assert_records_equal
 from .util_fixtures import assert_engine_matches_index
 
 
@@ -110,3 +115,78 @@ def test_engine_matches_local_index(spark, tmp_path, seed, n, opts,
         probes.append((z + 2, 4 * x + rng.randrange(4),
                        4 * y + rng.randrange(4)))
     assert_engine_matches_index(eng, idx, probes)
+
+
+def _tiled_table(data, opts):
+    """Converted features of ``data`` as one Arrow table of z0 TILED
+    rows (the frontier's Arrow shape), plus the same features as scalar
+    kernel objects, both in ord order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from geojson_vt_spark.kernel.vec import convert_rows_to_records
+    from geojson_vt_spark.model import FEATURE_SCHEMA, record_to_feature
+
+    rows = [(i, i, json.dumps(f)) for i, f in enumerate(data["features"])]
+    recs = convert_rows_to_records(rows, opts)
+    schema = to_arrow_schema(FEATURE_SCHEMA)
+    cols = [pa.array(np.zeros(len(recs), dtype=np.int32)) for _ in "zxy"]
+    cols += [pa.array([r[f.name] for r in recs], f.type) for f in schema]
+    tbl = pa.Table.from_arrays(cols, names=["z", "x", "y", *schema.names])
+    return tbl, [record_to_feature(r)[1] for r in recs]
+
+
+def _scalar_chain(feats, cz, cx, cy, opts):
+    """The reference's x-then-y clip per splitTile level from z0
+    (src/index.js:134-147) through the scalar kernel's clip_features."""
+    from geojson_vt_spark.kernel.clip import clip_features
+
+    k1 = 0.5 * opts.buffer / opts.extent
+    k2, k3, k4 = 0.5 - k1, 0.5 + k1, 1 + k1
+    for lvl in range(1, cz + 1):
+        for axis, c in ((0, cx >> (cz - lvl)), (1, cy >> (cz - lvl))):
+            lo, hi = (c >> 1) + (k2 if c & 1 else -k1), (c >> 1) + (
+                k4 if c & 1 else k3)
+            mins = [f.minx if axis == 0 else f.miny for f in feats]
+            maxs = [f.maxx if axis == 0 else f.maxy for f in feats]
+            feats = clip_features(feats, 1 << (lvl - 1), lo, hi, axis,
+                                  min(mins, default=0.0),
+                                  max(maxs, default=0.0),
+                                  opts.line_metrics) or []
+    return feats
+
+
+@pytest.mark.parametrize("lm", [False, True])
+def test_clip_table_to_cell_matches_scalar_chain(lm):
+    """clip_table_to_cell, from z0 and from the target's parent, keeps
+    the same features in ord order, with the same ids, tags and
+    geometry, as the scalar kernel's level-by-level clip."""
+    from geojson_vt_spark.model import feature_to_record
+    from geojson_vt_spark.pipeline import clip_table_to_cell
+
+    rng = random.Random(41 + lm)
+    n_rows = 0
+    for trial in range(6):
+        opts = TileOptions(line_metrics=lm,
+                           buffer=rng.choice([0, 64, 128, 512]))
+        tbl, feats = _tiled_table(
+            _mixed_collection(500 + trial, 40, wrap=trial % 2 == 0), opts)
+        for _ in range(10):
+            cz = rng.randint(1, 5)
+            cx, cy = rng.randrange(1 << cz), rng.randrange(1 << cz)
+            want = [feature_to_record((), f)
+                    for f in _scalar_chain(feats, cz, cx, cy, opts)]
+            parent = clip_table_to_cell(tbl, cz - 1, cx >> 1, cy >> 1,
+                                        opts) if cz > 1 else tbl
+            for got_tbl in (clip_table_to_cell(tbl, cz, cx, cy, opts),
+                            clip_table_to_cell(parent, cz, cx, cy, opts,
+                                               from_zoom=cz - 1)):
+                got = sorted(got_tbl.to_pylist(),
+                             key=lambda r: r["ord_path"])
+                assert all((r["z"], r["x"], r["y"]) == (cz, cx, cy)
+                           for r in got)
+                # ord paths: the input's plus two sub-ordinals per level
+                assert all(len(r["ord_path"]) == 2 + 2 * cz for r in got)
+                assert_records_equal(want, got, f"z{cz}/{cx}/{cy}")
+            n_rows += len(want)
+    assert n_rows > 100

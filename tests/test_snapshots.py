@@ -82,3 +82,21 @@ def test_snapshot_version_pointer_is_atomic_json(spark, tmp_path):
     assert v["snapshot_id"] == eng.current_snapshot_id()
     assert not os.path.exists(os.path.join(str(tmp_path),
                                            "VERSION.json.tmp"))
+
+
+def test_snapshot_manifests_every_internal_level(spark, tmp_path):
+    """A gated build stores internal zooms in tiles/z=N and
+    tilefeat/z=N for 0 < N < max zoom; the final commit must manifest
+    them, so a deleted tilefeat/z=1 part is reported missing."""
+    from .test_pipeline import _mixed_collection
+
+    opts = TileOptions(max_zoom=8, index_max_zoom=4, index_max_points=20)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    eng._KERNEL_PTS_PER_TASK = 400  # a gated cut: internals + leaves
+    eng.build_from_geojson(_mixed_collection(21, 60, wrap=False))
+    assert eng.verify_snapshot() == []
+    parts = sorted((tmp_path / "tilefeat" / "z=1").glob("part-*.parquet"))
+    assert parts
+    parts[0].unlink()
+    problems = eng.verify_snapshot()
+    assert f"tilefeat/z=1/{parts[0].name}: missing" in problems, problems

@@ -821,9 +821,8 @@ def test_slot_wave_matches_group_wave(spark, tmp_path):
 def _window_fn(opts):
     """Scalar buffered window of cell ``c`` at zoom ``lvl`` — the float
     sequence the kernel clips against."""
-    from geojson_vt_spark.pipeline import _cell_window
-    k1c = 0.5 * opts.buffer / opts.extent
-    k = (k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c)
+    from geojson_vt_spark.pipeline import _cell_window, _window_consts
+    k = _window_consts(opts)
     return lambda lvl, c: _cell_window(lvl, c, *k)
 
 
@@ -1025,6 +1024,42 @@ def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
         eng.build_from_converted(feats)
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     assert (tmp_path / "f" / "tilefeat" / "z=0" / "_SUCCESS").exists()
+
+
+def test_failed_build_awaits_every_stage(spark, tmp_path, monkeypatch):
+    """A gated build whose z0 render and leaf wave both fail must still
+    await its internal-cell walk before it raises: no stage of the
+    failed build is left running, and the pool is shut down."""
+    import threading
+    import time
+
+    import geojson_vt_spark.engine as engine_mod
+
+    from .test_pipeline import _mixed_collection
+
+    done = threading.Event()
+
+    def render_boom(*_a, **_k):
+        raise RuntimeError("render failed")
+
+    def wave_boom(*_a, **_k):
+        raise RuntimeError("leaf wave failed")
+
+    def slow_walk(*_a, **_k):
+        time.sleep(1.5)
+        done.set()
+        return []
+
+    monkeypatch.setattr(engine_mod, "rendered_features_df", render_boom)
+    monkeypatch.setattr(engine_mod, "internal_tree_direct", slow_walk)
+    monkeypatch.setattr(SparkTileEngine, "_forest_leaf_wave", wave_boom)
+    opts = TileOptions(max_zoom=8, index_max_zoom=4, index_max_points=20)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "w"))
+    eng._KERNEL_PTS_PER_TASK = 400  # a gated cut: internals + leaves
+    with pytest.raises(RuntimeError) as err:
+        eng.build_from_geojson(_mixed_collection(21, 60, wrap=False))
+    assert done.is_set()
+    assert str(err.value) in ("leaf wave failed", "render failed")
 
 
 def _clustered_collection(seed: int, n: int) -> dict:
