@@ -100,8 +100,7 @@ def main() -> None:
     t["clip_chain"] = time.monotonic() - t0
 
     t0 = time.monotonic()
-    state = (rags, gcodes, mnx, mny, mxx, mxy,
-             fids.tolist(), tagss.tolist(), None)
+    state = (rags, gcodes, mnx, mny, mxx, mxy, fids, tagss)
     tile_rows, sources = batch_split_subtree(None, cz, cx, cy, opts,
                                              state=state)
     t["subtree"] = time.monotonic() - t0

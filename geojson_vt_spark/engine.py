@@ -35,9 +35,10 @@ Scale design notes (SURVEY.md §4/§7):
 
 Serving runs no Spark job: get_tiles reads the stores on the driver
 through one pyarrow reader (_read), and get_tile is a one-key
-get_tiles.  A miss (getTile's lazy drill-down) replays the kernel split
-over the retained source of its nearest ancestor, pruned to the target
-path, under one engine lock.
+get_tiles.  A miss (getTile's lazy drill-down) replays the build's batch
+kernel (batch_split_subtree under splitTile's drill stop rule) over the
+retained source of its nearest ancestor, pruned to the target path,
+under one engine lock.
 
 Run the session with ``spark.scheduler.mode=FAIR``: the z0 render runs
 concurrently with the gate and the waves, and FIFO queues the small
@@ -55,10 +56,11 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .kernel.index import to_id
-from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, record_to_feature
+from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _dbl, SOURCE_PACK_COLUMNS,
-                       features_from_json_df, forest_gate_df,
+from .pipeline import (_NV_SQL, _arrow_state, _dbl, SOURCE_PACK_COLUMNS,
+                       batch_split_subtree, features_from_json_df,
+                       forest_gate_df,
                        forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
                        rendered_features_df, straggler_probe_stats,
@@ -77,8 +79,8 @@ _EMPTY_TILE_STATS = [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]
 # _frontier0_rows (driver) both build it from here
 _Z0_ORD_ENVELOPE = (1, 0)
 
-# the has_source / bbox columns a drill reads for a stored tile
-_META_COLUMNS = ["has_source", "minx", "miny", "maxx", "maxy"]
+# the column a drill reads for a stored tile
+_META_COLUMNS = ["has_source"]
 
 # the build's output stores (the features checkpoint is ingest's)
 _STORES = ("tiles", "tilefeat", "frontier", "sources", "subtree")
@@ -94,10 +96,10 @@ class SparkTileEngine:
             workdir = tempfile.mkdtemp(prefix="gvt_spark_")
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        # drill-down overlay: tiles and kernel-feature sources created
+        # drill-down overlay: tiles and retained-source packs created
         # by get_tiles misses after the build
         self._drill_tiles: dict[int, dict] = {}
-        self._drill_sources: dict[int, list] = {}
+        self._drill_sources: dict[int, dict] = {}
         self._consumed_sources: set[int] = set()
         # driver-side cache of the tiles-store stats (internal cut cells,
         # stops and empties: O(cut), NOT the 4^z subtree output)
@@ -1018,7 +1020,7 @@ class SparkTileEngine:
         return [r for r in rows if (r["z"], r["x"], r["y"]) in keys]
 
     def _stats(self) -> dict:
-        """(z,x,y) → has_source and bbox of the tiles-store tiles.
+        """(z,x,y) → has_source of the tiles-store tiles.
 
         The tiles store holds O(cut) rows — z0, internal and stop cells,
         empty back-fills — and does not grow with the 4^z subtree
@@ -1179,10 +1181,11 @@ class SparkTileEngine:
     def _drill_misses(self, misses) -> None:
         """getTile's drill-down for each miss in turn: walk up to the
         nearest ancestor that still holds a non-empty source and split
-        it toward the miss (_drill).  One read fetches the metas of the
+        it toward the miss (_drill).  One read fetches has_source of the
         ancestors outside the stats cache, one read per store the
         sources of the stored ancestors that keep one — a stored source
-        belongs to a leaf, so each chain holds at most one."""
+        belongs to a leaf, so each chain holds at most one.  An earlier
+        drill's off-path tiles hold theirs as packs in the overlay."""
         chains = {(z, x, y): [(z - d, x >> d, y >> d)
                               for d in range(1, z + 1)]
                   for z, x, y in misses}
@@ -1206,18 +1209,19 @@ class SparkTileEngine:
                 aid = to_id(*a)
                 if aid in self._consumed_sources:
                     continue
-                feats = self._drill_sources.get(aid, sources.get(a))
+                pack = self._drill_sources.get(aid)
+                feats = (sources.get(a) if pack is None
+                         else unpack_source_pack(pack))
                 if feats:
-                    m = meta(a)
-                    self._drill(feats, a, k, m and (
-                        m["minx"], m["miny"], m["maxx"], m["maxy"]))
+                    self._drill(feats, a, k)
                     break
 
     def _stored_sources(self, keys) -> dict:
         """(z,x,y) → the retained source of each stored tile in
-        ``keys``, as kernel features in ord_path order: a straggler
-        stop's row-per-feature sources/z=N, a subtree leaf's packed
-        source row, and a root-only z0's z0 frontier."""
+        ``keys`` as FEATURE records (the drill's Arrow ingress orders
+        them by ord_path): a straggler stop's row-per-feature
+        sources/z=N, a subtree leaf's packed source row, and a
+        root-only z0's z0 frontier."""
         recs: dict = {k: [] for k in keys}
         for r in self._read("sources", FEATURE_COLUMNS, keys):
             recs[(r["z"], r["x"], r["y"])].append(r)
@@ -1226,9 +1230,7 @@ class SparkTileEngine:
             recs[(r["z"], r["x"], r["y"])].extend(unpack_source_pack(r))
         if (0, 0, 0) in recs:
             recs[(0, 0, 0)] = self._frontier0_rows()
-        return {k: [f for _, f in sorted(map(record_to_feature, rows),
-                                         key=lambda t: t[0])]
-                for k, rows in recs.items()}
+        return recs
 
     def _frontier0_rows(self) -> list[dict]:
         """The z0 frontier as FEATURE records on the driver (a root-only
@@ -1243,67 +1245,32 @@ class SparkTileEngine:
             r["ord_path"] = [head, *r["ord_path"], tail]
         return rows
 
-    def _drill(self, feats, root, target, root_bbox) -> None:
-        """splitTile's drill-down pass (src/index.js:66-156 with cz):
-        split ``feats`` — ``root``'s retained source, kernel features in
-        order — toward ``target`` with the scalar kernel, in-process on
-        the driver.  New tiles, and the sources the off-path ones keep,
-        land in the in-memory overlay."""
-        from .kernel.clip import clip_features
-        from .kernel.tile import create_tile
-        from .kernel.transform import transform_tile
-        opts = self.options
-        cz, cx, cy = target
-        self._consumed_sources.add(to_id(*root))
-        stack = [(feats, *root)]
-        while stack:
-            features, z, x, y = stack.pop()
-            tid = to_id(z, x, y)
-            # only the drill root can pre-exist in the stores (it was
-            # never split), so every other tile is new or in the overlay
-            t = self._drill_tiles.get(tid)
-            if t is None and (z, x, y) != root:
-                tile = create_tile(features, z, x, y, opts)
-                t = self._drill_tiles[tid] = {
-                    "z": z, "x": x, "y": y,
-                    "features": transform_tile(
-                        tile, opts.extent)["features"],
-                    "num_points": tile.num_points,
-                    "minx": tile.minx, "miny": tile.miny,
-                    "maxx": tile.maxx, "maxy": tile.maxy,
-                }
-            steps = cz - z
-            if (z == opts.max_zoom or z == cz
-                    or x != cx >> steps or y != cy >> steps):
-                self._drill_sources[tid] = features
-                continue
-
-            self._consumed_sources.add(tid)
-            self._drill_sources.pop(tid, None)
-            if not features:
-                continue
-
-            bbox = root_bbox if t is None else (
-                t["minx"], t["miny"], t["maxx"], t["maxy"])
-            z2 = 1 << z
-            k1 = 0.5 * opts.buffer / opts.extent
-            k2, k3, k4 = 0.5 - k1, 0.5 + k1, 1 + k1
-            lm = opts.line_metrics
-            left = clip_features(features, z2, x - k1, x + k3, 0,
-                                 bbox[0], bbox[2], lm)
-            right = clip_features(features, z2, x + k2, x + k4, 0,
-                                  bbox[0], bbox[2], lm)
-            tl = bl = tr = br = None
-            if left:
-                tl = clip_features(left, z2, y - k1, y + k3, 1, bbox[1], bbox[3], lm)
-                bl = clip_features(left, z2, y + k2, y + k4, 1, bbox[1], bbox[3], lm)
-            if right:
-                tr = clip_features(right, z2, y - k1, y + k3, 1, bbox[1], bbox[3], lm)
-                br = clip_features(right, z2, y + k2, y + k4, 1, bbox[1], bbox[3], lm)
-            stack.append((tl or [], z + 1, x * 2, y * 2))
-            stack.append((bl or [], z + 1, x * 2, y * 2 + 1))
-            stack.append((tr or [], z + 1, x * 2 + 1, y * 2))
-            stack.append((br or [], z + 1, x * 2 + 1, y * 2 + 1))
+    def _drill(self, feats, root, target) -> None:
+        """splitTile's drill-down pass (src/index.js:66-156 with cz/cx/cy)
+        on the build's batch kernel, in-process on the driver: split
+        ``feats`` — ``root``'s retained source, FEATURE records — toward
+        ``target``.  The new tiles, in splitTile's creation order, and
+        the source packs the tiles off the target path keep land in the
+        in-memory overlay."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        rid = to_id(*root)
+        self._consumed_sources.add(rid)
+        self._drill_sources.pop(rid, None)
+        state = _arrow_state(pa.Table.from_pylist(
+            feats, schema=to_arrow_schema(FEATURE_SCHEMA)))
+        tile_rows, sources = batch_split_subtree(
+            None, *root, self.options, state=state,
+            root_forced_split=False, target=target)
+        for r in tile_rows[1:]:  # the root's own row: it exists already
+            self._drill_tiles[r["tile_id"]] = {
+                "z": r["z"], "x": r["x"], "y": r["y"],
+                "features": self._unpack_tile_features(r)}
+            if r["is_split"]:
+                self._consumed_sources.add(r["tile_id"])
+        for key, pack in sources.items():
+            if key != root:
+                self._drill_sources[to_id(*key)] = pack
 
     def tile_coords(self) -> list[tuple[int, int, int]]:
         """Insertion-ordered tile enumeration matching the reference's

@@ -1159,31 +1159,6 @@ def flats_to_rags(xyz, nr, rlens3, rsize, rstart, rend, gcodes,
     return rags
 
 
-def rags_split_columns(rags: Rags, gcodes):
-    """Rags → per-feature column lists (coords, ring_lens·3, poly_lens,
-    size/start/end) via np.split — no per-feature slicing loops."""
-    n = rags.n_feats
-    gcodes = np.asarray(gcodes, dtype=np.int64)
-    nr = (np.bincount(rags.rfeat, minlength=n).astype(np.int64)
-          if rags.n_rings else np.zeros(n, dtype=np.int64))
-    f_roff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(nr, out=f_roff[1:])
-    _, xyz = rags_to_feature_arrays(rags)
-    vsplits = 3 * rags.roff[f_roff[1:-1]]
-    coords = np.split(xyz, vsplits)
-    lens3 = (rags.ring_lens() * 3).astype(np.int32)
-    rsplit = f_roff[1:-1]
-    ring_lens = np.split(lens3, rsplit)
-    sizes = np.split(rags.rsize, rsplit)
-    starts = np.split(rags.rstart, rsplit)
-    ends = np.split(rags.rend, rsplit)
-    poly_lens = [None] * n
-    for fi in np.nonzero(gcodes == GT_MPOLY)[0]:
-        r0, r1 = int(f_roff[fi]), int(f_roff[fi + 1])
-        poly_lens[fi] = np.bincount(rags.rpoly[r0:r1]).astype(np.int32)
-    return coords, ring_lens, poly_lens, sizes, starts, ends
-
-
 # ---------------------------------------------------------------- assemble
 
 def batch_assemble(rags: Rags, gcodes, tz, tx, ty, options):

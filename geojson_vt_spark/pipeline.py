@@ -22,7 +22,10 @@ the z0 frontier in a few jobs (engine._build_forest):
   funnel;
 - leaves: routed rows (forest_route_df) grouped into driver-packed
   slots, each cell's whole descendant pyramid built in-task by the
-  batch kernel (forest_slot_wave_df → batch_split_subtree).
+  batch kernel (forest_slot_wave_df → batch_split_subtree);
+- drill: the engine's getTile drill-down runs the same
+  batch_split_subtree on the driver, with splitTile's drill stop rule
+  (``target``), over a retained source read back through _arrow_state.
 """
 
 from __future__ import annotations
@@ -446,16 +449,15 @@ SOURCE_PACK_COLUMNS = [f.name for f in SUBTREE_SCHEMA.fields
 
 
 def unpack_source_pack(row) -> list[dict]:
-    """kind=source subtree row (flat sp_* arrays) → per-feature FEATURE
+    """A retained-source pack (a kind=source subtree row, or a drill's
+    pack_leaves dict: flat sp_* lists or arrays) → per-feature FEATURE
     record dicts, ord_path = emission position.  Read-side twin of
-    pack_leaves; runs per drill-target tile, so plain Python slicing
-    is fine here."""
+    pack_leaves; runs per drill root, so plain Python slicing is fine
+    here."""
     from .kernel.vec import GTYPES
-    gcodes = row["sp_gcode"] or []
-    nrings = row["sp_nrings"] or []
-    ringlens = row["sp_ringlens"] or []
-    npoly = row["sp_npoly"] or []
-    polylens = row["sp_polylens"] or []
+    gcodes, nrings, ringlens, npoly, polylens = (
+        row[c] for c in ("sp_gcode", "sp_nrings", "sp_ringlens",
+                         "sp_npoly", "sp_polylens"))
     out = []
     ri = ci = pi = 0
     for i, code in enumerate(gcodes):
@@ -485,23 +487,28 @@ def unpack_source_pack(row) -> list[dict]:
 
 def batch_split_subtree(records, z0: int, x0: int, y0: int,
                         options: TileOptions, state=None,
-                        root_forced_split: bool = True):
+                        root_forced_split: bool = True, *, target=None):
     """Vectorized subtree build: one batch_clip / batch_assemble pass per
     LEVEL covering every tile at that level at once — the per-feature
     clip windows come from each feature's tile assignment, so the whole
     level's 4-way split costs six flat-numpy clips regardless of tile
-    count.  Output semantics are splitTile's first pass (src/index.js
-    66-156, first-pass stop rules).
+    count.  Output semantics are splitTile's (src/index.js 66-156):
+    its first-pass stop rules, or with ``target=(cz, cx, cy)`` its
+    drill-down rules (getTile, src/index.js:158-199) — a tile splits
+    iff it has features, is above max_zoom and cz, and lies on the path
+    to the target; the rows then come in splitTile's creation order.
 
     ``root_forced_split=True``: the root is taken as already classified
     as splitting, so the root level only fans out and its own tile row
-    is not emitted.  With ``False`` (the forest's leaf cells, and a
-    whole pyramid from z0) the root is classified by the normal rule
+    is not emitted.  With ``False`` (the forest's leaf cells, a whole
+    pyramid from z0, a drill) the root is classified by the normal rule
     and its tile row (and leaf source, when it stops) IS emitted.
 
-    Returns (tile_rows, sources) where tile_rows are dicts of the
-    subtree 'tile' kind and sources maps leaf (z,x,y) → a packed-array
-    dict (see pack_leaves / SUBTREE_SCHEMA sp_* columns).
+    ``state`` is _arrow_state's kernel state, or None to build it from
+    FEATURE ``records``.  Returns (tile_rows, sources) where tile_rows
+    are dicts of the subtree 'tile' kind and sources maps leaf (z,x,y)
+    → a packed-array dict (see pack_leaves / SUBTREE_SCHEMA sp_*
+    columns).
     """
     import numpy as np
 
@@ -511,8 +518,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
                              take_features)
 
     if state is not None:
-        (rags, gcodes, fminx, fminy, fmaxx, fmaxy,
-         fids, tagss, _ords) = state
+        rags, gcodes, fminx, fminy, fmaxx, fmaxy, fids, tagss = state
     else:
         rags, gcodes, fminx, fminy, fmaxx, fmaxy = records_to_rags(records)
         fids = [r["fid_json"] for r in records]
@@ -526,8 +532,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
     tilex = np.full(n, x0, dtype=np.int64)
     tiley = np.full(n, y0, dtype=np.int64)
 
-    k1c = 0.5 * options.buffer / options.extent
-    k2c, k3c, k4c = 0.5 - k1c, 0.5 + k1c, 1 + k1c
+    win = _window_consts(options)
     lm = options.line_metrics
 
     tile_rows = []
@@ -606,7 +611,6 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             }
 
     while pending:
-        z2 = 1 << z
         geom, n_pts, n_simpl = batch_assemble(
             rags, gcodes, np.full(len(gcodes), z), tilex, tiley, options)
         fb, pb = geom.feature_offsets()
@@ -696,8 +700,14 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
                     cnt = int(g_cnt[gi])
                     bb = (float(g_minx[gi]), float(g_miny[gi]),
                           float(g_maxx[gi]), float(g_maxy[gi]))
-                splits = not (z == options.index_max_zoom or
-                              npts <= options.index_max_points)
+                if target is None:
+                    splits = not (z == options.index_max_zoom or
+                                  npts <= options.index_max_points)
+                else:
+                    cz, cx, cy = target
+                    splits = (gi is not None and z != options.max_zoom
+                              and z != cz and gx == cx >> (cz - z)
+                              and gy == cy >> (cz - z))
                 if gi is None:
                     ftypes = fnr32 = frlens = fcoords = _empty32
                     ftags = ffids = []
@@ -756,8 +766,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             s_ty = tiley[sel]
 
             for dx in (0, 1):
-                xk1 = (s_tx + (k2c if dx else -k1c)) / z2
-                xk2 = (s_tx + (k4c if dx else k3c)) / z2
+                xk1, xk2 = _cell_window(z + 1, 2 * s_tx + dx, *win)
                 side = batch_clip(s_rags, s_g, s_mnx, s_mny, s_mxx, s_mxy,
                                   xk1, xk2, 0, lm)
                 if side.n_feats == 0:
@@ -767,8 +776,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
                 side_fids = s_fids[side.src]
                 side_tags = s_tags[side.src]
                 for dy in (0, 1):
-                    yk1 = (side_ty + (k2c if dy else -k1c)) / z2
-                    yk2 = (side_ty + (k4c if dy else k3c)) / z2
+                    yk1, yk2 = _cell_window(z + 1, 2 * side_ty + dy, *win)
                     q = batch_clip(side.rags, side.gcodes, side.minx,
                                    side.miny, side.maxx, side.maxy,
                                    yk1, yk2, 1, lm)
@@ -801,6 +809,13 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
         tilex = np.concatenate([tx for *_, tx, _ in out_states])
         tiley = np.concatenate([ty for *_, ty in out_states])
 
+    if target is not None:
+        # splitTile's stack pops children br, tr, bl, tl (ranks 0-3), so
+        # it creates tiles in pre-order over those ranks
+        tile_rows.sort(key=lambda r: [
+            3 - 2 * ((r["x"] >> (r["z"] - lvl)) & 1)
+            - ((r["y"] >> (r["z"] - lvl)) & 1)
+            for lvl in range(z0 + 1, r["z"] + 1)])
     return tile_rows, sources
 
 
@@ -962,16 +977,17 @@ def _window_consts(options: TileOptions) -> tuple:
     return k1c, 0.5 - k1c, 0.5 + k1c, 1 + k1c
 
 
-def _cell_window(lvl: int, c: int, k1c: float, k2c: float,
-                 k3c: float, k4c: float) -> tuple[float, float]:
-    """Scalar twin of _cell_window_sql: the exact (parent + const) /
-    2^(lvl-1) float pair the kernel clips cell ``c`` at zoom ``lvl``
-    against."""
+def _cell_window(lvl: int, c, k1c: float, k2c: float,
+                 k3c: float, k4c: float) -> tuple:
+    """Python/numpy twin of _cell_window_sql: the exact (parent +
+    const) / 2^(lvl-1) float pair the kernel clips cell ``c`` at zoom
+    ``lvl`` against.  ``c`` is one cell (the bounds are floats) or an
+    int64 array of cells (the bounds are arrays)."""
     z2l = float(1 << (lvl - 1))
-    par = float(c >> 1)
-    if c & 1:
-        return (par + k2c) / z2l, (par + k4c) / z2l
-    return (par - k1c) / z2l, (par + k3c) / z2l
+    par, odd = np.right_shift(c, 1), np.bitwise_and(c, 1) == 1
+    lo = (par + np.where(odd, k2c, -k1c)) / z2l
+    hi = (par + np.where(odd, k4c, k3c)) / z2l
+    return (lo, hi) if np.ndim(c) else (float(lo), float(hi))
 
 
 def _clip_chain(state, cz: int, cx: int, cy: int, options: TileOptions,
@@ -1027,7 +1043,7 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
     res, src, _ = _clip_chain((rags, gcodes, mnx, mny, mxx, mxy),
                               cz, cx, cy, options)
     state = (res.rags, res.gcodes, res.minx, res.miny, res.maxx, res.maxy,
-             fids[src].tolist(), tagss[src].tolist(), None)
+             fids[src], tagss[src])
     tile_rows, sources = batch_split_subtree(
         None, cz, cx, cy, options, state=state, root_forced_split=False)
     out = _subtree_out_pdf(tile_rows, sources)

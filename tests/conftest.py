@@ -1,6 +1,12 @@
 import pytest
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: a long end-to-end case (deselect with "
+        "'-m \"not slow\"')")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

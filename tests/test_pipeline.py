@@ -190,3 +190,72 @@ def test_clip_table_to_cell_matches_scalar_chain(lm):
                 assert_records_equal(want, got, f"z{cz}/{cx}/{cy}")
             n_rows += len(want)
     assert n_rows > 100
+
+
+@pytest.mark.parametrize("lm", [False, True])
+def test_drill_split_matches_local_index(lm):
+    """batch_split_subtree with a target is getTile's drill-down: from a
+    tile's retained source it makes the same new tiles as
+    LocalTileIndex.split_tile with cz/cx/cy, in the same creation
+    order, with the same features, num_points and retained sources.
+    The drills run in sequence, as getTile's do, so later roots include
+    earlier drills' off-path tiles and targets, some at max_zoom; some
+    targets lie past max_zoom."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from geojson_vt_spark.kernel.transform import transform_tile
+    from geojson_vt_spark.model import FEATURE_SCHEMA, feature_to_record
+    from geojson_vt_spark.pipeline import (_arrow_state, batch_split_subtree,
+                                           unpack_source_pack)
+
+    schema = to_arrow_schema(FEATURE_SCHEMA)
+    rng = random.Random(61 + lm)
+    n_drills = n_new = at_max = past_max = 0
+    for trial in range(8):
+        opts = TileOptions(line_metrics=lm, buffer=(0, 64, 512)[trial % 3],
+                           max_zoom=rng.choice([3, 5]),
+                           index_max_zoom=rng.choice([1, 2]),
+                           index_max_points=rng.choice([10, 40]))
+        data = _mixed_collection(900 + trial, 40, wrap=trial % 2 == 0)
+        idx = LocalTileIndex(data, opts)
+        for _ in range(13):
+            root = rng.choice([t for t in idx.tiles.values() if t.source])
+            rz, rx, ry = root.z, root.x, root.y
+            d = rng.randint(1, 4)
+            cz, cx, cy = (rz + d, (rx << d) + rng.randrange(1 << d),
+                          (ry << d) + rng.randrange(1 << d))
+            src = root.source
+            state = _arrow_state(pa.Table.from_pylist(
+                [feature_to_record((i,), f) for i, f in enumerate(src)],
+                schema=schema))
+            rows, sources = batch_split_subtree(
+                None, rz, rx, ry, opts, state=state,
+                root_forced_split=False, target=(cz, cx, cy))
+            before = len(idx.tile_coords)
+            idx.split_tile(src, rz, rx, ry, cz, cx, cy)
+
+            ctx = f"trial {trial} z{rz}/{rx}/{ry} -> z{cz}/{cx}/{cy}"
+            assert (rows[0]["z"], rows[0]["x"], rows[0]["y"]) == \
+                (rz, rx, ry), ctx
+            assert rows[0]["is_split"] == (root.source is None), ctx
+            assert [(r["z"], r["x"], r["y"]) for r in rows[1:]] == \
+                idx.tile_coords[before:], ctx
+            for r in rows[1:]:
+                key = (r["z"], r["x"], r["y"])
+                t = idx.tiles[r["tile_id"]]
+                assert r["num_points"] == t.num_points, (ctx, key)
+                assert SparkTileEngine._unpack_tile_features(r) == \
+                    transform_tile(t, opts.extent)["features"], (ctx, key)
+                if t.source:
+                    assert_records_equal(
+                        [feature_to_record((), f) for f in t.source],
+                        unpack_source_pack(sources[key]), f"{ctx} {key}")
+                else:
+                    assert key not in sources, (ctx, key)
+            n_drills += 1
+            n_new += len(rows) - 1
+            at_max += rz == opts.max_zoom
+            past_max += cz > opts.max_zoom
+    assert n_drills >= 100 and n_new > 300 and at_max and past_max, (
+        n_drills, n_new, at_max, past_max)

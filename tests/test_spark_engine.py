@@ -219,7 +219,7 @@ def test_concurrent_get_tile_waits_for_drill(spark, tmp_path, monkeypatch):
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    from geojson_vt_spark.kernel import tile as ktile
+    from geojson_vt_spark import engine as engine_mod
 
     data = _clustered_collection(7, 150)
     opts = TileOptions(index_max_zoom=5, index_max_points=100_000)
@@ -234,7 +234,7 @@ def test_concurrent_get_tile_waits_for_drill(spark, tmp_path, monkeypatch):
         if x >> 2 == qx and y >> 2 == qy) if pick.get_tile(*c))
         for qx, qy in ((0, 0), (1, 0))]
 
-    real = ktile.create_tile
+    real = engine_mod.batch_split_subtree
     started, release = threading.Event(), threading.Event()
 
     def paused(*args, **kwargs):
@@ -243,7 +243,7 @@ def test_concurrent_get_tile_waits_for_drill(spark, tmp_path, monkeypatch):
             release.wait(timeout=30)
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(ktile, "create_tile", paused)
+    monkeypatch.setattr(engine_mod, "batch_split_subtree", paused)
     got: dict = {}
 
     def client(c):

@@ -10,12 +10,11 @@ import pytest
 
 from geojson_vt_spark import TileOptions
 from geojson_vt_spark.kernel.clip import clip_feature
-from geojson_vt_spark.kernel.vec import (GT_CODE, GTYPES, batch_clip,
-                                         convert_rows_to_records,
-                                         records_to_rags,
-                                         rags_split_columns)
+from geojson_vt_spark.kernel.vec import (batch_clip, convert_rows_to_records,
+                                         records_to_rags)
 from geojson_vt_spark.model import feature_to_record, record_to_feature
-from geojson_vt_spark.pipeline import convert_single, geojson_to_input_rows
+from geojson_vt_spark.pipeline import (_clip_out_geometry_arrays,
+                                       convert_single, geojson_to_input_rows)
 
 FIXTURES = "/root/reference/test/fixtures"
 
@@ -121,20 +120,14 @@ def batch_clip_records(recs, k1, k2, axis, lm):
     res = batch_clip(rags, gcodes, mnx, mny, mxx, mxy,
                      np.full(len(recs), k1), np.full(len(recs), k2),
                      axis, lm)
-    coords, ring_lens, poly_lens, sizes, starts, ends = \
-        rags_split_columns(res.rags, res.gcodes)
+    geo = {c: a.to_pylist()
+           for c, a in _clip_out_geometry_arrays(res).items()}
     out = []
     for oi in range(res.n_feats):
         src = recs[int(res.src[oi])]
         out.append({
             "fid_json": src["fid_json"], "tags_json": src["tags_json"],
-            "gtype": GTYPES[int(res.gcodes[oi])],
-            "coords": coords[oi], "ring_lens": ring_lens[oi],
-            "poly_lens": poly_lens[oi],
-            "ring_size": sizes[oi], "ring_start": starts[oi],
-            "ring_end": ends[oi],
-            "minx": float(res.minx[oi]), "miny": float(res.miny[oi]),
-            "maxx": float(res.maxx[oi]), "maxy": float(res.maxy[oi]),
+            **{c: v[oi] for c, v in geo.items()},
             "_src": int(res.src[oi]), "_sub": int(res.sub_ord[oi]),
         })
     return out
