@@ -3,8 +3,9 @@
 
 Phase 1 (spark): build/extract the 2M-page z0 frontier once to
 /dev/shm/gvt_probe_frontier.parquet (reused across runs), run the
-forest gate + cut, print every cut leaf with (m, i, est-work), then
-run the leaf wave and print the top-10 per-cell acks (secs, n_cand).
+forest gate and the engine's cut (SparkTileEngine._forest_cut), print
+the heaviest cut leaves with (m, i, est-work), then run the leaf wave
+and print the top-10 per-cell acks (secs, n_cand).
 
 Phase 2 (pure task-side): for the hottest cell, re-execute the wave
 kernel body locally with per-phase timers (arrow materialize / ord
@@ -67,44 +68,27 @@ def main() -> None:
     # no-wrap corpus: the z0 frontier is exactly this view (the same
     # shape _read_frontier0() serves from the features checkpoint)
     fr0 = eng._frontier0_view(spark.read.parquet(FRONTIER))
-    budget = SparkTileEngine._KERNEL_PTS_PER_TASK
-    imz = opts.index_max_zoom
 
     t0 = time.monotonic()
-    gate = forest_gate_df(fr0, opts, 6).collect()
+    gate = forest_gate_df(fr0, opts, eng._FOREST_MAX_LEVEL).collect()
     print(f"gate: {time.monotonic()-t0:.2f}s, {len(gate)} cells",
           file=sys.stderr)
     cells = {(r["lvl"], r["x"], r["y"]): (r["m"], r["i"]) for r in gate}
 
-    imp = opts.index_max_points
-    leaves, internals, stragglers = [], [], []
-    stack = [(1, x, y) for y in (0, 1) for x in (0, 1)]
-    while stack:
-        l, x, y = stack.pop(0)
-        m, i = cells.get((l, x, y), (0, 0))
-        if m == 0:
-            continue
-        work = m * (imz - l + 1)
-        if (l < 6 and i > imp and work > budget):
-            internals.append((l, x, y))
-            stack.extend((l + 1, 2 * x + dx, 2 * y + dy)
-                         for dy in (0, 1) for dx in (0, 1))
-        else:
-            (stragglers if work > 2 * budget else leaves).append(
-                (l, x, y, m, i, work))
-
-    over = sorted(leaves + stragglers, key=lambda t: -t[5])[:15]
-    print("top cut cells by est work (l,x,y,m,i,work):")
-    for c in over:
-        print("  ", c)
+    # the engine's own cut (provers, vertex probe, blind leaves); its
+    # per-leaf work estimates are the slot wave's LPT weights
+    cut, internals, empties = eng._forest_cut(gate, fr0=fr0)
+    est = eng._forest_leaf_work
+    print(f"cut: {len(cut)} leaves, {len(internals)} internal, "
+          f"{len(empties)} empty; vprobe {eng._forest_vprobe_sec}s",
+          file=sys.stderr)
+    print("top cut leaves by est work (l,x,y,m,i,work):")
+    for c in sorted(cut, key=lambda c: -est[c])[:15]:
+        print("  ", (*c, *cells.get(c, (None, None)), est[c]))
 
     # leaf wave with per-cell acks: the engine's LPT-packed slot wave
-    # (pipeline.forest_slot_wave_df) over this cut, weighted by the
-    # same per-cell work estimates the engine's cut records
-    cut = [(l, x, y) for (l, x, y, *_rest) in leaves + stragglers]
+    # (pipeline.forest_slot_wave_df) over this cut
     routed = forest_route_df(fr0, opts, cut)
-    eng._forest_leaf_work = {(l, x, y): w
-                             for (l, x, y, m, i, w) in leaves + stragglers}
     t0 = time.monotonic()
     acks = eng._forest_leaf_wave(cut, routed=routed)
     wall = time.monotonic() - t0
@@ -112,7 +96,6 @@ def main() -> None:
     print(f"leaf wave: {wall:.2f}s, {len(acks)} tasks, "
           f"sum {sum(r['secs'] for r in acks):.1f}s")
     print("top-10 acks (z,x,y,n_cand,secs):")
-    est = {(l, x, y): w for (l, x, y, m, i, w) in leaves + stragglers}
     for r in acks[:10]:
         k = (r["z"], r["x"], r["y"])
         print(f"   z{r['z']} ({r['x']},{r['y']}) n_cand={r['n_cand']} "

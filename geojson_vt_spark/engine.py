@@ -7,15 +7,14 @@ gate job when they do not settle it), then one wave per kind of cell:
 
     z0 frontier --narrow render-------------------> tilefeat/z=0
         |--route to LEAF cells, slot wave---------> subtree b=1
-        |--INTERNAL cells, narrow in-task walk----> tilefeat/z=N
-        '--STRAGGLER cells, exact probe + walk----> tilefeat, sources
+        '--INTERNAL cells, narrow in-task walk----> tilefeat/z=N
     driver: tiles/z=N stats rows, lineage rows (written last)
 
 Cut shapes (see _build_forest): root-only when the z0 tile stops,
 depth-1 (the four z1 cells as leaves) when the stats prove it or
 index_max_zoom is 1, otherwise gated with internal cells down to
-_FOREST_MAX_LEVEL and stragglers for over-budget cells no prover can
-split.
+_FOREST_MAX_LEVEL; a cell no prover can split is a leaf whatever its
+size.
 
 Scale design notes (SURVEY.md §4/§7):
 - the only shuffles are the gate/probe aggregations (≤ 4^level slim
@@ -30,8 +29,9 @@ Scale design notes (SURVEY.md §4/§7):
   final row restarts cleanly from the z0 frontier, and a finished
   build whose subtree store is lost re-runs the leaf wave from the leaf
   keys the final row records;
-- a root-only cut keeps no copy of its source: the z0 tile's retained
-  source is the z0 frontier itself.
+- a retained source lives in a subtree or drill-overlay pack (every
+  leaf) or, for a root-only cut, in the z0 frontier itself: no second
+  copy of the corpus is written.
 
 Serving runs no Spark job: get_tiles reads the stores on the driver
 through one pyarrow reader (_read), and get_tile is a one-key
@@ -58,13 +58,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .kernel.index import to_id
 from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _arrow_state, _dbl, SOURCE_PACK_COLUMNS,
-                       batch_split_subtree, features_from_json_df,
-                       forest_gate_df,
+from .pipeline import (_NV_SQL, _arrow_state, _dbl, _pack_state,
+                       SOURCE_PACK_COLUMNS, batch_split_subtree,
+                       features_from_json_df, forest_gate_df,
                        forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
-                       rendered_features_df, straggler_probe_stats,
-                       unpack_source_pack, wrap_df)
+                       rendered_features_df, wrap_df)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
@@ -83,7 +82,7 @@ _Z0_ORD_ENVELOPE = (1, 0)
 _META_COLUMNS = ["has_source"]
 
 # the build's output stores (the features checkpoint is ingest's)
-_STORES = ("tiles", "tilefeat", "frontier", "sources", "subtree")
+_STORES = ("tiles", "tilefeat", "frontier", "subtree")
 
 
 class SparkTileEngine:
@@ -101,8 +100,8 @@ class SparkTileEngine:
         self._drill_tiles: dict[int, dict] = {}
         self._drill_sources: dict[int, dict] = {}
         self._consumed_sources: set[int] = set()
-        # driver-side cache of the tiles-store stats (internal cut cells,
-        # stops and empties: O(cut), NOT the 4^z subtree output)
+        # driver-side cache of the tiles-store stats (z0, internal cut
+        # cells and empties: O(cut), NOT the 4^z subtree output)
         self._stats_cache: dict | None = None
         # pyarrow datasets over the store directories, opened once
         # (listing and footer discovery) and dropped by a build
@@ -321,9 +320,8 @@ class SparkTileEngine:
     # the forest task budget in vertex-levels (a cell's vertex mass × the
     # levels its subtree spans), ~1.5-2 s per task at the measured batch-
     # kernel rate (~300-500k vertex-levels/sec per core after the round-2
-    # vectorization).  It sizes leaf cells, the slot wave's LPT bins and
-    # the straggler bound; a smaller budget also bounds the skew
-    # straggler (the hottest metro cell's subtree task)
+    # vectorization).  It sizes leaf cells and the slot wave's LPT bins;
+    # a smaller budget also bounds the hottest metro cell's subtree task
     _KERNEL_PTS_PER_TASK = 600_000
 
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
@@ -417,14 +415,8 @@ class SparkTileEngine:
 
     # forest-wave cut: deepest subdivision level (gate cells grow 4^L;
     # past z6 the cut bookkeeping stops paying).  Cells below it are
-    # blind leaves or stragglers, so no input is too large for the cut.
+    # blind leaves, so no input is too large for the cut.
     _FOREST_MAX_LEVEL = 6
-
-    # leaves above this many task budgets of estimated work are probed
-    # and rendered partition-spread instead of becoming one wave task;
-    # 2x keeps every wave task within ~2x the median budget-sized task
-    # (round-4 residual: 19/119 over-budget leaves, one 13 s straggler)
-    _FOREST_STRAGGLER = 2
 
     def _forest_cut_proven(self, n_points: int) -> bool:
         """True when the z0 stats alone prove the cut is exactly the
@@ -432,15 +424,14 @@ class SparkTileEngine:
         index_max_zoom 1 the z1 cells sit at the ceiling and stop
         whatever their mass.  Otherwise a z1 cell holds at most the
         whole corpus, so its work m × (imz - 1) is at most
-        ``n_points × (imz - 1)``, and at or under the task budget
-        (hence under the straggler bound) the walk of _forest_cut makes
-        every non-empty z1 cell a leaf.  Zero-mass cells get no routed
-        rows and are back-filled from missing acks, exactly as the
-        gate's empties would be."""
+        ``n_points × (imz - 1)``, and at or under the task budget the
+        walk of _forest_cut makes every non-empty z1 cell a leaf.
+        Zero-mass cells get no routed rows and are back-filled from
+        missing acks, exactly as the gate's empties would be."""
         imz = self.options.index_max_zoom
         return imz == 1 or n_points * (imz - 1) <= self._KERNEL_PTS_PER_TASK
 
-    def _forest_cut(self, gate_rows, fr0=None) -> tuple:
+    def _forest_cut(self, gate_rows, fr0) -> tuple:
         """Quadtree cut from the gate masses: walk from the 4 z1 cells;
         a cell subdivides (INTERNAL — distributed narrow render of its
         own tile) while it is guaranteed-split, still above the leaf
@@ -449,7 +440,8 @@ class SparkTileEngine:
         slot-wave subtree task, its root classified by the normal
         stop rule in-kernel).  Zero-mass children of internal cells
         are recorded for the driver-side empty back-fill
-        (index.js:151-154 pushes ``tl || []``).
+        (index.js:151-154 pushes ``tl || []``).  Returns (leaves,
+        internals, empties).
 
         Guaranteed-split has TWO provers, both exact lower bounds on
         the cell tile's post-clip num_points (> index_max_points ⇒
@@ -457,31 +449,26 @@ class SparkTileEngine:
         - the gate's fully-inside bbox mass ``i`` (free, rides the
           gate job) — blind on dense clusters straddling a cell edge;
         - the vertex-survival count ``v`` (pipeline.
-          forest_vertex_probe_df) — one cheap second job, run only
-          when the walk meets over-budget cells ``i`` cannot prove
-          (the measured forest skew: twin boundary cells with
+          forest_vertex_probe_df over ``fr0``) — one cheap second job,
+          run only when the walk meets over-budget cells ``i`` cannot
+          prove (the measured forest skew: twin boundary cells with
           identical duplicated candidate mass, i == 0, 15 s of
           serial kernel each).  Internal cells are eligible up to
           l == _FOREST_MAX_LEVEL; their children beyond the gate's
           deepest level are BLIND (no gate row): each is estimated at
           a quarter of its parent's mass over the imz - l levels its
           subtree renders, and joins the cut as a leaf (routed by bbox,
-          zero-row ones back-filled from missing acks) or, over the
-          straggler bound, as a straggler.
+          zero-row ones back-filled from missing acks).
 
-        A cell over _FOREST_STRAGGLER task budgets that NEITHER
-        prover can split (e.g. a giant ring enclosing the cell with
-        every vertex outside) is returned as a STRAGGLER: its exact
-        stop boundary is then measured by the full clip-descent probe
-        (straggler_probe_stats) and its subtree rendered
-        partition-spread by internal_tree_direct, never funneled into
-        one wave task."""
+        An over-budget cell that NEITHER prover can split (e.g. a giant
+        ring enclosing the cell with every vertex outside) is a leaf
+        too, like a blind child however large its estimate: its
+        estimated work weighs its slot in the wave's LPT packing."""
         opts = self.options
         imz = opts.index_max_zoom
         imp = opts.index_max_points
         budget = self._KERNEL_PTS_PER_TASK
         max_lvl = self._FOREST_MAX_LEVEL
-        straggler = self._FOREST_STRAGGLER
         self._forest_vprobe_sec = None
         cells = {(int(r["lvl"]), int(r["x"]), int(r["y"])):
                  (int(r["m"] or 0), int(r["i"] or 0))
@@ -495,7 +482,6 @@ class SparkTileEngine:
             leaves: list = []
             internals: list = []
             empties: list = []
-            stragglers: list = []
             opaque: list = []
             leaf_work.clear()
             stack = [(1, x, y) for y in (0, 1) for x in (0, 1)]
@@ -517,22 +503,18 @@ class SparkTileEngine:
                             c = (l + 1, 2 * x + dx, 2 * y + dy)
                             if l + 1 <= max_lvl:
                                 stack.append(c)
-                            elif blind > straggler * budget:
-                                stragglers.append(c)
                             else:
                                 leaves.append(c)
                                 leaf_work[c] = blind
                 elif eligible and vcells is None:
                     opaque.append((l, x, y))
-                elif work > straggler * budget:
-                    stragglers.append((l, x, y))
                 else:
                     leaves.append((l, x, y))
                     leaf_work[(l, x, y)] = work
-            return leaves, internals, empties, stragglers, opaque
+            return leaves, internals, empties, opaque
 
-        leaves, internals, empties, stragglers, opaque = walk(None)
-        if opaque and fr0 is not None:
+        leaves, internals, empties, opaque = walk(None)
+        if opaque:
             from .pipeline import forest_vertex_probe_df
             lmin = min(l for l, _, _ in opaque)
             levels = list(range(lmin, min(max_lvl, imz - 1) + 1))
@@ -542,45 +524,8 @@ class SparkTileEngine:
             self._forest_vprobe_sec = round(time.monotonic() - _t, 2)
             vcells = {(int(r["lvl"]), int(r["x"]), int(r["y"])):
                       int(r["v"] or 0) for r in v_rows}
-            leaves, internals, empties, stragglers, _ = walk(vcells)
-        elif opaque:
-            # no frontier handle (unit-test path): unprovable cells
-            # fall through exactly as pre-probe semantics
-            leaves, internals, empties, stragglers, _ = walk({})
-        return (leaves, internals, empties, stragglers)
-
-    def _straggler_boundary(self, probe_acks, stragglers) -> tuple:
-        """Place the exact stop boundary under each probed straggler
-        cell from the summed (z, x, y, num_points) partials: a node
-        SPLITS iff num_points > index_max_points and z < index_max_zoom
-        (src/index.js:105-107 on exact post-clip counts).  Split nodes
-        become internal-render cells, non-split nodes are STOP tiles
-        (render + retained source), and a split node's zero-row
-        children join the empty back-fill."""
-        opts = self.options
-        imp, imz = opts.index_max_points, opts.index_max_zoom
-        tot: dict = {}
-        for r in probe_acks:
-            k = (int(r["z"]), int(r["x"]), int(r["y"]))
-            tot[k] = tot.get(k, 0) + int(r["n_points"])
-        internals: list = []
-        stops: list = []
-        empties: list = []
-        stack = [tuple(int(v) for v in c) for c in stragglers]
-        while stack:
-            z, x, y = stack.pop(0)
-            if tot.get((z, x, y), 0) > imp and z < imz:
-                internals.append((z, x, y))
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        c = (z + 1, 2 * x + dx, 2 * y + dy)
-                        if tot.get(c, 0) > 0:
-                            stack.append(c)
-                        else:
-                            empties.append(c)
-            else:
-                stops.append((z, x, y))
-        return internals, stops, empties
+            leaves, internals, empties, _ = walk(vcells)
+        return leaves, internals, empties
 
     # g -> slot ints; the hash cannot change within one JVM, so each
     # bin count costs its tiny Spark job once per process
@@ -714,7 +659,7 @@ class SparkTileEngine:
           index_max_zoom is 1 or the stats prove it
           (_forest_cut_proven).  Every small corpus takes this cut.
         - GATED: forest_gate_df measures per-cell masses and _forest_cut
-          walks them into leaf, internal, empty and straggler cells.
+          walks them into leaf, internal and empty cells.
 
         The stages, concurrent where independent:
         - z0 renders at once: it depends only on the frontier, so it
@@ -731,12 +676,9 @@ class SparkTileEngine:
           tile's features stay spread across scan partitions exactly
           like the z0 render (no per-tile funnel), tilefeat parts are
           written task-side and stats rows come back as slim acks.
-        - STRAGGLER cells → straggler_probe_stats places their exact
-          stop boundary, then the same walk renders them; their stop
-          tiles also write sources/z=N.
         The driver then writes the tiles/z=N stats rows (z0, internal
-        and stop cells, empty back-fills) and the lineage rows LAST, so
-        a kill anywhere restarts the build cleanly."""
+        cells, empty back-fills) and the lineage rows LAST, so a kill
+        anywhere restarts the build cleanly."""
         from pyspark.sql import Observation
         opts = self.options
         t0 = time.monotonic()
@@ -759,7 +701,7 @@ class SparkTileEngine:
         n0 = int(r0["num_points"])
         root_only = (opts.index_max_zoom == 0
                      or n0 <= opts.index_max_points)
-        leaves, internals, empties, stragglers = [], [], [], []
+        leaves, internals, empties = [], [], []
         self._forest_leaf_work = {}
         self._forest_vprobe_sec = self._forest_slot_bins = None
         gate_sec = None
@@ -769,44 +711,24 @@ class SparkTileEngine:
             leaves = [(1, x, y) for y in (0, 1) for x in (0, 1)]
         else:
             _tg = time.monotonic()
-            leaves, internals, empties, stragglers = self._forest_cut(
+            leaves, internals, empties = self._forest_cut(
                 forest_gate_df(fr0, opts, self._FOREST_MAX_LEVEL).collect(),
                 fr0=fr0)
             gate_sec = round(time.monotonic() - _tg, 2)
         # only LEAF cells go through the grouped wave; internal cells
-        # are rendered by the in-task walk below, straggler cells
-        # (over-budget, unprovable split) by the probe + the same walk
+        # are rendered by the in-task walk below
         routed = forest_route_df(fr0, opts, leaves) if leaves else None
-
-        walk: dict = {"acks": [], "stops": [], "extra_empties": [],
-                      "internals": list(internals)}
 
         def internal_job():
             self._set_pool("gvt-internal")
-            if stragglers:
-                # exact stop boundary first: one slim distributed
-                # probe, then the straggler subtrees render through
-                # the SAME partition-spread walk as internal cells
-                _t = time.monotonic()
-                acks = straggler_probe_stats(
-                    fr0, stragglers, opts).collect()
-                s_int, s_stop, s_emp = self._straggler_boundary(
-                    acks, stragglers)
-                steps["probe"] = round(time.monotonic() - _t, 2)
-                steps["n_stragglers"] = len(stragglers)
-                steps["n_stops"] = len(s_stop)
-                walk.update(internals=list(internals) + s_int,
-                            stops=s_stop, extra_empties=s_emp)
-            if not (walk["internals"] or walk["stops"]):
-                return
             _t = time.monotonic()
-            walk["acks"] = internal_tree_direct(
-                fr0, walk["internals"], opts, self._p("tilefeat"),
-                stops=walk["stops"], sources_root=self._p("sources"))
+            acks = internal_tree_direct(fr0, internals, opts,
+                                        self._p("tilefeat"))
             steps["internal"] = round(time.monotonic() - _t, 2)
+            return acks
 
         fut_int = None
-        if internals or stragglers:
+        if internals:
             fut_int = pool.submit(internal_job)
             futures.append(fut_int)
 
@@ -814,15 +736,14 @@ class SparkTileEngine:
         leaf_acks = (self._forest_leaf_wave(leaves, routed=routed)
                      if leaves else [])
         wave_sec = time.monotonic() - _t1
-        if fut_int is not None:
-            fut_int.result()
+        walk_acks = fut_int.result() if fut_int is not None else []
         _t2 = time.monotonic()
         fut_render.result()
         render_wait = time.monotonic() - _t2
         ns0 = int(obs_r.get["ns"] or 0)
 
         merged: dict = {}
-        for r in walk["acks"]:
+        for r in walk_acks:
             key = (int(r["z"]), int(r["x"]), int(r["y"]))
             cur = merged.get(key)
             if cur is None:
@@ -839,44 +760,29 @@ class SparkTileEngine:
                 cur[5] = max(cur[5], float(r["maxx"]))
                 cur[6] = max(cur[6], float(r["maxy"]))
         # one tiles/z=N write per level: z0, internal-cell stats rows
-        # and empty-children sentinels.  Straggler STOP cells are leaf
-        # tiles (is_split=False, has_source=True); a stop cell with no
-        # ack clipped empty everywhere and joins the sentinel back-fill.
-        # Leaves that received no candidate rows (blind leaves, or z1
-        # cells of a stats-proven cut) produce no wave group and no
-        # subtree part: back-fill them from the missing acks too.
-        stop_set = {tuple(c) for c in walk["stops"]}
+        # and empty-children sentinels.  Leaves that received no
+        # candidate rows (blind leaves, or z1 cells of a stats-proven
+        # cut) produce no wave group and no subtree part: back-fill them
+        # from the missing acks too.
         acked = {(int(r["z"]), int(r["x"]), int(r["y"]))
                  for r in leaf_acks}
-        all_empties = (list(empties) + list(walk["extra_empties"])
-                       + [c for c in stop_set if c not in merged]
-                       + [tuple(c) for c in leaves
-                          if tuple(c) not in acked])
         by_level: dict = {0: [(0, 0, [
             r0["num_features"], n0, ns0, r0["minx"], r0["miny"],
             r0["maxx"], r0["maxy"], not root_only, root_only])]}
         for (z, x, y), st in merged.items():
-            is_stop = (z, x, y) in stop_set
-            by_level.setdefault(z, []).append(
-                (x, y, st + [not is_stop, is_stop]))
-        for z, x, y in all_empties:
+            by_level.setdefault(z, []).append((x, y, st + [True, False]))
+        for z, x, y in empties + [c for c in leaves if c not in acked]:
             by_level.setdefault(z, []).append((x, y, _EMPTY_TILE_STATS))
         for z, rows in sorted(by_level.items()):
             self._write_tile_rows(z, rows)
-        stop_levels = {c[0] for c in stop_set if c in merged}
-        for store, levels in (
-                ("tilefeat", {l for l, _, _ in walk["internals"]}
-                 | stop_levels),
-                ("sources", stop_levels)):
-            for z in sorted(levels):
-                p = self._p(store, f"z={z}")
-                os.makedirs(p, exist_ok=True)
-                open(os.path.join(p, "_SUCCESS"), "w").close()
+        for z in sorted({l for l, _, _ in internals}):
+            p = self._p("tilefeat", f"z={z}")
+            os.makedirs(p, exist_ok=True)
+            open(os.path.join(p, "_SUCCESS"), "w").close()
 
         # lineage lands LAST (resume contract: no final row → clean
         # rebuild from the z0 frontier)
-        max_z = max([l for l, _, _ in leaves] + [c[0] for c in stop_set],
-                    default=int(not root_only))
+        max_z = max([l for l, _, _ in leaves], default=int(not root_only))
         self._append_lineage({
             "zoom": 0, "n_tiles": 1, "n_split": int(not root_only),
             "n_points": n0, "forest": True,
@@ -1022,8 +928,8 @@ class SparkTileEngine:
     def _stats(self) -> dict:
         """(z,x,y) → has_source of the tiles-store tiles.
 
-        The tiles store holds O(cut) rows — z0, internal and stop cells,
-        empty back-fills — and does not grow with the 4^z subtree
+        The tiles store holds O(cut) rows — z0, internal cells, empty
+        back-fills — and does not grow with the 4^z subtree
         output, so caching it is driver-safe at any pyramid depth."""
         if self._stats_cache is None:
             self._stats_cache = {(r["z"], r["x"], r["y"]): r
@@ -1035,7 +941,7 @@ class SparkTileEngine:
         list every store's files once."""
         with self._serve_lock:
             self._stats()
-            for store in ("tilefeat", "subtree", "sources"):
+            for store in ("tilefeat", "subtree"):
                 self._dataset(store)
 
     def tiles(self) -> DataFrame:
@@ -1138,7 +1044,7 @@ class SparkTileEngine:
         requests, with getTile's semantics (x wraps, z outside 0..24 is
         None, a miss drills down).  No Spark job runs: the hits come
         from one tilefeat and one subtree read, the misses' drills from
-        one meta read and one source read per store.  Misses drill in
+        one meta read and one source read.  Misses drill in
         request order, so tiles an earlier drill made serve later
         requests.  One call runs at a time per engine."""
         norm: dict = {}
@@ -1182,10 +1088,10 @@ class SparkTileEngine:
         """getTile's drill-down for each miss in turn: walk up to the
         nearest ancestor that still holds a non-empty source and split
         it toward the miss (_drill).  One read fetches has_source of the
-        ancestors outside the stats cache, one read per store the
-        sources of the stored ancestors that keep one — a stored source
-        belongs to a leaf, so each chain holds at most one.  An earlier
-        drill's off-path tiles hold theirs as packs in the overlay."""
+        ancestors outside the stats cache, one read the sources of the
+        stored ancestors that keep one — a stored source belongs to a
+        leaf, so each chain holds at most one.  An earlier drill's
+        off-path tiles hold theirs as packs in the overlay."""
         chains = {(z, x, y): [(z - d, x >> d, y >> d)
                               for d in range(1, z + 1)]
                   for z, x, y in misses}
@@ -1210,27 +1116,27 @@ class SparkTileEngine:
                 if aid in self._consumed_sources:
                     continue
                 pack = self._drill_sources.get(aid)
-                feats = (sources.get(a) if pack is None
-                         else unpack_source_pack(pack))
-                if feats:
-                    self._drill(feats, a, k)
+                state = (sources.get(a) if pack is None
+                         else _pack_state(pack))
+                if state is not None and state[0].n_feats:
+                    self._drill(state, a, k)
                     break
 
     def _stored_sources(self, keys) -> dict:
         """(z,x,y) → the retained source of each stored tile in
-        ``keys`` as FEATURE records (the drill's Arrow ingress orders
-        them by ord_path): a straggler stop's row-per-feature
-        sources/z=N, a subtree leaf's packed source row, and a
-        root-only z0's z0 frontier."""
-        recs: dict = {k: [] for k in keys}
-        for r in self._read("sources", FEATURE_COLUMNS, keys):
-            recs[(r["z"], r["x"], r["y"])].append(r)
-        for r in self._read("subtree", SOURCE_PACK_COLUMNS, keys,
-                            kind="source"):
-            recs[(r["z"], r["x"], r["y"])].extend(unpack_source_pack(r))
-        if (0, 0, 0) in recs:
-            recs[(0, 0, 0)] = self._frontier0_rows()
-        return recs
+        ``keys`` that keeps one, as kernel state: a subtree leaf's
+        packed source row through _pack_state, a root-only z0's z0
+        frontier through the Arrow ingress (ordered by ord_path)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        out = {(r["z"], r["x"], r["y"]): _pack_state(r)
+               for r in self._read("subtree", SOURCE_PACK_COLUMNS, keys,
+                                   kind="source")}
+        if (0, 0, 0) in keys:
+            out[(0, 0, 0)] = _arrow_state(pa.Table.from_pylist(
+                self._frontier0_rows(),
+                schema=to_arrow_schema(FEATURE_SCHEMA)))
+        return out
 
     def _frontier0_rows(self) -> list[dict]:
         """The z0 frontier as FEATURE records on the driver (a root-only
@@ -1245,20 +1151,16 @@ class SparkTileEngine:
             r["ord_path"] = [head, *r["ord_path"], tail]
         return rows
 
-    def _drill(self, feats, root, target) -> None:
+    def _drill(self, state, root, target) -> None:
         """splitTile's drill-down pass (src/index.js:66-156 with cz/cx/cy)
         on the build's batch kernel, in-process on the driver: split
-        ``feats`` — ``root``'s retained source, FEATURE records — toward
+        ``state`` — ``root``'s retained source as kernel state — toward
         ``target``.  The new tiles, in splitTile's creation order, and
         the source packs the tiles off the target path keep land in the
         in-memory overlay."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
         rid = to_id(*root)
         self._consumed_sources.add(rid)
         self._drill_sources.pop(rid, None)
-        state = _arrow_state(pa.Table.from_pylist(
-            feats, schema=to_arrow_schema(FEATURE_SCHEMA)))
         tile_rows, sources = batch_split_subtree(
             None, *root, self.options, state=state,
             root_forced_split=False, target=target)

@@ -10,22 +10,23 @@ the z0 frontier in a few jobs (engine._build_forest):
 - clip: ONE path from a cell's ancestor down to the cell — _clip_chain
   (batch_clip on x then y per level, windows from _cell_window) between
   one Arrow ingress (_arrow_state) and one Arrow egress
-  (_clip_out_geometry_arrays).  The leaf wave (_wave_cell_kernel), the
-  internal walk and the straggler probe (clip_table_to_cell) run it;
-  the wrap runs the same boundary around a single x clip;
+  (_clip_out_geometry_arrays).  The leaf wave (_wave_cell_kernel) and
+  the internal walk (clip_table_to_cell) run it; the wrap runs the same
+  boundary around a single x clip;
 - cut: slim SQL-text mass aggregations per quadtree cell
   (forest_gate_df, forest_vertex_probe_df) — the stop rule's numPoints
   is ``sum(size(coords)/3)`` (src/index.js:107), so Catalyst runs them
   with map-side partial aggregation;
 - render: narrow per-feature maps (rendered_features_df for z0,
-  internal_tree_direct for internal and straggler cells), no per-tile
-  funnel;
+  internal_tree_direct for internal cells), no per-tile funnel;
 - leaves: routed rows (forest_route_df) grouped into driver-packed
   slots, each cell's whole descendant pyramid built in-task by the
   batch kernel (forest_slot_wave_df → batch_split_subtree);
 - drill: the engine's getTile drill-down runs the same
   batch_split_subtree on the driver, with splitTile's drill stop rule
-  (``target``), over a retained source read back through _arrow_state.
+  (``target``), over a retained source read back as kernel state:
+  _pack_state for a subtree or overlay pack, _arrow_state for the z0
+  frontier.
 """
 
 from __future__ import annotations
@@ -44,8 +45,8 @@ from .model import (FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS,
                     records_to_pdf)
 from .options import TileOptions
 
-# parquet codec of the task-side store writes (subtree, tilefeat and
-# sources parts)
+# parquet codec of the task-side store writes (subtree and tilefeat
+# parts)
 _CODEC = "zstd"
 
 # ---------------------------------------------------------------- ingest
@@ -446,43 +447,6 @@ _SUBTREE_COLUMNS = [f.name for f in SUBTREE_SCHEMA.fields]
 
 SOURCE_PACK_COLUMNS = [f.name for f in SUBTREE_SCHEMA.fields
                        if f.name.startswith("sp_")]
-
-
-def unpack_source_pack(row) -> list[dict]:
-    """A retained-source pack (a kind=source subtree row, or a drill's
-    pack_leaves dict: flat sp_* lists or arrays) → per-feature FEATURE
-    record dicts, ord_path = emission position.  Read-side twin of
-    pack_leaves; runs per drill root, so plain Python slicing is fine
-    here."""
-    from .kernel.vec import GTYPES
-    gcodes, nrings, ringlens, npoly, polylens = (
-        row[c] for c in ("sp_gcode", "sp_nrings", "sp_ringlens",
-                         "sp_npoly", "sp_polylens"))
-    out = []
-    ri = ci = pi = 0
-    for i, code in enumerate(gcodes):
-        nr = int(nrings[i])
-        rl = ringlens[ri:ri + nr]
-        c2 = int(sum(rl))
-        npl = int(npoly[i])
-        out.append({
-            "ord_path": [i],
-            "fid_json": row["sp_fids"][i],
-            "tags_json": row["sp_tags"][i],
-            "gtype": GTYPES[int(code)],
-            "coords": row["sp_coords"][ci:ci + c2],
-            "ring_lens": rl,
-            "poly_lens": polylens[pi:pi + npl] if npl else None,
-            "ring_size": row["sp_rsize"][ri:ri + nr],
-            "ring_start": row["sp_rstart"][ri:ri + nr],
-            "ring_end": row["sp_rend"][ri:ri + nr],
-            "minx": row["sp_minx"][i], "miny": row["sp_miny"][i],
-            "maxx": row["sp_maxx"][i], "maxy": row["sp_maxy"][i],
-        })
-        ri += nr
-        ci += c2
-        pi += npl
-    return out
 
 
 def batch_split_subtree(records, z0: int, x0: int, y0: int,
@@ -970,6 +934,30 @@ def _arrow_state(tbl, sort=True, strings=True):
             _np("tags_json") if strings else None)
 
 
+def _pack_state(pack):
+    """One retained-source pack (a kind=source subtree row, or a drill's
+    pack_leaves dict: flat sp_* lists or arrays) → kernel state in pack
+    order, which is the features' ord order; the pack twin of
+    _arrow_state through the same flats_to_rags constructor."""
+    from .kernel.vec import flats_to_rags
+
+    def arr(name, dtype):
+        return np.asarray(pack[name], dtype=dtype)
+
+    gcodes = arr("sp_gcode", np.int64)
+    pl_off = np.zeros(len(gcodes) + 1, dtype=np.int64)
+    np.cumsum(arr("sp_npoly", np.int64), out=pl_off[1:])
+    pl_flat = arr("sp_polylens", np.int64)
+    rags = flats_to_rags(
+        arr("sp_coords", np.float64), arr("sp_nrings", np.int64),
+        arr("sp_ringlens", np.int64), arr("sp_rsize", np.float64),
+        arr("sp_rstart", np.float64), arr("sp_rend", np.float64), gcodes,
+        lambda fi: pl_flat[pl_off[fi]:pl_off[fi + 1]])
+    return (rags, gcodes, *(arr(c, np.float64) for c in (
+        "sp_minx", "sp_miny", "sp_maxx", "sp_maxy")),
+        arr("sp_fids", object), arr("sp_tags", object))
+
+
 def _window_consts(options: TileOptions) -> tuple:
     """(k1, k2, k3, k4) of splitTile (src/index.js) in tile units: the buffered child windows are [x - k1, x + k3] (left) and
     [x + k2, x + k4] (right) around parent coordinate x."""
@@ -1069,15 +1057,23 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     cluster pays, and with per-cell work estimates from the gate the
     driver can pack bins to the kernel budget (LPT), which no hash can
     do.  Part names are per CELL and deterministic, so a task retry
-    overwrites rather than duplicates."""
-    def run(key, tbl):
+    overwrites rather than duplicates.
+
+    Each shuffle partition holds exactly one slot, so a plain
+    mapInArrow over ``repartition("slot")`` runs the bins; the grouped
+    applyInArrow runner adds a per-partition sort and leaked ~0.6 MB of
+    JVM Arrow memory per task (Spark 4.1, measured on a 337-task wave),
+    enough to exhaust a long-lived session's direct memory."""
+    def run(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         acks = {"z": [], "x": [], "y": [], "n": [], "n_cand": [],
                 "secs": []}
-        if tbl.num_rows:
+        parts = list(batches)
+        tbl = pa.Table.from_batches(parts) if parts else None
+        if tbl is not None and tbl.num_rows:
             order = pc.sort_indices(
                 tbl, sort_keys=[("z", "ascending"), ("x", "ascending"),
                                 ("y", "ascending")])
@@ -1102,14 +1098,14 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
                 acks["n"].append(n_out)
                 acks["n_cand"].append(e - s)
                 acks["secs"].append(time.monotonic() - t0)
-        return pa.table(
+        yield from pa.table(
             acks,
             schema=pa.schema([("z", pa.int32()), ("x", pa.int32()),
                               ("y", pa.int32()), ("n", pa.int64()),
                               ("n_cand", pa.int64()),
-                              ("secs", pa.float64())]))
+                              ("secs", pa.float64())])).to_batches()
 
-    return candidates.groupBy("slot").applyInArrow(
+    return candidates.repartition("slot").mapInArrow(
         run, SUBTREE_ACK_SCHEMA)
 
 
@@ -1358,81 +1354,8 @@ FOREST_ACK_SCHEMA = ("z int, x int, y int, n_feats long, n_points long, "
                      "n_sim long, minx double, miny double, "
                      "maxx double, maxy double")
 
-PROBE_ACK_SCHEMA = "z int, x int, y int, n_points long"
-
-
-def straggler_probe_stats(fr0: DataFrame, probes: list,
-                          options: TileOptions) -> DataFrame:
-    """Exact stop-boundary probe for over-budget forest cut cells whose
-    split the bbox gate cannot prove ('stragglers' — typically giant
-    boundary-crossing polygons: huge candidate mass, zero
-    guaranteed-inside mass).  One narrow mapInArrow job: each task
-    clips ITS partition of the z0 frontier down to each straggler root
-    (clip_table_to_cell, the shared clip chain) and then
-    descends OPTIMISTICALLY — every non-empty child, one clip level
-    per node, until index_max_zoom — returning slim
-    (z, x, y, num_points) partials.  The driver sums the partials and
-    applies the reference stop rule (src/index.js:105-107:
-    numPoints <= indexMaxPoints or z == indexMaxZoom stops) on the
-    EXACT totals to place the boundary; everything below a stop node
-    is pruned before any render/store work happens.
-
-    100-TB posture: the giant feature set stays spread across the
-    scan partitions (the whole point — a leaf wave task would funnel
-    it into ONE task), per-task work is (partition share of the
-    straggler mass) x levels, and only 4-byte-per-node stats cross
-    back to the driver.  The heavy spine above the boundary is
-    clipped twice (probe + render); the fringe below a stop node
-    carries <= index_max_points vertices per node per level."""
-    import pyarrow as pa
-
-    opts = options
-    imz = opts.index_max_zoom
-    roots = [tuple(int(v) for v in c) for c in probes]
-
-    def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        parts = [pa.Table.from_batches([rb]) for rb in batches]
-        acc: dict = {}
-        if parts:
-            tbl0 = pa.concat_tables(parts).combine_chunks()
-            for (pz, px, py) in roots:
-                rt = clip_table_to_cell(tbl0, pz, px, py, opts,
-                                        from_zoom=0)
-                stack = [(pz, px, py, rt)]
-                while stack:
-                    z, x, y, tbl = stack.pop()
-                    if not tbl.num_rows:
-                        continue
-                    n = int(pc.sum(pc.divide(pc.list_value_length(
-                        tbl.column("coords")), 3)).as_py() or 0)
-                    acc[(z, x, y)] = acc.get((z, x, y), 0) + n
-                    if z >= imz:
-                        continue
-                    for dy in (0, 1):
-                        for dx in (0, 1):
-                            stack.append((
-                                z + 1, 2 * x + dx, 2 * y + dy,
-                                clip_table_to_cell(
-                                    tbl, z + 1, 2 * x + dx, 2 * y + dy,
-                                    opts, from_zoom=z)))
-        rows = sorted(acc.items())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([k[0] for k, _ in rows], pa.int32()),
-             pa.array([k[1] for k, _ in rows], pa.int32()),
-             pa.array([k[2] for k, _ in rows], pa.int32()),
-             pa.array([n for _, n in rows], pa.int64())],
-            names=["z", "x", "y", "n_points"])
-
-    return fr0.mapInArrow(run, PROBE_ACK_SCHEMA)
-
-
 def internal_tree_direct(fr0: DataFrame, internals: list,
-                         options: TileOptions,
-                         tilefeat_root: str, stops: list = (),
-                         sources_root: str | None = None) -> list:
+                         options: TileOptions, tilefeat_root: str) -> list:
     """Single-job render of the forest cut's INTERNAL cells: each
     mapInArrow task materializes its partition of the z0 frontier and
     walks it down the internal-cell tree IN-TASK — clip ONE level from
@@ -1447,21 +1370,12 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     features stay spread across scan partitions exactly like the z0
     render; tilefeat parts are written task-side (tmp + rename,
     deterministic per-task names) and per-(task, cell) stat partials
-    come back as the job's only output.
-
-    ``stops``: STOP-boundary cells under probed stragglers (see
-    straggler_probe_stats) — rendered exactly like internal cells but
-    never recursed into, and their retained SOURCE (the clipped
-    feature rows at the node, in the row-per-feature sources/z=N
-    layout) is written task-side next to the tilefeat part; readers
-    union the per-task partials and re-order by ord, the same
-    contract the multi-part tilefeat store already has."""
+    come back as the job's only output."""
     import pyarrow as pa
 
     kids: dict = {}
-    for z, x, y in list(internals) + list(stops):
+    for z, x, y in internals:
         kids.setdefault((z - 1, x >> 1, y >> 1), []).append((z, x, y))
-    stop_set = {tuple(int(v) for v in c) for c in stops}
     opts = options
 
     def run(batches):
@@ -1473,7 +1387,6 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
         parts = [pa.Table.from_batches([rb]) for rb in batches]
         acc: dict = {}
         rendered: dict = {}
-        sources: dict = {}
         if parts:
             tbl0 = pa.concat_tables(parts).combine_chunks()
             stack = [(0, 0, 0, tbl0)]
@@ -1515,22 +1428,15 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
                         rend.column("n_simplified")).as_py() or 0)
                     rendered.setdefault(cz, []).append(
                         rend.drop_columns(["z"]))
-                    if (cz, cx, cy) in stop_set:
-                        sources.setdefault(cz, []).append(
-                            clipped.drop_columns(["z"]))
-                    else:
-                        stack.append((cz, cx, cy, clipped))
+                    stack.append((cz, cx, cy, clipped))
         pid = TaskContext.get().partitionId()
-        for root, by_z in ((tilefeat_root, rendered),
-                           (sources_root, sources)):
-            for cz, tables in by_z.items():
-                out_dir = os.path.join(root, f"z={cz}")
-                os.makedirs(out_dir, exist_ok=True)
-                final = os.path.join(out_dir, f"part-i{pid:05d}.parquet")
-                pq.write_table(
-                    pa.concat_tables(tables).combine_chunks(),
-                    final + ".inprogress", compression=_CODEC)
-                os.replace(final + ".inprogress", final)
+        for cz, tables in rendered.items():
+            out_dir = os.path.join(tilefeat_root, f"z={cz}")
+            os.makedirs(out_dir, exist_ok=True)
+            final = os.path.join(out_dir, f"part-i{pid:05d}.parquet")
+            pq.write_table(pa.concat_tables(tables).combine_chunks(),
+                           final + ".inprogress", compression=_CODEC)
+            os.replace(final + ".inprogress", final)
         rows = [(z, x, y, *st) for (z, x, y), st in acc.items()]
         yield pa.RecordBatch.from_arrays(
             [pa.array([r[i] for r in rows],

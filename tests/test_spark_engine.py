@@ -389,6 +389,76 @@ def test_spark_batch_deep_drill_bounded_jobs(spark, tmp_path):
             assert batch[c]["features"] == want["features"], c
 
 
+def _gated_clustered_engine(spark, tmp_path):
+    """A gated build over _clustered_collection (internal cells in the
+    tiles store, leaves in the subtree store) and its LocalTileIndex,
+    needing no reference fixture."""
+    data = _clustered_collection(7, 400)
+    opts = TileOptions(index_max_zoom=4, index_max_points=50)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    eng._KERNEL_PTS_PER_TASK = 2000  # a gated cut: internals + leaves
+    eng.build_from_geojson(data)
+    assert _steps(tmp_path)["n_internal"] and _steps(tmp_path)["n_leaves"]
+    return eng, LocalTileIndex(data, opts)
+
+
+def test_spark_get_tiles_all_hit_no_jobs_gated(spark, tmp_path):
+    """Fixture-free twin of test_spark_get_tiles_all_hit_two_jobs: an
+    all-hit batch over internal (tilefeat) and subtree tiles of a gated
+    build, several zooms, runs no Spark job and equals LocalTileIndex."""
+    eng, idx = _gated_clustered_engine(spark, tmp_path)
+    coords = eng.tile_coords()[::3]
+    stats = eng._stats()
+    assert any(c in stats and c[0] > 0 for c in coords)
+    assert any(c not in stats for c in coords)
+    eng.warm()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("gvt-batch-hit-gated", "all-hit batch")
+    batch = eng.get_tiles(coords)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("gvt-batch-hit-gated"))
+    sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"all-hit batch ran {n_jobs} Spark jobs"
+    for c in coords:
+        assert batch[c]["features"] == idx.get_tile(*c)["features"], c
+
+
+def test_spark_batch_deep_drill_no_jobs_gated(spark, tmp_path):
+    """Fixture-free twin of test_spark_batch_deep_drill_bounded_jobs: a
+    get_tiles batch of 128 descendants, three levels under two subtree
+    leaves of a gated build, drills from the leaves' stored source packs
+    and then from the drill overlay's packs, runs no Spark job, and
+    equals LocalTileIndex."""
+    eng, idx = _gated_clustered_engine(spark, tmp_path)
+    eng.warm()
+    stats = eng._stats()
+    leaves = [(r["z"], r["x"], r["y"]) for r in eng.tiles()
+              .where("has_source AND num_features > 0")
+              .select("z", "x", "y").collect()
+              if (r["z"], r["x"], r["y"]) not in stats][:2]
+    assert len(leaves) == 2
+    dz = 3
+    coords = [(z + dz, (x << dz) + dx, (y << dz) + dy)
+              for z, x, y in leaves
+              for dx in range(1 << dz) for dy in range(1 << dz)]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("gvt-batch-drill-gated", "deep drill batch")
+    batch = eng.get_tiles(coords)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(
+        "gvt-batch-drill-gated"))
+    sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"deep-drill batch ran {n_jobs} Spark jobs"
+    assert len(eng._drill_tiles) > len(leaves)
+    for c in coords:
+        want = idx.get_tile(*c)
+        if want is None:
+            assert batch[c] is None, c
+        else:
+            assert batch[c]["features"] == want["features"], c
+    assert eng.tile_coords() == idx.tile_coords
+
+
 def test_spark_resume_view_mode_corpus(spark, tmp_path):
     """Kill-and-resume through build_from_converted's no-wrap fast path,
     where the z0 frontier is a VIEW over the features checkpoint (no
@@ -552,14 +622,13 @@ def test_tile_count_matches_tiles_count(spark, tmp_path):
         assert eng.tile_count() == eng.tiles().count(), name
 
 
-def test_forest_straggler_matches_loop_layout(spark, tmp_path):
-    """Forest wave with STRAGGLER leaves: a giant boundary-crossing
-    polygon gives cut cells huge candidate mass with zero
-    guaranteed-inside mass, so the subdivision-soundness rule cannot
-    split them.  The probe + partition-spread render path (round-5)
-    must make them bit-identical to LocalTileIndex — tiles, stats,
-    insertion order, and drill-down THROUGH a straggler stop tile's
-    task-written per-feature source parts."""
+def test_forest_unprovable_cells_are_leaves(spark, tmp_path):
+    """A giant boundary-crossing polygon gives cut cells huge candidate
+    mass with zero guaranteed-inside mass, so no prover can split them.
+    Such a cell is a plain leaf of the slot wave, even far over the
+    task budget: the lineage records no probe step, no sources/ store
+    exists, and the pyramid, drills through those leaves' packed
+    sources and tileCoords order equal LocalTileIndex."""
     import math as _math
 
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
@@ -581,15 +650,22 @@ def test_forest_straggler_matches_loop_layout(spark, tmp_path):
     forest._KERNEL_PTS_PER_TASK = 2000
     forest.build_from_converted(feats)
     st = _steps(tmp_path / "f")
-    assert st.get("n_stragglers", 0) >= 1, st
-    assert st.get("n_stops", 0) >= 1, st
+    assert "probe" not in st and "n_stragglers" not in st, st
+    assert st["n_internal"], st
+    assert not (tmp_path / "f" / "sources").exists()
+    # leaves far over the budget (the unprovable ring cells) are in the
+    # wave's handoff like any other leaf
+    handoff = {tuple(c) for c in _lineage(tmp_path / "f")[-1]["handoff"]}
+    over = {c for c, w in forest._forest_leaf_work.items()
+            if w > 2 * forest._KERNEL_PTS_PER_TASK}
+    assert over and over <= handoff, (over, handoff)
 
-    # drill through the straggler region (stop-tile sources) and beyond
-    stops = sorted((r["z"], r["x"], r["y"]) for r in forest.tiles()
-                   .where("has_source AND NOT is_split AND num_points > 0")
-                   .collect())
+    # drill through retained leaf sources and beyond
+    leaves = sorted((r["z"], r["x"], r["y"]) for r in forest.tiles()
+                    .where("has_source AND NOT is_split AND num_points > 0")
+                    .collect())
     deep = []
-    for z, x, y in stops[:3] + stops[-3:]:
+    for z, x, y in leaves[:3] + leaves[-3:]:
         deep.append((z + 2, 4 * x + 1, 4 * y + 2))
         deep.append((z + 3, 8 * x + 3, 8 * y + 5))
     assert_engine_matches_index(
@@ -680,7 +756,7 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     cut = _steps(tmp_path / "f")
 
     # kill everything but the features checkpoint
-    for store in ("tiles", "tilefeat", "subtree", "sources", "frontier"):
+    for store in ("tiles", "tilefeat", "subtree", "frontier"):
         p = tmp_path / "f" / store
         if p.exists():
             _sh.rmtree(p)
@@ -816,6 +892,23 @@ def test_slot_wave_matches_group_wave(spark, tmp_path):
     st = _steps(tmp_path / "w")
     assert st["n_slots"] > 1 and st["n_leaves"] > st["n_slots"], st
     assert_engine_matches_index(wave, LocalTileIndex(data, opts))
+
+
+def test_leaf_wave_releases_jvm_arrow_memory(spark, tmp_path):
+    """A build's leaf wave hands no JVM Arrow memory to the session for
+    good: the allocation of the session's Arrow root allocator is no
+    higher after a many-slot build than before it.  A grouped
+    applyInArrow wave kept about 0.6 MB per task, which a long-lived
+    session (a server, this test suite) eventually runs out of."""
+    alloc = spark._jvm.org.apache.spark.sql.util.ArrowUtils.rootAllocator()
+    data = _clustered_collection(3, 300)
+    opts = TileOptions(index_max_zoom=5, index_max_points=40)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    eng._KERNEL_PTS_PER_TASK = 300
+    before = alloc.getAllocatedMemory()
+    eng.build_from_geojson(data)
+    assert _steps(tmp_path)["n_slots"] > 4
+    assert alloc.getAllocatedMemory() <= before
 
 
 def _window_fn(opts):
@@ -980,24 +1073,6 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
                                              list(levels)).collect()}
     frows = fr0.select("coords", "minx", "miny", "maxx", "maxy").collect()
     assert got_v == _strict_vertex_recount(frows, opts, roots, levels)
-
-
-def test_forest_straggler_factor_read_at_cut_time(spark, tmp_path):
-    """The straggler factor is read from the engine when the cut runs:
-    a z1 cell at 3 task budgets with no split proof is a straggler
-    under the default factor of 2 and a plain leaf once the factor
-    admits 3 budgets."""
-    opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "s"))
-    budget = eng._KERNEL_PTS_PER_TASK
-    # one z1 cell at 3 task budgets of work, no split proof (i == 0)
-    gate = [{"lvl": 1, "x": 0, "y": 0,
-             "m": 3 * budget // (opts.index_max_zoom - 1), "i": 0}]
-    leaves, _, _, stragglers = eng._forest_cut(gate)
-    assert stragglers == [(1, 0, 0)] and not leaves
-    eng._FOREST_STRAGGLER = 3
-    leaves, _, _, stragglers = eng._forest_cut(gate)
-    assert leaves == [(1, 0, 0)] and not stragglers
 
 
 def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
@@ -1190,15 +1265,12 @@ def test_forest_blind_leaves_backfilled(spark, tmp_path):
     assert eng.tile_coords() == idx.tile_coords
 
 
-def test_forest_blind_leaf_over_budget_goes_straggler(spark, tmp_path):
+def test_forest_blind_leaf_over_budget_is_leaf(spark, tmp_path):
     """A BLIND child (below a proven internal at _FOREST_MAX_LEVEL, no
     gate row) is estimated at a quarter of its parent's mass over the
-    imz - l levels its subtree renders.  Over the straggler bound it
-    takes the exact probe and the partition-spread render instead of
-    becoming one wave task, and the pyramid still equals
-    LocalTileIndex."""
-    from geojson_vt_spark.pipeline import forest_gate_df
-
+    imz - l levels its subtree renders.  However far that estimate lies
+    over the task budget, the child is a leaf in the wave's handoff,
+    and the pyramid still equals LocalTileIndex."""
     data = _clustered_collection(5, 800)
     opts = TileOptions(index_max_zoom=8, index_max_points=5)
     eng = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
@@ -1206,10 +1278,10 @@ def test_forest_blind_leaf_over_budget_goes_straggler(spark, tmp_path):
     eng.build_from_geojson(data)
 
     lvl = eng._FOREST_MAX_LEVEL
-    fr0 = eng._read_frontier0()
-    _, _, _, stragglers = eng._forest_cut(
-        forest_gate_df(fr0, opts, lvl).collect(), fr0=fr0)
-    blind = [c for c in stragglers if c[0] == lvl + 1]
-    assert blind, stragglers
-    assert _steps(tmp_path / "f")["n_stragglers"] >= len(blind)
+    blind = {c for c, w in eng._forest_leaf_work.items()
+             if c[0] == lvl + 1 and w > 2 * eng._KERNEL_PTS_PER_TASK}
+    assert blind, eng._forest_leaf_work
+    handoff = {tuple(c) for c in _lineage(tmp_path / "f")[-1]["handoff"]}
+    assert blind <= handoff
+    assert "n_stragglers" not in _steps(tmp_path / "f")
     assert_engine_matches_index(eng, LocalTileIndex(data, opts))
