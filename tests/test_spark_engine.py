@@ -398,7 +398,8 @@ def _gated_clustered_engine(spark, tmp_path):
     eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
     eng._KERNEL_PTS_PER_TASK = 2000  # a gated cut: internals + leaves
     eng.build_from_geojson(data)
-    assert _steps(tmp_path)["n_internal"] and _steps(tmp_path)["n_leaves"]
+    st = _steps(tmp_path)
+    assert st["n_internal"] and st["n_leaves"], st
     return eng, LocalTileIndex(data, opts)
 
 
