@@ -23,6 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._worker import _worker_prep
+
 # Mersenne-31: keeps a·h + b within int64 under ANSI overflow checking
 _MERSENNE = (1 << 31) - 1
 
@@ -85,6 +87,7 @@ def shingles_col(text: Column, n: int = 3, words: bool = True,
 
         @pandas_udf("array<string>")
         def sh_udf(texts: pd.Series) -> pd.Series:
+            _worker_prep()
             import re
             ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, not Python \s
             out = []
@@ -161,6 +164,7 @@ def minhash_signature_col(hashed: Column, num_hashes: int = 32,
 
     @pandas_udf("array<long>")
     def mh(hs: pd.Series) -> pd.Series:
+        _worker_prep()
         out = []
         for h in hs:
             hv = np.asarray(h, dtype=np.int64)

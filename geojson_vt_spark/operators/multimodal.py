@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from .._worker import _worker_prep
+
 ASSET_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),       # image|audio|video
@@ -102,6 +104,7 @@ def extract_features_df(assets: DataFrame, fake: bool = True) -> DataFrame:
     Arrow-batched; one numpy pass per batch, no per-row Python work
     beyond the decode call itself."""
     def run(batches):
+        _worker_prep()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -134,6 +137,7 @@ def ahash_df(assets: DataFrame, fake: bool = True) -> DataFrame:
     degeneracy, and the banded join machinery is shared with
     ``simhash_pairs`` (dedup.py)."""
     def run(batches):
+        _worker_prep()
         weights = (1 << np.arange(31, -1, -1)).astype(np.int64)
         for pdf in batches:
             if not len(pdf):
@@ -250,6 +254,7 @@ def resize_df(assets: DataFrame, out_h: int = 4, out_w: int = 8,
     fh, fw = 8 // out_h, 16 // out_w
 
     def run(batches):
+        _worker_prep()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -290,6 +295,7 @@ def frame_sample_df(assets: DataFrame, every_ms: int = 1000,
                    F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms)))))
 
     def run(batches):
+        _worker_prep()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .._worker import _worker_prep
 from .dedup import _dot, _norm, cosine_col
 
 
@@ -38,6 +39,7 @@ def cosine6_col(qv_col, v_col):
 
     @pandas_udf("double")
     def cos6(qv: pd.Series, v: pd.Series) -> pd.Series:
+        _worker_prep()
         if not len(qv):
             return pd.Series(np.empty(0, dtype=np.float64))
         A = np.array(qv.tolist(), dtype=np.float64)

@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .._worker import _worker_prep
 from ..functions.geo import (_bbox_cells_sql, _project_x_sql, _project_y_sql,
                              _tile_coord_sql, _tile_id_sql, tile_id_col)
 from ..pipeline import _dbl
@@ -149,6 +150,7 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
     cand = pts.join(build, keys).where(_BBOX_PREFILTER)
 
     def refine(batches):
+        _worker_prep()
         ring_lookup = ring_bc.value if ring_bc is not None else None
         for pdf in batches:
             if not len(pdf):

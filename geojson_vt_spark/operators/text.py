@@ -13,6 +13,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .._worker import _worker_prep
+
 STOPWORDS = {
     "en": ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"],
     "de": ["der", "die", "das", "und", "ist", "ein", "zu", "mit", "von", "nicht"],
@@ -113,6 +115,7 @@ def winnow_fingerprints_df(docs: DataFrame, text_col: str = "text",
 
     @pandas_udf("array<long>")
     def fps(texts: pd.Series) -> pd.Series:
+        _worker_prep()
         out = []
         for t in texts:
             # utf-32-le bytes ARE the codepoints — one memcpy-ish

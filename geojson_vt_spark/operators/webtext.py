@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._worker import _worker_prep
 from .text import tokens_col
 
 # query params that never change page identity (tracking/session ids)
@@ -169,6 +170,7 @@ def word_ngrams_col(text: Column, n: int, arrow: bool = True) -> Column:
 
         @pandas_udf("array<string>")
         def ng_udf(texts: pd.Series) -> pd.Series:
+            _worker_prep()
             import re
             ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, not Python \s
             out = []
@@ -220,6 +222,7 @@ def repetition_stats_df(docs: DataFrame, text_col: str = "text",
         @pandas_udf("struct<n_words:long, mwl:double, alpha:double,"
                     " top2:double, dup3:double>")
         def stats_udf(texts: pd.Series) -> pd.DataFrame:
+            _worker_prep()
             import re
             from collections import Counter
             ws = re.compile(r"[ \t\n\x0b\f\r]+")   # Java \s, not Python \s
@@ -387,6 +390,7 @@ def decontaminate_df(docs: DataFrame, benchmark: DataFrame, n: int = 8,
 
         @pandas_udf("boolean")
         def dirty_udf(texts: pd.Series) -> pd.Series:
+            _worker_prep()
             import pyarrow as pa
             import pyarrow.compute as pc
             from numpy.lib.stride_tricks import sliding_window_view

@@ -41,6 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ._worker import _worker_prep
 from .model import (FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS,
                     records_to_pdf)
 from .options import TileOptions
@@ -63,6 +64,7 @@ def features_from_json_df(df: DataFrame, options: TileOptions) -> DataFrame:
     from .kernel.vec import convert_rows_to_records
 
     def run(batches):
+        _worker_prep()
         for pdf in batches:
             rows = [(int(o), None if g is None or pd.isna(g) else int(g), j)
                     for o, g, j in zip(pdf["input_ord"].to_numpy(),
@@ -116,6 +118,7 @@ def _clip_df(df: DataFrame, k1: float, k2: float, options: TileOptions,
     lm = options.line_metrics
 
     def run(batches):
+        _worker_prep()
         import pyarrow as pa
 
         from .kernel.vec import batch_clip
@@ -317,6 +320,7 @@ def rendered_features_df(frontier: DataFrame,
     explicit ord_path key (Spark guarantees no row order; the reference
     guarantees insertion order, SURVEY.md §2.6 A1)."""
     def per_feature(batches):
+        _worker_prep()
         import pyarrow as pa
         for rb in batches:
             yield _render_batch(pa.Table.from_batches([rb]), options)
@@ -1065,6 +1069,7 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     JVM Arrow memory per task (Spark 4.1, measured on a 337-task wave),
     enough to exhaust a long-lived session's direct memory."""
     def run(batches):
+        _worker_prep()
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -1379,6 +1384,7 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     opts = options
 
     def run(batches):
+        _worker_prep()
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq

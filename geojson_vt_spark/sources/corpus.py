@@ -24,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._worker import _worker_prep
+
 _WORDS = np.array([
     "map", "tile", "zoom", "vector", "slice", "clip", "buffer", "extent",
     "pyramid", "quadtree", "mercator", "longitude", "latitude", "feature",
@@ -65,6 +67,7 @@ def synth_pages_df(spark: SparkSession, n_docs: int, seed: int = 42,
         n_partitions = spark.sparkContext.defaultParallelism
 
     def gen(batches):
+        _worker_prep()
         for pdf in batches:
             ids = pdf["id"].to_numpy(dtype=np.int64)
             yield _gen_batch(ids, seed, n_geo_points)
@@ -164,6 +167,7 @@ def extract_geo_features_df(pages: DataFrame) -> DataFrame:
     Per-row invariant: output depends only on (url, text) — re-running
     at any parallelism yields byte-identical features per url."""
     def run(batches):
+        _worker_prep()
         import re
         rx = re.compile(_GEO_RE)
         for pdf in batches:

@@ -24,6 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._worker import _worker_prep
 from ..functions.geo import cell_col
 from ..sources.corpus import _gen_batch
 
@@ -36,6 +37,7 @@ def streaming_synth_pages(spark: SparkSession, rows_per_second: int = 500,
             .option("rowsPerSecond", rows_per_second).load())
 
     def gen(batches):
+        _worker_prep()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -153,6 +155,7 @@ def streaming_heavy_tiles(pages: DataFrame, res: int = 6,
              .select("cell"))
 
     def track(key, pdfs, state: GroupState):
+        _worker_prep()
         new = 0
         for pdf in pdfs:
             new += len(pdf)
@@ -296,6 +299,7 @@ def streaming_latest_capture(pages: DataFrame, url_col: str = "url",
         F.col(id_col).alias("_id"))
 
     def track(key, pdfs, state: GroupState):
+        _worker_prep()
         if state.hasTimedOut:
             state.remove()
             return
@@ -372,6 +376,7 @@ def streaming_asof_enrich(events: DataFrame, on: str = "user_id",
         F.col(value_col).cast("long").alias("_val"))
 
     def enrich(key, pdfs, state: GroupState):
+        _worker_prep()
         if state.hasTimedOut:
             state.remove()
             return
