@@ -5,9 +5,9 @@ rule (src/index.js:66-156).  The engine builds it in one shape too: a
 quadtree CUT of the tile tree, decided from the z0 stats (plus one slim
 gate job when they do not settle it), then one wave per kind of cell:
 
-    z0 frontier --narrow render-------------------> tilefeat/z=0
-        |--route to LEAF cells, slot wave---------> subtree b=1
-        '--INTERNAL cells, narrow in-task walk----> tilefeat/z=N
+    z0 frontier --route to LEAF cells, slot wave--> subtree b=1
+        '--narrow in-task walk: z0 as the root,
+           then the INTERNAL cells----------------> tilefeat/z=N
     driver: tiles/z=N stats rows, lineage rows (written last)
 
 Cut shapes (see _build_forest): root-only when the z0 tile stops,
@@ -18,8 +18,9 @@ size.
 
 Scale design notes (SURVEY.md §4/§7):
 - the only shuffles are the gate/probe aggregations (≤ 4^level slim
-  rows) and the leaf wave's slot exchange; every render is a narrow map,
-  so the z0 tile holding the whole corpus never funnels into one task;
+  rows) and the leaf wave's slot exchange; every tilefeat tile is
+  rendered by one narrow map, so the z0 tile holding the whole corpus
+  never funnels into one task;
 - driver state is O(cut cells), not O(4^z tiles): the leaf subtrees are
   built in-task by the batch kernel and written task-side;
 - a dateline-wrapping input is written once as frontier/z=0 (wrap_df's
@@ -38,11 +39,12 @@ through one pyarrow reader (_read), and get_tile is a one-key
 get_tiles.  A miss (getTile's lazy drill-down) replays the build's batch
 kernel (batch_split_subtree under splitTile's drill stop rule) over the
 retained source of its nearest ancestor, pruned to the target path,
-under one engine lock.
+under one engine lock; the drilled tiles stay packed in an in-memory
+overlay until a read returns them.
 
-Run the session with ``spark.scheduler.mode=FAIR``: the z0 render runs
-concurrently with the gate and the waves, and FIFO queues the small
-jobs behind the big stages.
+Run the session with ``spark.scheduler.mode=FAIR``: the render walk runs
+concurrently with the leaf wave, and FIFO queues the small jobs behind
+the big stages.
 """
 
 from __future__ import annotations
@@ -63,7 +65,7 @@ from .pipeline import (_NV_SQL, _arrow_state, _dbl, _pack_state,
                        features_from_json_df, forest_gate_df,
                        forest_route_df, forest_slot_wave_df,
                        geojson_to_input_rows, internal_tree_direct,
-                       rendered_features_df, wrap_df)
+                       wrap_df)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
@@ -74,8 +76,7 @@ TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
 _EMPTY_TILE_STATS = [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]
 
 # the z0 frontier's ord_path is [head] + a checkpoint row's ord_path +
-# [tail] (wrap_df's centre-world envelope); _frontier0_view (SQL) and
-# _frontier0_rows (driver) both build it from here
+# [tail] (wrap_df's centre-world envelope), as _frontier0_view builds it
 _Z0_ORD_ENVELOPE = (1, 0)
 
 # the column a drill reads for a stored tile
@@ -95,8 +96,9 @@ class SparkTileEngine:
             workdir = tempfile.mkdtemp(prefix="gvt_spark_")
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        # drill-down overlay: tiles and retained-source packs created
-        # by get_tiles misses after the build
+        # drill-down overlay: packed tile rows and retained-source
+        # packs created by get_tiles misses after the build, dropped by
+        # the next build
         self._drill_tiles: dict[int, dict] = {}
         self._drill_sources: dict[int, dict] = {}
         self._consumed_sources: set[int] = set()
@@ -601,33 +603,20 @@ class SparkTileEngine:
             load, b = heapq.heappop(heap)
             slot_map[c] = slot_vals[b]
             heapq.heappush(heap, (load + w, b))
-        restore: dict = {}
-        conf = self.spark.conf
-        for k, v in (
-                ("spark.sql.adaptive.coalescePartitions.enabled",
-                 "false"),
-                ("spark.sql.shuffle.partitions", str(n_bins))):
-            restore[k] = conf.get(k)
-            conf.set(k, v)
-        try:
-            self._set_pool("gvt-subtree")
-            out = self._p("subtree", "b=1")
-            if os.path.isdir(out):
-                shutil.rmtree(out)
-            pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
-                              for (z, x, y), v in slot_map.items())
-            cand = routed.withColumn("slot", F.expr(
-                f"CAST(map({pairs})[CAST(z AS BIGINT) * "
-                "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
-                "+ CAST(y AS BIGINT)] AS INT)"))
-            acks = forest_slot_wave_df(cand, opts, out_dir=out).collect()
-            os.makedirs(out, exist_ok=True)
-            open(os.path.join(out, "_SUCCESS"), "w").close()
-            return acks
-        finally:
-            for k, v in restore.items():
-                self.spark.conf.set(k, v)
-
+        self._set_pool("gvt-subtree")
+        out = self._p("subtree", "b=1")
+        if os.path.isdir(out):
+            shutil.rmtree(out)
+        pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
+                          for (z, x, y), v in slot_map.items())
+        cand = routed.withColumn("slot", F.expr(
+            f"CAST(map({pairs})[CAST(z AS BIGINT) * "
+            "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
+            "+ CAST(y AS BIGINT)] AS INT)"))
+        acks = forest_slot_wave_df(cand, opts, out, n_bins).collect()
+        os.makedirs(out, exist_ok=True)
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+        return acks
 
     def _write_tile_rows(self, z: int, rows: list) -> None:
         """tiles/z=N from driver rows ``(x, y, stats)``, stats =
@@ -653,51 +642,35 @@ class SparkTileEngine:
 
         - ROOT-ONLY: the z0 tile stops (num_points ≤ index_max_points,
           or index_max_zoom 0).  z0 renders and keeps its source, which
-          is the z0 frontier (_frontier0_rows serves it); no other
-          tile exists.
+          is the z0 frontier (_stored_sources reads it); no other tile
+          exists.
         - DEPTH-1: the four z1 cells are leaves, with no gate job, when
           index_max_zoom is 1 or the stats prove it
           (_forest_cut_proven).  Every small corpus takes this cut.
         - GATED: forest_gate_df measures per-cell masses and _forest_cut
           walks them into leaf, internal and empty cells.
 
-        The stages, concurrent where independent:
-        - z0 renders at once: it depends only on the frontier, so it
-          overlaps the gate and vertex-probe jobs (FAIR pools share the
-          fleet between them).  Its future joins ``futures``, so the
-          caller awaits it even when the cut raises.
+        Once the cut is known, two stages run concurrently (FAIR pools
+        share the fleet between them):
+        - the render walk (internal_tree_direct): ONE narrow mapInArrow
+          job whose tasks render their partition of the z0 frontier as
+          the z0 tile, then walk it down the INTERNAL cells — clip one
+          level per node on the shrinking parent state, render through
+          the shared kernel.  A tile's features stay spread across scan
+          partitions (no per-tile funnel), tilefeat parts are written
+          task-side and stats rows come back as slim acks.  Its future
+          joins ``futures``, so the caller awaits it even when the
+          leaf wave raises.
         - LEAF cells → slot-wave subtree tasks (_forest_leaf_wave: clip
           z0→cell in-task, then the whole descendant pyramid) into
           subtree b=1.
-        - INTERNAL cells → internal_tree_direct: ONE narrow mapInArrow
-          job whose tasks walk their partition of the z0 frontier down
-          the internal tree — clip one level per node on the shrinking
-          parent state, render through the shared kernel; an internal
-          tile's features stay spread across scan partitions exactly
-          like the z0 render (no per-tile funnel), tilefeat parts are
-          written task-side and stats rows come back as slim acks.
         The driver then writes the tiles/z=N stats rows (z0, internal
         cells, empty back-fills) and the lineage rows LAST, so a kill
         anywhere restarts the build cleanly."""
-        from pyspark.sql import Observation
         opts = self.options
         t0 = time.monotonic()
         fr0 = self._read_frontier0()  # planned once per build
         steps: dict = {}
-        obs_r = Observation()
-
-        def render_job():
-            self._set_pool("gvt-render")
-            _t = time.monotonic()
-            (rendered_features_df(fr0, opts).drop("z")
-             .observe(obs_r, F.sum("n_simplified").alias("ns"))
-             .write.mode("overwrite")
-             .parquet(self._p("tilefeat", "z=0")))
-            steps["render0"] = round(time.monotonic() - _t, 2)
-
-        fut_render = pool.submit(render_job)
-        futures.append(fut_render)
-
         n0 = int(r0["num_points"])
         root_only = (opts.index_max_zoom == 0
                      or n0 <= opts.index_max_points)
@@ -715,50 +688,40 @@ class SparkTileEngine:
                 forest_gate_df(fr0, opts, self._FOREST_MAX_LEVEL).collect(),
                 fr0=fr0)
             gate_sec = round(time.monotonic() - _tg, 2)
-        # only LEAF cells go through the grouped wave; internal cells
-        # are rendered by the in-task walk below
-        routed = forest_route_df(fr0, opts, leaves) if leaves else None
 
-        def internal_job():
-            self._set_pool("gvt-internal")
+        def walk_job():
+            self._set_pool("gvt-render")
             _t = time.monotonic()
             acks = internal_tree_direct(fr0, internals, opts,
                                         self._p("tilefeat"))
-            steps["internal"] = round(time.monotonic() - _t, 2)
+            steps["render"] = round(time.monotonic() - _t, 2)
             return acks
 
-        fut_int = None
-        if internals:
-            fut_int = pool.submit(internal_job)
-            futures.append(fut_int)
+        fut_walk = pool.submit(walk_job)
+        futures.append(fut_walk)
 
         _t1 = time.monotonic()
-        leaf_acks = (self._forest_leaf_wave(leaves, routed=routed)
-                     if leaves else [])
+        leaf_acks = (self._forest_leaf_wave(
+            leaves, routed=forest_route_df(fr0, opts, leaves))
+            if leaves else [])
         wave_sec = time.monotonic() - _t1
-        walk_acks = fut_int.result() if fut_int is not None else []
         _t2 = time.monotonic()
-        fut_render.result()
+        walk_acks = fut_walk.result()
         render_wait = time.monotonic() - _t2
-        ns0 = int(obs_r.get["ns"] or 0)
 
+        # per-(task, tile) partials → one stats row per rendered tile
         merged: dict = {}
         for r in walk_acks:
             key = (int(r["z"]), int(r["x"]), int(r["y"]))
+            st = [int(r["n_feats"]), int(r["n_points"]), int(r["n_sim"]),
+                  float(r["minx"]), float(r["miny"]), float(r["maxx"]),
+                  float(r["maxy"])]
             cur = merged.get(key)
-            if cur is None:
-                merged[key] = [int(r["n_feats"]), int(r["n_points"]),
-                               int(r["n_sim"]), float(r["minx"]),
-                               float(r["miny"]), float(r["maxx"]),
-                               float(r["maxy"])]
-            else:
-                cur[0] += int(r["n_feats"])
-                cur[1] += int(r["n_points"])
-                cur[2] += int(r["n_sim"])
-                cur[3] = min(cur[3], float(r["minx"]))
-                cur[4] = min(cur[4], float(r["miny"]))
-                cur[5] = max(cur[5], float(r["maxx"]))
-                cur[6] = max(cur[6], float(r["maxy"]))
+            merged[key] = st if cur is None else [
+                *(a + b for a, b in zip(cur[:3], st[:3])),
+                *map(min, cur[3:5], st[3:5]), *map(max, cur[5:], st[5:])]
+        # z0's other stats are the observed r0; its render adds ns
+        ns0 = merged.pop((0, 0, 0))[2]
         # one tiles/z=N write per level: z0, internal-cell stats rows
         # and empty-children sentinels.  Leaves that received no
         # candidate rows (blind leaves, or z1 cells of a stats-proven
@@ -775,7 +738,7 @@ class SparkTileEngine:
             by_level.setdefault(z, []).append((x, y, _EMPTY_TILE_STATS))
         for z, rows in sorted(by_level.items()):
             self._write_tile_rows(z, rows)
-        for z in sorted({l for l, _, _ in internals}):
+        for z in sorted({0, *(l for l, _, _ in internals)}):
             p = self._p("tilefeat", f"z={z}")
             os.makedirs(p, exist_ok=True)
             open(os.path.join(p, "_SUCCESS"), "w").close()
@@ -840,9 +803,16 @@ class SparkTileEngine:
         ``resume=True``: when the lineage holds the final row the build
         is done, and only a lost subtree store is re-run from the leaf
         keys that row records.  Anything less restarts the build: the
-        forest appends its lineage only after every store is durable."""
-        self._stats_cache = None
-        self._datasets.clear()
+        forest appends its lineage only after every store is durable.
+
+        Every build drops what serving derived from the previous one:
+        the stats cache, the opened datasets and the drill overlay."""
+        with self._serve_lock:
+            self._stats_cache = None
+            self._datasets.clear()
+            self._drill_tiles.clear()
+            self._drill_sources.clear()
+            self._consumed_sources.clear()
         if resume:
             final = self._final_lineage()
             if final is not None:
@@ -1023,8 +993,9 @@ class SparkTileEngine:
         for r in self._read("subtree", self._PACK_COLS, kind="tile"):
             out[f"z{r['z']}-{r['x']}-{r['y']}"] = \
                 self._unpack_tile_features(r)
-        for tile in self._drill_tiles.values():
-            out[f"z{tile['z']}-{tile['x']}-{tile['y']}"] = tile["features"]
+        for r in self._drill_tiles.values():
+            out[f"z{r['z']}-{r['x']}-{r['y']}"] = \
+                self._unpack_tile_features(r)
         return out
 
     def total_tiles(self) -> int:
@@ -1063,7 +1034,8 @@ class SparkTileEngine:
                 self._drill_misses([k for k in keys if k not in feats])
             for c, k in norm.items():
                 t = None if k is None else self._drill_tiles.get(to_id(*k))
-                f = t["features"] if t is not None else feats.get(k)
+                f = (self._unpack_tile_features(t) if t is not None
+                     else feats.get(k))
                 out[c] = None if f is None else {
                     "features": f, "z": k[0], "x": k[1], "y": k[2]}
         return out
@@ -1126,30 +1098,20 @@ class SparkTileEngine:
         """(z,x,y) → the retained source of each stored tile in
         ``keys`` that keeps one, as kernel state: a subtree leaf's
         packed source row through _pack_state, a root-only z0's z0
-        frontier through the Arrow ingress (ordered by ord_path)."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+        frontier through the Arrow ingress (ordered by ord_path).  The
+        z0 frontier is frontier/z=0 when a wrapping input wrote it, else
+        the features checkpoint: kernel state carries no ord_path, and
+        the view's constant _Z0_ORD_ENVELOPE keeps the checkpoint's
+        order."""
         out = {(r["z"], r["x"], r["y"]): _pack_state(r)
                for r in self._read("subtree", SOURCE_PACK_COLUMNS, keys,
                                    kind="source")}
         if (0, 0, 0) in keys:
-            out[(0, 0, 0)] = _arrow_state(pa.Table.from_pylist(
-                self._frontier0_rows(),
-                schema=to_arrow_schema(FEATURE_SCHEMA)))
+            dset = (self._dataset("frontier/z=0")
+                    or self._dataset("features"))
+            out[(0, 0, 0)] = _arrow_state(
+                dset.to_table(columns=FEATURE_COLUMNS))
         return out
-
-    def _frontier0_rows(self) -> list[dict]:
-        """The z0 frontier as FEATURE records on the driver (a root-only
-        cut's z0 source): frontier/z=0 when a wrapping input wrote it,
-        else the features checkpoint inside _Z0_ORD_ENVELOPE, the rows
-        _frontier0_view serves to Spark."""
-        if self._dataset("frontier/z=0") is not None:
-            return self._read("frontier/z=0", FEATURE_COLUMNS)
-        head, tail = _Z0_ORD_ENVELOPE
-        rows = self._read("features", FEATURE_COLUMNS)
-        for r in rows:
-            r["ord_path"] = [head, *r["ord_path"], tail]
-        return rows
 
     def _drill(self, state, root, target) -> None:
         """splitTile's drill-down pass (src/index.js:66-156 with cz/cx/cy)
@@ -1157,7 +1119,8 @@ class SparkTileEngine:
         ``state`` — ``root``'s retained source as kernel state — toward
         ``target``.  The new tiles, in splitTile's creation order, and
         the source packs the tiles off the target path keep land in the
-        in-memory overlay."""
+        in-memory overlay, both packed as the subtree store keeps them:
+        a tile row is unpacked only when a read returns it."""
         rid = to_id(*root)
         self._consumed_sources.add(rid)
         self._drill_sources.pop(rid, None)
@@ -1165,9 +1128,7 @@ class SparkTileEngine:
             None, *root, self.options, state=state,
             root_forced_split=False, target=target)
         for r in tile_rows[1:]:  # the root's own row: it exists already
-            self._drill_tiles[r["tile_id"]] = {
-                "z": r["z"], "x": r["x"], "y": r["y"],
-                "features": self._unpack_tile_features(r)}
+            self._drill_tiles[r["tile_id"]] = r
             if r["is_split"]:
                 self._consumed_sources.add(r["tile_id"])
         for key, pack in sources.items():

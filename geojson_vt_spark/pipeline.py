@@ -17,8 +17,9 @@ the z0 frontier in a few jobs (engine._build_forest):
   (forest_gate_df, forest_vertex_probe_df) — the stop rule's numPoints
   is ``sum(size(coords)/3)`` (src/index.js:107), so Catalyst runs them
   with map-side partial aggregation;
-- render: narrow per-feature maps (rendered_features_df for z0,
-  internal_tree_direct for internal cells), no per-tile funnel;
+- render: ONE narrow mapInArrow job (internal_tree_direct) renders
+  every tilefeat tile — the z0 tile as the root of an in-task walk down
+  the internal cells — with no per-tile funnel;
 - leaves: routed rows (forest_route_df) grouped into driver-packed
   slots, each cell's whole descendant pyramid built in-task by the
   batch kernel (forest_slot_wave_df → batch_split_subtree);
@@ -298,41 +299,13 @@ def wrap_df(df: DataFrame, options: TileOptions,
 
 # ---------------------------------------------------------------- assembly
 
-_MAPPED_SCHEMA = ("z int, x int, y int, ord_path array<long>, gtype int, "
-                  "coords array<int>, rlens array<int>, "
-                  "tags_json string, fid_json string, "
-                  "n_points long, n_simplified long, "
-                  "minx double, miny double, maxx double, maxy double")
-
-
-def rendered_features_df(frontier: DataFrame,
-                         options: TileOptions) -> DataFrame:
-    """Tile assembly + transform (/root/reference/src/tile.js,
-    /root/reference/src/transform.js), restructured for scale:
-
-    addFeature is a strictly per-feature operation and the tile stats
-    are sums, so assembly = a *narrow* per-feature map (tolerance
-    filter, rewind, integer transform, JSON render) producing one
-    rendered row per (feature, tile).  No shuffle, no grouped-map UDF,
-    and no per-tile string concat: the z0 tile that holds the whole
-    corpus stays spread across its input partitions, and a tile's
-    features array is materialized lazily at read time ordered by the
-    explicit ord_path key (Spark guarantees no row order; the reference
-    guarantees insertion order, SURVEY.md §2.6 A1)."""
-    def per_feature(batches):
-        _worker_prep()
-        import pyarrow as pa
-        for rb in batches:
-            yield _render_batch(pa.Table.from_batches([rb]), options)
-
-    return frontier.mapInArrow(per_feature, _MAPPED_SCHEMA)
-
-
 def _render_batch(tbl, options: TileOptions):
     """Render one Arrow table of TILED rows (z/x/y + FEATURE columns)
-    to a _MAPPED_SCHEMA RecordBatch — the kernel body shared by
-    rendered_features_df's mapInArrow task and internal_tree_direct's
-    in-task walk."""
+    to a RecordBatch of per-feature tilefeat rows (tile assembly and
+    transform, src/tile.js and src/transform.js): the kernel body of
+    internal_tree_direct's in-task walk.  addFeature is per-feature and
+    the tile stats are sums, so a tile's rows may be rendered in any
+    number of batches and tasks; readers order them by ord_path."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1044,7 +1017,7 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
 
 
 def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
-                        out_dir: str) -> DataFrame:
+                        out_dir: str, n_slots: int) -> DataFrame:
     """Driver-packed leaf wave: candidates carry a ``slot`` column (an
     int whose Spark murmur3 bucket the DRIVER chose — see
     SparkTileEngine._slot_values — so hash-partitioning places each
@@ -1063,11 +1036,15 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     do.  Part names are per CELL and deterministic, so a task retry
     overwrites rather than duplicates.
 
-    Each shuffle partition holds exactly one slot, so a plain
-    mapInArrow over ``repartition("slot")`` runs the bins; the grouped
-    applyInArrow runner adds a per-partition sort and leaked ~0.6 MB of
-    JVM Arrow memory per task (Spark 4.1, measured on a 337-task wave),
-    enough to exhaust a long-lived session's direct memory."""
+    ``repartition(n_slots, "slot")`` gives each of the ``n_slots``
+    bins its own shuffle partition: the partition count is part of the
+    plan, so the session's shuffle-partition setting and AQE coalescing
+    (which collapses a bare ``repartition("slot")`` to one task) leave
+    it alone, and no session conf is touched.  A plain mapInArrow runs
+    the bins; the grouped applyInArrow runner adds a per-partition sort
+    and leaked ~0.6 MB of JVM Arrow memory per task (Spark 4.1, measured
+    on a 337-task wave), enough to exhaust a long-lived session's direct
+    memory."""
     def run(batches):
         _worker_prep()
         import numpy as np
@@ -1110,7 +1087,7 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
                               ("n_cand", pa.int64()),
                               ("secs", pa.float64())])).to_batches()
 
-    return candidates.repartition("slot").mapInArrow(
+    return candidates.repartition(n_slots, "slot").mapInArrow(
         run, SUBTREE_ACK_SCHEMA)
 
 
@@ -1361,23 +1338,24 @@ FOREST_ACK_SCHEMA = ("z int, x int, y int, n_feats long, n_points long, "
 
 def internal_tree_direct(fr0: DataFrame, internals: list,
                          options: TileOptions, tilefeat_root: str) -> list:
-    """Single-job render of the forest cut's INTERNAL cells: each
-    mapInArrow task materializes its partition of the z0 frontier and
-    walks it down the internal-cell tree IN-TASK — clip ONE level from
-    the parent state per node (clip_table_to_cell: trivial accept
-    passes through, crossing rows run the clip chain), render the node
-    through the shared kernel, recurse into its internal children on
-    the shrinking clipped state.  No shuffle, no inter-level job
-    barrier: the level-chained form re-introduced a 5-round spine
-    (~8-10 s of fixed job latency per level on the 4x8 grid, 53 s of
-    a 67 s wall at 2M pages), and the clip-from-z0 form before it
-    re-clipped every cell from the root (68 s).  An internal tile's
-    features stay spread across scan partitions exactly like the z0
-    render; tilefeat parts are written task-side (tmp + rename,
-    deterministic per-task names) and per-(task, cell) stat partials
-    come back as the job's only output."""
-    import pyarrow as pa
-
+    """Single-job render of every tilefeat tile: the z0 tile and the
+    forest cut's INTERNAL cells.  Each mapInArrow task renders its
+    partition of the z0 frontier as the root node (0, 0, 0), batch by
+    batch, and walks it down the internal-cell tree IN-TASK — clip ONE
+    level from the parent state per node (clip_table_to_cell: trivial
+    accept passes through, crossing rows run the clip chain), render the
+    node through the shared kernel, recurse into its internal children
+    on the shrinking clipped state.  With no internal cells the task
+    renders z0 alone and keeps no batch after rendering it.  No shuffle,
+    no inter-level job barrier: the level-chained form re-introduced a
+    5-round spine (~8-10 s of fixed job latency per level on the 4x8
+    grid, 53 s of a 67 s wall at 2M pages), and the clip-from-z0 form
+    before it re-clipped every cell from the root (68 s).  A tile's
+    features stay spread across scan partitions (no per-tile funnel,
+    not even for the z0 tile that holds the whole corpus); tilefeat
+    parts are written task-side (tmp + rename, deterministic per-task
+    names) and per-(task, tile) stat partials come back as the job's
+    only output."""
     kids: dict = {}
     for z, x, y in internals:
         kids.setdefault((z - 1, x >> 1, y >> 1), []).append((z, x, y))
@@ -1390,67 +1368,54 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        parts = [pa.Table.from_batches([rb]) for rb in batches]
-        acc: dict = {}
         rendered: dict = {}
-        if parts:
-            tbl0 = pa.concat_tables(parts).combine_chunks()
-            stack = [(0, 0, 0, tbl0)]
-            while stack:
-                z, x, y, tbl = stack.pop()
-                for (cz, cx, cy) in kids.get((z, x, y), []):
-                    if not tbl.num_rows:
-                        continue
-                    clipped = clip_table_to_cell(tbl, cz, cx, cy,
-                                                 opts, from_zoom=z)
-                    if not clipped.num_rows:
-                        continue
-                    nvs = pc.cast(pc.divide(pc.list_value_length(
-                        clipped.column("coords")), 3), pa.int64())
-                    # ±inf init, NOT the empty-tile sentinel
-                    # [2,1,-1,0]: an entry only exists once a non-empty
-                    # clip merges real values, and the sentinel would
-                    # clamp bboxes that legitimately leave [0,1]
-                    # (multi-world x shifts project past the unit
-                    # square); zero-row cells never reach acc and keep
-                    # sentinel bboxes via the driver-side empty rows
-                    st = acc.setdefault(
-                        (cz, cx, cy),
-                        [0, 0, 0, float("inf"), float("inf"),
-                         float("-inf"), float("-inf")])
-                    st[0] += clipped.num_rows
-                    st[1] += int(pc.sum(nvs).as_py() or 0)
-                    st[3] = min(st[3], pc.min(
-                        clipped.column("minx")).as_py())
-                    st[4] = min(st[4], pc.min(
-                        clipped.column("miny")).as_py())
-                    st[5] = max(st[5], pc.max(
-                        clipped.column("maxx")).as_py())
-                    st[6] = max(st[6], pc.max(
-                        clipped.column("maxy")).as_py())
-                    rend = pa.Table.from_batches(
-                        [_render_batch(clipped, opts)])
-                    st[2] += int(pc.sum(
-                        rend.column("n_simplified")).as_py() or 0)
-                    rendered.setdefault(cz, []).append(
-                        rend.drop_columns(["z"]))
+        acks: list = []
+
+        def render(z, x, y, tbl):
+            rend = _render_batch(tbl, opts)
+            nvs = pc.divide(pc.list_value_length(tbl.column("coords")), 3)
+            # a non-empty batch's real bbox, NOT the empty-tile sentinel
+            # [2,1,-1,0]: the driver merges partials by min/max, and the
+            # sentinel would clamp bboxes that legitimately leave [0,1]
+            # (multi-world x shifts project past the unit square)
+            acks.append((z, x, y, tbl.num_rows,
+                         int(pc.sum(nvs).as_py() or 0),
+                         int(pc.sum(rend.column("n_simplified")).as_py()
+                             or 0),
+                         *(agg(tbl.column(c)).as_py() for agg, c in (
+                             (pc.min, "minx"), (pc.min, "miny"),
+                             (pc.max, "maxx"), (pc.max, "maxy")))))
+            rendered.setdefault(z, []).append(
+                pa.Table.from_batches([rend]).drop_columns(["z"]))
+
+        roots = []
+        for rb in batches:
+            if rb.num_rows:
+                tbl = pa.Table.from_batches([rb])
+                render(0, 0, 0, tbl)
+                if (0, 0, 0) in kids:
+                    roots.append(tbl)
+        stack = ([(0, 0, 0, pa.concat_tables(roots).combine_chunks())]
+                 if roots else [])
+        while stack:
+            z, x, y, tbl = stack.pop()
+            for cz, cx, cy in kids.get((z, x, y), []):
+                clipped = clip_table_to_cell(tbl, cz, cx, cy, opts,
+                                             from_zoom=z)
+                if clipped.num_rows:
+                    render(cz, cx, cy, clipped)
                     stack.append((cz, cx, cy, clipped))
         pid = TaskContext.get().partitionId()
-        for cz, tables in rendered.items():
-            out_dir = os.path.join(tilefeat_root, f"z={cz}")
+        for z, tables in rendered.items():
+            out_dir = os.path.join(tilefeat_root, f"z={z}")
             os.makedirs(out_dir, exist_ok=True)
             final = os.path.join(out_dir, f"part-i{pid:05d}.parquet")
             pq.write_table(pa.concat_tables(tables).combine_chunks(),
                            final + ".inprogress", compression=_CODEC)
             os.replace(final + ".inprogress", final)
-        rows = [(z, x, y, *st) for (z, x, y), st in acc.items()]
+        types = [pa.int32()] * 3 + [pa.int64()] * 3 + [pa.float64()] * 4
         yield pa.RecordBatch.from_arrays(
-            [pa.array([r[i] for r in rows],
-                      [pa.int32(), pa.int32(), pa.int32(),
-                       pa.int64(), pa.int64(), pa.int64(),
-                       pa.float64(), pa.float64(), pa.float64(),
-                       pa.float64()][i])
-             for i in range(10)],
+            [pa.array([r[i] for r in acks], t) for i, t in enumerate(types)],
             names=["z", "x", "y", "n_feats", "n_points", "n_sim",
                    "minx", "miny", "maxx", "maxy"])
 

@@ -460,6 +460,27 @@ def test_spark_batch_deep_drill_no_jobs_gated(spark, tmp_path):
     assert eng.tile_coords() == idx.tile_coords
 
 
+def test_rebuild_drops_drill_overlay(spark, tmp_path):
+    """A rebuild of one engine serves the new input only: the tiles and
+    source packs an earlier drill left in the overlay belong to the old
+    pyramid and must go with it.  Kept, they answered a drilled key
+    with the old input's tile and appended it to tile_coords()."""
+    from .test_pipeline import _mixed_collection
+
+    opts = TileOptions(index_max_zoom=2, index_max_points=100)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    old = _mixed_collection(5, 300)
+    eng.build_from_geojson(old)
+    assert (eng.get_tile(6, 0, 1)["features"]
+            == LocalTileIndex(old, opts).get_tile(6, 0, 1)["features"])
+    assert eng._drill_tiles
+
+    data = _mixed_collection(7, 300)
+    eng.build_from_geojson(data)
+    assert_engine_matches_index(eng, LocalTileIndex(data, opts),
+                                [(6, 0, 1), (5, 3, 9)])
+
+
 def test_spark_resume_view_mode_corpus(spark, tmp_path):
     """Kill-and-resume through build_from_converted's no-wrap fast path,
     where the z0 frontier is a VIEW over the features checkpoint (no
@@ -912,6 +933,49 @@ def test_leaf_wave_releases_jvm_arrow_memory(spark, tmp_path):
     assert alloc.getAllocatedMemory() <= before
 
 
+def test_leaf_wave_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The leaf wave sets no session conf, so a query running beside a
+    build sees the session's own settings: inside forest_slot_wave_df
+    the shuffle-partition count and AQE partition coalescing read as
+    the session's values, and the wave's stage still runs exactly one
+    task per LPT bin."""
+    import uuid
+
+    import geojson_vt_spark.engine as engine_mod
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    session = {k: spark.conf.get(k) for k in keys}
+    seen = []
+    real = engine_mod.forest_slot_wave_df
+
+    def spy(*a, **k):
+        seen.append({key: spark.conf.get(key) for key in keys})
+        return real(*a, **k)
+
+    monkeypatch.setattr(engine_mod, "forest_slot_wave_df", spy)
+    data = _clustered_collection(3, 300)
+    opts = TileOptions(index_max_zoom=5, index_max_points=40)
+    eng = SparkTileEngine(spark, opts, workdir=str(tmp_path))
+    eng._KERNEL_PTS_PER_TASK = 300
+    sc = spark.sparkContext
+    group = f"gvt-wave-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "a many-slot build")
+    try:
+        eng.build_from_geojson(data)
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setJobGroup(None, None)
+    assert seen == [session]
+    n_bins = eng._forest_slot_bins
+    assert n_bins > int(session["spark.sql.shuffle.partitions"])
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(sid) for j in jobs
+              for sid in tracker.getJobInfo(j).stageIds]
+    assert n_bins in [st.numTasks for st in stages if st is not None]
+    assert_engine_matches_index(eng, LocalTileIndex(data, opts))
+
+
 def _window_fn(opts):
     """Scalar buffered window of cell ``c`` at zoom ``lvl`` — the float
     sequence the kernel clips against."""
@@ -1077,10 +1141,10 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
 
 
 def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
-    """The z0 render starts before the forest gate; when the gate
-    raises, the build must wait for the render before propagating —
-    the render has finished (its store is committed) and no Spark job
-    of the failed build is still running."""
+    """The render walk, z0 included, starts once the cut is known; when
+    the forest gate raises, the build propagates the error with no
+    Spark job of the failed build still running and no z0 tile
+    written."""
     import geojson_vt_spark.engine as engine_mod
     from geojson_vt_spark.pipeline import features_from_json_df
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
@@ -1099,12 +1163,12 @@ def test_forest_gate_failure_awaits_z0_render(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="gate failed"):
         eng.build_from_converted(feats)
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
-    assert (tmp_path / "f" / "tilefeat" / "z=0" / "_SUCCESS").exists()
+    assert not (tmp_path / "f" / "tilefeat" / "z=0").exists()
 
 
 def test_failed_build_awaits_every_stage(spark, tmp_path, monkeypatch):
-    """A gated build whose z0 render and leaf wave both fail must still
-    await its internal-cell walk before it raises: no stage of the
+    """A gated build whose leaf wave fails must still await its render
+    walk (z0 and the internal cells) before it raises: no stage of the
     failed build is left running, and the pool is shut down."""
     import threading
     import time
@@ -1115,9 +1179,6 @@ def test_failed_build_awaits_every_stage(spark, tmp_path, monkeypatch):
 
     done = threading.Event()
 
-    def render_boom(*_a, **_k):
-        raise RuntimeError("render failed")
-
     def wave_boom(*_a, **_k):
         raise RuntimeError("leaf wave failed")
 
@@ -1126,7 +1187,6 @@ def test_failed_build_awaits_every_stage(spark, tmp_path, monkeypatch):
         done.set()
         return []
 
-    monkeypatch.setattr(engine_mod, "rendered_features_df", render_boom)
     monkeypatch.setattr(engine_mod, "internal_tree_direct", slow_walk)
     monkeypatch.setattr(SparkTileEngine, "_forest_leaf_wave", wave_boom)
     opts = TileOptions(max_zoom=8, index_max_zoom=4, index_max_points=20)
@@ -1135,7 +1195,7 @@ def test_failed_build_awaits_every_stage(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError) as err:
         eng.build_from_geojson(_mixed_collection(21, 60, wrap=False))
     assert done.is_set()
-    assert str(err.value) in ("leaf wave failed", "render failed")
+    assert str(err.value) == "leaf wave failed"
 
 
 def _clustered_collection(seed: int, n: int) -> dict:
