@@ -212,10 +212,11 @@ INVALID_GEOJSON_MSG = "Input data is not a valid GeoJSON object."
 
 
 def parse_feature_rows(rows, options):
-    """Python-side parse/dispatch of (input_ord, gen_index, feature_json)
+    """Python-side parse/dispatch of (input_ord, gen_index, feature)
     rows (convert.js:7-39): id promotion/generation, null-geometry and
     empty-coordinate drops, GeometryCollection recursion, invalid-type
-    raise, lineMetrics MultiLineString explosion.
+    raise, lineMetrics MultiLineString explosion.  A row's feature is
+    its GeoJSON text or the already-parsed dict.
 
     Returns parallel lists: ord_path tuples, gtype codes, fid_json,
     tags_json, and per-feature raw lon/lat ring lists (list of (poly_idx,
@@ -276,8 +277,10 @@ def parse_feature_rows(rows, options):
             return ci
         return emit(ordv, ci, gtype, fid, geojson.get("properties"), coords)
 
-    for input_ord, gen_index, fjson in rows:
-        one(int(input_ord), 0, _jloads(fjson), gen_index)
+    for input_ord, gen_index, feature in rows:
+        one(int(input_ord), 0,
+            feature if isinstance(feature, dict) else _jloads(feature),
+            gen_index)
     return ords, gcodes, fids, tagss, ringss
 
 
@@ -439,6 +442,10 @@ class ClipResult:
     @property
     def n_feats(self) -> int:
         return len(self.gcodes)
+
+    @property
+    def bbox(self) -> tuple:
+        return self.minx, self.miny, self.maxx, self.maxy
 
 
 class ClipRuns:
@@ -1327,29 +1334,28 @@ def batch_assemble(rags: Rags, gcodes, tz, tx, ty, options):
     return geom, n_points, n_simplified
 
 
+def convert_rows(rows, options):
+    """parse → rags → bbox, the batch convert of ingest rows shared by
+    convert_rows_to_records and the Arrow egress
+    (pipeline.convert_rows_to_table): (ords, gcodes, fid_json,
+    tags_json, rags, (minx, miny, maxx, maxy))."""
+    ords, gcodes, fids, tagss, ringss = parse_feature_rows(rows, options)
+    gcodes = np.asarray(gcodes, dtype=np.int64)
+    rags = build_rags(gcodes, ringss, options)
+    return ords, gcodes, fids, tagss, rags, feature_bboxes(rags, gcodes)
+
+
 def convert_rows_to_records(rows, options) -> list[dict]:
     """Full batch convert: ingest rows → FEATURE_SCHEMA record dicts
     (the batched equivalent of kernel.convert + model.feature_to_record,
     bit-identical output)."""
-    ords, gcodes_l, fids, tagss, ringss = parse_feature_rows(rows, options)
-    gcodes = np.asarray(gcodes_l, dtype=np.int64)
-    rags = build_rags(gcodes_l, ringss, options)
-    minx, miny, maxx, maxy = feature_bboxes(rags, gcodes)
-
-    xyz = np.empty(3 * rags.n_vertices)
-    xyz[0::3] = rags.xs
-    xyz[1::3] = rags.ys
-    xyz[2::3] = rags.zs
-
+    ords, gcodes, fids, tagss, rags, bbox = convert_rows(rows, options)
+    minx, miny, maxx, maxy = bbox
+    f_roff, xyz = rags_to_feature_arrays(rags)
     rlens = rags.ring_lens()
-    n_feats = rags.n_feats
-    f_nrings = np.bincount(rags.rfeat, minlength=n_feats).astype(np.int64) \
-        if rags.n_rings else np.zeros(n_feats, dtype=np.int64)
-    f_roff = np.zeros(n_feats + 1, dtype=np.int64)
-    np.cumsum(f_nrings, out=f_roff[1:])
 
     records = []
-    for fi in range(n_feats):
+    for fi in range(rags.n_feats):
         r0, r1 = int(f_roff[fi]), int(f_roff[fi + 1])
         v0, v1 = int(rags.roff[r0]), int(rags.roff[r1])
         code = int(gcodes[fi])

@@ -21,7 +21,6 @@ from .kernel.fastjson import dumps as _jdumps, loads as _jloads
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import types as T
 
 from .kernel.feature import Ring, VTFeature
@@ -120,11 +119,3 @@ def record_to_feature(rec) -> tuple[tuple, VTFeature]:
         maxx=float(rec["maxx"]), maxy=float(rec["maxy"]),
     )
     return tuple(rec["ord_path"]), f
-
-
-def records_to_pdf(records: list[dict],
-                   columns: list[str] = FEATURE_COLUMNS) -> pd.DataFrame:
-    """Column dicts → pandas frame with the given column order."""
-    cols = {name: [r[name] for r in records] for name in columns}
-    return pd.DataFrame(cols, columns=columns)
-

@@ -355,8 +355,8 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
                           poly_vertex_hint: int | None = None) -> DataFrame:
     """points(point_id, lon, lat) ⨝ polys(poly_id, pxs, pys projected)
     → (point_id, poly_id) pairs with the point inside the polygon ring.
-    A NULL or empty ring, or one whose pxs and pys differ in length,
-    holds no point.
+    A NULL or empty ring, one whose pxs and pys differ in length, or a
+    row with a NULL poly_id holds no point.
 
     salt_n > 0 replicates build rows across salt buckets so one hot
     cell spreads over salt_n reducers (shuffle path only).
@@ -371,6 +371,7 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
     decision uses them, and the ring broadcast — when chosen — collects
     once as its payload, which it must do regardless)."""
     pts = _point_cells(points, res)
+    polys = polys.where(F.col("poly_id").isNotNull())
     side = _broadcast_side(polys, res, broadcast_polys, poly_count_hint,
                            poly_vertex_hint)
     if side is not None:

@@ -4,9 +4,10 @@ Spark-first design (SURVEY.md §7): geojson-vt's recursive splitTile
 (src/index.js:66-156) becomes a quadtree CUT of the tile tree built from
 the z0 frontier in a few jobs (engine._build_forest):
 
-- ingest: convert (features_from_json_df) and the dateline wrap
-  (wrap_df, Column-level trivial accept/reject, kernel clip only for
-  crossing features);
+- ingest: convert (features_from_json_df: one Arrow-in, Arrow-out
+  stage, fused with the corpus extract when fed an extract frame) and
+  the dateline wrap (wrap_df, Column-level trivial accept/reject,
+  kernel clip only for crossing features);
 - clip: ONE path from a cell's ancestor down to the cell — _clip_chain
   (batch_clip on x then y per level, windows from _cell_window) between
   one Arrow ingress (_arrow_state) and one Arrow egress
@@ -43,8 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ._worker import _worker_prep
-from .model import (FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS,
-                    records_to_pdf)
+from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS
 from .options import TileOptions
 
 # parquet codec of the task-side store writes (subtree and tilefeat
@@ -56,24 +56,64 @@ _CODEC = "zstd"
 
 def features_from_json_df(df: DataFrame, options: TileOptions) -> DataFrame:
     """Distributed convert stage: rows of (input_ord, gen_index, feature_json)
-    → FEATURE_SCHEMA rows with ord_path = [input_ord, convert_ord].
+    → FEATURE_SCHEMA rows with ord_path = [input_ord, convert_ord], one
+    Arrow batch in and one FEATURE table out per input batch
+    (convert_rows_to_table).
 
     feature_json is a single GeoJSON Feature (or bare geometry wrapped as
     {"geometry": ...}); gen_index feeds generateId (null for non-collection
     inputs, matching /root/reference/src/convert.js:11,15,19).
+
+    A frame that ``extract_geo_features_df`` returned, used as it is
+    (not cached, not derived), is fused with its extract: the result is
+    ONE mapInArrow over the pages' (url, text) that hands each page's
+    parsed feature dict straight to the convert, with no GeoJSON text
+    in between and one Python worker per task instead of two.  Any
+    other frame — a cached extract included — is converted from its
+    feature_json text.  Both give the same rows.
     """
-    from .kernel.vec import convert_rows_to_records
+    from .sources.corpus import extracted_pages, page_features
 
     def run(batches):
         _worker_prep()
-        for pdf in batches:
-            rows = [(int(o), None if g is None or pd.isna(g) else int(g), j)
-                    for o, g, j in zip(pdf["input_ord"].to_numpy(),
-                                       pdf["gen_index"].to_numpy(),
-                                       pdf["feature_json"].to_numpy())]
-            yield records_to_pdf(convert_rows_to_records(rows, options))
+        for rb in batches:
+            rows = zip(rb.column("input_ord").to_pylist(),
+                       rb.column("gen_index").to_pylist(),
+                       rb.column("feature_json").to_pylist())
+            yield from convert_rows_to_table(rows, options).to_batches()
 
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    def fused(batches):
+        _worker_prep()
+        for rb in batches:
+            rows = ((o, o, feature) for o, feature in page_features(
+                rb.column("url").to_pylist(), rb.column("text").to_pylist()))
+            yield from convert_rows_to_table(rows, options).to_batches()
+
+    pages = extracted_pages(df)
+    if pages is not None:
+        return pages.select("url", "text").mapInArrow(fused, FEATURE_SCHEMA)
+    return df.mapInArrow(run, FEATURE_SCHEMA)
+
+
+def convert_rows_to_table(rows, options):
+    """Ingest rows → one FEATURE_COLUMNS Arrow table, built straight
+    from the batch convert's rags (kernel.vec.convert_rows) through
+    the clips' geometry egress (_clip_out_geometry_arrays): the Arrow
+    twin of ``convert_rows_to_records``, column for column.  A batch
+    whose every row drops gives a typed zero-row table."""
+    import pyarrow as pa
+
+    from .kernel.vec import convert_rows
+    ords, gcodes, fids, tagss, rags, bbox = convert_rows(rows, options)
+    geo = _clip_out_geometry_arrays(rags, gcodes, bbox)
+    n = len(ords)
+    ord_path = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, 2 * n + 1, 2, dtype=np.int32)),
+        pa.array(np.asarray(ords, dtype=np.int64).reshape(-1), pa.int64()))
+    return pa.Table.from_arrays(
+        [ord_path, pa.array(fids, pa.string()), pa.array(tagss, pa.string())]
+        + [geo[c] for c in FEATURE_COLUMNS[3:]],
+        names=FEATURE_COLUMNS)
 
 
 def convert_single(feature_dict, options, gen_index):
@@ -128,9 +168,9 @@ def _clip_df(df: DataFrame, k1: float, k2: float, options: TileOptions,
             state = _arrow_state(tbl, sort=False, strings=False)[:6]
             n = rb.num_rows
             res = batch_clip(*state, np.full(n, k1), np.full(n, k2), 0, lm)
+            geo = _clip_out_geometry_arrays(res.rags, res.gcodes, res.bbox)
             yield from _feature_table(
-                tbl, res.src, res.sub_ord[:, None],
-                _clip_out_geometry_arrays(res)).to_batches()
+                tbl, res.src, res.sub_ord[:, None], geo).to_batches()
 
     passed = df.where(accept).withColumn(
         "ord_path", _ord_extend(world, F.lit(0)))
@@ -184,19 +224,20 @@ def _feature_table(tbl, rows, tail, geo=None):
         names=FEATURE_COLUMNS)
 
 
-def _clip_out_geometry_arrays(res) -> dict:
-    """ClipResult → Arrow arrays for the FEATURE geometry columns
+def _clip_out_geometry_arrays(rg, gcodes, bbox) -> dict:
+    """Rags, their per-feature gtype codes and (minx, miny, maxx, maxy)
+    → Arrow arrays for the FEATURE geometry columns
     (gtype/coords/ring_lens/poly_lens/ring metrics/bbox), built
     straight from the rag flats with ``pa.ListArray.from_arrays`` —
-    the one Arrow egress of every clip, with zero per-feature object
-    boxing.  poly_lens regrouping is a flat bincount over global
-    (feature, poly) ids instead of the per-MultiPolygon loop."""
+    the one Arrow egress of every clip and of the convert, with zero
+    per-feature object boxing.  poly_lens regrouping is a flat bincount
+    over global (feature, poly) ids instead of the per-MultiPolygon
+    loop."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from .kernel.vec import GT_MPOLY, GTYPES, rags_to_feature_arrays
-    rg = res.rags
-    n = res.n_feats
+    n = rg.n_feats
     f_roff, xyz = rags_to_feature_arrays(rg)
 
     def _list(offs, values):
@@ -212,7 +253,7 @@ def _clip_out_geometry_arrays(res) -> dict:
     ring_start = _list(f_roff32, pa.array(rg.rstart, pa.float64()))
     ring_end = _list(f_roff32, pa.array(rg.rend, pa.float64()))
 
-    gcodes = np.asarray(res.gcodes, dtype=np.int64)
+    gcodes = np.asarray(gcodes, dtype=np.int64)
     mp = gcodes == GT_MPOLY
     nr_f = f_roff[1:] - f_roff[:-1]
     npoly = np.zeros(n, dtype=np.int64)
@@ -237,14 +278,15 @@ def _clip_out_geometry_arrays(res) -> dict:
 
     gtype = pc.take(pa.array(list(GTYPES), pa.string()),
                     pa.array(gcodes))
+    minx, miny, maxx, maxy = bbox
     return {
         "gtype": gtype, "coords": coords, "ring_lens": ring_lens,
         "poly_lens": poly_lens, "ring_size": ring_size,
         "ring_start": ring_start, "ring_end": ring_end,
-        "minx": pa.array(res.minx, pa.float64()),
-        "miny": pa.array(res.miny, pa.float64()),
-        "maxx": pa.array(res.maxx, pa.float64()),
-        "maxy": pa.array(res.maxy, pa.float64()),
+        "minx": pa.array(minx, pa.float64()),
+        "miny": pa.array(miny, pa.float64()),
+        "maxx": pa.array(maxx, pa.float64()),
+        "maxy": pa.array(maxy, pa.float64()),
     }
 
 
@@ -1322,7 +1364,8 @@ def clip_table_to_cell(tbl, cz: int, cx: int, cy: int,
         res, src, subs = _clip_chain(state, cz, cx, cy, options, from_zoom)
         if res.n_feats:
             parts.append(_feature_table(tbl, cross[src], subs,
-                                        _clip_out_geometry_arrays(res)))
+                                        _clip_out_geometry_arrays(
+                                            res.rags, res.gcodes, res.bbox)))
     if not parts:
         return tbl.slice(0, 0)
     feats = pa.concat_tables(parts)

@@ -19,6 +19,8 @@ the north_rule asks for.
 from __future__ import annotations
 
 import json
+import re
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -156,46 +158,70 @@ def pages_from_documents(docs: DataFrame) -> DataFrame:
                  F.concat_ws(" ", *mention)).alias("text"))
 
 
-_GEO_RE = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
+_GEO_RX = re.compile(r"geo:(-?\d+\.\d+),(-?\d+\.\d+)")
+
+# extract frame → the pages frame it was extracted from, for the
+# convert's fusion (extracted_pages); a frame's entry dies with it
+_EXTRACTED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def page_features(urls, texts):
+    """(doc_ord, GeoJSON Feature dict) for each page with at least three
+    geo: mentions, in input order: the one page parse behind the
+    extract stage and the fused extract → convert stage."""
+    for url, text in zip(urls, texts):
+        pts = [(float(lon), float(lat)) for lat, lon in _GEO_RX.findall(text)]
+        if len(pts) < 3:
+            continue
+        doc_ord = int(url.rsplit("/", 1)[1])
+        yield doc_ord, {
+            "type": "Feature",
+            "id": doc_ord,
+            "properties": {"url": url},
+            "geometry": {"type": "Polygon", "coordinates": [pts + [pts[0]]]},
+        }
 
 
 def extract_geo_features_df(pages: DataFrame) -> DataFrame:
     """Geo-extraction stage: parse geo: mentions from each page's text
     into one GeoJSON polygon feature per page, emitting the ingest rows
     (input_ord, gen_index, feature_json) the convert stage consumes.
+    Only the pages' ``url`` and ``text`` columns reach Python.
+
+    The returned frame is remembered (weakly) with its pages:
+    ``pipeline.features_from_json_df`` given this frame, uncached and
+    underived, fuses both stages into one (see ``extracted_pages``).
 
     Per-row invariant: output depends only on (url, text) — re-running
     at any parallelism yields byte-identical features per url."""
     def run(batches):
         _worker_prep()
-        import re
-        rx = re.compile(_GEO_RE)
         for pdf in batches:
-            ords, gens, fjs = [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                pts = [(float(lon), float(lat))
-                       for lat, lon in rx.findall(text)]
-                if len(pts) < 3:
-                    continue
-                ring = pts + [pts[0]]
-                doc_ord = int(url.rsplit("/", 1)[1])
-                fjs.append(json.dumps({
-                    "type": "Feature",
-                    "id": doc_ord,
-                    "properties": {"url": url},
-                    "geometry": {"type": "Polygon",
-                                 "coordinates": [ring]},
-                }, separators=(",", ":")))
+            ords, fjs = [], []
+            for doc_ord, feature in page_features(pdf["url"], pdf["text"]):
                 ords.append(doc_ord)
-                gens.append(doc_ord)
+                fjs.append(json.dumps(feature, separators=(",", ":")))
+            ords = pd.Series(ords, dtype="int64")
             yield pd.DataFrame({
-                "input_ord": pd.Series(ords, dtype="int64"),
-                "gen_index": pd.Series(gens, dtype="int64"),
+                "input_ord": ords,
+                "gen_index": ords,
                 "feature_json": pd.Series(fjs, dtype="object"),
             })
 
-    return pages.mapInPandas(
+    out = pages.select("url", "text").mapInPandas(
         run, "input_ord long, gen_index long, feature_json string")
+    _EXTRACTED[out] = pages
+    return out
+
+
+def extracted_pages(df: DataFrame) -> DataFrame | None:
+    """The pages frame ``df`` was extracted from, when ``df`` is a frame
+    ``extract_geo_features_df`` returned and it is not cached; else
+    None.  A cached frame keeps its own stage (its rows are already
+    materialized or meant to be); a frame derived from it (``where``,
+    ``select``, ...) is a different object and is never fused."""
+    pages = _EXTRACTED.get(df)
+    return None if pages is None or df.is_cached else pages
 
 
 def html_pages_from_documents(docs: DataFrame) -> DataFrame:

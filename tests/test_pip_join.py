@@ -190,6 +190,31 @@ def test_pip_join_null_empty_mismatched_rings_match_nothing(spark, tmp_path):
                                         res=5)) == want
 
 
+def test_pip_join_null_poly_id_matches_nothing(spark, tmp_path):
+    """A polygon row with a NULL poly_id holds no point, on the default
+    (probing) path, the shuffle path and a file-backed input, even when
+    its ring covers points."""
+    points = _points(spark)
+    good = _rings(0.0, n=3)
+    sq_x, sq_y = good[10]
+    rows = [(pid, xs, ys) for pid, (xs, ys) in good.items()]
+    rows.append((None, sq_x, sq_y))
+    polys = spark.createDataFrame(
+        rows, "poly_id long, pxs array<double>, pys array<double>")
+    path = str(tmp_path / "polys")
+    polys.write.parquet(path)
+    want = _want(spark, points, good)
+    assert len(want) > 20
+
+    assert _pairs(point_in_polygon_join(points, polys, res=5)) == want
+    assert _pairs(point_in_polygon_join(points, polys, res=5,
+                                        broadcast_polys=False)) == want
+    assert _pairs(point_in_polygon_join(points, polys, res=5, salt_n=3,
+                                        broadcast_polys=False)) == want
+    assert _pairs(point_in_polygon_join(points, spark.read.parquet(path),
+                                        res=5)) == want
+
+
 # ---------------------------------------------------- prepared side
 
 def test_pip_join_warm_call_runs_no_planning_job(spark, tmp_path):

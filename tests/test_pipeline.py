@@ -314,3 +314,136 @@ def test_drill_split_matches_local_index(lm):
             past_max += cz > opts.max_zoom
     assert n_drills >= 100 and n_new > 300 and at_max and past_max, (
         n_drills, n_new, at_max, past_max)
+
+
+# ---------------------------------------------------------------- ingest
+
+def _assert_table_matches_records(tbl, recs, ctx):
+    """The convert's Arrow table equals convert_rows_to_records column
+    for column: FEATURE_SCHEMA's Arrow types, ord paths, ids, tags,
+    geometry, metrics and bboxes, bit for bit."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from geojson_vt_spark.model import FEATURE_SCHEMA
+    schema = to_arrow_schema(FEATURE_SCHEMA)
+    assert tbl.column_names == schema.names, ctx
+    assert [f.type for f in tbl.schema] == [f.type for f in schema], ctx
+    got = tbl.to_pylist()
+    assert [r["ord_path"] for r in got] == [r["ord_path"] for r in recs], ctx
+    assert [r["poly_lens"] is None for r in got] == [
+        r["poly_lens"] is None for r in recs], ctx
+    assert_records_equal(recs, got, ctx)
+
+
+_EDGE_ROWS = [
+    (0, None, json.dumps({"type": "Feature", "id": "mp", "properties": {"a": 1},
+                          "geometry": {"type": "MultiPolygon", "coordinates": [
+                              [[[0, 0], [10, 0], [10, 10], [0, 0]],
+                               [[2, 2], [3, 2], [3, 3], [2, 2]]],
+                              [],
+                              [[[20, 20], [30, 20], [30, 30], [20, 20]]]]}})),
+    (1, 1, json.dumps({"type": "Feature", "properties": {"prop0": "p1"},
+                       "geometry": {"type": "Polygon", "coordinates": [
+                           [[-5, -5], [5, -5], [5, 5], [-5, -5]]]}})),
+    (2, 0, json.dumps({"type": "Feature", "id": 7, "properties": None,
+                       "geometry": {"type": "GeometryCollection", "geometries": [
+                           {"type": "Point", "coordinates": [1, 2]},
+                           {"type": "MultiLineString", "coordinates": [
+                               [[0, 0], [1, 1], [2, 0]], [[5, 5], [6, 7]]]},
+                           {"type": "MultiPolygon", "coordinates": [
+                               [[[40, 40], [41, 40], [41, 41], [40, 40]]]]}]}})),
+    (3, None, json.dumps({"type": "Feature", "properties": {"prop0": 3},
+                          "geometry": {"type": "LineString", "coordinates": [
+                              [170, 10], [-170, 12], [0, 0, 99]]}})),
+    (4, 4, json.dumps({"type": "Feature", "geometry": None})),
+    (5, 5, json.dumps({"geometry": {"type": "MultiPoint", "coordinates": []}})),
+    (6, None, json.dumps({"geometry": {"type": "MultiPoint",
+                                       "coordinates": [[1, 1], [2, 3]]}})),
+]
+
+
+@pytest.mark.parametrize("opts", [
+    dict(), dict(line_metrics=True), dict(promote_id="prop0"),
+    dict(generate_id=True), dict(tolerance=0, max_zoom=4)],
+    ids=["default", "line_metrics", "promote_id", "generate_id", "tol0"])
+def test_convert_table_matches_records(opts):
+    """convert_rows_to_table (the convert stage's Arrow egress) equals
+    convert_rows_to_records on mixed collections, on MultiPolygons next
+    to other types (poly_lens set / null), GeometryCollections, NULL
+    gen_index, dropped rows, and parsed dicts in place of text."""
+    from geojson_vt_spark.kernel.vec import convert_rows_to_records
+    from geojson_vt_spark.pipeline import convert_rows_to_table
+
+    options = TileOptions(**opts)
+    for seed in range(4):
+        data = _mixed_collection(seed, 30, wrap=seed % 2 == 0)
+        rows = [(i, i, json.dumps(f)) for i, f in enumerate(data["features"])]
+        recs = convert_rows_to_records(rows, options)
+        _assert_table_matches_records(
+            convert_rows_to_table(rows, options), recs, f"mixed {seed}")
+        # the fused ingest hands over parsed dicts, not text
+        parsed = [(o, g, json.loads(f)) for o, g, f in rows]
+        _assert_table_matches_records(
+            convert_rows_to_table(parsed, options), recs, f"dicts {seed}")
+    recs = convert_rows_to_records(_EDGE_ROWS, options)
+    assert any(r["poly_lens"] is not None for r in recs)
+    assert any(r["poly_lens"] is None for r in recs)
+    _assert_table_matches_records(
+        convert_rows_to_table(_EDGE_ROWS, options), recs, "edge rows")
+
+
+def test_convert_table_all_rows_dropped_is_typed_and_empty():
+    """A batch whose every row drops (null geometry, empty coordinates)
+    gives a zero-row table with the FEATURE types, as does no row."""
+    from geojson_vt_spark.pipeline import convert_rows_to_table
+
+    for rows in (_EDGE_ROWS[4:6], []):
+        tbl = convert_rows_to_table(rows, TileOptions())
+        assert tbl.num_rows == 0
+        _assert_table_matches_records(tbl, [], "dropped")
+
+
+def _python_maps(df) -> int:
+    """Python map nodes (MapInPandas / MapInArrow) in the physical plan,
+    a cached frame's plan included."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\bMapIn(?:Pandas|Arrow)\b", plan))
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=lambda r: r[0])
+
+
+def test_extract_convert_fuse_into_one_python_stage(spark, tmp_path):
+    """features_from_json_df(extract_geo_features_df(pages)) is one
+    Python stage over the pages' url and text; a derived or a persisted
+    extract frame keeps both stages.  All three give the same rows."""
+    from geojson_vt_spark.pipeline import features_from_json_df
+    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
+                                                 synth_pages_df)
+
+    path = str(tmp_path / "pages")
+    synth_pages_df(spark, 400, seed=5).write.parquet(path)
+    pages = spark.read.parquet(path)
+    opts = TileOptions(index_max_zoom=3)
+
+    fused = features_from_json_df(extract_geo_features_df(pages), opts)
+    assert _python_maps(fused) == 1
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema: struct<url:string,text:string>" in plan, plan
+    want = _sorted_rows(fused)
+    assert len(want) == 400
+
+    derived = features_from_json_df(
+        extract_geo_features_df(pages).where("input_ord >= 0"), opts)
+    assert _python_maps(derived) == 2
+    assert _sorted_rows(derived) == want
+
+    ext = extract_geo_features_df(pages).persist()
+    try:
+        staged = features_from_json_df(ext, opts)
+        assert _python_maps(staged) == 2
+        assert _sorted_rows(staged) == want
+    finally:
+        ext.unpersist()

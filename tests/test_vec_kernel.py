@@ -121,7 +121,8 @@ def batch_clip_records(recs, k1, k2, axis, lm):
                      np.full(len(recs), k1), np.full(len(recs), k2),
                      axis, lm)
     geo = {c: a.to_pylist()
-           for c, a in _clip_out_geometry_arrays(res).items()}
+           for c, a in _clip_out_geometry_arrays(
+               res.rags, res.gcodes, res.bbox).items()}
     out = []
     for oi in range(res.n_feats):
         src = recs[int(res.src[oi])]
