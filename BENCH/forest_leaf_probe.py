@@ -44,8 +44,7 @@ def main() -> None:
     from geojson_vt_spark import TileOptions
     from geojson_vt_spark.engine import SparkTileEngine
     from geojson_vt_spark.pipeline import (features_from_json_df,
-                                           forest_gate_df,
-                                           forest_route_df)
+                                           forest_gate_df)
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
                                                  synth_pages_df)
 
@@ -88,9 +87,8 @@ def main() -> None:
 
     # leaf wave with per-cell acks: the engine's LPT-packed slot wave
     # (pipeline.forest_slot_wave_df) over this cut
-    routed = forest_route_df(fr0, opts, cut)
     t0 = time.monotonic()
-    acks = eng._forest_leaf_wave(cut, routed=routed)
+    acks = eng._forest_leaf_wave(cut, fr0)
     wall = time.monotonic() - t0
     acks = sorted(acks, key=lambda r: -r["secs"])
     print(f"leaf wave: {wall:.2f}s, {len(acks)} tasks, "

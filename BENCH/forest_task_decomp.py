@@ -42,11 +42,11 @@ def main() -> None:
     eng = SparkTileEngine(spark, opts,
                           workdir=tempfile.mkdtemp(prefix="gvt_dec_"))
     fr0 = eng._frontier0_view(spark.read.parquet(FRONTIER))
-    routed = forest_route_df(fr0, opts, [(cz, cx, cy)])
+    routed = forest_route_df(fr0, opts, {(cz, cx, cy): 0})
     t0 = time.monotonic()
     tbl = (routed.where((F.col("z") == cz) & (F.col("x") == cx)
                         & (F.col("y") == cy))
-           .drop("z", "x", "y").toArrow())
+           .drop("z", "x", "y", "bin").toArrow())
     print(f"collect candidates: {time.monotonic()-t0:.2f}s "
           f"rows={tbl.num_rows}")
     spark.stop()

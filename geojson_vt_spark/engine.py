@@ -5,7 +5,7 @@ rule (src/index.js:66-156).  The engine builds it in one shape too: a
 quadtree CUT of the tile tree, decided from the z0 stats (plus one slim
 gate job when they do not settle it), then one wave per kind of cell:
 
-    z0 frontier --route to LEAF cells, slot wave--> subtree b=1
+    z0 frontier --route to LEAF cells, one task per bin--> subtree b=1
         '--narrow in-task walk: z0 as the root,
            then the INTERNAL cells----------------> tilefeat/z=N
     driver: tiles/z=N stats rows, lineage rows (written last)
@@ -18,7 +18,7 @@ size.
 
 Scale design notes (SURVEY.md §4/§7):
 - the only shuffles are the gate/probe aggregations (≤ 4^level slim
-  rows) and the leaf wave's slot exchange; every tilefeat tile is
+  rows) and the leaf wave's bin exchange; every tilefeat tile is
   rendered by one narrow map, so the z0 tile holding the whole corpus
   never funnels into one task;
 - driver state is O(cut cells), not O(4^z tiles): the leaf subtrees are
@@ -529,49 +529,19 @@ class SparkTileEngine:
             leaves, internals, empties, _ = walk(vcells)
         return leaves, internals, empties
 
-    # g -> slot ints; the hash cannot change within one JVM, so each
-    # bin count costs its tiny Spark job once per process
-    _SLOT_VALUES: dict = {}
+    def _forest_leaf_wave(self, leaves, fr0: DataFrame) -> list:
+        """The forest wave's LEAF-subtree job: route the z0 frontier
+        ``fr0`` to the leaf cut cells and clip each whole descendant
+        subtree in-task into subtree b=1.
 
-    def _slot_values(self, g: int) -> list:
-        """Ints v_0..v_{g-1} whose Spark murmur3 shuffle bucket
-        (pmod(hash(int v), g)) is a bijection onto 0..g-1 — computed BY
-        Spark in one tiny job, so the driver's bin assignment and the
-        wave's HashPartitioning agree exactly (no reimplemented hash
-        to drift)."""
-        if g in self._SLOT_VALUES:
-            return list(self._SLOT_VALUES[g])
-        vals: list = [None] * g
-        lo, missing = 0, g
-        while missing:
-            rows = (self.spark.range(lo, lo + 32 * g)
-                    .select(F.col("id").cast("int").alias("v"),
-                            F.pmod(F.hash(F.col("id").cast("int")),
-                                   F.lit(g)).alias("b")).collect())
-            for r in rows:
-                if vals[r["b"]] is None:
-                    vals[r["b"]] = int(r["v"])
-                    missing -= 1
-            lo += 32 * g
-        self._SLOT_VALUES[g] = vals
-        return list(vals)
-
-    def _forest_leaf_wave(self, leaves, routed: DataFrame | None = None
-                          ) -> list:
-        """The forest wave's LEAF-subtree job: route the z0 frontier to
-        the leaf cut cells and clip each whole descendant subtree
-        in-task into subtree b=1.
-
-        Shape: DRIVER-PACKED slots — the cut's per-leaf work estimates
+        Shape: DRIVER-PACKED bins — the cut's per-leaf work estimates
         are LPT-packed into ceil(total/budget) bins (never fewer than
-        the fleet's slots), each bin becomes exactly one task via
-        driver-chosen slot ints (see _slot_values), and the task slices
-        its rows per cell through the per-cell kernel
-        (pipeline.forest_slot_wave_df).  groupBy(z,x,y) would place
-        groups by hash instead, where two hot cells colliding into one
-        task double the wave wall and no bin-packing is possible; with
-        ~2 cells/partition such collisions are the common case, and
-        wave wall = max task IS the term a cluster pays.
+        the fleet's slots) and the bin is the wave's partition id, so
+        each bin is one task that slices its rows per cell through the
+        per-cell kernel (pipeline.forest_slot_wave_df).  groupBy(z,x,y)
+        would place groups by hash instead: two hot cells colliding in
+        one task double the wave wall (= max task, the term a cluster
+        pays), and no bin-packing is possible.
 
         Factored out of _build_forest so a resume (build) can
         re-create a lost subtree store from the cut keys recorded in
@@ -581,39 +551,29 @@ class SparkTileEngine:
         way)."""
         import heapq
         import shutil
-        opts = self.options
-        if routed is None:
-            routed = forest_route_df(self._read_frontier0(), opts,
-                                     [tuple(c) for c in leaves])
         est = self._forest_leaf_work
-        werk = sorted(((est.get(tuple(c), 1), tuple(c)) for c in leaves),
-                      reverse=True)
+        werk = sorted(((est.get(c, 1), c) for c in leaves), reverse=True)
         total = sum(w for w, _ in werk)
         par = self.spark.sparkContext.defaultParallelism
         n_bins = max(1, min(len(leaves),
                             max(par, -(-total
                                        // max(self._KERNEL_PTS_PER_TASK,
                                               1)))))
-        slot_vals = self._slot_values(n_bins)
         self._forest_slot_bins = n_bins
-        slot_map: dict = {}
+        bins: dict = {}
         heap = [(0, b) for b in range(n_bins)]
         heapq.heapify(heap)
         for w, c in werk:
             load, b = heapq.heappop(heap)
-            slot_map[c] = slot_vals[b]
+            bins[c] = b
             heapq.heappush(heap, (load + w, b))
         self._set_pool("gvt-subtree")
         out = self._p("subtree", "b=1")
         if os.path.isdir(out):
             shutil.rmtree(out)
-        pairs = ", ".join(f"{(z << 50) | (x << 25) | y}L, {v}"
-                          for (z, x, y), v in slot_map.items())
-        cand = routed.withColumn("slot", F.expr(
-            f"CAST(map({pairs})[CAST(z AS BIGINT) * "
-            "1125899906842624L + CAST(x AS BIGINT) * 33554432L "
-            "+ CAST(y AS BIGINT)] AS INT)"))
-        acks = forest_slot_wave_df(cand, opts, out, n_bins).collect()
+        acks = forest_slot_wave_df(
+            forest_route_df(fr0, self.options, bins), self.options, out,
+            n_bins).collect()
         os.makedirs(out, exist_ok=True)
         open(os.path.join(out, "_SUCCESS"), "w").close()
         return acks
@@ -636,7 +596,7 @@ class SparkTileEngine:
                                  dtype="int64"),
         }), self._p("tiles", f"z={z}"))
 
-    def _build_forest(self, r0: dict, pool, futures) -> None:
+    def _build_forest(self, r0: dict) -> None:
         """The whole pyramid from the z0 frontier, in one quadtree cut
         whose shape follows the z0 stats ``r0``:
 
@@ -658,9 +618,9 @@ class SparkTileEngine:
           level per node on the shrinking parent state, render through
           the shared kernel.  A tile's features stay spread across scan
           partitions (no per-tile funnel), tilefeat parts are written
-          task-side and stats rows come back as slim acks.  Its future
-          joins ``futures``, so the caller awaits it even when the
-          leaf wave raises.
+          task-side and stats rows come back as slim acks.  It runs on
+          one scoped thread, so it is awaited even when the leaf wave
+          raises.
         - LEAF cells → slot-wave subtree tasks (_forest_leaf_wave: clip
           z0→cell in-task, then the whole descendant pyramid) into
           subtree b=1.
@@ -697,17 +657,17 @@ class SparkTileEngine:
             steps["render"] = round(time.monotonic() - _t, 2)
             return acks
 
-        fut_walk = pool.submit(walk_job)
-        futures.append(fut_walk)
-
-        _t1 = time.monotonic()
-        leaf_acks = (self._forest_leaf_wave(
-            leaves, routed=forest_route_df(fr0, opts, leaves))
-            if leaves else [])
-        wave_sec = time.monotonic() - _t1
-        _t2 = time.monotonic()
-        walk_acks = fut_walk.result()
-        render_wait = time.monotonic() - _t2
+        # leaving the block awaits the walk, also when the wave raises:
+        # a failed build leaves no stage running
+        with ThreadPoolExecutor(max_workers=1) as render:
+            fut_walk = render.submit(walk_job)
+            _t1 = time.monotonic()
+            leaf_acks = (self._forest_leaf_wave(leaves, fr0)
+                         if leaves else [])
+            wave_sec = time.monotonic() - _t1
+            _t2 = time.monotonic()
+            walk_acks = fut_walk.result()
+            render_wait = time.monotonic() - _t2
 
         # per-(task, tile) partials → one stats row per rendered tile
         merged: dict = {}
@@ -819,35 +779,19 @@ class SparkTileEngine:
                 keys = [tuple(k) for k in final.get("handoff") or []]
                 if keys and not os.path.exists(
                         self._p("subtree", "b=1", "_SUCCESS")):
-                    self._forest_leaf_wave(keys)
+                    self._forest_leaf_wave(keys, self._read_frontier0())
                 return
         self._reset_stores()
         r0 = (self._write_frontier0(features_df) if features_df is not None
               else z0_stats)
-        pool = ThreadPoolExecutor(max_workers=4)
-        futures: list = []
-        errors: list = []
-        try:
-            if r0 is None:
-                # empty input: no tiles, as LocalTileIndex builds none
-                self._write_tile_rows(0, [])
-                self._append_lineage({
-                    "zoom": 0, "n_tiles": 0, "n_points": 0,
-                    "forest": True, "complete": True, "final": True})
-            else:
-                self._build_forest(r0, pool, futures)
-        except BaseException as e:
-            errors.append(e)
-        # a failed build leaves no stage running: every stage is
-        # awaited before the first error propagates
-        for f in futures:
-            try:
-                f.result()
-            except BaseException as e:
-                errors.append(e)
-        pool.shutdown()
-        if errors:
-            raise errors[0]
+        if r0 is None:
+            # empty input: no tiles, as LocalTileIndex builds none
+            self._write_tile_rows(0, [])
+            self._append_lineage({
+                "zoom": 0, "n_tiles": 0, "n_points": 0,
+                "forest": True, "complete": True, "final": True})
+        else:
+            self._build_forest(r0)
 
     # ------------------------------------------------------------ read side
 

@@ -998,65 +998,21 @@ def _clip_line_rings(rags, gcodes, lp_rings, k1f, k2f, axis,
 
 def records_to_rags(recs):
     """FEATURE_SCHEMA record dicts → (Rags, gcodes, minx, miny, maxx,
-    maxy).  Inverse of the per-feature slicing in convert_rows_to_records."""
-    xs, ys, zs = [], [], []
-    roff = [0]
-    rfeat, rpoly, router = [], [], []
-    rsize, rstart, rend = [], [], []
-    gcodes = []
-    minx, miny, maxx, maxy = [], [], [], []
-    tot = 0
-    for fi, r in enumerate(recs):
-        gt = r["gtype"]
-        gcodes.append(GT_CODE[gt])
-        minx.append(r["minx"])
-        miny.append(r["miny"])
-        maxx.append(r["maxx"])
-        maxy.append(r["maxy"])
-        c = np.asarray(r["coords"], dtype=np.float64)
-        lens = np.asarray(r["ring_lens"], dtype=np.int64) // 3
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        if gt == "MultiPolygon":
-            rp, ro = [], []
-            for pi, n in enumerate(r["poly_lens"]):
-                for ri in range(int(n)):
-                    rp.append(pi)
-                    ro.append(ri == 0)
-        elif gt == "Polygon":
-            rp = [0] * len(lens)
-            ro = [ri == 0 for ri in range(len(lens))]
-        else:
-            rp = [-1] * len(lens)
-            ro = [False] * len(lens)
-        for ri in range(len(lens)):
-            lo, hi = int(offs[ri]) * 3, int(offs[ri + 1]) * 3
-            seg = c[lo:hi]
-            xs.append(seg[0::3])
-            ys.append(seg[1::3])
-            zs.append(seg[2::3])
-            tot += len(seg) // 3
-            roff.append(tot)
-            rfeat.append(fi)
-            rpoly.append(rp[ri])
-            router.append(ro[ri])
-            rsize.append(float(r["ring_size"][ri]))
-            rstart.append(float(r["ring_start"][ri]))
-            rend.append(float(r["ring_end"][ri]))
-    rags = Rags(
-        np.concatenate(xs) if xs else np.empty(0),
-        np.concatenate(ys) if ys else np.empty(0),
-        np.concatenate(zs) if zs else np.empty(0),
-        np.asarray(roff, dtype=np.int64),
-        np.asarray(rfeat, dtype=np.int64),
-        np.asarray(rsize, dtype=np.float64),
-        np.asarray(rstart, dtype=np.float64),
-        np.asarray(rend, dtype=np.float64),
-        np.asarray(rpoly, dtype=np.int64),
-        len(recs))
-    rags.router = np.asarray(router, dtype=bool)
-    return (rags, np.asarray(gcodes, dtype=np.int64),
-            np.asarray(minx), np.asarray(miny),
-            np.asarray(maxx), np.asarray(maxy))
+    maxy): the records' flat columns concatenated into flats_to_rags."""
+    def cat(name, dtype):
+        return np.concatenate(
+            [np.asarray(r[name], dtype=dtype) for r in recs]
+            + [np.empty(0, dtype=dtype)])
+
+    gcodes = np.asarray([GT_CODE[r["gtype"]] for r in recs], dtype=np.int64)
+    rags = flats_to_rags(
+        cat("coords", np.float64),
+        np.asarray([len(r["ring_lens"]) for r in recs], dtype=np.int64),
+        cat("ring_lens", np.int64), cat("ring_size", np.float64),
+        cat("ring_start", np.float64), cat("ring_end", np.float64), gcodes,
+        lambda fi: recs[fi]["poly_lens"])
+    return (rags, gcodes, *(np.asarray([r[c] for r in recs], dtype=np.float64)
+                            for c in ("minx", "miny", "maxx", "maxy")))
 
 
 def rags_to_feature_arrays(rags: Rags):

@@ -21,9 +21,9 @@ the z0 frontier in a few jobs (engine._build_forest):
 - render: ONE narrow mapInArrow job (internal_tree_direct) renders
   every tilefeat tile — the z0 tile as the root of an in-task walk down
   the internal cells — with no per-tile funnel;
-- leaves: routed rows (forest_route_df) grouped into driver-packed
-  slots, each cell's whole descendant pyramid built in-task by the
-  batch kernel (forest_slot_wave_df → batch_split_subtree);
+- leaves: routed rows (forest_route_df) tagged with their cell's
+  driver-packed bin, which is the wave's partition id; each cell's
+  pyramid is built in-task (forest_slot_wave_df → batch_split_subtree);
 - drill: the engine's getTile drill-down runs the same
   batch_split_subtree on the driver, with splitTile's drill stop rule
   (``target``), over a retained source read back as kernel state:
@@ -341,6 +341,20 @@ def wrap_df(df: DataFrame, options: TileOptions,
 
 # ---------------------------------------------------------------- assembly
 
+def _line_metrics_tags(tagss, fis, rags) -> list:
+    """lineMetrics (src/tile.js addFeature): the tags JSON of each
+    LineString feature ``fi`` in ``fis`` with mapbox_clip_start/_end
+    added, its ring's clipped start and end over the ring's size."""
+    out = []
+    for fi, r in zip(fis, np.searchsorted(rags.rfeat, fis, "left")):
+        tags = _jloads(tagss[fi]) if tagss[fi] else {}
+        size = float(rags.rsize[r])
+        tags["mapbox_clip_start"] = float(rags.rstart[r]) / size
+        tags["mapbox_clip_end"] = float(rags.rend[r]) / size
+        out.append(_jdumps(tags))
+    return out
+
+
 def _render_batch(tbl, options: TileOptions):
     """Render one Arrow table of TILED rows (z/x/y + FEATURE columns)
     to a RecordBatch of per-feature tilefeat rows (tile assembly and
@@ -349,7 +363,6 @@ def _render_batch(tbl, options: TileOptions):
     the tile stats are sums, so a tile's rows may be rendered in any
     number of batches and tasks; readers order them by ord_path."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     from .kernel.vec import GT_LINE, batch_assemble
     lm = options.line_metrics
@@ -377,30 +390,11 @@ def _render_batch(tbl, options: TileOptions):
         pa.array(fb.astype(np.int32), pa.int32()),
         pa.array(rl32, pa.int32()))
     tags_arr = col["tags_json"]
-    if lm:
-        hit = np.nonzero((geom.ftype > 0) &
-                         (gcodes == GT_LINE))[0]
-        if len(hit):
-            sizes = pc.list_flatten(tbl.column("ring_size")) \
-                .to_numpy(zero_copy_only=False)
-            starts = pc.list_flatten(tbl.column("ring_start")) \
-                .to_numpy(zero_copy_only=False)
-            ends = pc.list_flatten(tbl.column("ring_end")) \
-                .to_numpy(zero_copy_only=False)
-            roffs = np.zeros(len(gcodes) + 1, dtype=np.int64)
-            np.cumsum(pc.fill_null(pc.list_value_length(
-                tbl.column("ring_size")), 0).to_numpy(
-                zero_copy_only=False), out=roffs[1:])
-            tags_col = list(tagss)
-            for fi in hit:
-                tags = (_jloads(tags_col[fi])
-                        if tags_col[fi] else {})
-                at = int(roffs[fi])
-                size = float(sizes[at])
-                tags["mapbox_clip_start"] = float(starts[at]) / size
-                tags["mapbox_clip_end"] = float(ends[at]) / size
-                tags_col[fi] = _jdumps(tags)
-            tags_arr = pa.array(tags_col, type=pa.string())
+    hit = np.nonzero((geom.ftype > 0) & (gcodes == GT_LINE))[0] if lm else []
+    if len(hit):
+        tags_col = tagss.copy()
+        tags_col[hit] = _line_metrics_tags(tagss, hit, rags)
+        tags_arr = pa.array(tags_col, type=pa.string())
     return pa.RecordBatch.from_arrays([
         col["z"], col["x"], col["y"], col["ord_path"],
         pa.array(geom.ftype.astype(np.int32), pa.int32()),
@@ -655,19 +649,12 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
                 ffids_all = fids[em]
                 roff_em = np.concatenate(([0], np.cumsum(fnr_all)))
                 coff_em = np.concatenate(([0], np.cumsum(plen2_all)))
-                if lm:
-                    for k in np.nonzero((ftypes_all == 2) &
-                                        (gcodes[em] == GT_LINE))[0]:
-                        fi = int(em[k])
-                        tags = (_jloads(ftags_all[k])
-                                if ftags_all[k] else {})
-                        r0 = int(np.searchsorted(rags.rfeat, fi, "left"))
-                        size = float(rags.rsize[r0])
-                        tags["mapbox_clip_start"] = \
-                            float(rags.rstart[r0]) / size
-                        tags["mapbox_clip_end"] = \
-                            float(rags.rend[r0]) / size
-                        ftags_all[k] = _jdumps(tags)
+                hit = (np.nonzero((ftypes_all == 2)
+                                  & (gcodes[em] == GT_LINE))[0]
+                       if lm else [])
+                if len(hit):
+                    ftags_all[hit] = _line_metrics_tags(tagss, em[hit],
+                                                        rags)
             else:
                 g_index = {}
             _empty32 = np.empty(0, dtype=np.int32)
@@ -776,7 +763,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
         pending = next_pending
         z += 1
         if not out_states:
-            rags, gcodes = _empty_state()
+            rags, gcodes = records_to_rags([])[:2]
             fids = tagss = np.empty(0, dtype=object)
             fminx = fminy = fmaxx = fmaxy = np.empty(0)
             tilex = tiley = np.empty(0, dtype=np.int64)
@@ -800,18 +787,6 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             - ((r["y"] >> (r["z"] - lvl)) & 1)
             for lvl in range(z0 + 1, r["z"] + 1)])
     return tile_rows, sources
-
-
-def _empty_state():
-    import numpy as np
-
-    from .kernel.vec import Rags
-    rags = Rags(np.empty(0), np.empty(0), np.empty(0),
-                np.zeros(1, dtype=np.int64), np.empty(0, dtype=np.int64),
-                np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0, dtype=np.int64), 0)
-    rags.router = np.empty(0, dtype=bool)
-    return rags, np.empty(0, dtype=np.int64)
 
 
 def _subtree_out_pdf(tile_rows, sources) -> pd.DataFrame:
@@ -1059,29 +1034,20 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
 
 
 def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
-                        out_dir: str, n_slots: int) -> DataFrame:
-    """Driver-packed leaf wave: candidates carry a ``slot`` column (an
-    int whose Spark murmur3 bucket the DRIVER chose — see
-    SparkTileEngine._slot_values — so hash-partitioning places each
-    slot in its own task).  One task = one LPT-packed bin of cut
-    cells; inside the task the rows are sliced per cell and each cell
-    runs the per-cell kernel (_wave_cell_kernel: clip-from-z0 chain,
-    descendant pyramid, per-cell part write), emitting one ack row per
-    cell.
+                        out_dir: str, n_bins: int) -> DataFrame:
+    """Driver-packed leaf wave: candidates carry a ``bin`` column
+    (forest_route_df), the LPT bin 0..n_bins-1 the DRIVER packed their
+    cell into.  One task = one bin of cut cells; inside the task the
+    rows are sliced per cell and each cell runs the per-cell kernel
+    (_wave_cell_kernel: clip-from-z0 chain, descendant pyramid,
+    per-cell part write), emitting one ack row per cell.  Why bins and
+    not groupBy(z,x,y): see SparkTileEngine._forest_leaf_wave.  Part
+    names are per CELL and deterministic, so a task retry overwrites
+    rather than duplicates.
 
-    Why not groupBy(z,x,y): group→task placement is then
-    hash-partitioned, so (a) two hot cells can collide into one task
-    (birthday collisions at ~2 cells/partition are common) and (b) the
-    driver cannot bin-pack — wave wall = max task is THE term the
-    cluster pays, and with per-cell work estimates from the gate the
-    driver can pack bins to the kernel budget (LPT), which no hash can
-    do.  Part names are per CELL and deterministic, so a task retry
-    overwrites rather than duplicates.
-
-    ``repartition(n_slots, "slot")`` gives each of the ``n_slots``
-    bins its own shuffle partition: the partition count is part of the
-    plan, so the session's shuffle-partition setting and AQE coalescing
-    (which collapses a bare ``repartition("slot")`` to one task) leave
+    ``repartitionById(n_bins, "bin")`` makes the bin the partition id,
+    so bin b is task b: the partition count is part of the plan, so
+    the session's shuffle-partition setting and AQE coalescing leave
     it alone, and no session conf is touched.  A plain mapInArrow runs
     the bins; the grouped applyInArrow runner adds a per-partition sort
     and leaked ~0.6 MB of JVM Arrow memory per task (Spark 4.1, measured
@@ -1129,7 +1095,7 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
                               ("n_cand", pa.int64()),
                               ("secs", pa.float64())])).to_batches()
 
-    return candidates.repartition(n_slots, "slot").mapInArrow(
+    return candidates.repartitionById(n_bins, "bin").mapInArrow(
         run, SUBTREE_ACK_SCHEMA)
 
 
@@ -1299,20 +1265,23 @@ def forest_vertex_probe_df(frontier0: DataFrame, options: TileOptions,
 
 
 def forest_route_df(frontier0: DataFrame, options: TileOptions,
-                    cells) -> DataFrame:
+                    bins: dict) -> DataFrame:
     """Route z0 frontier rows to every cut cell they overlap, in one
     pass: explode the levels present in the cut, explode the
     arithmetic candidate rectangle per level, filter with the exact
-    window floats, then keep only (lvl, x, y) ∈ cut (InSet over packed
-    int keys — scales to thousands of cells where a per-cell struct
-    router would blow up codegen).  ``cells`` is an iterable of
-    (z, x, y) leaf cells.  Feature columns ride unchanged; emitted row
-    sets match the level-by-level reroute exactly (child windows are
-    contained in their parents')."""
-    cells = [tuple(int(v) for v in c) for c in cells]
+    window floats, keep only cells in the cut, then look the (z, x, y)
+    cell's wave bin up in ONE map literal ``bins`` over packed int keys
+    (a per-cell struct router would blow up codegen).  The cut test is
+    an IN list (a hash set to Catalyst) because a map lookup scans its
+    entries: looking up every candidate row made the route of a
+    1,360-leaf cut 1.5x slower.  Emits z, x, y, ``bin`` and the feature
+    columns; the row sets match the level-by-level reroute exactly
+    (child windows are contained in their parents')."""
     b = options.buffer / options.extent
-    levels = ", ".join(str(z) for z in sorted({z for z, _, _ in cells}))
-    keys = ", ".join(f"{(z << 50) | (x << 25) | y}L" for z, x, y in cells)
+    levels = ", ".join(str(z) for z in sorted({z for z, _, _ in bins}))
+    packed = {(int(z) << 50) | (int(x) << 25) | int(y): int(v)
+              for (z, x, y), v in bins.items()}
+    pairs = ", ".join(f"{k}L, {v}" for k, v in packed.items())
     key = ("(CAST(_lvl AS BIGINT) * 1125899906842624L "
            "+ _cx * 33554432L + _cy)")
     rej, _ = _window_preds(options, "_cx", "_cy", "_lvl")
@@ -1322,9 +1291,11 @@ def forest_route_df(frontier0: DataFrame, options: TileOptions,
                         f"{_cand_range_sql('minx', 'maxx', '_lvl', b)}) AS _cx")
             .selectExpr("*", "explode("
                         f"{_cand_range_sql('miny', 'maxy', '_lvl', b)}) AS _cy")
-            .where(f"NOT {rej} AND {key} IN ({keys})")
+            .where(f"NOT {rej} AND {key} IN "
+                   f"({', '.join(f'{k}L' for k in packed)})")
             .selectExpr("_lvl AS z", "CAST(_cx AS INT) AS x",
-                        "CAST(_cy AS INT) AS y", *FEATURE_COLUMNS))
+                        "CAST(_cy AS INT) AS y", f"map({pairs})[{key}] AS bin",
+                        *FEATURE_COLUMNS))
 
 
 def clip_table_to_cell(tbl, cz: int, cx: int, cy: int,

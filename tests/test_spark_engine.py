@@ -893,18 +893,20 @@ def test_vertex_probe_proves_boundary_cluster_split(spark, tmp_path):
 
 
 def test_slot_wave_matches_group_wave(spark, tmp_path):
-    """_slot_values pins the driver-packed slot wave's placement: the
-    driver's chosen ints must hash onto distinct shuffle buckets (a
-    bijection onto 0..g-1), so each LPT bin is exactly one task.  A
-    build whose leaves are packed into more bins than cells per bin
-    must equal LocalTileIndex."""
+    """The driver-packed slot wave's placement: rows tagged with LPT
+    bins 0..12 land in partition ``bin`` of the wave's exchange under
+    the session's AQE, although 13 bins are more than the session's
+    shuffle partitions, so each bin is exactly one task.  A build whose
+    leaves are packed into more bins than cells per bin must equal
+    LocalTileIndex."""
     from pyspark.sql import functions as F
 
-    eng = SparkTileEngine(spark, TileOptions(), workdir=str(tmp_path))
-    vals = eng._slot_values(13)
-    got = (spark.createDataFrame([(v,) for v in vals], "v int")
-           .select(F.pmod(F.hash("v"), F.lit(13)).alias("b")).collect())
-    assert sorted(r["b"] for r in got) == list(range(13))
+    rows = spark.createDataFrame(
+        [(i, i % 13) for i in range(13 * 5)], "id long, bin int")
+    got = (rows.repartitionById(13, "bin")
+           .select("bin", F.spark_partition_id().alias("pid")).collect())
+    assert {(r["bin"], r["pid"]) for r in got} == {
+        (b, b) for b in range(13)}
 
     data = _clustered_collection(3, 300)
     opts = TileOptions(index_max_zoom=5, index_max_points=40)
@@ -1127,9 +1129,12 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
                   for n, box in enumerate(boxes) for lvl in levels
                   for cx, cy, _ in cells_of(box, lvl)
                   if (lvl, cx, cy) in cut}
+    bins = {c: n % 5 for n, c in enumerate(sorted(cut))}
+    routed = forest_route_df(fr0, opts, bins).collect()
     got_route = {(r["ord_path"][1], r["z"], r["x"], r["y"])
-                 for r in forest_route_df(fr0, opts, cut).collect()}
+                 for r in routed}
     assert got_route == want_route
+    assert all(r["bin"] == bins[(r["z"], r["x"], r["y"])] for r in routed)
 
     # vertex probe: strict inside, vertices on the edges
     roots = [(1, 0, 0), (1, 1, 0), (1, 0, 1), (1, 1, 1)]
