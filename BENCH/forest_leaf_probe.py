@@ -1,16 +1,15 @@
 #!/usr/bin/env python
 """Diagnose the forest wave's hottest LEAF task at 2M pages.
 
-Phase 1 (spark): build/extract the 2M-page z0 frontier once to
+Build/extract the 2M-page z0 frontier once to
 /dev/shm/gvt_probe_frontier.parquet (reused across runs), run the
 forest gate and the engine's cut (SparkTileEngine._forest_cut), print
 the heaviest cut leaves with (m, i, est-work), then run the leaf wave
-and print the top-10 per-cell acks (secs, n_cand).
-
-Phase 2 (pure task-side): for the hottest cell, re-execute the wave
-kernel body locally with per-phase timers (arrow materialize / ord
-sort / z0->cell clip chain / subtree descent / part write) so the
-50 s ack decomposes into actionable terms.
+(SparkTileEngine._forest_leaf_wave), print the parts and bytes it wrote
+to its two stores (subtree/b=1 tile rows, sources/b=1 leaf sources as
+FEATURE rows) and the top-10 per-cell acks (secs, n_cand; n counts the
+tile and source rows a cell wrote).  BENCH/forest_task_decomp.py
+decomposes one cell's task into phases.
 
     SPARK_GRAFT_CPUS=32 python BENCH/forest_leaf_probe.py
 """
@@ -93,6 +92,12 @@ def main() -> None:
     acks = sorted(acks, key=lambda r: -r["secs"])
     print(f"leaf wave: {wall:.2f}s, {len(acks)} tasks, "
           f"sum {sum(r['secs'] for r in acks):.1f}s")
+    for store in ("subtree", "sources"):
+        parts = [os.path.join(wd, store, "b=1", f)
+                 for f in os.listdir(os.path.join(wd, store, "b=1"))
+                 if f.endswith(".parquet")]
+        print(f"  {store}/b=1: {len(parts)} parts, "
+              f"{sum(map(os.path.getsize, parts)) / 1e6:.1f} MB")
     print("top-10 acks (z,x,y,n_cand,secs):")
     for r in acks[:10]:
         k = (r["z"], r["x"], r["y"])

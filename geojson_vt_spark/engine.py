@@ -6,6 +6,7 @@ quadtree CUT of the tile tree, decided from the z0 stats (plus one slim
 gate job when they do not settle it), then one wave per kind of cell:
 
     z0 frontier --route to LEAF cells, one task per bin--> subtree b=1
+        |                                              + sources b=1
         '--narrow in-task walk: z0 as the root,
            then the INTERNAL cells----------------> tilefeat/z=N
     driver: tiles/z=N stats rows, lineage rows (written last)
@@ -28,19 +29,21 @@ Scale design notes (SURVEY.md §4/§7):
   checkpoint;
 - lineage lands only after every store is durable: a kill before the
   final row restarts cleanly from the z0 frontier, and a finished
-  build whose subtree store is lost re-runs the leaf wave from the leaf
-  keys the final row records;
-- a retained source lives in a subtree or drill-overlay pack (every
-  leaf) or, for a root-only cut, in the z0 frontier itself: no second
-  copy of the corpus is written.
+  build whose subtree or sources store is lost re-runs the leaf wave
+  from the leaf keys the final row records;
+- a retained source is FEATURE rows like every other feature set at
+  rest: the sources store (every leaf the wave built), a drill-overlay
+  table, or, for a root-only cut, the z0 frontier itself; one reader
+  (_arrow_state) turns each into kernel state.
 
 Serving runs no Spark job: get_tiles reads the stores on the driver
-through one pyarrow reader (_read), and get_tile is a one-key
+through one pyarrow reader (_table), and get_tile is a one-key
 get_tiles.  A miss (getTile's lazy drill-down) replays the build's batch
 kernel (batch_split_subtree under splitTile's drill stop rule) over the
 retained source of its nearest ancestor, pruned to the target path,
 under one engine lock; the drilled tiles stay packed in an in-memory
-overlay until a read returns them.
+overlay until a read returns them, beside the FEATURE rows of the
+sources they keep.
 
 Run the session with ``spark.scheduler.mode=FAIR``: the render walk runs
 concurrently with the leaf wave, and FIFO queues the small jobs behind
@@ -55,17 +58,18 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .kernel.index import to_id
 from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _arrow_state, _dbl, _pack_state,
-                       SOURCE_PACK_COLUMNS, batch_split_subtree,
-                       features_from_json_df, forest_gate_df,
-                       forest_route_df, forest_slot_wave_df,
-                       geojson_to_input_rows, internal_tree_direct,
-                       wrap_df)
+from .pipeline import (_NV_SQL, _arrow_state, _cell_tables, _dbl,
+                       batch_split_subtree, features_from_json_df,
+                       forest_gate_df, forest_route_df,
+                       forest_slot_wave_df, geojson_to_input_rows,
+                       internal_tree_direct, wrap_df)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
@@ -83,7 +87,10 @@ _Z0_ORD_ENVELOPE = (1, 0)
 _META_COLUMNS = ["has_source"]
 
 # the build's output stores (the features checkpoint is ingest's)
-_STORES = ("tiles", "tilefeat", "frontier", "subtree")
+_STORES = ("tiles", "tilefeat", "frontier", "subtree", "sources")
+
+# the leaf wave's stores: tile rows and the leaves' retained sources
+_LEAF_STORES = ("subtree", "sources")
 
 
 class SparkTileEngine:
@@ -96,11 +103,11 @@ class SparkTileEngine:
             workdir = tempfile.mkdtemp(prefix="gvt_spark_")
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        # drill-down overlay: packed tile rows and retained-source
-        # packs created by get_tiles misses after the build, dropped by
-        # the next build
+        # drill-down overlay: packed tile rows and retained sources
+        # (FEATURE-row tables) created by get_tiles misses after the
+        # build, dropped by the next build
         self._drill_tiles: dict[int, dict] = {}
-        self._drill_sources: dict[int, dict] = {}
+        self._drill_sources: dict = {}
         self._consumed_sources: set[int] = set()
         # driver-side cache of the tiles-store stats (z0, internal cut
         # cells and empties: O(cut), NOT the 4^z subtree output)
@@ -380,8 +387,8 @@ class SparkTileEngine:
         observed stats.
 
         ``resume=True`` on a finished build (the lineage holds the final
-        row) goes straight to ``build``, which runs no job unless the
-        subtree store is lost."""
+        row) goes straight to ``build``, which runs no job unless a
+        leaf store is lost."""
         from pyspark.sql import Observation
 
         if resume and self._final_lineage() is not None:
@@ -532,7 +539,8 @@ class SparkTileEngine:
     def _forest_leaf_wave(self, leaves, fr0: DataFrame) -> list:
         """The forest wave's LEAF-subtree job: route the z0 frontier
         ``fr0`` to the leaf cut cells and clip each whole descendant
-        subtree in-task into subtree b=1.
+        subtree in-task into subtree b=1, its leaves' retained sources
+        into sources b=1.
 
         Shape: DRIVER-PACKED bins — the cut's per-leaf work estimates
         are LPT-packed into ceil(total/budget) bins (never fewer than
@@ -544,7 +552,7 @@ class SparkTileEngine:
         pays), and no bin-packing is possible.
 
         Factored out of _build_forest so a resume (build) can
-        re-create a lost subtree store from the cut keys recorded in
+        re-create a lost leaf store from the cut keys recorded in
         the final lineage row — the z0 frontier it reads is still on
         disk for any resumable workdir (estimates are absent there: the
         pack falls back to uniform weights, same disk layout either
@@ -568,14 +576,16 @@ class SparkTileEngine:
             bins[c] = b
             heapq.heappush(heap, (load + w, b))
         self._set_pool("gvt-subtree")
-        out = self._p("subtree", "b=1")
-        if os.path.isdir(out):
-            shutil.rmtree(out)
+        outs = [self._p(store, "b=1") for store in _LEAF_STORES]
+        for out in outs:
+            if os.path.isdir(out):
+                shutil.rmtree(out)
         acks = forest_slot_wave_df(
-            forest_route_df(fr0, self.options, bins), self.options, out,
+            forest_route_df(fr0, self.options, bins), self.options, *outs,
             n_bins).collect()
-        os.makedirs(out, exist_ok=True)
-        open(os.path.join(out, "_SUCCESS"), "w").close()
+        for out in outs:
+            os.makedirs(out, exist_ok=True)
+            open(os.path.join(out, "_SUCCESS"), "w").close()
         return acks
 
     def _write_tile_rows(self, z: int, rows: list) -> None:
@@ -727,7 +737,7 @@ class SparkTileEngine:
                 "task_secs_max": round(max(
                     (r["secs"] for r in leaf_acks), default=0.0), 2)}})
         # the final row records the leaf cut keys so a resume can
-        # re-create a lost subtree store for a completed build
+        # re-create a lost leaf store for a completed build
         self._append_lineage({
             "zoom": max_z, "n_tiles": len(leaves) + len(internals),
             "handoff": [list(c) for c in leaves], "forest": True,
@@ -761,9 +771,10 @@ class SparkTileEngine:
         ``z0_stats`` observed by build_from_converted's ingest job.
 
         ``resume=True``: when the lineage holds the final row the build
-        is done, and only a lost subtree store is re-run from the leaf
-        keys that row records.  Anything less restarts the build: the
-        forest appends its lineage only after every store is durable.
+        is done, and only a lost subtree or sources store is re-run from
+        the leaf keys that row records.  Anything less restarts the
+        build: the forest appends its lineage only after every store is
+        durable.
 
         Every build drops what serving derived from the previous one:
         the stats cache, the opened datasets and the drill overlay."""
@@ -777,8 +788,9 @@ class SparkTileEngine:
             final = self._final_lineage()
             if final is not None:
                 keys = [tuple(k) for k in final.get("handoff") or []]
-                if keys and not os.path.exists(
-                        self._p("subtree", "b=1", "_SUCCESS")):
+                if keys and not all(
+                        os.path.exists(self._p(store, "b=1", "_SUCCESS"))
+                        for store in _LEAF_STORES):
                     self._forest_leaf_wave(keys, self._read_frontier0())
                 return
         self._reset_stores()
@@ -809,35 +821,42 @@ class SparkTileEngine:
             self._datasets[store] = dset if dset and dset.files else None
         return self._datasets[store]
 
-    def _read(self, store: str, columns=(), keys=None,
-              kind: str | None = None) -> list[dict]:
-        """Rows of one store as plain dicts: z/x/y (where the store has
-        them) plus ``columns``, for every row or only the tiles in
-        ``keys``.  Tile rows (the tiles store, subtree ``kind='tile'``)
-        filter on ``tile_id``; tilefeat and source rows, which carry no
-        tile_id, on z/x/y, a superset narrowed here.  ``kind`` picks
-        subtree rows.  Parquet row-group statistics prune the scan, and
-        no Spark job runs."""
+    def _table(self, store: str, columns=(), keys=None):
+        """One store as an Arrow table: z/x/y (where the store has them)
+        plus ``columns``, for every row or only the tiles in ``keys``;
+        None when the store is absent or nothing is asked for.  Tile
+        rows (the tiles and subtree stores) filter on ``tile_id``;
+        tilefeat and sources rows, which carry no tile_id, on z/x/y, a
+        superset narrowed here to the exact keys.  Parquet row-group
+        statistics prune the scan, and no Spark job runs."""
         import pyarrow.dataset as ds
         dset = self._dataset(store)
         if dset is None or (keys is not None and not keys):
-            return []
+            return None
         names = dset.schema.names
-        filt = None if kind is None else ds.field("kind") == kind
+        filt = None
         if keys is not None:
             keys = set(keys)
-            if "tile_id" in names and kind != "source":
-                f = ds.field("tile_id").isin([to_id(*k) for k in keys])
+            if "tile_id" in names:
+                filt = ds.field("tile_id").isin([to_id(*k) for k in keys])
             else:
-                f = (ds.field("z").isin(list({k[0] for k in keys}))
-                     & ds.field("x").isin(list({k[1] for k in keys}))
-                     & ds.field("y").isin(list({k[2] for k in keys})))
-            filt = f if filt is None else filt & f
+                filt = (ds.field("z").isin(list({k[0] for k in keys}))
+                        & ds.field("x").isin(list({k[1] for k in keys}))
+                        & ds.field("y").isin(list({k[2] for k in keys})))
         cols = [c for c in ("z", "x", "y") if c in names] + list(columns)
-        rows = dset.to_table(columns=cols, filter=filt).to_pylist()
-        if keys is None:
-            return rows
-        return [r for r in rows if (r["z"], r["x"], r["y"]) in keys]
+        tbl = dset.to_table(columns=cols, filter=filt)
+        if keys is None or "tile_id" in names:
+            return tbl
+        zxy = [tbl.column(c).to_numpy(zero_copy_only=False).astype(
+            np.int64) for c in ("z", "x", "y")]
+        want = np.asarray([(z << 50) | (x << 25) | y for z, x, y in keys])
+        return tbl.filter(np.isin((zxy[0] << 50) | (zxy[1] << 25) | zxy[2],
+                                  want))
+
+    def _read(self, store: str, columns=(), keys=None) -> list[dict]:
+        """_table's rows as plain dicts."""
+        tbl = self._table(store, columns, keys)
+        return [] if tbl is None else tbl.to_pylist()
 
     def _stats(self) -> dict:
         """(z,x,y) → has_source of the tiles-store tiles.
@@ -855,33 +874,29 @@ class SparkTileEngine:
         list every store's files once."""
         with self._serve_lock:
             self._stats()
-            for store in ("tilefeat", "subtree"):
+            for store in ("tilefeat", *_LEAF_STORES):
                 self._dataset(store)
 
     def tiles(self) -> DataFrame:
         """Every stored tile's TILE_COLUMNS row as a Spark DataFrame:
-        the tiles store plus the subtree store's tile rows."""
+        the tiles store plus the subtree store."""
         base = (self.spark.read.parquet(self._p("tiles"))
                 .select(*TILE_COLUMNS))
         path = self._p("subtree")
         if os.path.isdir(path):
             base = base.unionByName(
-                self.spark.read.parquet(path)
-                .where(F.col("kind") == "tile").select(*TILE_COLUMNS))
+                self.spark.read.parquet(path).select(*TILE_COLUMNS))
         return base
 
     def tile_count(self) -> int:
-        """Exact generated-tile count without a Spark job: parquet
-        footers for the tiles store plus one slim 'kind' column read
-        over the subtree parts.  The reference's equivalent is
-        ``tileCoords.length`` — an in-memory array length — so serving
-        the count from store metadata is the parity-faithful shape;
-        pinned equal to ``tiles().count()`` by tests."""
-        import pyarrow.dataset as ds
-        tiles, sub = self._dataset("tiles"), self._dataset("subtree")
-        return ((tiles.count_rows() if tiles else 0)
-                + (sub.count_rows(filter=ds.field("kind") == "tile")
-                   if sub else 0))
+        """Exact generated-tile count without a Spark job: the parquet
+        footers of the tiles and subtree stores.  The reference's
+        equivalent is ``tileCoords.length`` — an in-memory array length
+        — so serving the count from store metadata is the
+        parity-faithful shape; pinned equal to ``tiles().count()`` by
+        tests."""
+        return sum(d.count_rows() for d in (
+            self._dataset("tiles"), self._dataset("subtree")) if d)
 
     _TILEFEAT_COLS = ["ord_path", "gtype", "coords", "rlens",
                       "tags_json", "fid_json"]
@@ -934,7 +949,7 @@ class SparkTileEngine:
             grouped.setdefault(f"z{r['z']}-{r['x']}-{r['y']}", []).append(r)
         for key, rows in grouped.items():
             out[key] = self._assemble_features(rows)
-        for r in self._read("subtree", self._PACK_COLS, kind="tile"):
+        for r in self._read("subtree", self._PACK_COLS):
             out[f"z{r['z']}-{r['x']}-{r['y']}"] = \
                 self._unpack_tile_features(r)
         for r in self._drill_tiles.values():
@@ -995,8 +1010,7 @@ class SparkTileEngine:
         out = {k: self._assemble_features(rows)
                for k, rows in grouped.items()}
         for r in self._read("subtree", self._PACK_COLS,
-                            [k for k in keys if k not in stats],
-                            kind="tile"):
+                            [k for k in keys if k not in stats]):
             out[(r["z"], r["x"], r["y"])] = self._unpack_tile_features(r)
         return out
 
@@ -1007,15 +1021,14 @@ class SparkTileEngine:
         ancestors outside the stats cache, one read the sources of the
         stored ancestors that keep one — a stored source belongs to a
         leaf, so each chain holds at most one.  An earlier drill's
-        off-path tiles hold theirs as packs in the overlay."""
+        off-path tiles hold theirs in the overlay."""
         chains = {(z, x, y): [(z - d, x >> d, y >> d)
                               for d in range(1, z + 1)]
                   for z, x, y in misses}
         stats = self._stats()
         sub = {(r["z"], r["x"], r["y"]): r for r in self._read(
             "subtree", _META_COLUMNS,
-            {a for ch in chains.values() for a in ch if a not in stats},
-            kind="tile")}
+            {a for ch in chains.values() for a in ch if a not in stats})}
 
         def meta(a):
             return stats.get(a) or sub.get(a)
@@ -1031,25 +1044,25 @@ class SparkTileEngine:
                 aid = to_id(*a)
                 if aid in self._consumed_sources:
                     continue
-                pack = self._drill_sources.get(aid)
-                state = (sources.get(a) if pack is None
-                         else _pack_state(pack))
+                part = self._drill_sources.get(aid)
+                state = (sources.get(a) if part is None
+                         else _arrow_state(part))
                 if state is not None and state[0].n_feats:
                     self._drill(state, a, k)
                     break
 
     def _stored_sources(self, keys) -> dict:
         """(z,x,y) → the retained source of each stored tile in
-        ``keys`` that keeps one, as kernel state: a subtree leaf's
-        packed source row through _pack_state, a root-only z0's z0
-        frontier through the Arrow ingress (ordered by ord_path).  The
-        z0 frontier is frontier/z=0 when a wrapping input wrote it, else
-        the features checkpoint: kernel state carries no ord_path, and
-        the view's constant _Z0_ORD_ENVELOPE keeps the checkpoint's
-        order."""
-        out = {(r["z"], r["x"], r["y"]): _pack_state(r)
-               for r in self._read("subtree", SOURCE_PACK_COLUMNS, keys,
-                                   kind="source")}
+        ``keys`` that keeps one, as kernel state read by the Arrow
+        ingress (ordered by ord_path): a leaf's rows of the sources
+        store, a root-only z0's z0 frontier.  The z0 frontier is
+        frontier/z=0 when a wrapping input wrote it, else the features
+        checkpoint: kernel state carries no ord_path, and the view's
+        constant _Z0_ORD_ENVELOPE keeps the checkpoint's order."""
+        tbl = self._table("sources", FEATURE_COLUMNS, keys)
+        out = ({} if tbl is None else
+               {k: _arrow_state(part)
+                for k, part in _cell_tables(tbl).items()})
         if (0, 0, 0) in keys:
             dset = (self._dataset("frontier/z=0")
                     or self._dataset("features"))
@@ -1062,9 +1075,10 @@ class SparkTileEngine:
         on the build's batch kernel, in-process on the driver: split
         ``state`` — ``root``'s retained source as kernel state — toward
         ``target``.  The new tiles, in splitTile's creation order, and
-        the source packs the tiles off the target path keep land in the
-        in-memory overlay, both packed as the subtree store keeps them:
-        a tile row is unpacked only when a read returns it."""
+        the sources the tiles off the target path keep land in the
+        in-memory overlay as the stores keep them: a tile row packed as
+        in the subtree store, unpacked only when a read returns it, and
+        a source as its FEATURE rows."""
         rid = to_id(*root)
         self._consumed_sources.add(rid)
         self._drill_sources.pop(rid, None)
@@ -1075,9 +1089,9 @@ class SparkTileEngine:
             self._drill_tiles[r["tile_id"]] = r
             if r["is_split"]:
                 self._consumed_sources.add(r["tile_id"])
-        for key, pack in sources.items():
+        for key, part in _cell_tables(sources).items():
             if key != root:
-                self._drill_sources[to_id(*key)] = pack
+                self._drill_sources[to_id(*key)] = part
 
     def tile_coords(self) -> list[tuple[int, int, int]]:
         """Insertion-ordered tile enumeration matching the reference's
@@ -1094,7 +1108,7 @@ class SparkTileEngine:
         if self._read_lineage():
             present = {(r["z"], r["x"], r["y"])
                        for r in (self._read("tiles")
-                                 + self._read("subtree", kind="tile"))}
+                                 + self._read("subtree"))}
             stack = [(0, 0, 0)] if (0, 0, 0) in present else []
             while stack:
                 z, x, y = stack.pop()

@@ -23,12 +23,15 @@ the z0 frontier in a few jobs (engine._build_forest):
   the internal cells — with no per-tile funnel;
 - leaves: routed rows (forest_route_df) tagged with their cell's
   driver-packed bin, which is the wave's partition id; each cell's
-  pyramid is built in-task (forest_slot_wave_df → batch_split_subtree);
+  pyramid is built in-task (forest_slot_wave_df → batch_split_subtree)
+  and written as tile rows plus its leaves' retained sources, the
+  sources as TILED rows (z/x/y + FEATURE columns) through the same
+  egress;
 - drill: the engine's getTile drill-down runs the same
   batch_split_subtree on the driver, with splitTile's drill stop rule
-  (``target``), over a retained source read back as kernel state:
-  _pack_state for a subtree or overlay pack, _arrow_state for the z0
-  frontier.
+  (``target``), over a retained source read back as kernel state by
+  _arrow_state, whether it is a stored leaf source, a drill-overlay
+  source or the z0 frontier.
 """
 
 from __future__ import annotations
@@ -40,15 +43,13 @@ import time
 from .kernel.fastjson import dumps as _jdumps, loads as _jloads
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ._worker import _worker_prep
 from .model import FEATURE_COLUMNS, FEATURE_SCHEMA, TILED_COLUMNS
 from .options import TileOptions
 
-# parquet codec of the task-side store writes (subtree and tilefeat
-# parts)
+# parquet codec of the task-side store writes (_write_part)
 _CODEC = "zstd"
 
 # ---------------------------------------------------------------- ingest
@@ -106,14 +107,22 @@ def convert_rows_to_table(rows, options):
     from .kernel.vec import convert_rows
     ords, gcodes, fids, tagss, rags, bbox = convert_rows(rows, options)
     geo = _clip_out_geometry_arrays(rags, gcodes, bbox)
-    n = len(ords)
-    ord_path = pa.ListArray.from_arrays(
-        pa.array(np.arange(0, 2 * n + 1, 2, dtype=np.int32)),
-        pa.array(np.asarray(ords, dtype=np.int64).reshape(-1), pa.int64()))
     return pa.Table.from_arrays(
-        [ord_path, pa.array(fids, pa.string()), pa.array(tagss, pa.string())]
+        [_ord_list(np.asarray(ords, dtype=np.int64).reshape(-1, 2)),
+         pa.array(fids, pa.string()), pa.array(tagss, pa.string())]
         + [geo[c] for c in FEATURE_COLUMNS[3:]],
         names=FEATURE_COLUMNS)
+
+
+def _ord_list(ords):
+    """The ord_path list column of an (n, w) int matrix: row i's w
+    values are feature i's ord_path."""
+    import pyarrow as pa
+
+    n, w = ords.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, w * n + 1, w, dtype=np.int32)),
+        pa.array(ords.reshape(-1), pa.int64()))
 
 
 def convert_single(feature_dict, options, gen_index):
@@ -411,7 +420,6 @@ def _render_batch(tbl, options: TileOptions):
 # ---------------------------------------------------------------- subtree
 
 SUBTREE_SCHEMA = T.StructType([
-    T.StructField("kind", T.StringType(), False),
     T.StructField("z", T.IntegerType(), False),
     T.StructField("x", T.IntegerType(), False),
     T.StructField("y", T.IntegerType(), False),
@@ -419,9 +427,9 @@ SUBTREE_SCHEMA = T.StructType([
     T.StructField("num_features", T.LongType(), True),
     T.StructField("num_points", T.LongType(), True),
     T.StructField("num_simplified", T.LongType(), True),
-    # tile feature pack (kind=tile): per emitted feature a type code,
-    # ring count, per-ring pair counts, flat int pairs, tags/fid JSON —
-    # the read side materializes objects from these (no build-time JSON)
+    # tile feature pack: per emitted feature a type code, ring count,
+    # per-ring pair counts, flat int pairs, tags/fid JSON — the read
+    # side materializes objects from these (no build-time JSON)
     T.StructField("ftypes", T.ArrayType(T.IntegerType()), True),
     T.StructField("fnrings", T.ArrayType(T.IntegerType()), True),
     T.StructField("frlens", T.ArrayType(T.IntegerType()), True),
@@ -430,36 +438,11 @@ SUBTREE_SCHEMA = T.StructType([
     T.StructField("ffids", T.ArrayType(T.StringType(), True), True),
     T.StructField("is_split", T.BooleanType(), True),
     T.StructField("has_source", T.BooleanType(), True),
-    # retained-source pack (kind=source): ONE row per leaf tile holding
-    # every source feature in flat concatenated arrays.  A per-feature
-    # row layout here was the measured straggler term of the handoff
-    # stage (a budget-sized group emits ~1M nested rows); the pack is a
-    # handful of big flat arrays instead — O(1) rows per tile
-    T.StructField("sp_gcode", T.ArrayType(T.IntegerType()), True),
-    T.StructField("sp_fids", T.ArrayType(T.StringType(), True), True),
-    T.StructField("sp_tags", T.ArrayType(T.StringType(), True), True),
-    T.StructField("sp_nrings", T.ArrayType(T.IntegerType()), True),
-    T.StructField("sp_ringlens", T.ArrayType(T.IntegerType()), True),
-    T.StructField("sp_npoly", T.ArrayType(T.IntegerType()), True),
-    T.StructField("sp_polylens", T.ArrayType(T.IntegerType()), True),
-    T.StructField("sp_coords", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_rsize", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_rstart", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_rend", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_minx", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_miny", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_maxx", T.ArrayType(T.DoubleType()), True),
-    T.StructField("sp_maxy", T.ArrayType(T.DoubleType()), True),
     T.StructField("minx", T.DoubleType(), True),
     T.StructField("miny", T.DoubleType(), True),
     T.StructField("maxx", T.DoubleType(), True),
     T.StructField("maxy", T.DoubleType(), True),
 ])
-
-_SUBTREE_COLUMNS = [f.name for f in SUBTREE_SCHEMA.fields]
-
-SOURCE_PACK_COLUMNS = [f.name for f in SUBTREE_SCHEMA.fields
-                       if f.name.startswith("sp_")]
 
 
 def batch_split_subtree(records, z0: int, x0: int, y0: int,
@@ -482,12 +465,15 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
     and its tile row (and leaf source, when it stops) IS emitted.
 
     ``state`` is _arrow_state's kernel state, or None to build it from
-    FEATURE ``records``.  Returns (tile_rows, sources) where tile_rows
-    are dicts of the subtree 'tile' kind and sources maps leaf (z,x,y)
-    → a packed-array dict (see pack_leaves / SUBTREE_SCHEMA sp_*
-    columns).
+    FEATURE ``records``.  Returns (tile_rows, sources): tile_rows are
+    SUBTREE_SCHEMA dicts, and sources is one Arrow table of TILED rows,
+    every retained source feature of every leaf tile (z/x/y is the
+    leaf, ord_path [k] the feature's order in that source), built per
+    level by take_features and the clip egress
+    _clip_out_geometry_arrays; _cell_tables splits it by leaf and
+    _arrow_state reads a leaf's rows back as kernel state.
     """
-    import numpy as np
+    import pyarrow as pa
 
     from .kernel.index import to_id
     from .kernel.vec import (GT_LINE, batch_assemble, batch_clip,
@@ -513,79 +499,9 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
     lm = options.line_metrics
 
     tile_rows = []
-    sources = {}
+    sources = []
     pending = [(x0, y0)]  # tiles existing at the current level
     z = z0
-
-    def pack_leaves(leaf_list, perm, gstart, gend):
-        """All of a level's leaf tiles' retained-source features packed
-        in ONE set of index-math gathers (the kind=source subtree
-        rows); per tile only slicing of the shared tables remains.
-        Hot path at scale: every feature lands here once per build,
-        and a deep level holds 4^z leaf tiles — per-tile numpy calls
-        were a measured straggler term."""
-        from .kernel.vec import GT_MPOLY, rags_to_feature_arrays
-        f_roff_, xyz_ = rags_to_feature_arrays(rags)
-        lens3 = (rags.ring_lens() * 3).astype(np.int32)
-        roff = rags.roff
-        fcnt = np.asarray([gend[gi] - gstart[gi] for _, gi in leaf_list],
-                          dtype=np.int64)
-        lidx = np.concatenate([perm[gstart[gi]:gend[gi]]
-                               for _, gi in leaf_list])
-        fnr_l = (f_roff_[lidx + 1] - f_roff_[lidx]).astype(np.int64)
-        rsrc = np.repeat(f_roff_[lidx], fnr_l) + ragged_arange(fnr_l)
-        rl = lens3[rsrc]
-        rl64 = rl.astype(np.int64)
-        csrc = np.repeat(3 * roff[rsrc], rl64) + ragged_arange(rl64)
-        coords_l = xyz_[csrc]
-        rsize_l = rags.rsize[rsrc]
-        rstart_l = rags.rstart[rsrc]
-        rend_l = rags.rend[rsrc]
-        gsel = gcodes[lidx]
-        npoly_l = np.zeros(len(lidx), dtype=np.int32)
-        pl_chunks = []
-        rpoly = rags.rpoly
-        for k in np.nonzero(gsel == GT_MPOLY)[0]:
-            fi = int(lidx[k])
-            pl = np.bincount(
-                rpoly[f_roff_[fi]:f_roff_[fi + 1]]).astype(np.int32)
-            npoly_l[k] = len(pl)
-            pl_chunks.append(pl)
-        polyflat = (np.concatenate(pl_chunks) if pl_chunks
-                    else np.empty(0, dtype=np.int32))
-        f_off = np.zeros(len(leaf_list) + 1, dtype=np.int64)
-        np.cumsum(fcnt, out=f_off[1:])
-        roff_l = np.concatenate(([0], np.cumsum(fnr_l)))
-        coff_l = np.concatenate(([0], np.cumsum(rl64)))
-        poff_l = np.concatenate(([0], np.cumsum(npoly_l,
-                                                dtype=np.int64)))
-        gsel32 = gsel.astype(np.int32)
-        fnr32 = fnr_l.astype(np.int32)
-        fid_l = fids[lidx]
-        tag_l = tagss[lidx]
-        mnx_l, mny_l = fminx[lidx], fminy[lidx]
-        mxx_l, mxy_l = fmaxx[lidx], fmaxy[lidx]
-        for li, (key, _) in enumerate(leaf_list):
-            a, b2 = int(f_off[li]), int(f_off[li + 1])
-            ra, rb = int(roff_l[a]), int(roff_l[b2])
-            ca, cb = int(coff_l[ra]), int(coff_l[rb])
-            pa_, pb_ = int(poff_l[a]), int(poff_l[b2])
-            sources[key] = {
-                "n": b2 - a,
-                "sp_gcode": gsel32[a:b2],
-                "sp_fids": fid_l[a:b2].tolist(),
-                "sp_tags": tag_l[a:b2].tolist(),
-                "sp_nrings": fnr32[a:b2],
-                "sp_ringlens": rl[ra:rb],
-                "sp_npoly": npoly_l[a:b2],
-                "sp_polylens": polyflat[pa_:pb_],
-                "sp_coords": coords_l[ca:cb],
-                "sp_rsize": rsize_l[ra:rb],
-                "sp_rstart": rstart_l[ra:rb],
-                "sp_rend": rend_l[ra:rb],
-                "sp_minx": mnx_l[a:b2], "sp_miny": mny_l[a:b2],
-                "sp_maxx": mxx_l[a:b2], "sp_maxy": mxy_l[a:b2],
-            }
 
     while pending:
         geom, n_pts, n_simpl = batch_assemble(
@@ -658,7 +574,7 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             else:
                 g_index = {}
             _empty32 = np.empty(0, dtype=np.int32)
-            leaf_list = []
+            leaf_gis = []
             for (gx, gy) in pending:
                 gi = g_index.get((gx, gy))
                 if gi is None:
@@ -706,9 +622,18 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
                 if splits:
                     split_keys.append((gx, gy))
                 elif gi is not None:
-                    leaf_list.append(((z, gx, gy), gi))
-            if leaf_list:
-                pack_leaves(leaf_list, perm, gstart, gend)
+                    leaf_gis.append(gi)
+            if leaf_gis:
+                # every feature of the level's leaf tiles, k its place
+                # in its tile (perm keeps the tile's feature order)
+                is_leaf = np.zeros(len(gstart), dtype=bool)
+                is_leaf[leaf_gis] = True
+                at = np.repeat(is_leaf, g_cnt)
+                sel, k = perm[at], ragged_arange(g_cnt)[at]
+                order = np.argsort(sel)
+                sources.append(_source_table(
+                    (rags, gcodes, fminx, fminy, fmaxx, fmaxy, fids, tagss),
+                    z, tilex, tiley, sel[order], k[order]))
 
         if not split_keys:
             break
@@ -786,62 +711,70 @@ def batch_split_subtree(records, z0: int, x0: int, y0: int,
             3 - 2 * ((r["x"] >> (r["z"] - lvl)) & 1)
             - ((r["y"] >> (r["z"] - lvl)) & 1)
             for lvl in range(z0 + 1, r["z"] + 1)])
-    return tile_rows, sources
+    if not sources:
+        none = np.empty(0, dtype=np.int64)
+        sources.append(_source_table(
+            (rags, gcodes, fminx, fminy, fmaxx, fmaxy, fids, tagss),
+            z, tilex, tiley, none, none))
+    return tile_rows, pa.concat_tables(sources)
 
 
-def _subtree_out_pdf(tile_rows, sources) -> pd.DataFrame:
-    """(tile_rows, sources) from batch_split_subtree → one SUBTREE_SCHEMA
-    pandas batch.  Retained sources are ONE packed row per leaf tile
-    (the flat arrays were built by pack_leaves; a per-feature row
-    layout here was the handoff stage's measured straggler term)."""
-    rows = {c: [] for c in _SUBTREE_COLUMNS}
+def _source_table(state, z: int, tilex, tiley, sel, k):
+    """TILED rows of the features ``sel`` (sorted) of kernel ``state``
+    in tiles (z, tilex, tiley), ord_path [k]: the retained-source
+    egress of batch_split_subtree, through take_features and
+    _clip_out_geometry_arrays like every clip's output."""
+    import pyarrow as pa
 
-    def emit(vals: dict):
-        for c in _SUBTREE_COLUMNS:
-            rows[c].append(vals.get(c))
+    from .kernel.vec import take_features
+    rags, gcodes, mnx, mny, mxx, mxy, fids, tagss = state
+    geo = _clip_out_geometry_arrays(
+        take_features(rags, sel), gcodes[sel],
+        (mnx[sel], mny[sel], mxx[sel], mxy[sel]))
+    return pa.Table.from_arrays(
+        [pa.array(np.full(len(sel), z, dtype=np.int32)),
+         pa.array(tilex[sel].astype(np.int32)),
+         pa.array(tiley[sel].astype(np.int32)), _ord_list(k[:, None]),
+         pa.array(fids[sel], pa.string()), pa.array(tagss[sel], pa.string())]
+        + [geo[c] for c in FEATURE_COLUMNS[3:]], names=TILED_COLUMNS)
 
-    for t in tile_rows:
-        emit({"kind": "tile", **t})
-    for (sz, sx, sy), pack in sources.items():
-        if pack["n"] == 0:
-            continue
-        emit({"kind": "source", "z": sz, "x": sx, "y": sy,
-              **{k: v for k, v in pack.items() if k != "n"}})
-    return pd.DataFrame(rows, columns=_SUBTREE_COLUMNS)
+
+def _subtree_table(tile_rows):
+    """batch_split_subtree's tile rows → one SUBTREE_SCHEMA Arrow
+    table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pylist(tile_rows,
+                                schema=to_arrow_schema(SUBTREE_SCHEMA))
 
 
 SUBTREE_ACK_SCHEMA = ("z int, x int, y int, n long, "
                       "n_cand long, secs double")
 
 
-def _write_subtree_part(out_pdf: pd.DataFrame, out_dir: str,
-                        z: int, x: int, y: int) -> None:
-    """Write one group's subtree rows straight from the kernel task via
-    pyarrow, atomically (tmp + rename; a task retry overwrites the same
-    deterministic name, so duplicate attempts cannot double rows).
+def _write_part(tbl, out_dir: str, name: str) -> None:
+    """Write one Arrow table as the parquet part ``out_dir/name``
+    straight from the task, atomically (tmp + rename; a task retry
+    overwrites the same deterministic name, so duplicate attempts
+    cannot double rows).  Every task-side store write goes through
+    here: the leaf wave's subtree and sources parts and the render
+    walk's tilefeat parts.
 
-    Rationale (measured, 30k-page wave): returning the packed rows
-    through the grouped-map Arrow pipe and letting Spark's writer
-    persist them costs ~1 s of pure pandas→Arrow→JVM boxing tax per
-    wave, vs ~0.2 s writing the same bytes task-side — the store is
-    engine-private, its _SUCCESS marker is written by the driver after
-    the job, and the lineage row remains the real commit point.  On
-    object storage the per-file rename becomes a single PUT, the same
-    direct-write pattern cloud committers use."""
-    import os
-
-    import pyarrow as pa
+    Rationale (measured, 30k-page wave): returning the rows through
+    the Arrow pipe and letting Spark's writer persist them costs ~1 s
+    of boxing tax per wave, vs ~0.2 s writing the same bytes
+    task-side — the stores are engine-private, their _SUCCESS markers
+    are written by the driver after the job, and the lineage row
+    remains the real commit point.  On object storage the per-file
+    rename becomes a single PUT, the same direct-write pattern cloud
+    committers use."""
     import pyarrow.parquet as pq
 
-    from pyspark.sql.pandas.types import to_arrow_schema
     os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, f"part-z{z}-x{x}-y{y}.parquet")
-    tmp = path + ".inprogress"
-    pq.write_table(
-        pa.Table.from_pandas(out_pdf, schema=to_arrow_schema(SUBTREE_SCHEMA),
-                             preserve_index=False),
-        tmp, compression=_CODEC)
-    os.replace(tmp, path)
+    path = os.path.join(out_dir, name)
+    pq.write_table(tbl, path + ".inprogress", compression=_CODEC)
+    os.replace(path + ".inprogress", path)
 
 
 # --------------------------------------------------------------- wave
@@ -928,30 +861,6 @@ def _arrow_state(tbl, sort=True, strings=True):
             _np("tags_json") if strings else None)
 
 
-def _pack_state(pack):
-    """One retained-source pack (a kind=source subtree row, or a drill's
-    pack_leaves dict: flat sp_* lists or arrays) → kernel state in pack
-    order, which is the features' ord order; the pack twin of
-    _arrow_state through the same flats_to_rags constructor."""
-    from .kernel.vec import flats_to_rags
-
-    def arr(name, dtype):
-        return np.asarray(pack[name], dtype=dtype)
-
-    gcodes = arr("sp_gcode", np.int64)
-    pl_off = np.zeros(len(gcodes) + 1, dtype=np.int64)
-    np.cumsum(arr("sp_npoly", np.int64), out=pl_off[1:])
-    pl_flat = arr("sp_polylens", np.int64)
-    rags = flats_to_rags(
-        arr("sp_coords", np.float64), arr("sp_nrings", np.int64),
-        arr("sp_ringlens", np.int64), arr("sp_rsize", np.float64),
-        arr("sp_rstart", np.float64), arr("sp_rend", np.float64), gcodes,
-        lambda fi: pl_flat[pl_off[fi]:pl_off[fi + 1]])
-    return (rags, gcodes, *(arr(c, np.float64) for c in (
-        "sp_minx", "sp_miny", "sp_maxx", "sp_maxy")),
-        arr("sp_fids", object), arr("sp_tags", object))
-
-
 def _window_consts(options: TileOptions) -> tuple:
     """(k1, k2, k3, k4) of splitTile (src/index.js) in tile units: the buffered child windows are [x - k1, x + k3] (left) and
     [x + k2, x + k4] (right) around parent coordinate x."""
@@ -1012,14 +921,34 @@ def _clip_chain(state, cz: int, cx: int, cy: int, options: TileOptions,
     return res, src, subs
 
 
+def _cell_tables(tbl) -> dict:
+    """(z, x, y) → that cell's rows of an Arrow table with z/x/y
+    columns (zero-copy slices of the table sorted by cell)."""
+    import pyarrow.compute as pc
+
+    if not tbl.num_rows:
+        return {}
+    tbl = tbl.take(pc.sort_indices(
+        tbl, sort_keys=[("z", "ascending"), ("x", "ascending"),
+                        ("y", "ascending")])).combine_chunks()
+    zs, xs, ys = (tbl.column(c).to_numpy(zero_copy_only=False).astype(
+        np.int64) for c in ("z", "x", "y"))
+    starts = np.concatenate(([0], np.flatnonzero(
+        np.diff((zs << 50) | (xs << 25) | ys)) + 1, [len(zs)]))
+    return {(int(zs[s]), int(xs[s]), int(ys[s])): tbl.slice(s, e - s)
+            for s, e in zip(starts[:-1], starts[1:])}
+
+
 def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
-                      options: TileOptions, out_dir: str) -> int:
+                      options: TileOptions, tile_dir: str,
+                      source_dir: str) -> int:
     """The per-CELL body of the forest's slot wave
     (forest_slot_wave_df): clip the z0 candidate rows down to the cell
     through _clip_chain (routing is a superset by original bbox;
     trivially-rejected features emit nothing), then build the whole
-    descendant pyramid in-task and write the cell's subtree part.
-    Returns the rows written."""
+    descendant pyramid in-task and write the cell's part of the subtree
+    store (tile rows) and, when a leaf keeps features, of the sources
+    store (TILED rows).  Returns the rows written."""
     (rags, gcodes, mnx, mny, mxx, mxy,
      fids, tagss) = _arrow_state(tbl)
     res, src, _ = _clip_chain((rags, gcodes, mnx, mny, mxx, mxy),
@@ -1028,22 +957,26 @@ def _wave_cell_kernel(tbl, cz: int, cx: int, cy: int,
              fids[src], tagss[src])
     tile_rows, sources = batch_split_subtree(
         None, cz, cx, cy, options, state=state, root_forced_split=False)
-    out = _subtree_out_pdf(tile_rows, sources)
-    _write_subtree_part(out, out_dir, cz, cx, cy)
-    return len(out)
+    name = f"part-z{cz}-x{cx}-y{cy}.parquet"
+    _write_part(_subtree_table(tile_rows), tile_dir, name)
+    if sources.num_rows:
+        _write_part(sources, source_dir, name)
+    return len(tile_rows) + sources.num_rows
 
 
 def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
-                        out_dir: str, n_bins: int) -> DataFrame:
+                        tile_dir: str, source_dir: str,
+                        n_bins: int) -> DataFrame:
     """Driver-packed leaf wave: candidates carry a ``bin`` column
     (forest_route_df), the LPT bin 0..n_bins-1 the DRIVER packed their
     cell into.  One task = one bin of cut cells; inside the task the
-    rows are sliced per cell and each cell runs the per-cell kernel
-    (_wave_cell_kernel: clip-from-z0 chain, descendant pyramid,
-    per-cell part write), emitting one ack row per cell.  Why bins and
-    not groupBy(z,x,y): see SparkTileEngine._forest_leaf_wave.  Part
-    names are per CELL and deterministic, so a task retry overwrites
-    rather than duplicates.
+    rows are sliced per cell (_cell_tables) and each cell runs the
+    per-cell kernel (_wave_cell_kernel: clip-from-z0 chain, descendant
+    pyramid, per-cell part writes into ``tile_dir`` and
+    ``source_dir``), emitting one ack row per cell.  Why bins and not
+    groupBy(z,x,y): see SparkTileEngine._forest_leaf_wave.  Part names
+    are per CELL and deterministic, so a task retry overwrites rather
+    than duplicates.
 
     ``repartitionById(n_bins, "bin")`` makes the bin the partition id,
     so bin b is task b: the partition count is part of the plan, so
@@ -1055,39 +988,19 @@ def forest_slot_wave_df(candidates: DataFrame, options: TileOptions,
     memory."""
     def run(batches):
         _worker_prep()
-        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         acks = {"z": [], "x": [], "y": [], "n": [], "n_cand": [],
                 "secs": []}
         parts = list(batches)
-        tbl = pa.Table.from_batches(parts) if parts else None
-        if tbl is not None and tbl.num_rows:
-            order = pc.sort_indices(
-                tbl, sort_keys=[("z", "ascending"), ("x", "ascending"),
-                                ("y", "ascending")])
-            tbl = tbl.take(order).combine_chunks()
-            zs = tbl.column("z").to_numpy(zero_copy_only=False)
-            xs = tbl.column("x").to_numpy(zero_copy_only=False)
-            ys = tbl.column("y").to_numpy(zero_copy_only=False)
-            packed = ((zs.astype(np.int64) << 50)
-                      | (xs.astype(np.int64) << 25) | ys.astype(np.int64))
-            bounds = np.flatnonzero(np.diff(packed)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(packed)]))
-            for s, e in zip(starts, ends):
-                t0 = time.monotonic()
-                cz, cx, cy = int(zs[s]), int(xs[s]), int(ys[s])
-                sub = tbl.slice(s, e - s)
-                n_out = _wave_cell_kernel(sub, cz, cx, cy, options,
-                                          out_dir)
-                acks["z"].append(cz)
-                acks["x"].append(cx)
-                acks["y"].append(cy)
-                acks["n"].append(n_out)
-                acks["n_cand"].append(e - s)
-                acks["secs"].append(time.monotonic() - t0)
+        cells = _cell_tables(pa.Table.from_batches(parts)) if parts else {}
+        for (cz, cx, cy), sub in cells.items():
+            t0 = time.monotonic()
+            n_out = _wave_cell_kernel(sub, cz, cx, cy, options, tile_dir,
+                                      source_dir)
+            for k, v in zip(acks, (cz, cx, cy, n_out, sub.num_rows,
+                                   time.monotonic() - t0)):
+                acks[k].append(v)
         yield from pa.table(
             acks,
             schema=pa.schema([("z", pa.int32()), ("x", pa.int32()),
@@ -1367,7 +1280,7 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
     before it re-clipped every cell from the root (68 s).  A tile's
     features stay spread across scan partitions (no per-tile funnel,
     not even for the z0 tile that holds the whole corpus); tilefeat
-    parts are written task-side (tmp + rename, deterministic per-task
+    parts are written task-side (_write_part, deterministic per-task
     names) and per-(task, tile) stat partials come back as the job's
     only output."""
     kids: dict = {}
@@ -1379,7 +1292,6 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
         _worker_prep()
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         rendered: dict = {}
@@ -1421,12 +1333,9 @@ def internal_tree_direct(fr0: DataFrame, internals: list,
                     stack.append((cz, cx, cy, clipped))
         pid = TaskContext.get().partitionId()
         for z, tables in rendered.items():
-            out_dir = os.path.join(tilefeat_root, f"z={z}")
-            os.makedirs(out_dir, exist_ok=True)
-            final = os.path.join(out_dir, f"part-i{pid:05d}.parquet")
-            pq.write_table(pa.concat_tables(tables).combine_chunks(),
-                           final + ".inprogress", compression=_CODEC)
-            os.replace(final + ".inprogress", final)
+            _write_part(pa.concat_tables(tables).combine_chunks(),
+                        os.path.join(tilefeat_root, f"z={z}"),
+                        f"part-i{pid:05d}.parquet")
         types = [pa.int32()] * 3 + [pa.int64()] * 3 + [pa.float64()] * 4
         yield pa.RecordBatch.from_arrays(
             [pa.array([r[i] for r in acks], t) for i, t in enumerate(types)],

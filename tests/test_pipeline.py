@@ -21,7 +21,8 @@ from geojson_vt_spark.kernel import LocalTileIndex
 
 from .test_property_parity import _rand_geometry
 from .test_vec_kernel import assert_records_equal
-from .util_fixtures import assert_engine_matches_index
+from .util_fixtures import (assert_engine_matches_index,
+                            assert_source_matches)
 
 
 def _squeeze(geom):
@@ -192,62 +193,16 @@ def test_clip_table_to_cell_matches_scalar_chain(lm):
     assert n_rows > 100
 
 
-def _unpack_source_pack(pack) -> list[dict]:
-    """A retained-source pack (batch_split_subtree's sp_* dict) →
-    per-feature FEATURE records, ord_path = emission position: an
-    independent read of the pack layout, to compare it against the
-    kernel index's sources."""
-    from geojson_vt_spark.kernel.vec import GTYPES
-
-    out = []
-    ri = ci = pi = 0
-    for i, code in enumerate(pack["sp_gcode"]):
-        nr = int(pack["sp_nrings"][i])
-        rl = pack["sp_ringlens"][ri:ri + nr]
-        c2 = int(sum(rl))
-        npl = int(pack["sp_npoly"][i])
-        out.append({
-            "ord_path": [i],
-            "fid_json": pack["sp_fids"][i],
-            "tags_json": pack["sp_tags"][i],
-            "gtype": GTYPES[int(code)],
-            "coords": pack["sp_coords"][ci:ci + c2],
-            "ring_lens": rl,
-            "poly_lens": pack["sp_polylens"][pi:pi + npl] if npl else None,
-            "ring_size": pack["sp_rsize"][ri:ri + nr],
-            "ring_start": pack["sp_rstart"][ri:ri + nr],
-            "ring_end": pack["sp_rend"][ri:ri + nr],
-            "minx": pack["sp_minx"][i], "miny": pack["sp_miny"][i],
-            "maxx": pack["sp_maxx"][i], "maxy": pack["sp_maxy"][i],
-        })
-        ri += nr
-        ci += c2
-        pi += npl
-    return out
-
-
-def _assert_states_equal(got, want, ctx):
-    """Two kernel states (rags, gcodes, bboxes, fids, tags) hold the
-    same features in the same order."""
-    for name in ("xs", "ys", "zs", "roff", "rfeat", "rsize", "rstart",
-                 "rend", "rpoly", "router", "n_feats"):
-        assert np.array_equal(getattr(got[0], name),
-                              getattr(want[0], name),
-                              equal_nan=True), (ctx, name)
-    for i in range(1, 6):
-        assert np.array_equal(got[i], want[i]), (ctx, i)
-    for i in (6, 7):
-        assert list(got[i]) == list(want[i]), (ctx, i)
-
-
 @pytest.mark.parametrize("lm", [False, True])
 def test_drill_split_matches_local_index(lm):
     """batch_split_subtree with a target is getTile's drill-down: from a
     tile's retained source it makes the same new tiles as
     LocalTileIndex.split_tile with cz/cx/cy, in the same creation
     order, with the same features, num_points and retained sources.
-    Each retained-source pack reads back through _pack_state as the
-    same kernel state the Arrow ingress builds from its records.
+    Each retained source (its FEATURE rows in the returned sources
+    table) equals LocalTileIndex's tile.source as records, and reads
+    back through _arrow_state as the kernel state built from those
+    records.
     The drills run in sequence, as getTile's do, so later roots include
     earlier drills' off-path tiles and targets, some at max_zoom; some
     targets lie past max_zoom."""
@@ -256,7 +211,7 @@ def test_drill_split_matches_local_index(lm):
 
     from geojson_vt_spark.kernel.transform import transform_tile
     from geojson_vt_spark.model import FEATURE_SCHEMA, feature_to_record
-    from geojson_vt_spark.pipeline import (_arrow_state, _pack_state,
+    from geojson_vt_spark.pipeline import (_arrow_state, _cell_tables,
                                            batch_split_subtree)
 
     schema = to_arrow_schema(FEATURE_SCHEMA)
@@ -282,6 +237,7 @@ def test_drill_split_matches_local_index(lm):
             rows, sources = batch_split_subtree(
                 None, rz, rx, ry, opts, state=state,
                 root_forced_split=False, target=(cz, cx, cy))
+            sources = _cell_tables(sources)
             before = len(idx.tile_coords)
             idx.split_tile(src, rz, rx, ry, cz, cx, cy)
 
@@ -298,14 +254,8 @@ def test_drill_split_matches_local_index(lm):
                 assert SparkTileEngine._unpack_tile_features(r) == \
                     transform_tile(t, opts.extent)["features"], (ctx, key)
                 if t.source:
-                    recs = _unpack_source_pack(sources[key])
-                    assert_records_equal(
-                        [feature_to_record((), f) for f in t.source],
-                        recs, f"{ctx} {key}")
-                    _assert_states_equal(
-                        _pack_state(sources[key]),
-                        _arrow_state(pa.Table.from_pylist(recs, schema)),
-                        f"{ctx} {key}")
+                    assert_source_matches(sources[key], t.source,
+                                          f"{ctx} {key}")
                 else:
                     assert key not in sources, (ctx, key)
             n_drills += 1

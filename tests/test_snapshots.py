@@ -132,7 +132,8 @@ def test_snapshot_chain_and_version_mixed(spark, tmp_path):
     assert zoom_snaps[-1]["commit"]["final"] is True
     # the final manifest covers the internal levels and the leaf store
     stores = set(snaps[-1]["manifests"])
-    assert {"tiles/z=1", "tilefeat/z=1", "subtree/b=1"} <= stores, stores
+    assert {"tiles/z=1", "tilefeat/z=1", "subtree/b=1",
+            "sources/b=1"} <= stores, stores
     assert eng.verify_snapshot() == []
 
 
@@ -150,6 +151,12 @@ def test_snapshot_verify_catches_corruption_mixed(spark, tmp_path):
     path.unlink()
     problems = eng.verify_snapshot()
     assert f"subtree/b=1/{victim['name']}: missing" in problems, problems
+    # a deleted leaf-source part
+    source = next(f for f in final["sources/b=1"]
+                  if f["name"].endswith(".parquet"))
+    (tmp_path / "sources" / "b=1" / source["name"]).unlink()
+    problems = eng.verify_snapshot()
+    assert f"sources/b=1/{source['name']}: missing" in problems, problems
 
 
 def test_snapshot_history_resets_on_fresh_build_mixed(spark, tmp_path):

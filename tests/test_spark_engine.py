@@ -427,8 +427,8 @@ def test_spark_get_tiles_all_hit_no_jobs_gated(spark, tmp_path):
 def test_spark_batch_deep_drill_no_jobs_gated(spark, tmp_path):
     """Fixture-free twin of test_spark_batch_deep_drill_bounded_jobs: a
     get_tiles batch of 128 descendants, three levels under two subtree
-    leaves of a gated build, drills from the leaves' stored source packs
-    and then from the drill overlay's packs, runs no Spark job, and
+    leaves of a gated build, drills from the leaves' stored sources
+    and then from the drill overlay's sources, runs no Spark job, and
     equals LocalTileIndex."""
     eng, idx = _gated_clustered_engine(spark, tmp_path)
     eng.warm()
@@ -462,7 +462,7 @@ def test_spark_batch_deep_drill_no_jobs_gated(spark, tmp_path):
 
 def test_rebuild_drops_drill_overlay(spark, tmp_path):
     """A rebuild of one engine serves the new input only: the tiles and
-    source packs an earlier drill left in the overlay belong to the old
+    sources an earlier drill left in the overlay belong to the old
     pyramid and must go with it.  Kept, they answered a drilled key
     with the old input's tile and appended it to tile_coords()."""
     from .test_pipeline import _mixed_collection
@@ -648,9 +648,9 @@ def test_forest_unprovable_cells_are_leaves(spark, tmp_path):
     """A giant boundary-crossing polygon gives cut cells huge candidate
     mass with zero guaranteed-inside mass, so no prover can split them.
     Such a cell is a plain leaf of the slot wave, even far over the
-    task budget: the lineage records no probe step, no sources/ store
-    exists, and the pyramid, drills through those leaves' packed
-    sources and tileCoords order equal LocalTileIndex."""
+    task budget: the lineage records no probe step, the leaves' sources
+    live only in the wave's sources/b=1 store, and the pyramid, drills
+    through those sources and tileCoords order equal LocalTileIndex."""
     import math as _math
 
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
@@ -674,7 +674,8 @@ def test_forest_unprovable_cells_are_leaves(spark, tmp_path):
     st = _steps(tmp_path / "f")
     assert "probe" not in st and "n_stragglers" not in st, st
     assert st["n_internal"], st
-    assert not (tmp_path / "f" / "sources").exists()
+    assert [p.name for p in (tmp_path / "f" / "sources").iterdir()] == \
+        ["b=1"]
     # leaves far over the budget (the unprovable ring cells) are in the
     # wave's handoff like any other leaf
     handoff = {tuple(c) for c in _lineage(tmp_path / "f")[-1]["handoff"]}
@@ -724,20 +725,16 @@ def test_forest_kill_resume_into_loop_leaves_no_phantoms(spark, tmp_path):
 
 
 def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
-    """A completed forest build whose subtree store is lost (deleted /
-    disk swap) must re-create it on resume from the leaf cut keys
-    recorded in the forest lineage row — not silently return 'build
-    already finished' with most tiles missing."""
+    """A completed forest build whose subtree or sources store is lost
+    (deleted / disk swap) must re-create it on resume from the leaf cut
+    keys recorded in the forest lineage row — not silently return
+    'build already finished' with most tiles or leaf sources
+    missing."""
     import json as _json
     import shutil as _sh
 
-    from geojson_vt_spark.pipeline import features_from_json_df
-    from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
-                                                 synth_pages_df)
-
     opts = TileOptions(index_max_zoom=6, index_max_points=100)
-    pages = synth_pages_df(spark, 2500, seed=11)
-    feats = features_from_json_df(extract_geo_features_df(pages), opts)
+    feats, data = _corpus(spark, 2500, 11, opts)
 
     forest = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
     forest._KERNEL_PTS_PER_TASK = 2000
@@ -747,13 +744,17 @@ def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
     final = [r for r in lin if r.get("final")][0]
     assert final.get("forest") and final.get("handoff"), final
 
-    _sh.rmtree(tmp_path / "f" / "subtree")
-    resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
-    resumed._KERNEL_PTS_PER_TASK = 2000
-    resumed.build_from_converted(feats, resume=True)
-    got = resumed.enumerate_tiles()
-    assert set(got) == set(want)
-    assert not [k for k in got if got[k] != want[k]]
+    for store in ("subtree", "sources"):
+        _sh.rmtree(tmp_path / "f" / store)
+        resumed = SparkTileEngine(spark, opts, workdir=str(tmp_path / "f"))
+        resumed._KERNEL_PTS_PER_TASK = 2000
+        resumed.build_from_converted(feats, resume=True)
+        assert (tmp_path / "f" / store / "b=1" / "_SUCCESS").exists()
+        got = resumed.enumerate_tiles()
+        assert set(got) == set(want), store
+        assert not [k for k in got if got[k] != want[k]], store
+        assert resumed.verify_snapshot() == [], store
+    assert_engine_matches_index(resumed, LocalTileIndex(data, opts))
 
 
 def test_full_kill_resume_reenters_forest_path(spark, tmp_path):

@@ -11,9 +11,14 @@ import json
 import os
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
+
 from geojson_vt_spark import TileOptions
 from geojson_vt_spark.engine import SparkTileEngine
 from geojson_vt_spark.kernel import LocalTileIndex
+from geojson_vt_spark.pipeline import _arrow_state, _cell_tables
 
 FIXTURE_DIR = "/root/reference/test/fixtures"
 
@@ -34,10 +39,42 @@ def gen_tiles(data, **opts):
     return out
 
 
+def assert_source_matches(part, source, ctx="", state=None):
+    """One retained source as the engine keeps it — a tile's FEATURE
+    rows, ord_path [k] — equals a LocalTileIndex ``tile.source``: as
+    feature_to_record records, and as kernel state (``state``, or the
+    rows' own _arrow_state) equal to the records' _arrow_state."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from geojson_vt_spark.model import FEATURE_SCHEMA, feature_to_record
+
+    from .test_vec_kernel import assert_records_equal
+
+    schema = to_arrow_schema(FEATURE_SCHEMA)
+    want = [feature_to_record((i,), f) for i, f in enumerate(source)]
+    got = sorted(part.select(schema.names).to_pylist(),
+                 key=lambda r: r["ord_path"])
+    assert [r["ord_path"] for r in got] == [[i] for i in range(len(want))], \
+        ctx
+    assert_records_equal(want, got, ctx)
+    got_st = _arrow_state(part) if state is None else state
+    want_st = _arrow_state(pa.Table.from_pylist(want, schema=schema))
+    for name in ("xs", "ys", "zs", "roff", "rfeat", "rsize", "rstart",
+                 "rend", "rpoly", "router", "n_feats"):
+        assert np.array_equal(getattr(got_st[0], name),
+                              getattr(want_st[0], name),
+                              equal_nan=True), (ctx, name)
+    for i in range(1, 6):
+        assert np.array_equal(got_st[i], want_st[i]), (ctx, i)
+    for i in (6, 7):
+        assert list(got_st[i]) == list(want_st[i]), (ctx, i)
+
+
 def assert_engine_matches_index(eng, idx, probes=()):
     """A built SparkTileEngine must equal the kernel LocalTileIndex over
     the same input: the same tiles with the same features and stats,
-    tileCoords order, and tile count; then each drill probe on both
+    tileCoords order, tile count and stored leaf sources
+    (assert_source_matches); then each drill probe on both
     sides, and tileCoords again with the drilled tiles appended.
     Last, a fresh engine over the same workdir serves one get_tiles
     batch — every built tile, the probes and an out-of-range key —
@@ -59,6 +96,19 @@ def assert_engine_matches_index(eng, idx, probes=()):
     assert got_stats == want_stats
     assert eng.tile_count() == len(want)
     assert eng.tile_coords() == idx.tile_coords
+    # every leaf source the build stored (a root-only z0 keeps its
+    # source in the z0 frontier), read back both directly and through
+    # the engine's own reader
+    want_src = {(t.z, t.x, t.y): t.source for t in idx.tiles.values()
+                if t.source and t.z}
+    path = os.path.join(eng.workdir, "sources")
+    stored = (_cell_tables(ds.dataset(path, partitioning="hive").to_table())
+              if os.path.isdir(path) else {})
+    states = eng._stored_sources(set(want_src))
+    assert set(stored) == set(states) == set(want_src), \
+        sorted(set(stored) ^ set(want_src))[:5]
+    for key, part in stored.items():
+        assert_source_matches(part, want_src[key], key, states[key])
     for zxy in probes:
         a, b = eng.get_tile(*zxy), idx.get_tile(*zxy)
         assert (a is None) == (b is None), zxy
