@@ -63,8 +63,8 @@ def main() -> None:
     import tempfile
     wd = tempfile.mkdtemp(prefix="gvt_probe_")
     eng = SparkTileEngine(spark, opts, workdir=wd)
-    # no-wrap corpus: the z0 frontier is exactly this view (the same
-    # shape _read_frontier0() serves from the features checkpoint)
+    # the ingest stage's rows are the z0 frontier: this view is the
+    # shape _read_frontier0() serves from the features checkpoint
     fr0 = eng._frontier0_view(spark.read.parquet(FRONTIER))
 
     t0 = time.monotonic()

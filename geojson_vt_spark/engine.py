@@ -24,9 +24,10 @@ Scale design notes (SURVEY.md §4/§7):
   never funnels into one task;
 - driver state is O(cut cells), not O(4^z tiles): the leaf subtrees are
   built in-task by the batch kernel and written task-side;
-- a dateline-wrapping input is written once as frontier/z=0 (wrap_df's
-  world copies); otherwise the z0 frontier is a view over the features
-  checkpoint;
+- the features checkpoint IS the z0 frontier: the ingest stage wraps
+  the dateline per Arrow batch (pipeline.wrap_table), so the corpus is
+  written once and every reader sees it through one view
+  (_frontier0_view);
 - lineage lands only after every store is durable: a kill before the
   final row restarts cleanly from the z0 frontier, and a finished
   build whose subtree or sources store is lost re-runs the leaf wave
@@ -65,11 +66,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .kernel.index import to_id
 from .model import FEATURE_COLUMNS, FEATURE_SCHEMA
 from .options import TileOptions
-from .pipeline import (_NV_SQL, _arrow_state, _cell_tables, _dbl,
+from .pipeline import (_NV_SQL, _arrow_state, _cell_tables,
                        batch_split_subtree, features_from_json_df,
                        forest_gate_df, forest_route_df,
                        forest_slot_wave_df, geojson_to_input_rows,
-                       internal_tree_direct, wrap_df)
+                       internal_tree_direct)
 
 TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
                 "num_simplified", "minx", "miny",
@@ -79,15 +80,11 @@ TILE_COLUMNS = ["z", "x", "y", "tile_id", "num_features", "num_points",
 # leaf that keeps its (empty) source
 _EMPTY_TILE_STATS = [0, 0, 0, 2.0, 1.0, -1.0, 0.0, False, True]
 
-# the z0 frontier's ord_path is [head] + a checkpoint row's ord_path +
-# [tail] (wrap_df's centre-world envelope), as _frontier0_view builds it
-_Z0_ORD_ENVELOPE = (1, 0)
-
 # the column a drill reads for a stored tile
 _META_COLUMNS = ["has_source"]
 
 # the build's output stores (the features checkpoint is ingest's)
-_STORES = ("tiles", "tilefeat", "frontier", "subtree", "sources")
+_STORES = ("tiles", "tilefeat", "subtree", "sources")
 
 # the leaf wave's stores: tile rows and the leaves' retained sources
 _LEAF_STORES = ("subtree", "sources")
@@ -146,14 +143,8 @@ class SparkTileEngine:
         open(os.path.join(path, "_SUCCESS"), "w").close()
 
     def _read_frontier0(self) -> DataFrame:
-        """The z0 frontier: frontier/z=0 when a dateline-wrapping input
-        wrote its world copies there, else a zero-copy view over the
-        converted features checkpoint plus constant columns — the whole
-        corpus is not rewritten a second time just to gain (z=0, x=0,
-        y=0) literals."""
-        path = self._p("frontier", "z=0")
-        if os.path.isdir(path):
-            return self.spark.read.parquet(path)
+        """The z0 frontier: a view over the features checkpoint, whose
+        rows the ingest stage already wrapped."""
         return self._frontier0_view(self._read_features())
 
     def _read_features(self) -> DataFrame:
@@ -322,8 +313,8 @@ class SparkTileEngine:
             rows, "input_ord long, gen_index long, feature_json string")
         if len(rows) > 64:
             df = df.repartition(min(n, max(1, len(rows) // 16)))
-        # route through the converted-features checkpoint: the wrap
-        # decision + z0 stats ride the checkpoint write
+        # route through the features checkpoint: the z0 stats ride its
+        # write
         self.build_from_converted(features_from_json_df(df, self.options))
 
     # the forest task budget in vertex-levels (a cell's vertex mass × the
@@ -334,25 +325,17 @@ class SparkTileEngine:
     _KERNEL_PTS_PER_TASK = 600_000
 
     def _frontier0_view(self, src: DataFrame) -> DataFrame:
-        """z0 frontier view over an already-converted features frame
-        (same shape _read_frontier0 serves from the checkpoint)."""
-        head, tail = _Z0_ORD_ENVELOPE
-        return src.selectExpr(
-            "0 AS z", "0 AS x", "0 AS y",
-            f"concat(array(CAST({head} AS BIGINT)), ord_path, "
-            f"array(CAST({tail} AS BIGINT))) AS ord_path",
-            *[c for c in FEATURE_COLUMNS if c != "ord_path"],
-            f"{_NV_SQL} AS n_verts")
+        """z0 frontier view over ingested features (features_from_json_df
+        rows, or the checkpoint _read_frontier0 serves): the rows plus
+        their tile (z=0, x=0, y=0) and vertex count."""
+        return src.selectExpr("0 AS z", "0 AS x", "0 AS y", *FEATURE_COLUMNS,
+                              f"{_NV_SQL} AS n_verts")
 
     def _ingest_aggs(self) -> list:
         """z0 classification stats (z0 holds exactly one tile, so they
-        are global aggregates) plus the left/right wrap-candidate
-        counts, as SQL-text aggregates for one observed pass over the
-        features."""
-        b = self.options.buffer / self.options.extent
+        are global aggregates), as SQL-text aggregates for one observed
+        pass over the features."""
         return [F.expr(e) for e in (
-            f"sum(CAST(minx <= {_dbl(b)} AS BIGINT)) AS l",
-            f"sum(CAST(maxx >= {_dbl(1 - b)} AS BIGINT)) AS r",
             "count(1) AS num_features",
             f"sum({_NV_SQL}) AS num_points",
             "min(minx) AS minx", "min(miny) AS miny",
@@ -370,17 +353,16 @@ class SparkTileEngine:
     def build_from_converted(self, features_df: DataFrame,
                              resume: bool = False,
                              approx_rows: int | None = None) -> None:
-        """Build the pyramid from converted FEATURE_SCHEMA rows.
+        """Build the pyramid from ``features_df``: the rows of
+        features_from_json_df, converted AND wrapped at the dateline
+        (FEATURE_SCHEMA, ord_path [world, input_ord, convert_ord,
+        slice]).  Rows that were only converted lack the world copies.
 
-        ONE ingest job: the features checkpoint write carries the
-        wrap-candidate counts and z0 stats as observed metrics, so the
-        checkpoint is durable and the cut's first decision is known
-        before any other job runs.  Without world copies the z0
-        frontier is a view over this checkpoint (``_read_frontier0``) —
-        one materialization of the corpus, not two.  A dateline-wrapping
-        input (non-zero left/right counts) hands ``wrap_df``'s
-        left ++ centre ++ right copies to ``build``, which writes them
-        once as frontier/z=0 and observes the z0 stats on that write.
+        ONE ingest job: the features checkpoint write carries the z0
+        stats as observed metrics, so the checkpoint is durable and the
+        cut's first decision is known before any other job runs.  The
+        checkpoint is the z0 frontier (``_read_frontier0`` is a view
+        over it): one materialization of the corpus, wrapping or not.
 
         ``approx_rows`` is accepted for callers that pass a rough
         feature count and is ignored: the cut is chosen from the exact
@@ -402,25 +384,7 @@ class SparkTileEngine:
             (features_df.observe(obs, *self._ingest_aggs())
              .write.mode("overwrite").parquet(path))
             row = obs.get
-        counts = (int(row["l"] or 0), int(row["r"] or 0))
-        if counts[0] or counts[1]:
-            self.build(wrap_df(self._read_features(), self.options,
-                               counts=counts), resume=resume)
-        else:
-            self.build(None, resume=resume, z0_stats=self._z0_stats(row))
-
-    def _write_frontier0(self, features_df: DataFrame) -> dict | None:
-        """Write wrapped features once as frontier/z=0, in the layout
-        _read_frontier0 serves, and return the z0 stats observed on
-        that same write (they count the world copies)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (features_df.selectExpr("0 AS z", "0 AS x", "0 AS y",
-                                *FEATURE_COLUMNS, f"{_NV_SQL} AS n_verts")
-         .observe(obs, *self._ingest_aggs())
-         .write.mode("overwrite").parquet(self._p("frontier", "z=0")))
-        return self._z0_stats(obs.get)
+        self.build(resume=resume, z0_stats=self._z0_stats(row))
 
     # forest-wave cut: deepest subdivision level (gate cells grow 4^L;
     # past z6 the cut bookkeeping stops paying).  Cells below it are
@@ -759,16 +723,13 @@ class SparkTileEngine:
             if os.path.exists(p):
                 os.remove(p)
 
-    def build(self, features_df: DataFrame | None = None,
-              resume: bool = False, z0_stats: dict | None = None) -> None:
+    def build(self, resume: bool = False,
+              z0_stats: dict | None = None) -> None:
         """Build the pyramid (the first, cz == null pass of splitTile)
-        through the forest cut (_build_forest), the only build path.
-
-        ``features_df``: converted FEATURE_SCHEMA rows, already wrapped
-        (wrap_df).  They are written once as frontier/z=0 and the z0
-        stats are observed on that same write.  ``None`` means the z0
-        frontier is the features checkpoint served as a view, with
-        ``z0_stats`` observed by build_from_converted's ingest job.
+        through the forest cut (_build_forest), the only build path,
+        from the features checkpoint as the z0 frontier.  ``z0_stats``
+        are the z0 stats build_from_converted's ingest job observed;
+        None means an empty input.
 
         ``resume=True``: when the lineage holds the final row the build
         is done, and only a lost subtree or sources store is re-run from
@@ -794,22 +755,20 @@ class SparkTileEngine:
                     self._forest_leaf_wave(keys, self._read_frontier0())
                 return
         self._reset_stores()
-        r0 = (self._write_frontier0(features_df) if features_df is not None
-              else z0_stats)
-        if r0 is None:
+        if z0_stats is None:
             # empty input: no tiles, as LocalTileIndex builds none
             self._write_tile_rows(0, [])
             self._append_lineage({
                 "zoom": 0, "n_tiles": 0, "n_points": 0,
                 "forest": True, "complete": True, "final": True})
         else:
-            self._build_forest(r0)
+            self._build_forest(z0_stats)
 
     # ------------------------------------------------------------ read side
 
     def _dataset(self, store: str):
         """pyarrow dataset over one store directory under the workdir
-        (``tilefeat``, ``frontier/z=0``, ...): hive ``z=``/``b=``
+        (``tilefeat``, ``features``, ...): hive ``z=``/``b=``
         directories become columns, ``_SUCCESS`` and dot files are
         skipped.  Opened once per engine until the next build; None
         when the directory is absent or holds no data file."""
@@ -1055,19 +1014,15 @@ class SparkTileEngine:
         """(z,x,y) → the retained source of each stored tile in
         ``keys`` that keeps one, as kernel state read by the Arrow
         ingress (ordered by ord_path): a leaf's rows of the sources
-        store, a root-only z0's z0 frontier.  The z0 frontier is
-        frontier/z=0 when a wrapping input wrote it, else the features
-        checkpoint: kernel state carries no ord_path, and the view's
-        constant _Z0_ORD_ENVELOPE keeps the checkpoint's order."""
+        store, a root-only z0's z0 frontier (the features
+        checkpoint)."""
         tbl = self._table("sources", FEATURE_COLUMNS, keys)
         out = ({} if tbl is None else
                {k: _arrow_state(part)
                 for k, part in _cell_tables(tbl).items()})
         if (0, 0, 0) in keys:
-            dset = (self._dataset("frontier/z=0")
-                    or self._dataset("features"))
             out[(0, 0, 0)] = _arrow_state(
-                dset.to_table(columns=FEATURE_COLUMNS))
+                self._dataset("features").to_table(columns=FEATURE_COLUMNS))
         return out
 
     def _drill(self, state, root, target) -> None:

@@ -4,16 +4,16 @@ Spark-first design (SURVEY.md §7): geojson-vt's recursive splitTile
 (src/index.js:66-156) becomes a quadtree CUT of the tile tree built from
 the z0 frontier in a few jobs (engine._build_forest):
 
-- ingest: convert (features_from_json_df: one Arrow-in, Arrow-out
-  stage, fused with the corpus extract when fed an extract frame) and
-  the dateline wrap (wrap_df, Column-level trivial accept/reject,
-  kernel clip only for crossing features);
+- ingest: ONE Arrow-in, Arrow-out stage (features_from_json_df, fused
+  with the corpus extract when fed an extract frame) that converts each
+  batch and wraps it at the dateline (wrap_table: only rows near a
+  world edge are clipped), so its output is the z0 frontier;
 - clip: ONE path from a cell's ancestor down to the cell — _clip_chain
   (batch_clip on x then y per level, windows from _cell_window) between
   one Arrow ingress (_arrow_state) and one Arrow egress
   (_clip_out_geometry_arrays).  The leaf wave (_wave_cell_kernel) and
   the internal walk (clip_table_to_cell) run it; the wrap runs the same
-  boundary around a single x clip;
+  boundary around a single x clip per world;
 - cut: slim SQL-text mass aggregations per quadtree cell
   (forest_gate_df, forest_vertex_probe_df) — the stop rule's numPoints
   is ``sum(size(coords)/3)`` (src/index.js:107), so Catalyst runs them
@@ -56,10 +56,12 @@ _CODEC = "zstd"
 
 
 def features_from_json_df(df: DataFrame, options: TileOptions) -> DataFrame:
-    """Distributed convert stage: rows of (input_ord, gen_index, feature_json)
-    → FEATURE_SCHEMA rows with ord_path = [input_ord, convert_ord], one
-    Arrow batch in and one FEATURE table out per input batch
-    (convert_rows_to_table).
+    """Distributed ingest stage: rows of (input_ord, gen_index,
+    feature_json) → the z0 frontier's FEATURE_SCHEMA rows, ord_path =
+    [world, input_ord, convert_ord, slice].  One Arrow batch in and one
+    FEATURE table out per input batch: the convert
+    (convert_rows_to_table), then the dateline wrap on the same table
+    (wrap_table).
 
     feature_json is a single GeoJSON Feature (or bare geometry wrapped as
     {"geometry": ...}); gen_index feeds generateId (null for non-collection
@@ -75,20 +77,22 @@ def features_from_json_df(df: DataFrame, options: TileOptions) -> DataFrame:
     """
     from .sources.corpus import extracted_pages, page_features
 
+    def ingest(rows):
+        return wrap_table(convert_rows_to_table(rows, options),
+                          options).to_batches()
+
     def run(batches):
         _worker_prep()
         for rb in batches:
-            rows = zip(rb.column("input_ord").to_pylist(),
-                       rb.column("gen_index").to_pylist(),
-                       rb.column("feature_json").to_pylist())
-            yield from convert_rows_to_table(rows, options).to_batches()
+            yield from ingest(zip(rb.column("input_ord").to_pylist(),
+                                  rb.column("gen_index").to_pylist(),
+                                  rb.column("feature_json").to_pylist()))
 
     def fused(batches):
         _worker_prep()
         for rb in batches:
-            rows = ((o, o, feature) for o, feature in page_features(
+            yield from ingest((o, o, feature) for o, feature in page_features(
                 rb.column("url").to_pylist(), rb.column("text").to_pylist()))
-            yield from convert_rows_to_table(rows, options).to_batches()
 
     pages = extracted_pages(df)
     if pages is not None:
@@ -146,53 +150,65 @@ def geojson_to_input_rows(data: dict):
 
 # ---------------------------------------------------------------- wrap
 
-def _ord_extend(world: int | None, idx_col):
-    cols = []
-    if world is not None:
-        cols.append(F.array(F.lit(world).cast("long")))
-    cols.append(F.col("ord_path"))
-    cols.append(F.array(idx_col.cast("long")))
-    return F.concat(*cols)
+def wrap_table(tbl, options: TileOptions):
+    """Dateline wrap (src/wrap.js:5-19) of one convert table: its
+    features as z0 frontier rows, ord_path [world, *ord, slice] with
+    world 0/1/2 = left/centre/right, so ord order is the reference's
+    left ++ centre ++ right concat.
+
+    Only a candidate — a row whose bbox reaches x ≤ b or x ≥ 1 - b —
+    can leave the centre window [-b, 1 + b] or enter a side window
+    [-1 - b, b] or [1 - b, 2 + b].  Every other row is the centre world
+    as it is: it keeps its geometry and gains only [1, *ord, 0], so a
+    batch without a candidate costs one ord_path rebuild.  The
+    candidates go through batch_clip once per window (its trivial
+    accept minx ≥ k1 and maxx < k2, and reject maxx < k1 or minx ≥ k2,
+    are the window tests) and the side copies shift by ±1 world
+    (src/wrap.js:21-68; a constant add commutes with min and max, so
+    the bbox shifts exactly).
+
+    The reference decides for the whole input: with no feature in a
+    side window it keeps every feature unclipped.  A row that yields a
+    side copy or that the centre clip alters is a candidate, so the
+    per-row wrap differs only for a feature lying wholly outside
+    [-1 - b, 2 + b], which it drops."""
+    import pyarrow as pa
+
+    from .kernel.vec import batch_clip
+    b = options.buffer / options.extent
+    mnx, mxx = (tbl.column(c).to_numpy(zero_copy_only=False)
+                for c in ("minx", "maxx"))
+    cand = (mnx <= b) | (mxx >= 1 - b)
+    rest = np.nonzero(~cand)[0]
+    slice0 = np.zeros((len(rest), 1), dtype=np.int64)
+    if len(rest) == tbl.num_rows:
+        return tbl.set_column(0, "ord_path", _ord_append(
+            tbl.column("ord_path"), rest, slice0, head=slice0 + 1))
+    parts = [_feature_table(tbl, rest, slice0, head=slice0 + 1)]
+    sub = tbl.take(pa.array(np.nonzero(cand)[0]))
+    state = _arrow_state(sub, sort=False, strings=False)[:6]
+    m = sub.num_rows
+    for world in (0, 1, 2):
+        res = batch_clip(*state, np.full(m, world - 1 - b),
+                         np.full(m, world + b), 0, options.line_metrics)
+        if not res.n_feats:
+            continue
+        if world != 1:
+            shift = 1.0 - world
+            res.rags.xs = res.rags.xs + shift
+            res.minx, res.maxx = res.minx + shift, res.maxx + shift
+        geo = _clip_out_geometry_arrays(res.rags, res.gcodes, res.bbox)
+        parts.append(_feature_table(
+            sub, res.src, res.sub_ord[:, None], geo,
+            head=np.full((res.n_feats, 1), world, dtype=np.int64)))
+    return pa.concat_tables(parts)
 
 
-def _clip_df(df: DataFrame, k1: float, k2: float, options: TileOptions,
-             world: int) -> DataFrame:
-    """Clip every feature to [k1, k2] on x (scale 1), prepending
-    ``world`` and appending the within-feature slice index to ord_path.
-
-    Column-level trivial accept/reject; only crossing features cross
-    the Arrow boundary (_arrow_state → batch_clip →
-    _clip_out_geometry_arrays)."""
-    accept = (F.col("minx") >= k1) & (F.col("maxx") < k2)
-    reject = (F.col("maxx") < k1) | (F.col("minx") >= k2)
-    lm = options.line_metrics
-
-    def run(batches):
-        _worker_prep()
-        import pyarrow as pa
-
-        from .kernel.vec import batch_clip
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            state = _arrow_state(tbl, sort=False, strings=False)[:6]
-            n = rb.num_rows
-            res = batch_clip(*state, np.full(n, k1), np.full(n, k2), 0, lm)
-            geo = _clip_out_geometry_arrays(res.rags, res.gcodes, res.bbox)
-            yield from _feature_table(
-                tbl, res.src, res.sub_ord[:, None], geo).to_batches()
-
-    passed = df.where(accept).withColumn(
-        "ord_path", _ord_extend(world, F.lit(0)))
-    clipped = (df.where(~accept & ~reject).mapInArrow(run, FEATURE_SCHEMA)
-               .withColumn("ord_path", F.concat(
-                   F.array(F.lit(world).cast("long")), F.col("ord_path"))))
-    return passed.unionByName(clipped)
-
-
-def _ord_append(ords, rows, tail):
+def _ord_append(ords, rows, tail, head=None):
     """The ord_path list column at ``rows`` with row i of the int matrix
-    ``tail`` appended to row i, built through the list offsets (so any
-    ord width, fixed or mixed, takes the same path)."""
+    ``tail`` appended to row i, and row i of ``head`` (when given)
+    prepended, built through the list offsets (so any ord width, fixed
+    or mixed, takes the same path)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -203,31 +219,34 @@ def _ord_append(ords, rows, tail):
     ioff = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=ioff[1:])
     k, w = tail.shape
+    h = 0 if head is None else head.shape[1]
     rows = np.asarray(rows, dtype=np.int64)
     olen = lens[rows]
     ooff = np.zeros(k + 1, dtype=np.int64)
-    np.cumsum(olen + w, out=ooff[1:])
+    np.cumsum(h + olen + w, out=ooff[1:])
     out = np.empty(int(ooff[-1]), dtype=np.int64)
+    if h:
+        out[ooff[:-1, None] + np.arange(h)] = head
     row = np.repeat(np.arange(k), olen)
     rel = ragged_arange(olen)
-    out[ooff[row] + rel] = flat[ioff[rows][row] + rel]
-    out[(ooff[:-1] + olen)[:, None] + np.arange(w)] = tail
+    out[ooff[row] + h + rel] = flat[ioff[rows][row] + rel]
+    out[(ooff[:-1] + h + olen)[:, None] + np.arange(w)] = tail
     return pa.ListArray.from_arrays(
         pa.array(ooff.astype(np.int32), pa.int32()),
         pa.array(out, pa.int64()))
 
 
-def _feature_table(tbl, rows, tail, geo=None):
+def _feature_table(tbl, rows, tail, geo=None, head=None):
     """FEATURE_COLUMNS of ``tbl`` at ``rows`` as one Arrow table:
-    ord_path gains ``tail`` (_ord_append), fid/tags are taken, and the
-    geometry columns are ``geo`` (a clip's _clip_out_geometry_arrays)
-    or, when None, the rows' own."""
+    ord_path gains ``head`` and ``tail`` (_ord_append), fid/tags are
+    taken, and the geometry columns are ``geo`` (a clip's
+    _clip_out_geometry_arrays) or, when None, the rows' own."""
     import pyarrow as pa
 
     idx = pa.array(np.asarray(rows, dtype=np.int64))
     geo = geo or {}
     return pa.Table.from_arrays(
-        [_ord_append(tbl.column("ord_path"), rows, tail)]
+        [_ord_append(tbl.column("ord_path"), rows, tail, head)]
         + [geo[c] if c in geo else tbl.column(c).take(idx)
            for c in FEATURE_COLUMNS[1:]],
         names=FEATURE_COLUMNS)
@@ -297,55 +316,6 @@ def _clip_out_geometry_arrays(rg, gcodes, bbox) -> dict:
         "maxx": pa.array(maxx, pa.float64()),
         "maxy": pa.array(maxy, pa.float64()),
     }
-
-
-def _shift_df(df: DataFrame, offset: float) -> DataFrame:
-    """World-copy x shift as pure Column ops
-    (/root/reference/src/wrap.js:21-68): adding a constant commutes with
-    min/max, so the bbox shifts exactly too."""
-    return (df
-            .withColumn("coords", F.expr(
-                f"transform(coords, (v, i) -> IF(i % 3 == 0, v + {offset!r}D, v))"))
-            .withColumn("minx", F.col("minx") + offset)
-            .withColumn("maxx", F.col("maxx") + offset))
-
-
-def wrap_df(df: DataFrame, options: TileOptions,
-            counts: tuple[int, int]) -> DataFrame:
-    """Distributed dateline wrap (/root/reference/src/wrap.js:5-19).
-
-    ord_path gains a [world, ..., slice] envelope; world 0/1/2 =
-    left/center/right reproduces the reference's concat order.
-
-    ``counts`` = (left, right) wrap-candidate counts decide whether side
-    copies exist: features whose bbox reaches x ≤ b, resp. x ≥ 1 - b
-    (the ingest job observes them).  The left clip window is [-1-b, b]
-    and projected x ≥ 0 > -1-b always, so the clip output is non-empty
-    iff some feature bbox reaches x ≤ b (point clip keeps x == k2
-    inclusively, clip.js:92, hence <=); a candidate whose clip comes
-    out empty only adds an empty union branch — harmless — so the bbox
-    test errs exclusively on the safe side."""
-    b = options.buffer / options.extent
-
-    has_left = bool(counts[0])
-    has_right = bool(counts[1])
-
-    if not has_left and not has_right:
-        return df.withColumn("ord_path", _ord_extend(1, F.lit(0)))
-
-    left = _shift_df(_clip_df(df, -1 - b, b, options, 0), 1.0)
-    right = _shift_df(_clip_df(df, 1 - b, 2 + b, options, 2), -1.0)
-    center = _clip_df(df, -b, 1 + b, options, 1)
-    parts = []
-    if has_left:
-        parts.append(left)
-    parts.append(center)
-    if has_right:
-        parts.append(right)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 # ---------------------------------------------------------------- assembly

@@ -22,7 +22,7 @@ from geojson_vt_spark.kernel import LocalTileIndex
 from .test_property_parity import _rand_geometry
 from .test_vec_kernel import assert_records_equal
 from .util_fixtures import (assert_engine_matches_index,
-                            assert_source_matches)
+                            assert_source_matches, checkpoint_worlds)
 
 
 def _squeeze(geom):
@@ -104,9 +104,11 @@ def test_engine_matches_local_index(spark, tmp_path, seed, n, opts,
     idx = LocalTileIndex(data, options)
     assert _cut_shape(eng) == shape
 
-    # world copies are written once as the z0 frontier; without them
-    # the frontier is a view over the features checkpoint
-    assert (tmp_path / "frontier" / "z=0").exists() == (wrap and n > 0)
+    # the features checkpoint is the z0 frontier, world copies included:
+    # no frontier store, and world-0/2 rows iff the input wraps
+    assert not (tmp_path / "frontier").exists()
+    worlds = checkpoint_worlds(eng)
+    assert bool(worlds - {1}) == (wrap and n > 0), worlds
 
     rng = random.Random(seed)
     leaves = sorted((t.z, t.x, t.y) for t in idx.tiles.values()
@@ -340,6 +342,58 @@ def test_convert_table_matches_records(opts):
     assert any(r["poly_lens"] is None for r in recs)
     _assert_table_matches_records(
         convert_rows_to_table(_EDGE_ROWS, options), recs, "edge rows")
+
+
+def _wrap_edge_features(b: float) -> list:
+    """Features whose bbox ends exactly at x = b or x = 1 - b, the
+    thresholds of a side copy (lon ∓(0.5 - b)·360 projects exactly)."""
+    lon = (0.5 - b) * 360
+    return [{"type": "Feature", "properties": {"edge": i}, "geometry": g}
+            for i, g in enumerate((
+                {"type": "Point", "coordinates": [-lon, 10]},
+                {"type": "Point", "coordinates": [lon, -10]},
+                {"type": "LineString", "coordinates": [[-lon, 0],
+                                                       [20 - lon, 5]]},
+                {"type": "LineString", "coordinates": [[lon - 20, 0],
+                                                       [lon, 5]]}))]
+
+
+@pytest.mark.parametrize("lm", [False, True])
+def test_wrap_table_matches_scalar_wrap(lm):
+    """wrap_table over convert_rows_to_table (the ingest stage's batch
+    body) equals the scalar kernel's wrap over the scalar convert,
+    feature for feature in ord_path order: geometry, bbox, ring
+    size/start/end, ids and tags.  ord_path is [world, *ord, slice].
+    The wrap is per row, so the batches may split the input anywhere.
+    Each collection also holds features ending exactly on a side-copy
+    threshold."""
+    from geojson_vt_spark.kernel.convert import convert
+    from geojson_vt_spark.kernel.wrap import wrap
+    from geojson_vt_spark.model import feature_to_record
+    from geojson_vt_spark.pipeline import convert_rows_to_table, wrap_table
+
+    def wrapped(rows, options):
+        return wrap_table(convert_rows_to_table(rows, options),
+                          options).to_pylist()
+
+    worlds = set()
+    for seed in range(8):
+        options = TileOptions(line_metrics=lm,
+                              buffer=(64, 0, 512)[seed % 3])
+        data = _mixed_collection(700 + seed, 40)
+        data["features"] += _wrap_edge_features(
+            options.buffer / options.extent)
+        rows = [(i, i, json.dumps(f)) for i, f in enumerate(data["features"])]
+        want = [feature_to_record((), f)
+                for f in wrap(convert(data, options), options)]
+        for cut in (len(rows), 13):
+            got = sorted(wrapped(rows[:cut], options)
+                         + wrapped(rows[cut:], options),
+                         key=lambda r: r["ord_path"])
+            assert all(len(r["ord_path"]) == 4 for r in got)
+            assert_records_equal(want, got, f"seed {seed} cut {cut}")
+        worlds |= {r["ord_path"][0] for r in got}
+    assert worlds == {0, 1, 2}
 
 
 def test_convert_table_all_rows_dropped_is_typed_and_empty():

@@ -10,7 +10,8 @@ from geojson_vt_spark import TileOptions
 from geojson_vt_spark.engine import SparkTileEngine
 from geojson_vt_spark.kernel import LocalTileIndex
 
-from .util_fixtures import assert_engine_matches_index, load_fixture
+from .util_fixtures import (assert_engine_matches_index, checkpoint_worlds,
+                            load_fixture)
 
 
 def _gen_tiles_spark(spark, tmp_path, data, **opts):
@@ -108,11 +109,11 @@ def _feats(spark, data, opts):
 
 def test_wrap_build_kill_resume(spark, tmp_path):
     """Kill-and-resume of a dateline-wrapping build, whose world copies
-    live in frontier/z=0.  A kill before the final lineage row (part of
-    the leaf wave lost, lineage cut after its first row) restarts the
-    build from a rewritten frontier; a finished build whose subtree
-    store is lost re-runs the leaf wave from the frontier on disk.  Both
-    end equal to LocalTileIndex."""
+    live in the features checkpoint, the z0 frontier.  A kill before
+    the final lineage row (part of the leaf wave lost, lineage cut
+    after its first row) restarts the build from the checkpoint; a
+    finished build whose subtree store is lost re-runs the leaf wave
+    from the checkpoint on disk.  Both end equal to LocalTileIndex."""
     import shutil
 
     from .test_pipeline import _mixed_collection
@@ -124,7 +125,8 @@ def test_wrap_build_kill_resume(spark, tmp_path):
     eng = SparkTileEngine(spark, opts, workdir=str(wd))
     eng._KERNEL_PTS_PER_TASK = 400  # a gated cut: internals + leaves
     eng.build_from_converted(feats)
-    assert (wd / "frontier" / "z=0").exists()
+    assert not (wd / "frontier").exists()
+    assert checkpoint_worlds(eng) == {0, 1, 2}
     st = _steps(wd)
     assert st["n_leaves"] and st["n_internal"], st
     idx = LocalTileIndex(data, opts)
@@ -151,14 +153,38 @@ def test_wrap_build_kill_resume(spark, tmp_path):
     assert again.tile_coords() == idx.tile_coords
 
 
+def test_wrap_build_runs_no_extra_job(spark, tmp_path):
+    """The dateline wrap rides the ingest stage: a wrapping build runs
+    exactly as many Spark jobs as its non-wrapping twin with the same
+    cut shape, render-walk thread included."""
+    from .test_pipeline import _mixed_collection
+
+    opts = TileOptions(max_zoom=8, index_max_zoom=4, index_max_points=20)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs, shapes = {}, {}
+    for wrap in (True, False):
+        wd = tmp_path / f"wrap{wrap}"
+        feats = _feats(spark, _mixed_collection(21, 60, wrap), opts)
+        eng = SparkTileEngine(spark, opts, workdir=str(wd))
+        j0 = sched.nextJobId()
+        eng.build_from_converted(feats)
+        jobs[wrap] = sched.nextJobId() - j0
+        st = _steps(wd)
+        shapes[wrap] = (st["gate"] is None, st["n_leaves"],
+                        st["n_internal"])
+        assert bool(checkpoint_worlds(eng) - {1}) == wrap
+    assert shapes[True] == shapes[False], shapes
+    assert jobs[True] == jobs[False], jobs
+
+
 def test_root_only_build_kill_resume(spark, tmp_path):
     """A root-only build (the z0 tile stops) renders z0 and keeps no
-    copy of its source: drills read the z0 frontier, here a view over
-    the features checkpoint, so sources/z=0 does not exist; no other
-    tile exists.  A kill before the final lineage row, with the z0
-    render lost, restarts cleanly, and the resumed pyramid —
-    drill-downs through the z0 source included — equals
-    LocalTileIndex."""
+    copy of its source: drills read the z0 frontier, a view over the
+    features checkpoint, so the workdir holds no sources, subtree or
+    frontier store; no other tile exists.  A kill before the final
+    lineage row, with the z0 render lost, restarts cleanly, and the
+    resumed pyramid — drill-downs through the z0 source included —
+    equals LocalTileIndex."""
     import shutil
 
     data = _clustered_collection(7, 150)
@@ -170,9 +196,8 @@ def test_root_only_build_kill_resume(spark, tmp_path):
     rows = eng.tiles().collect()
     assert [(r["z"], r["is_split"], r["has_source"]) for r in rows] == \
         [(0, False, True)]
-    assert not (wd / "sources" / "z=0").exists()
-    assert not (wd / "frontier").exists()
-    assert not (wd / "subtree").exists()
+    assert sorted(p.name for p in wd.iterdir() if p.is_dir()) == \
+        ["features", "snapshots", "tilefeat", "tiles"]
 
     lin = _lineage(wd)
     (wd / "lineage.json").write_text(json.dumps(lin[0]) + "\n")
@@ -482,9 +507,9 @@ def test_rebuild_drops_drill_overlay(spark, tmp_path):
 
 
 def test_spark_resume_view_mode_corpus(spark, tmp_path):
-    """Kill-and-resume through build_from_converted's no-wrap fast path,
-    where the z0 frontier is a VIEW over the features checkpoint (no
-    frontier/z=0 directory exists on disk): a kill after the first
+    """Kill-and-resume of a corpus build, whose z0 frontier is a VIEW
+    over the features checkpoint (the corpus never wraps, so the
+    checkpoint holds only centre-world rows): a kill after the first
     lineage row, with only the low-zoom stores on disk, restarts the
     build from the checkpoint and ends equal to the full build."""
     import shutil
@@ -500,8 +525,8 @@ def test_spark_resume_view_mode_corpus(spark, tmp_path):
     full = SparkTileEngine(spark, opts, workdir=str(tmp_path / "full"))
     full._KERNEL_PTS_PER_TASK = 2000  # a gated cut with internal zooms
     full.build_from_converted(feats)
-    assert not (tmp_path / "full" / "frontier" / "z=0").exists(), \
-        "no-wrap corpus build must use the z0 view"
+    assert not (tmp_path / "full" / "frontier").exists()
+    assert checkpoint_worlds(full) == {1}
 
     # simulate a kill after the first lineage row: features + early
     # stores only
@@ -536,8 +561,11 @@ def test_depth1_forest_matches_loop_layout(spark, tmp_path):
     st = [r for r in _lineage(tmp_path / "w") if r.get("subtree_batch")][0]
     assert st.get("forest") and st["steps"]["gate"] is None, st
     assert st["steps"]["n_leaves"] == 4 and st["steps"]["n_internal"] == 0
-    # the wave layout really is one wave (no frontier, no z1 render)
-    assert not (tmp_path / "w" / "frontier").exists()
+    # the wave layout really is one wave (no z1 render) over the
+    # checkpoint as the z0 frontier
+    assert sorted(p.name for p in (tmp_path / "w").iterdir()
+                  if p.is_dir()) == ["features", "snapshots", "sources",
+                                     "subtree", "tilefeat", "tiles"]
     assert not (tmp_path / "w" / "tilefeat" / "z=1").exists()
     assert_engine_matches_index(wave, LocalTileIndex(data, opts), _PROBES)
     assert wave.verify_snapshot() == []
@@ -760,10 +788,10 @@ def test_forest_resume_recreates_lost_subtree_store(spark, tmp_path):
 def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     """A crash-resume with nothing durable except the features
     checkpoint must rebuild the same cut the original attempt took: the
-    resume agg re-derives the z0 classification stats in the same pass
-    as the wrap counts."""
+    resume agg re-derives the z0 classification stats from it."""
     import shutil as _sh
 
+    from geojson_vt_spark.engine import _STORES
     from geojson_vt_spark.pipeline import features_from_json_df
     from geojson_vt_spark.sources.corpus import (extract_geo_features_df,
                                                  synth_pages_df)
@@ -779,7 +807,7 @@ def test_full_kill_resume_reenters_forest_path(spark, tmp_path):
     cut = _steps(tmp_path / "f")
 
     # kill everything but the features checkpoint
-    for store in ("tiles", "tilefeat", "subtree", "frontier"):
+    for store in _STORES:
         p = tmp_path / "f" / store
         if p.exists():
             _sh.rmtree(p)
@@ -1132,7 +1160,7 @@ def test_sql_window_builders_match_recount_on_window_edges(spark, tmp_path):
                   if (lvl, cx, cy) in cut}
     bins = {c: n % 5 for n, c in enumerate(sorted(cut))}
     routed = forest_route_df(fr0, opts, bins).collect()
-    got_route = {(r["ord_path"][1], r["z"], r["x"], r["y"])
+    got_route = {(r["ord_path"][0], r["z"], r["x"], r["y"])
                  for r in routed}
     assert got_route == want_route
     assert all(r["bin"] == bins[(r["z"], r["x"], r["y"])] for r in routed)

@@ -39,6 +39,14 @@ def gen_tiles(data, **opts):
     return out
 
 
+def checkpoint_worlds(eng) -> set:
+    """The worlds (ord_path[0]: 0 left, 1 centre, 2 right) of the rows
+    in an engine's features checkpoint, read without a Spark job."""
+    tbl = eng._table("features", ["ord_path"])
+    return set() if tbl is None else {
+        o[0] for o in tbl.column("ord_path").to_pylist()}
+
+
 def assert_source_matches(part, source, ctx="", state=None):
     """One retained source as the engine keeps it — a tile's FEATURE
     rows, ord_path [k] — equals a LocalTileIndex ``tile.source``: as
